@@ -105,6 +105,10 @@ class CrawlState:
         os.makedirs(state_dir, exist_ok=True)
         ledger = self.read_ledger()
         recorded = ledger.get("seen_layout")
+        if recorded is None and ledger.get("waves"):
+            # committed before the layout was recorded: such dirs were
+            # always written with the delta layout
+            recorded = "delta"
         if recorded is not None and recorded != seen_layout:
             raise ValueError(
                 f"state dir was created with seen_layout={recorded!r}; "

@@ -322,12 +322,16 @@ class CrawlRun:
         missing (fresh run / resume) or saturated; otherwise the per-wave
         delta merge (in run_wave) keeps it current without touching the
         10^10-row table (VERDICT #4)."""
-        if self.seen_filter is None or seen_df is None:
+        if self.seen_filter is None:
             return None
         # the previous wave's delta must be merged before this wave
         # tags candidates: a missing merge would mark last wave's URLs
-        # "definitely new" and re-enqueue them (false negative)
+        # "definitely new" and re-enqueue them (false negative). Joined
+        # before the empty-seen return too: this wave submits its own
+        # delta, and only one may be in flight.
         self._join_bloom_delta()
+        if seen_df is None:
+            return None
         if self._bloom is None or self._bloom.saturated():
             # next_seq == total URLs ever enqueued == |seen| (seq is
             # assigned per enqueue), so capacity needs no counting job

@@ -89,12 +89,20 @@ def get_spark(
         # deadlock (JVM mid-readMessageBody in EPoll.wait, worker blocked
         # in recv, zero host pressure — BENCH/hang_evidence_*_jstack.txt;
         # 3 hangs in 6 runs at local[4]/8M-seed legs, 0 in 8 with reuse
-        # off, throughput unchanged 550-724k URLs/s). Worker fork via the
-        # pyspark daemon is ~tens of ms per task — noise next to Arrow
-        # batch transfer. On a real cluster flip SPARK_GRAFT_WORKER_REUSE
-        # back to true if the deployment's Spark build is past the race.
+        # off, throughput unchanged 550-724k URLs/s). With the stock
+        # daemon a fresh worker costs 0.2-0.8 s per task before its first
+        # row (re-importing pandas/pyarrow/the engine, and CPython 3.11
+        # re-reading every zip importer's directory); the warm daemon
+        # below cuts that to ~0.05 s (see worker_daemon.py). On a real
+        # cluster flip SPARK_GRAFT_WORKER_REUSE back to true if the
+        # deployment's Spark build is past the race.
         .config("spark.python.worker.reuse",
                 os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"))
+        # static SparkContext setting; the daemon imports this package,
+        # so it is set only here, where PYTHONPATH above already carries
+        # it (tune_session / spark-submit keep the stock daemon)
+        .config("spark.python.daemon.module",
+                "llm_scraper_spark.worker_daemon")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -46,7 +46,16 @@ def _load_ref_chunking():
     return mod_t, mod
 
 
-REF_TEXT, REF_CHUNKING = _load_ref_chunking()
+# The reference tree is not part of this repository. Without it the tests
+# below that compare against it skip. Chunker output stays pinned by
+# goldens/spans_*.parquet (tests/test_goldens.py), goldens/crawl_doc_spans
+# .parquet (the crawl_media_align entry query) and
+# tests/test_crawl.py::test_crawl_documents_match_simulator, which checks
+# the Spark spans against this module's pure-Python chunker.
+HAVE_REF = (REF / "chunking.py").is_file()
+needs_ref = pytest.mark.skipif(
+    not HAVE_REF, reason=f"reference chunker {REF / 'chunking.py'} is absent")
+REF_TEXT, REF_CHUNKING = _load_ref_chunking() if HAVE_REF else (None, None)
 
 TEXTS = [
     "",
@@ -64,6 +73,7 @@ TEXTS = [
 
 @pytest.mark.parametrize("max_tokens,overlap", [(512, 50), (800, 64), (100, 10), (50, 0)])
 @pytest.mark.parametrize("text_idx", range(len(TEXTS)))
+@needs_ref
 def test_standalone_chunker_matches_reference(text_idx, max_tokens, overlap):
     text = TEXTS[text_idx]
     ref = REF_CHUNKING.chunk_text_by_token_estimate(
@@ -77,6 +87,7 @@ def test_standalone_chunker_matches_reference(text_idx, max_tokens, overlap):
 
 @pytest.mark.parametrize("max_chars,overlap", [(2000, 200), (100, 20), (50, 60)])
 @pytest.mark.parametrize("text_idx", range(len(TEXTS)))
+@needs_ref
 def test_char_chunker_matches_reference(text_idx, max_chars, overlap):
     text = TEXTS[text_idx]
     ref = REF_CHUNKING.chunk_text_by_char(text, max_chars=max_chars, overlap_chars=overlap)
@@ -84,6 +95,7 @@ def test_char_chunker_matches_reference(text_idx, max_chars, overlap):
     assert ours == [c.content for c in ref]
 
 
+@needs_ref
 @given(st.text(alphabet=st.characters(codec="utf-8",
                                       exclude_categories=("Cs",)), max_size=4000))
 @settings(max_examples=150, deadline=None)
@@ -93,6 +105,7 @@ def test_standalone_chunker_matches_reference_fuzz(text):
     assert ours == [c.content for c in ref]
 
 
+@needs_ref
 def test_method_variant_agrees_when_no_oversize():
     """articles.py:240-297 == chunking.py:97-192 when no sentence exceeds
     max_tokens — the production (512/50) path on normal prose."""
@@ -116,6 +129,7 @@ def test_method_variant_oversize_semantics():
     assert len(standalone) > 1  # the standalone variant DOES split it
 
 
+@needs_ref
 def test_word_and_token_counts_match_reference():
     for text in TEXTS:
         assert count_words(text) == REF_TEXT.count_words(text)
@@ -144,6 +158,7 @@ def test_interleave_spans_policy():
     assert interleave_spans(["t"], [])[0]["kind"] == "text"
 
 
+@needs_ref
 def test_production_spans_reference_equality_on_fixture_texts():
     """Golden equality at production params (512/50) over long mixed texts:
     the text-span subsequence equals the reference chunker exactly."""

@@ -867,3 +867,48 @@ def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
         assert wave_tables == {"schedule_log", "fetched", "documents",
                                "seen_delta", "frontier_delta", "metrics"}, \
             f"wave {k}: {wave_tables}"
+
+
+def test_seen_filter_with_empty_seen_set_joins_bloom_delta(spark, tmp_path,
+                                                           monkeypatch):
+    """With a seen filter on, a wave whose ``read_seen`` is None still joins
+    the previous wave's in-flight Bloom delta before submitting its own,
+    so consecutive waves over an empty seen set do not trip the
+    single-in-flight assert."""
+    run = CrawlRun(spark, str(tmp_path / "state"),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4, seen_filter="bloom")
+    run.init_from_seeds(_mk_seeds(spark, 20))
+    monkeypatch.setattr(run.state, "read_seen", lambda upto_wave: None)
+    run.run_wave(0)
+    assert run._bloom_fut is not None  # wave 0's delta is in flight
+    run.run_wave(1)
+    assert run._bloom is None
+    assert run.state.last_wave() == 1
+
+
+def test_legacy_ledger_without_seen_layout_is_delta(spark, tmp_path):
+    """A state dir with committed waves but no recorded ``seen_layout``
+    predates bucketed seen tables: it resumes as ``delta`` and refuses
+    ``bucketed`` (which would read an empty seen set)."""
+    import json
+
+    from llm_scraper_spark.crawl.state import CrawlState
+
+    legacy = tmp_path / "legacy"
+    legacy.mkdir()
+    (legacy / "ledger.json").write_text(json.dumps({
+        "waves": [{"wave": -1, "next_seq": 30, "seeded": 30},
+                  {"wave": 0, "next_seq": 52}],
+        "next_seq": 52}))
+    with pytest.raises(ValueError, match="seen_layout='delta'"):
+        CrawlState(spark, str(legacy), seen_layout="bucketed")
+    assert CrawlState(spark, str(legacy)).seen_layout == "delta"
+
+    # a ledger with nothing committed yet takes either layout
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    (fresh / "ledger.json").write_text(json.dumps({"waves": [],
+                                                   "next_seq": 0}))
+    assert CrawlState(spark, str(fresh),
+                      seen_layout="bucketed").seen_layout == "bucketed"

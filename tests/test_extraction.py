@@ -10,6 +10,7 @@ mirrors the PRODUCTION path; the divergence is asserted explicitly below.
 """
 
 import json
+import os
 import pathlib
 
 import pytest
@@ -411,11 +412,20 @@ class TestRealConfigs:
     """All 93 reference domain configs load and run against synthetic pages."""
 
     CONFIG_DIR = "/root/reference/src/llm_scraper/parsers/configs"
+    # The reference configs are not part of this repository. Without them
+    # the two tests that need a specific config skip (the crash sweep runs
+    # over none); config-driven parsing stays covered on inline configs by
+    # TestComplex.test_full_parser_config and TestMixed.test_mixed_with_configs.
+    needs_ref_configs = pytest.mark.skipif(
+        not os.path.isdir(CONFIG_DIR),
+        reason=f"reference configs {CONFIG_DIR} are absent")
 
+    @needs_ref_configs
     def test_load_all_reference_configs(self):
         configs = load_parser_configs(self.CONFIG_DIR)
         assert len({c["domain"] for c in configs.values()}) >= 90
 
+    @needs_ref_configs
     def test_cryptoslate_config_runs(self):
         configs = load_parser_configs(self.CONFIG_DIR)
         cfg = config_for_domain(configs, "cryptoslate.com")
