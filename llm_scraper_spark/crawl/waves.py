@@ -109,14 +109,17 @@ def _fused_frame(pdf, contents, outlinks_list, media_list, oks):
 
 
 def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
-                      fused: bool = True) -> Fetcher:
+                      fused: bool = True, with_content: bool = False) -> Fetcher:
     """Deterministic offline fetcher over the synthetic web (sources/synthetic.py).
 
     mapInPandas: one Arrow batch in, pages out — the slot where a real
     deployment runs bounded async HTTP (http_fetcher below).
     ``fused=True`` (default, the production path) chunks + canonicalizes
     in-batch (see FETCH_FUSED_DDL); ``fused=False`` emits the plain
-    content/outlinks contract for archive mode and schema tests.
+    content/outlinks contract for schema tests. ``with_content=True``
+    adds the raw page text to the fused contract as the optional
+    ``content`` column (as http_fetcher does) for archive mode; CrawlRun
+    asks for it when ``archive_dir`` is set and no fetcher is passed.
     """
 
     def fetch(scheduled: DataFrame) -> DataFrame:
@@ -128,8 +131,11 @@ def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
                 outlinks = [p["outlinks"] for p in pages]
                 media = [p["media_refs"] for p in pages]
                 if fused:
-                    yield _fused_frame(pdf, contents, outlinks, media,
+                    out = _fused_frame(pdf, contents, outlinks, media,
                                        [True] * len(pages))
+                    if with_content:
+                        out["content"] = contents
+                    yield out
                 else:
                     out = pdf[_FETCH_COLS].copy()
                     out["content"] = contents
@@ -138,8 +144,13 @@ def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
                     out["ok"] = True
                     yield out
 
-        return scheduled.select(*_FETCH_COLS).mapInPandas(
-            gen, schema=FETCH_FUSED_DDL if fused else FETCH_RESULT_DDL)
+        if not fused:
+            schema = FETCH_RESULT_DDL
+        elif with_content:
+            schema = FETCH_FUSED_DDL + ", content string"
+        else:
+            schema = FETCH_FUSED_DDL
+        return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=schema)
 
     return fetch
 
@@ -235,7 +246,8 @@ class CrawlRun:
         self.spark = spark
         self.state = CrawlState(spark, state_dir, seen_layout=seen_layout,
                                 n_seen_buckets=n_seen_buckets)
-        self.fetcher = fetcher or synthetic_fetcher()
+        self.fetcher = fetcher or synthetic_fetcher(
+            with_content=bool(archive_dir))
         self.budgets = budgets
         self.robots = robots
         self.default_budget = default_budget
@@ -533,7 +545,7 @@ class CrawlRun:
                 raise ValueError(
                     "archive_dir needs the page payload: use a fetcher "
                     "that emits 'content' (http_fetcher, or "
-                    "synthetic_fetcher(fused=False))")
+                    "synthetic_fetcher(with_content=True))")
             arc_dir = os.path.join(self.archive_dir, f"wave={wave}")
             recs = pages.select(
                 F.col("url").alias("target_uri"),

@@ -74,33 +74,48 @@ def chunk_by_token_estimate(
     if not text:
         return []
     sents = SENT_SPLIT_RE.split(text) if sentence_split else text.split()
+    # Words are counted ONCE. The flush loop needs per-sentence counts;
+    # their sum is the whole text's (no \w+ match spans the whitespace
+    # the split removes). A text short enough to be one chunk is counted
+    # in one findall instead, because per-sentence calls cost ~10% more
+    # there; past ~8 chars per token of budget (prose averages ~6 chars
+    # a word, and a chunk holds max_tokens/1.33 words) a text is almost
+    # never one chunk. The length test picks only the cheaper order.
+    counts = None
+    if len(text) <= 8 * max_tokens:
+        n_words = count_words(text)
+    else:
+        counts = [len(WORD_RE.findall(s)) for s in sents]
+        n_words = sum(counts)
 
     # Single-chunk fast path, provably output-identical: the loop below
     # flushes only when the RUNNING SUM of per-sentence ceil(w_i * 1.33)
     # estimates would exceed max_tokens. Each ceil(x_i) <= x_i + 1, so
     # sum_i ceil(1.33 * w_i) <= floor(1.33 * W) + n_sents (W = total
     # words, integer left side). When that bound fits the budget the
-    # loop can never flush and returns exactly " ".join(sents).strip() —
-    # emitted here without the per-sentence findall scans. This is the
-    # common case for crawl pages (a 512-token budget holds ~385 words),
-    # and cuts the chunker UDF's per-doc cost ~2x in the wave loop.
-    if (int(len(sents) + count_words(text) * 1.33)
-            <= max_tokens):
+    # loop can never flush and returns exactly " ".join(sents).strip() --
+    # emitted here without the per-sentence token estimates and buffer
+    # bookkeeping. This is the common case for crawl pages (a 512-token
+    # budget holds ~385 words).
+    if int(len(sents) + n_words * 1.33) <= max_tokens:
         single = " ".join(sents).strip()
         return [single] if single else []
+    if counts is None:
+        counts = [len(WORD_RE.findall(s)) for s in sents]
 
+    overlap_words = int(overlap_tokens / 1.33)
     chunks: list[str] = []
     cur_buf: list[str] = []
     cur_tokens = 0
-    for sent in sents:
-        sent_tokens = estimate_tokens(sent)
+    for sent, n_words in zip(sents, counts):
+        sent_tokens = math.ceil(n_words * 1.33)
         if cur_tokens + sent_tokens > max_tokens and cur_buf:
             chunk_text = " ".join(cur_buf).strip()
             if chunk_text:
                 chunks.append(chunk_text)
             if overlap_tokens > 0:
-                overlap_words = int(overlap_tokens / 1.33)
-                words = " ".join(cur_buf).split()
+                # str.split() ignores the edges strip() removed
+                words = chunk_text.split()
                 cur_buf = words[-overlap_words:] if overlap_words > 0 else []
                 cur_tokens = estimate_tokens(" ".join(cur_buf))
             else:

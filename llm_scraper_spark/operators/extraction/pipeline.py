@@ -62,6 +62,8 @@ GENERIC_CONFIG = {
     "tags": {"selector": ["[rel=tag]", ".post-tags a"], "all": True},
 }
 
+_WS_RUN_RE = re.compile("[ \t\r\n\u00A0]+")
+
 ISO_DATETIME_PATTERNS = (
     "%Y-%m-%dT%H:%M:%S.%f%z",
     "%Y-%m-%dT%H:%M:%S%z",
@@ -98,19 +100,40 @@ def _detect_type(query: str, explicit: str = "auto") -> str:
     return "xpath" if query.strip().startswith(("//", "/")) else "css"
 
 
+def normalize_content(content: str) -> str:
+    """The content validator (articles.py:160-172) in one pass: its three,
+    [\\r\\n\\t]+ -> space, NBSP -> space, then " {2,}" -> space, turn
+    every maximal run of those five characters into exactly one space."""
+    return _WS_RUN_RE.sub(" ", content).strip()
+
+
 def _cleanup_node(scope: Node, selectors) -> None:
-    """Decompose matching nodes in place (CSS) / remove (XPath)."""
+    """Decompose matching nodes in place (CSS) / remove (XPath).
+
+    Each maximal run of consecutive CSS selectors is ONE tree walk
+    (css.decompose); an XPath selector ends the run and keeps its place,
+    since its positional predicates can see earlier removals. A selector
+    that fails to parse or evaluate is skipped."""
+    run: list[str] = []
     for sel in selectors or []:
         try:
             if _detect_type(sel) == "css":
-                for n in css_engine.select(scope, sel):
-                    n.detach()
-            else:
-                for n in xpath_engine.xpath(scope, sel):
-                    if isinstance(n, Node):
-                        n.detach()
+                css_engine.parse_selector(sel)
+                run.append(sel)
+                continue
         except Exception:
             continue
+        if run:
+            css_engine.decompose(scope, tuple(run))
+            run = []
+        try:
+            for n in xpath_engine.xpath(scope, sel):
+                if isinstance(n, Node):
+                    n.detach()
+        except Exception:
+            continue
+    if run:
+        css_engine.decompose(scope, tuple(run))
 
 
 def _extract_element(root: Node, selector_cfg: dict, base_url: str | None):
@@ -153,9 +176,11 @@ def _extract_element(root: Node, selector_cfg: dict, base_url: str | None):
                 scope = parent_el
 
             if detected == "css":
-                found = (css_engine.select(scope, query) if find_all
-                         else ([css_engine.select_one(scope, query)]
-                               if css_engine.select_one(scope, query) else []))
+                if find_all:
+                    found = css_engine.select(scope, query)
+                else:
+                    first = css_engine.select_one(scope, query)
+                    found = [first] if first is not None else []
                 is_xpath = False
             else:
                 if scope is not root and not query.startswith("."):
@@ -288,10 +313,7 @@ def extract_article(html: str, url: str, config: dict | None,
     if not content.strip():
         return {"status": "error:no_content", "url": url}
 
-    # content normalization (articles.py:160-172 validator)
-    content = re.sub(r"[\r\n\t]+", " ", content)
-    content = content.replace("\u00A0", " ")
-    content = re.sub(r" {2,}", " ", content).strip()
+    content = normalize_content(content)
 
     title = meta["title"] or "No title found"
 

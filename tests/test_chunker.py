@@ -172,3 +172,98 @@ def test_production_spans_reference_equality_on_fixture_texts():
         assert got == [c.content for c in ref]
         offs = [s["offset"] for s in spans]
         assert offs == sorted(offs) == list(range(len(spans)))
+
+
+# ---------------------------------------------------------------------------
+# count-once chunker vs the per-sentence loop it replaced
+# ---------------------------------------------------------------------------
+
+def oracle_chunk_by_token_estimate(text, max_tokens=512, overlap_tokens=50,
+                                   sentence_split=True):
+    """The production chunker before words were counted once: one
+    findall for the single-chunk bound, then one per sentence, plus a
+    re-join and re-split for every overlap."""
+    from llm_scraper_spark.operators.chunker import SENT_SPLIT_RE
+
+    text = (text or "").strip()
+    if not text:
+        return []
+    sents = SENT_SPLIT_RE.split(text) if sentence_split else text.split()
+    if int(len(sents) + count_words(text) * 1.33) <= max_tokens:
+        single = " ".join(sents).strip()
+        return [single] if single else []
+    chunks, cur_buf, cur_tokens = [], [], 0
+    for sent in sents:
+        sent_tokens = estimate_tokens(sent)
+        if cur_tokens + sent_tokens > max_tokens and cur_buf:
+            chunk_text = " ".join(cur_buf).strip()
+            if chunk_text:
+                chunks.append(chunk_text)
+            if overlap_tokens > 0:
+                overlap_words = int(overlap_tokens / 1.33)
+                words = " ".join(cur_buf).split()
+                cur_buf = words[-overlap_words:] if overlap_words > 0 else []
+                cur_tokens = estimate_tokens(" ".join(cur_buf))
+            else:
+                cur_buf = []
+                cur_tokens = 0
+        cur_buf.append(sent)
+        cur_tokens += sent_tokens
+    tail = " ".join(cur_buf).strip()
+    if tail:
+        chunks.append(tail)
+    return chunks
+
+
+_WORD = st.text(alphabet=st.sampled_from(
+    list("abcXYZ09_") + ["\u00e9", "\u00df", "\u0416", "\u4e2d", "\u0301",
+                         "\u00b2", "\u0663"]), min_size=1, max_size=8)
+_GLUE = st.sampled_from(
+    [" ", "  ", "\n", "\t", "\u00a0", "\u2003", "\u3000", "-", "'",
+     "\u2014", "\u2026", " \u201c", "\u201d ", "\u00bf"])
+_END = st.sampled_from([".", "?", "!", "\u3002", ",", "", "...", ".\u201d"])
+_SENT = st.builds(
+    lambda first, words, glue, end: first + "".join(
+        g + w for g, w in zip(glue, words)) + end,
+    st.sampled_from(["A", "Zed", "9", "\u201cQ", "'Hi", "\u00c9t", "low"]),
+    st.lists(_WORD, max_size=25), st.lists(_GLUE, min_size=25, max_size=25),
+    _END)
+_SEP = st.sampled_from([" ", "  ", "\n", "\u00a0", "\t "])
+
+
+@st.composite
+def _doc(draw):
+    """Sentences joined by whitespace; a drawn repeat count takes a
+    share of the documents past a 512-token budget."""
+    sents = draw(st.lists(_SENT, max_size=30))
+    seps = draw(st.lists(_SEP, min_size=len(sents), max_size=len(sents)))
+    return "".join(s + p for s, p in zip(sents, seps)) * draw(
+        st.integers(1, 40))
+
+
+@pytest.mark.parametrize("max_tokens,overlap", [(512, 50), (64, 0)])
+@given(text=_doc())
+@settings(max_examples=300, deadline=None)
+def test_count_once_chunker_equals_oracle(text, max_tokens, overlap):
+    assert chunk_by_token_estimate(text, max_tokens, overlap) == \
+        oracle_chunk_by_token_estimate(text, max_tokens, overlap)
+    assert chunk_by_token_estimate(text, max_tokens, overlap, False) == \
+        oracle_chunk_by_token_estimate(text, max_tokens, overlap, False)
+
+
+@pytest.mark.parametrize("max_tokens,overlap", [(512, 50), (64, 0)])
+def test_count_once_chunker_covers_both_paths(max_tokens, overlap):
+    """Single- and multi-chunk output, each reached with both counting
+    orders (whole text for short texts, per sentence for long ones)."""
+    short = "Short one. Another here."
+    short_many = " ".join(["Wo x."] * max_tokens)                 # < 8/token
+    long_few = "Few words. " + "- " * (8 * max_tokens) + "End."   # > 8/token
+    long_many = " ".join(f"Sentence {i} has caf\u00e9 words." for i in range(300))
+    for text in (short, short_many, long_few, long_many, *TEXTS):
+        assert chunk_by_token_estimate(text, max_tokens, overlap) == \
+            oracle_chunk_by_token_estimate(text, max_tokens, overlap)
+    assert len(short_many) <= 8 * max_tokens < len(long_few)
+    assert len(chunk_by_token_estimate(short, max_tokens, overlap)) == 1
+    assert len(chunk_by_token_estimate(long_few, max_tokens, overlap)) == 1
+    assert len(chunk_by_token_estimate(long_many, max_tokens, overlap)) > 1
+    assert len(chunk_by_token_estimate(short_many, max_tokens, overlap)) > 1

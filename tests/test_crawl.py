@@ -349,6 +349,38 @@ def test_archive_requires_content_column(spark, tmp_path):
         run.run(1, seeds=_mk_seeds(spark, 10))
 
 
+def test_archive_with_default_fetcher(spark, tmp_path):
+    """With archive_dir set and no fetcher passed, the default synthetic
+    fetcher carries the page text, so the wave archives instead of
+    failing; the schedule equals the same crawl without an archive, and
+    without archive_dir the default fetch contract has no content."""
+    from llm_scraper_spark.sources.warc import read_warc
+
+    def crawl(name, archive_dir=None):
+        run = CrawlRun(spark, str(tmp_path / name), archive_dir=archive_dir)
+        run.run(1, seeds=_mk_seeds(spark, 12))
+        return run
+
+    arc = str(tmp_path / "arc")
+    archived = crawl("archived", archive_dir=arc)
+    plain = crawl("plain")
+    log = _spark_schedule_log(archived)
+    assert log and log == _spark_schedule_log(plain)
+
+    recs = read_warc(spark, f"{arc}/wave=*/*.warc.gz").collect()
+    assert sorted(r["target_uri"] for r in recs) == sorted(u for _, _, u in log)
+    for r in recs:
+        assert bytes(r["payload"]).decode() == synth_page(
+            r["target_uri"])["content"]
+
+    scheduled = plain.state.read("schedule_log", 0).select(
+        "url", F.lit("h").alias("canonical_url"), "host",
+        F.lit(0).alias("salt"), F.lit(0).cast("long").alias("url_hash"),
+        "priority", "wave", "seq")
+    assert "content" not in plain.fetcher(scheduled).columns
+    assert "content" in archived.fetcher(scheduled).columns
+
+
 def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
     """VERDICT r4 #6: CrawlRun(compact_tables_every=K) folds the
     append-only output tables (documents/schedule_log/metrics) at wave
