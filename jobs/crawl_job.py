@@ -8,10 +8,9 @@ Package + run:
     spark-submit --py-files dist/llm_scraper_spark.zip jobs/crawl_job.py \\
         --state-dir /tmp/crawl_state --seeds 10000 --waves 3 --budget 32
 
-On a real cluster, swap --master and point --state-dir at object storage
-(the CrawlState layout is plain parquet dirs + a JSON ledger; an Iceberg
-catalog upgrades the commits to table snapshots without code changes to
-the wave dataflow).
+On a real cluster, swap --master and point --state-dir at a shared
+filesystem (the CrawlState layout is plain parquet dirs + a JSON ledger
+committed by atomic rename, which is the single commit point).
 """
 
 from __future__ import annotations

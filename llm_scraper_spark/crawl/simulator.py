@@ -22,6 +22,12 @@ from collections.abc import Callable
 from ..functions.urls import canonicalize_url
 from ..sources.synthetic import synth_page
 
+# Links kept per fetched page, in page order. The wave loop orders
+# discoveries by ``parent_seq * MAX_OUTLINKS_PER_PAGE + link_idx``, which
+# is unique only while link_idx stays below the multiplier, so both it and
+# this oracle drop a page's links past the cap.
+MAX_OUTLINKS_PER_PAGE = 1_000_000
+
 
 def simulate_crawl(
     seed_urls: list[str],
@@ -80,7 +86,7 @@ def simulate_crawl(
             schedule_log.append((wave, seq, raw))
             page = fetch(raw)
             documents.append((canon, page["content"], list(page.get("media_refs", []))))
-            for link in page["outlinks"]:
+            for link in page["outlinks"][:MAX_OUTLINKS_PER_PAGE]:
                 discoveries.append((link, link_priority))
 
         # enqueue discoveries in (parent seq, link idx) order; robots-gate

@@ -49,14 +49,11 @@ two invariants, both tested with a simulated mid-commit crash
   also truncate them — the cleanup makes the snapshot property hold for
   out-of-band readers too).
 
-This is the Iceberg-snapshot analogue on a plain filesystem. With an
-Iceberg catalog on the classpath (``iceberg_catalog`` below, auto-detected
-from spark.sql.catalog.* conf), the per-table writes become real Iceberg
-partition commits and the ledger rename remains the cross-table
-transaction point — Spark cannot commit multiple Iceberg tables in one
-transaction, so the ordered-commit + replay protocol is the correct shape
-there too (the catalog path is exercised only where the jars exist; this
-sandbox has none, so it stays a thin, documented routing layer).
+This is the table-snapshot analogue on a plain filesystem: every table
+is parquet ``wave=K`` dirs and the ledger rename is the one cross-table
+transaction point. (A table format such as Iceberg commits one table per
+transaction, so it would need the same ordered-commit + replay protocol;
+none is wired in — every read and write here is a parquet path.)
 The seen set is append-only (delta per wave), so resuming reads
 ``seen_delta/wave<=K`` — no rewrite of 10^10 rows per wave.
 """
@@ -64,37 +61,39 @@ The seen set is append-only (delta per wave), so resuming reads
 from __future__ import annotations
 
 import json
+import math
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _detect_iceberg_catalog(spark: SparkSession) -> str | None:
-    """Name of the first configured Iceberg catalog, or None.
+def _wave_bounds(path: str) -> tuple[float, float] | None:
+    """(min, max) of a parquet file's ``wave`` column from its footer
+    statistics, or None when any row group has none. A file without rows
+    is (inf, -inf): it holds no wave at all."""
+    import pyarrow.parquet as pq
 
-    Presence check only — ``spark.sql.catalog.<name> =
-    org.apache.iceberg.spark.SparkCatalog`` (the standard wiring)."""
-    try:
-        for k, v in spark.sparkContext.getConf().getAll():
-            if k.startswith("spark.sql.catalog.") and k.count(".") == 3 \
-                    and "iceberg" in (v or "").lower():
-                return k.rsplit(".", 1)[1]
-    except Exception:
-        pass
-    return None
+    md = pq.ParquetFile(path).metadata
+    j = [md.schema.column(k).path
+         for k in range(md.num_columns)].index("wave")
+    lo, hi = math.inf, -math.inf
+    for r in range(md.num_row_groups):
+        st = md.row_group(r).column(j).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo, hi = min(lo, st.min), max(hi, st.max)
+    return lo, hi
 
 
 class CrawlState:
     def __init__(self, spark: SparkSession, state_dir: str,
-                 iceberg_catalog: str | None = None,
                  seen_layout: str = "delta",
                  n_seen_buckets: int = 32):
         if seen_layout not in ("delta", "bucketed"):
             raise ValueError(f"unknown seen_layout {seen_layout!r}")
         self.spark = spark
         self.dir = state_dir
-        self.catalog = iceberg_catalog or _detect_iceberg_catalog(spark)
         # "bucketed": the seen set lives in a bucketBy(url_hash) catalog
         # table, so the per-wave dedup anti-join plans with ZERO Exchange
         # on the seen side — at the 10^10 design point re-shuffling the
@@ -232,9 +231,6 @@ class CrawlState:
     def _p(self, table: str, wave: int) -> str:
         return os.path.join(self.dir, table, f"wave={wave}")
 
-    def _tbl(self, table: str) -> str:
-        return f"{self.catalog}.crawl.{table}"
-
     # --- bucketed seen layout ------------------------------------------
     # The seen set as a bucketBy(url_hash) parquet CATALOG table: every
     # wave APPENDS its delta (<= n_buckets files), and the per-wave
@@ -354,23 +350,9 @@ class CrawlState:
         if table == "seen_delta" and self.seen_layout == "bucketed":
             self._write_seen_bucketed(wave, df)
             return
-        if self.catalog:
-            # Iceberg routing: replace exactly this wave's partition — one
-            # atomic Iceberg snapshot commit per table, same ordered
-            # protocol (ledger still last). Requires the catalog's jars;
-            # see module docstring.
-            from pyspark.sql import functions as F
-
-            (df.withColumn("_wave_part", F.lit(wave))
-             .writeTo(self._tbl(table))
-             .overwritePartitions())
-            return
         df.write.mode("overwrite").parquet(self._p(table, wave))
 
     def read(self, table: str, wave: int) -> DataFrame:
-        if self.catalog:
-            return (self.spark.read.table(self._tbl(table))
-                    .where(f"_wave_part = {int(wave)}").drop("_wave_part"))
         return self.spark.read.parquet(self._p(table, wave))
 
     def frontier_base_wave(self) -> int | None:
@@ -481,13 +463,6 @@ class CrawlState:
         if self.seen_layout == "bucketed":
             return self._read_seen_bucketed(upto_wave)
         committed = self._committed_for("seen_delta")
-        if self.catalog:
-            waves = sorted(w for w in committed if w <= upto_wave)
-            if not waves:
-                return None
-            return (self.spark.read.table(self._tbl("seen_delta"))
-                    .where(f"_wave_part <= {int(upto_wave)}")
-                    .drop("_wave_part"))
         paths = [
             self._p("seen_delta", w)
             for w in range(upto_wave + 1)
@@ -528,12 +503,15 @@ class CrawlState:
         return expired
 
     def _expire_flat(self, table: str, cutoff_wave: int) -> None:
-        """Rewrite a table's compacted flat files keeping only rows with
-        ``wave > cutoff_wave``, via the compaction executor's commit
-        protocol (stage, fsynced manifest rename, idempotent finish)."""
-        import json as _json
-        import tempfile as _tempfile
-
+        """Drop rows with ``wave <= cutoff_wave`` from a table's compacted
+        flat files. Each file's parquet footer min/max of ``wave`` (read
+        on the driver, no Spark job) decides: a file of only newer waves
+        stays untouched, a file of only expired waves is deleted, and
+        only a file that straddles the cutoff (or has no statistics) is
+        rewritten filtered — so an expiry that cuts nothing writes
+        nothing. Deletes and rewrites commit through the compaction
+        executor's protocol (stage, fsynced manifest rename, idempotent
+        finish)."""
         from pyspark.sql import functions as F
 
         from ..sinks.compaction import (
@@ -544,28 +522,39 @@ class CrawlState:
         if not os.path.isdir(base):
             return
         recover_compaction(base)
-        flats = [rel for rel, _ in data_files(base) if os.sep not in rel]
-        if not flats:
+        files = data_files(base)
+        old, rewrite = [], []
+        for rel, _ in files:
+            if os.sep in rel:
+                continue  # a wave=K dir: expire_results removes those
+            bounds = _wave_bounds(os.path.join(base, rel))
+            if bounds is not None and bounds[0] > cutoff_wave:
+                continue
+            old.append(rel)
+            if bounds is None or bounds[1] > cutoff_wave:
+                rewrite.append(rel)
+        if not old:
             return
-        kept = (self.spark.read.parquet(
-            *[os.path.join(base, rel) for rel in flats])
-            .filter(F.col("wave") > cutoff_wave))
-        epoch = _next_epoch(data_files(base))
+        epoch = _next_epoch(files)
         stage = os.path.join(base, STAGE)
         os.makedirs(stage, exist_ok=True)
-        out_tmp = os.path.join(stage, "expire")
-        kept.coalesce(1).write.mode("overwrite").parquet(out_tmp)
-        part = [n for n in os.listdir(out_tmp)
-                if n.endswith(".parquet") and not n.startswith(("_", "."))]
-        assert len(part) == 1, part
-        dst = f"part-compact-e{epoch}-g0.parquet"
-        staged_rel = os.path.join(STAGE, dst)
-        os.replace(os.path.join(out_tmp, part[0]),
-                   os.path.join(base, staged_rel))
-        fd, tmp = _tempfile.mkstemp(dir=base, suffix=".manifest.tmp")
+        new = []
+        for g, rel in enumerate(rewrite):
+            out_tmp = os.path.join(stage, f"expire-g{g}")
+            (self.spark.read.parquet(os.path.join(base, rel))
+             .filter(F.col("wave") > cutoff_wave)
+             .coalesce(1).write.mode("overwrite").parquet(out_tmp))
+            part = [n for n in os.listdir(out_tmp)
+                    if n.endswith(".parquet") and not n.startswith(("_", "."))]
+            assert len(part) == 1, part
+            dst = f"part-compact-e{epoch}-g{g}.parquet"
+            staged_rel = os.path.join(STAGE, dst)
+            os.replace(os.path.join(out_tmp, part[0]),
+                       os.path.join(base, staged_rel))
+            new.append({"src": staged_rel, "dst": dst})
+        fd, tmp = tempfile.mkstemp(dir=base, suffix=".manifest.tmp")
         with os.fdopen(fd, "w") as f:
-            _json.dump({"new": [{"src": staged_rel, "dst": dst}],
-                        "old": flats}, f)
+            json.dump({"new": new, "old": old}, f)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(base, MANIFEST))
@@ -575,18 +564,11 @@ class CrawlState:
         """Committed-snapshot read of every wave of ``table``: only dirs
         the ledger covers — a crash that left orphan ``wave=K`` dirs does
         not leak uncommitted rows into queries (snapshot isolation at wave
-        granularity, the Iceberg-read analogue). After output-table
+        granularity, the table-snapshot-read analogue). After output-table
         compaction (compact_output_tables) some waves live in FLAT
         ``part-compact-*`` files at the table root — those hold only
         rows of waves that were committed when the compaction ran, so
         they are committed by construction and read unconditionally."""
-        if self.catalog:
-            waves = sorted(self._committed_for(table))
-            if not waves:
-                return None
-            return (self.spark.read.table(self._tbl(table))
-                    .where(f"_wave_part in ({','.join(map(str, waves))})")
-                    .withColumnRenamed("_wave_part", "wave_part"))
         base = os.path.join(self.dir, table)
         if not os.path.exists(base):
             return None

@@ -3,9 +3,9 @@ r"""The crawl wave loop — the engine's top-level dataflow (SURVEY.md §3.2).
 Each wave is one batch of the reference's consume-loop
 (/root/reference/scraper.py:64-76) re-expressed as DataFrame stages:
 
-    pending --politeness window--> scheduled --fetch (mapInPandas)-->
-    pages --chunker UDF--> documents
-         \--outlinks explode--> canonicalize+hash --robots gate-->
+    pending --politeness window--> scheduled --fetch (mapInPandas: page,
+    chunker, uuid5 doc id, outlink canonicalize)--> pages --> documents
+         \--outlinks explode--> native hash --robots gate-->
            in-wave first-occurrence dedup --bloom + anti-join vs seen-->
            assign global seq --> frontier append + seen delta
 
@@ -25,34 +25,30 @@ assert schedule-log and final-seen-set equality.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..functions.urls import with_canonical
+from ..functions.urls import canonicalize_batch, with_canonical
 from ..operators import cuckoo as cuckoo_ops
 from ..operators import frontier as frontier_ops
 from ..operators import seen as seen_ops
 from ..operators.checkpoints import local_checkpoint_tracked, release_checkpoint
-from ..operators.chunker import spans_from_text, uuid5_url
+from ..operators.chunker import doc_ids_and_spans
 from ..operators.robots import gate_frontier
+from ..schemas import SPAN_DDL
 from ..sources.synthetic import synth_page
+from .simulator import MAX_OUTLINKS_PER_PAGE
 from .state import CrawlState
 
-FETCH_RESULT_DDL = (
-    "url string, canonical_url string, host string, salt int, url_hash long, "
-    "priority double, wave int, seq long, content string, "
-    "outlinks array<string>, media_refs array<string>, ok boolean"
-)
-
-# the FUSED fetch contract (r5): canonicalization of outlinks, the
-# chunker, and the uuid5 doc id all run inside the fetch batch — the
-# page corpus crosses the Arrow boundary ONCE instead of three times
-# (fetch out, chunker in/out, canonicalize in/out). The wave loop
-# detects the extra columns and skips its own spans/canonicalize
-# stages; url_hash stays native xxhash64 (JVM, after the explode).
-SPAN_DDL = ("array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>")
+# The fetch contract: every fetcher returns these columns, built per Arrow
+# batch by ``fetch_frame``. Canonicalization of outlinks, the chunker and
+# the uuid5 doc id all run inside the fetch batch, so the page corpus
+# crosses the Arrow boundary ONCE per wave; url_hash stays native xxhash64
+# (JVM, after the explode). A fetcher may add columns (``content`` for
+# archive mode).
 FETCH_FUSED_DDL = (
     "url string, canonical_url string, host string, salt int, url_hash long, "
     "priority double, wave int, seq long, "
@@ -60,6 +56,8 @@ FETCH_FUSED_DDL = (
     "outlinks_canon array<struct<url:string,canonical_url:string,"
     "host:string>>, ok boolean"
 )
+# top-level fields are ", "-separated; nested struct fields use ","
+_FETCH_FUSED_COLS = [f.split(" ")[0] for f in FETCH_FUSED_DDL.split(", ")]
 
 Fetcher = Callable[[DataFrame], DataFrame]
 
@@ -67,27 +65,17 @@ _FETCH_COLS = ["url", "canonical_url", "host", "salt", "url_hash",
                "priority", "wave", "seq"]
 
 
-def _fused_frame(pdf, contents, outlinks_list, media_list, oks):
-    """Build the fused-output batch: spans + doc_id + canonicalized
-    outlink structs, with ONE canonicalize pass over the batch's
-    flattened outlinks (same canonicalize_batch the standalone UDF
-    uses, so the fused and unfused paths agree byte-for-byte)."""
+def fetch_frame(pdf, contents, outlinks_list, media_list, oks):
+    """Build one batch of the fetch contract (FETCH_FUSED_DDL) from the
+    scheduled rows ``pdf`` and the fetched pages' content, outlinks,
+    media refs and ok flags: doc_id + spans via the chunker's batch
+    function, and canonicalized outlink structs from ONE
+    canonicalize_batch pass over the batch's flattened outlinks."""
     import pandas as pd
 
-    from ..functions.urls import canonicalize_batch
-    from ..operators.chunker import (
-        chunk_by_token_estimate, doc_id_for_url, interleave_spans)
-
     out = pdf[_FETCH_COLS].copy()
-    out["doc_id"] = [doc_id_for_url(u) if isinstance(u, str) else None
-                     for u in pdf["canonical_url"]]
-    out["spans"] = [
-        interleave_spans(
-            chunk_by_token_estimate(c if isinstance(c, str) else ""),
-            [m for m in (refs if refs is not None else [])],
-        )
-        for c, refs in zip(contents, media_list)
-    ]
+    out["doc_id"], out["spans"] = doc_ids_and_spans(
+        pdf["canonical_url"], contents, media_list)
     flat = [u for links in outlinks_list for u in links]
     if flat:
         cdf = canonicalize_batch(pd.Series(flat))
@@ -109,15 +97,12 @@ def _fused_frame(pdf, contents, outlinks_list, media_list, oks):
 
 
 def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
-                      fused: bool = True, with_content: bool = False) -> Fetcher:
+                      with_content: bool = False) -> Fetcher:
     """Deterministic offline fetcher over the synthetic web (sources/synthetic.py).
 
-    mapInPandas: one Arrow batch in, pages out — the slot where a real
-    deployment runs bounded async HTTP (http_fetcher below).
-    ``fused=True`` (default, the production path) chunks + canonicalizes
-    in-batch (see FETCH_FUSED_DDL); ``fused=False`` emits the plain
-    content/outlinks contract for schema tests. ``with_content=True``
-    adds the raw page text to the fused contract as the optional
+    mapInPandas: one Arrow batch in, ``fetch_frame`` batches out — the
+    slot where a real deployment runs bounded async HTTP (http_fetcher
+    below). ``with_content=True`` adds the raw page text as the optional
     ``content`` column (as http_fetcher does) for archive mode; CrawlRun
     asks for it when ``archive_dir`` is set and no fetcher is passed.
     """
@@ -128,36 +113,22 @@ def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
                 pages = [synth_page(u, n_hosts=n_hosts, fanout=fanout)
                          for u in pdf["url"]]
                 contents = [p["content"] for p in pages]
-                outlinks = [p["outlinks"] for p in pages]
-                media = [p["media_refs"] for p in pages]
-                if fused:
-                    out = _fused_frame(pdf, contents, outlinks, media,
-                                       [True] * len(pages))
-                    if with_content:
-                        out["content"] = contents
-                    yield out
-                else:
-                    out = pdf[_FETCH_COLS].copy()
+                out = fetch_frame(pdf, contents,
+                                  [p["outlinks"] for p in pages],
+                                  [p["media_refs"] for p in pages],
+                                  [True] * len(pages))
+                if with_content:
                     out["content"] = contents
-                    out["outlinks"] = outlinks
-                    out["media_refs"] = media
-                    out["ok"] = True
-                    yield out
+                yield out
 
-        if not fused:
-            schema = FETCH_RESULT_DDL
-        elif with_content:
-            schema = FETCH_FUSED_DDL + ", content string"
-        else:
-            schema = FETCH_FUSED_DDL
+        schema = FETCH_FUSED_DDL + (", content string" if with_content else "")
         return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=schema)
 
     return fetch
 
 
 def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
-                 user_agent: str = "llm-scraper-spark/0.1",
-                 fused: bool = True) -> Fetcher:
+                 user_agent: str = "llm-scraper-spark/0.1") -> Fetcher:
     """Real network fetcher: bounded thread-pool urllib GETs inside
     mapInPandas (reference envelope: 8 concurrent, 15s timeout,
     follow_redirects=True, src/llm_scraper/scraper.py:37-41,
@@ -165,11 +136,13 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
     4xx/5xx raise and the page fails (ok=False, crawl continues), and
     links/media absolutize against the POST-redirect URL — the
     reference passes ``str(response.url)`` to Article.from_html.
+    Emits the fetch contract (``fetch_frame``) plus the raw ``content``,
+    ``outlinks`` and ``media_refs`` columns: the WARC archive and the
+    parity tests need them, and for live HTTP the network dominates.
     Exercised by the loopback battery in tests/test_http_fetch.py."""
 
     def fetch(scheduled: DataFrame) -> DataFrame:
         def gen(batches):
-            from concurrent.futures import ThreadPoolExecutor
             from urllib.request import Request, urlopen
 
             from ..operators.extraction.dom import parse_html
@@ -193,29 +166,35 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
                     contents = [r[0] for r in results]
                     outlinks = [r[1] for r in results]
                     media = [r[2] for r in results]
-                    oks = [r[3] for r in results]
-                    if fused:
-                        out = _fused_frame(pdf, contents, outlinks, media, oks)
-                        # the raw page text rides along: the WARC archive
-                        # and parity tests need it, and for live HTTP the
-                        # network dominates — the extra columns are noise
-                        out["content"] = contents
-                        out["outlinks"] = outlinks
-                        out["media_refs"] = media
-                    else:
-                        out = pdf[_FETCH_COLS].copy()
-                        out["content"] = contents
-                        out["outlinks"] = outlinks
-                        out["media_refs"] = media
-                        out["ok"] = oks
+                    out = fetch_frame(pdf, contents, outlinks, media,
+                                      [r[3] for r in results])
+                    out["content"] = contents
+                    out["outlinks"] = outlinks
+                    out["media_refs"] = media
                     yield out
 
         schema = (FETCH_FUSED_DDL + ", content string, "
-                  "outlinks array<string>, media_refs array<string>"
-                  if fused else FETCH_RESULT_DDL)
+                  "outlinks array<string>, media_refs array<string>")
         return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=schema)
 
     return fetch
+
+
+class _PhaseClock:
+    """Per-phase driver wall times: ``mark(phase)`` records the wall since
+    the previous mark (or ``restart``) under ``timings[phase]``."""
+
+    def __init__(self):
+        self.timings: dict[str, float] = {}
+        self.restart()
+
+    def restart(self) -> None:
+        self._t0 = time.time()
+
+    def mark(self, phase: str) -> None:
+        now = time.time()
+        self.timings[phase] = round(now - self._t0, 3)
+        self._t0 = now
 
 
 class CrawlRun:
@@ -230,9 +209,8 @@ class CrawlRun:
         robots: DataFrame | None = None,
         default_budget: int = frontier_ops.DEFAULT_BUDGET,
         n_salts: int = frontier_ops.DEFAULT_SALTS,
-        use_bloom: bool = True,
         link_priority: float = 1.0,
-        seen_filter: str | None = None,
+        seen_filter: str | None = "bloom",
         compact_every: int = 8,
         scope_filter: bool = False,
         archive_dir: str | None = None,
@@ -252,7 +230,6 @@ class CrawlRun:
         self.robots = robots
         self.default_budget = default_budget
         self.n_salts = n_salts
-        self.use_bloom = use_bloom
         self.link_priority = link_priority
         # opt-in frontier URL hygiene (functions/urls.py): strip tracking/
         # session params from canonical URLs (re-hashing natively so alias
@@ -264,12 +241,8 @@ class CrawlRun:
         # the standing approximate seen-filter: "bloom" (default) or
         # "cuckoo" (operators/cuckoo.py — deletable fingerprints, same
         # no-false-negative contract, same executor-side build + per-wave
-        # delta merge); None / use_bloom=False disables the pre-filter
-        # and every candidate takes the exact anti-join
-        if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else None
-        elif not use_bloom:
-            seen_filter = None
+        # delta merge); None disables the pre-filter and every candidate
+        # takes the exact anti-join
         if seen_filter not in (None, "bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {seen_filter!r}")
         self.seen_filter = seen_filter
@@ -282,6 +255,8 @@ class CrawlRun:
         # committed seen table.
         self._bloom_fut = None
         self._bloom_pool = None
+        self._bloom_ck_ids = None  # the in-flight merge's input blocks
+        self._last_bloom_join_wait = 0.0
         # fold the delta frontier every N waves (state.compact_frontier):
         # bounds both the per-read delta dir count and the tombstone
         # anti-join side (<= N waves x budget rows). 0 disables.
@@ -314,18 +289,15 @@ class CrawlRun:
         previous commit barrier + this wave's schedule/fetch)."""
         if self._bloom_fut is None:
             return 0.0
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.time()
         self._bloom_fut.result()
         self._bloom_fut = None
         # the delta job was the last reader of its wave's new-rows
         # checkpoint — safe to free those blocks now
-        ids = getattr(self, "_bloom_ck_ids", None)
-        if ids:
-            release_checkpoint(self.spark, set(ids))
+        if self._bloom_ck_ids:
+            release_checkpoint(self.spark, set(self._bloom_ck_ids))
             self._bloom_ck_ids = None
-        self._last_bloom_join_wait = round(_time.time() - t0, 3)
+        self._last_bloom_join_wait = round(time.time() - t0, 3)
         return self._last_bloom_join_wait
 
     def _standing_bloom(self, seen_df: DataFrame | None):
@@ -359,7 +331,6 @@ class CrawlRun:
             self._bloom = build(seen_df, capacity=max(4 * n_seen, 100_000))
         return self._bloom
 
-
     def _apply_scope(self, cand: DataFrame) -> DataFrame:
         """Frontier hygiene splice (scope_filter=True): tracking-param strip
         + native re-hash + crawl-scope drop, all JVM expressions — adds no
@@ -376,17 +347,7 @@ class CrawlRun:
         """Wave -1 'commit': canonicalize seeds, first-occurrence dedup,
         mark seen at enqueue (reference add_url semantics, cache.py:78-92).
         Returns per-phase driver wall times (same shape as run_wave)."""
-        import time as _time
-
-        timings: dict[str, float] = {}
-        _t0 = _time.time()
-
-        def _mark(phase: str) -> None:
-            nonlocal _t0
-            now = _time.time()
-            timings[phase] = round(now - _t0, 3)
-            _t0 = now
-
+        clock = _PhaseClock()
         canon = with_canonical(seeds.select("url", "priority", "seq"),
                                key_hex=False)
         if self.scope_filter:
@@ -405,18 +366,16 @@ class CrawlRun:
             frontier.withColumnRenamed("seq", "_orig_seq"), 0, ("_orig_seq",),
             ck_sink=ck_sink,
         ).drop("_orig_seq")
-        _mark("seed_canon_dedup_seq")
+        clock.mark("seed_canon_dedup_seq")
         # Observation rides the eager checkpoint, so no separate count job
         obs = Observation("seed_n")
         frontier, ids = local_checkpoint_tracked(
             frontier.observe(obs, F.count(F.lit(1)).alias("n")))
         ck_sink.append(ids)
         n = int(obs.get["n"])
-        _mark("seed_materialize")
+        clock.mark("seed_materialize")
         # both seed tables derive from the same checkpoint — overlap the
         # writes (same protocol as run_wave: data concurrent, ledger last)
-        from concurrent.futures import ThreadPoolExecutor
-
         seen = frontier.select(
             "url_hash",
             F.md5(F.col("url")).alias("key_hex"),
@@ -428,28 +387,20 @@ class CrawlRun:
                     pool.submit(self.state.write, "seen_delta", 0, seen)]
             for f in futs:
                 f.result()
-        _mark("seed_writes")
-        self.state.commit_wave(-1, n, {"seeded": n, "timings": timings})
+        clock.mark("seed_writes")
+        stats = {"seeded": n, "timings": clock.timings}
+        self.state.commit_wave(-1, n, stats)
         # seed state is committed to parquet — the in-memory checkpoint
         # blocks behind it are dead weight from here on
         release_checkpoint(self.spark, set().union(*ck_sink))
-        return {"seeded": n, "timings": timings}
+        return stats
 
     # ------------------------------------------------------------------
     def run_wave(self, wave: int) -> dict:
         """Execute wave K (0-based) and commit. Returns wave stats
         (counts + per-phase driver wall times under ``timings``)."""
-        import time as _time
-
-        timings: dict[str, float] = {}
-        _t0 = _time.time()
-
-        def _mark(phase: str) -> None:
-            nonlocal _t0
-            now = _time.time()
-            timings[phase] = round(now - _t0, 3)
-            _t0 = now
-
+        clock = _PhaseClock()
+        timings = clock.timings
         wave_ck: list = []
 
         def _ck(df: DataFrame) -> DataFrame:
@@ -458,45 +409,8 @@ class CrawlRun:
             return out
 
         st = self.state
-        ledger = st.read_ledger()
-        next_seq = ledger["next_seq"]
+        next_seq = st.read_ledger()["next_seq"]
         pending = st.read_pending(wave)
-
-        # Commit pipeline: every state write launches AS SOON AS its
-        # (checkpointed) input exists, so the writes overlap the wave's
-        # remaining compute instead of serializing after it — e.g. the
-        # documents write (the chunker-UDF pass, the slowest table) runs
-        # during discover/dedup/seq (~6s of compute at 1M seeds) and is
-        # fully hidden. The crash protocol is unchanged: every write is
-        # JOINED before commit_wave below, the ledger stays last, and a
-        # failed write surfaces at its .result() before any commit.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=7)
-        write_futs: dict = {}
-
-        def _submit_write(key: str, table: str, w: int, df: DataFrame):
-            t_sub = _time.time()
-
-            def _do():
-                st.write(table, w, df)
-                return round(_time.time() - t_sub, 3)
-
-            write_futs[key] = pool.submit(_do)
-
-        try:
-            return self._run_wave_body(
-                wave, st, next_seq, pending, timings, _mark, _ck, wave_ck,
-                pool, write_futs, _submit_write)
-        finally:
-            # error path: never leak write threads past the wave — a
-            # failed wave leaves only orphan table dirs, which
-            # clean_uncommitted removes on resume
-            pool.shutdown(wait=True)
-
-    def _run_wave_body(self, wave, st, next_seq, pending, timings, _mark,
-                       _ck, wave_ck, pool, write_futs, _submit_write):
-        import time as _time
 
         # with the filter disabled the tag path (whose _standing_bloom
         # joins the previous wave's delta future) never runs — join the
@@ -504,293 +418,297 @@ class CrawlRun:
         if self.seen_filter is None:
             self._join_bloom_delta()
 
-        if self.robots is not None:
-            pending_gated = gate_frontier(pending, self.robots)
-        else:
-            pending_gated = pending
+        # Commit pipeline: every state write launches AS SOON AS its
+        # (checkpointed) input exists, so the writes overlap the wave's
+        # remaining compute instead of serializing after it — e.g. the
+        # documents write (the full span payload, the slowest table) runs
+        # during discover/dedup/seq (~6s of compute at 1M seeds) and is
+        # fully hidden. The crash protocol is unchanged: every write is
+        # JOINED before commit_wave below, the ledger stays last, and a
+        # failed write surfaces at its .result() before any commit. The
+        # pool's exit waits for every write on the error path too, so a
+        # failed wave never leaks write threads; it leaves only orphan
+        # table dirs, which clean_uncommitted removes on resume.
+        write_futs: dict = {}
+        with ThreadPoolExecutor(max_workers=7) as pool:
 
-        # Wave counters ride on Observation nodes attached just before each
-        # localCheckpoint: the checkpoint materializes the branch exactly
-        # once, the observation sums during that pass, and NO separate
-        # count() jobs run in the hot loop (at the 10^10 design point a
-        # per-wave driver action is a scheduler round-trip per metric).
-        obs_sched = Observation(f"w{wave}_scheduled")
-        scheduled = frontier_ops.schedule_wave(
-            pending_gated, self.budgets, self.default_budget
-        ).withColumn("wave", F.lit(wave))
-        scheduled = _ck(scheduled.observe(
-            obs_sched, F.count(F.lit(1)).alias("n")
-        ))
-        # the checkpoint above is eager, so the observed count is already
-        # final — read it here; it sizes the anti-join strategy below
-        n_scheduled = int(obs_sched.get["n"])
-        _mark("schedule")
-        # both derive from the scheduled checkpoint alone — write while
-        # the fetch runs
-        _submit_write("write_schedule_log", "schedule_log", wave,
-                      scheduled.select("wave", "seq", "url", "host",
-                                       "priority"))
-        _submit_write("write_fetched", "fetched", wave,
-                      scheduled.select("url_hash"))
+            def _submit_write(key: str, table: str, w: int, df: DataFrame):
+                t_sub = time.time()
 
-        pages = _ck(self.fetcher(scheduled))
-        _mark("fetch")
+                def _do():
+                    st.write(table, w, df)
+                    return round(time.time() - t_sub, 3)
 
-        if self.archive_dir:
-            import os
+                write_futs[key] = pool.submit(_do)
 
-            from ..sources.warc import write_warc_cdx
+            if self.robots is not None:
+                pending = gate_frontier(pending, self.robots)
 
-            if "content" not in pages.columns:
+            # Wave counters ride on Observation nodes attached just before
+            # each localCheckpoint: the checkpoint materializes the branch
+            # exactly once, the observation sums during that pass, and NO
+            # separate count() jobs run in the hot loop (at the 10^10
+            # design point a per-wave driver action is a scheduler
+            # round-trip per metric).
+            obs_sched = Observation(f"w{wave}_scheduled")
+            scheduled = frontier_ops.schedule_wave(
+                pending, self.budgets, self.default_budget
+            ).withColumn("wave", F.lit(wave))
+            scheduled = _ck(scheduled.observe(
+                obs_sched, F.count(F.lit(1)).alias("n")
+            ))
+            # the checkpoint above is eager, so the observed count is
+            # already final — read it here; it sizes the anti-join below
+            n_scheduled = int(obs_sched.get["n"])
+            clock.mark("schedule")
+            # both derive from the scheduled checkpoint alone — write
+            # while the fetch runs
+            _submit_write("write_schedule_log", "schedule_log", wave,
+                          scheduled.select("wave", "seq", "url", "host",
+                                           "priority"))
+            _submit_write("write_fetched", "fetched", wave,
+                          scheduled.select("url_hash"))
+
+            pages = self.fetcher(scheduled)
+            # schema metadata only (no Spark job): a fetcher off the
+            # contract fails here, not deep in the wave plan
+            missing = [c for c in _FETCH_FUSED_COLS if c not in pages.columns]
+            if missing:
                 raise ValueError(
-                    "archive_dir needs the page payload: use a fetcher "
-                    "that emits 'content' (http_fetcher, or "
-                    "synthetic_fetcher(with_content=True))")
-            arc_dir = os.path.join(self.archive_dir, f"wave={wave}")
-            recs = pages.select(
-                F.col("url").alias("target_uri"),
-                F.when(F.col("ok"), 200).otherwise(500)
-                .cast("int").alias("http_status"),
-                F.lit("text/html").alias("content_type"),
-                F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8")
-                .alias("payload"),
-                F.pmod(F.col("url_hash"), F.lit(self.archive_shards))
-                .alias("file_id"),
-            )
-            # the CDX parquet write is the one action that drives the
-            # applyInPandas shard writes; overwrite keeps replay idempotent
-            write_warc_cdx(recs, arc_dir).write.mode("overwrite").parquet(
-                os.path.join(arc_dir, "cdx.parquet"))
-            _mark("archive_warc")
+                    f"fetcher output lacks fetch-contract columns {missing}: "
+                    "build each batch with crawl.waves.fetch_frame and "
+                    "declare FETCH_FUSED_DDL (plus any extra columns) as "
+                    "the mapInPandas schema")
+            pages = _ck(pages)
+            clock.mark("fetch")
 
-        # standing filter BEFORE the documents write is submitted: the
-        # seen read's tiny schema job would otherwise FIFO-queue behind
-        # the cluster-wide chunker pass (profiled ~1.2s of driver stall
-        # attributed to bloom_standing)
-        seen_df = st.read_seen(wave)
-        bloom = self._standing_bloom(seen_df)
-        _mark("bloom_standing")
-        # wall actually BLOCKED waiting on the previous wave's deferred
-        # delta merge (inside bloom_standing above; usually ~0 — the
-        # merge ran during the previous commit barrier + this fetch)
-        timings["bloom_delta"] = getattr(self, "_last_bloom_join_wait", 0.0)
-        self._last_bloom_join_wait = 0.0
+            if self.archive_dir:
+                import os
 
-        # --- documents: uuid5 doc id + interleaved spans (production 512/50)
-        fused = "spans" in pages.columns
-        if fused:
-            # fused fetch contract: doc_id + spans were computed inside
-            # the fetch batch — the page corpus never re-crosses the
-            # Arrow boundary for chunking
-            docs = (pages.filter(F.col("ok"))
-                    .select("doc_id", "spans", "url", "host", "wave", "seq"))
-        else:
-            docs = (
-                pages.filter(F.col("ok"))
-                .withColumn("doc_id", uuid5_url(F.col("canonical_url")))
-                .withColumn("spans", spans_from_text(F.col("content"),
-                                                     F.col("media_refs")))
-                .select("doc_id", "spans", "url", "host", "wave", "seq")
-            )
-        # the slowest table write (the full span payload) — launch now so
-        # it runs under the discovery/dedup/seq phases
-        _submit_write("write_documents", "documents", wave, docs)
+                from ..sources.warc import write_warc_cdx
 
-        # --- discovery: outlinks -> canonical -> in-wave dedup -> unseen
-        # parent_seq/link_idx are folded into _disc_ord and nothing
-        # downstream reads them — dropping them narrows the dedup shuffle
-        # rows. membership tag FUSED into the discovery checkpoint below
-        # (computed once during that materialization).
-        if fused:
-            # outlinks arrive pre-canonicalized (struct per link); only
-            # the 64-bit hash stays JVM-side — native xxhash64, codegen
+                if "content" not in pages.columns:
+                    raise ValueError(
+                        "archive_dir needs the page payload: use a fetcher "
+                        "that emits 'content' (http_fetcher, or "
+                        "synthetic_fetcher(with_content=True))")
+                arc_dir = os.path.join(self.archive_dir, f"wave={wave}")
+                recs = pages.select(
+                    F.col("url").alias("target_uri"),
+                    F.when(F.col("ok"), 200).otherwise(500)
+                    .cast("int").alias("http_status"),
+                    F.lit("text/html").alias("content_type"),
+                    F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8")
+                    .alias("payload"),
+                    F.pmod(F.col("url_hash"), F.lit(self.archive_shards))
+                    .alias("file_id"),
+                )
+                # the CDX parquet write is the one action that drives the
+                # applyInPandas shard writes; overwrite keeps replay
+                # idempotent
+                write_warc_cdx(recs, arc_dir).write.mode("overwrite").parquet(
+                    os.path.join(arc_dir, "cdx.parquet"))
+                clock.mark("archive_warc")
+
+            # standing filter BEFORE the documents write is submitted: the
+            # seen read's tiny schema job would otherwise FIFO-queue behind
+            # the cluster-wide documents write (profiled ~1.2s of driver
+            # stall attributed to bloom_standing)
+            seen_df = st.read_seen(wave)
+            bloom = self._standing_bloom(seen_df)
+            clock.mark("bloom_standing")
+            # wall actually BLOCKED waiting on the previous wave's deferred
+            # delta merge (inside bloom_standing above; usually ~0 — the
+            # merge ran during the previous commit barrier + this fetch)
+            timings["bloom_delta"] = self._last_bloom_join_wait
+            self._last_bloom_join_wait = 0.0
+
+            # --- documents: doc_id + spans were computed inside the fetch
+            # batch, so the page corpus never re-crosses the Arrow
+            # boundary. The slowest table write (the full span payload) —
+            # launch now so it runs under the discovery/dedup/seq phases
+            _submit_write("write_documents", "documents", wave,
+                          pages.filter(F.col("ok"))
+                          .select("doc_id", "spans", "url", "host", "wave",
+                                  "seq"))
+
+            # --- discovery: outlinks -> in-wave dedup -> unseen. Outlinks
+            # arrive pre-canonicalized (struct per link); only the 64-bit
+            # hash stays JVM-side — native xxhash64, codegen. parent_seq/
+            # link_idx fold into _disc_ord (unique while link_idx stays
+            # under the cap) and nothing downstream reads them — dropping
+            # them narrows the dedup shuffle rows. Membership tag FUSED
+            # into the discovery checkpoint below.
             cand = (
                 pages.select(
                     F.col("seq").alias("parent_seq"),
                     F.posexplode_outer(F.col("outlinks_canon"))
                     .alias("link_idx", "_l"),
                 )
-                .filter(F.col("_l").isNotNull())
+                .filter(F.col("_l").isNotNull()
+                        & (F.col("link_idx") < F.lit(MAX_OUTLINKS_PER_PAGE)))
                 .select(
                     F.col("_l.url").alias("url"),
                     F.col("_l.canonical_url").alias("canonical_url"),
                     F.col("_l.host").alias("host"),
-                    (F.col("parent_seq") * F.lit(1_000_000)
+                    (F.col("parent_seq") * F.lit(MAX_OUTLINKS_PER_PAGE)
                      + F.col("link_idx")).alias("_disc_ord"),
                 )
                 .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
             )
-        else:
-            links = (
-                pages.select(
-                    F.col("seq").alias("parent_seq"),
-                    F.posexplode_outer(F.col("outlinks")).alias("link_idx", "url"),
-                )
-                .filter(F.col("url").isNotNull())
-                .withColumn(
-                    "_disc_ord",
-                    F.col("parent_seq") * F.lit(1_000_000) + F.col("link_idx"),
-                )
-            )
-            cand = with_canonical(links.select("url", "_disc_ord"),
-                                  key_hex=False)
-        if self.scope_filter:
-            cand = self._apply_scope(cand)
-        cand = seen_ops.first_occurrence_dedup(cand, "url_hash", "_disc_ord")
-        if bloom is not None:
-            cand = seen_ops.bloom_tag(cand, bloom)
-        # checkpoint: (a) the bloom split consumes cand on two branches —
-        # without materialization both branches would recompute the
-        # canonicalize+dedup(+tag) lineage; (b) the observation counts once.
-        obs_disc = Observation(f"w{wave}_discovered")
-        # min/max of the discovery order key ride the same observation:
-        # they bound every post-filter subset, so the seq assigner can
-        # skip its own min/max driver job (a superset range only
-        # buckets; exact offsets come from the assigner's counts job)
-        cand = cand.observe(
-            obs_disc, F.count(F.lit(1)).alias("n"),
-            F.min(F.col("_disc_ord").cast("long")).alias("lo"),
-            F.max(F.col("_disc_ord").cast("long")).alias("hi"))
-        cand = _ck(cand)
-        n_discovered = obs_disc.get["n"]
-        disc_bounds = (obs_disc.get["lo"], obs_disc.get["hi"])
-        _mark("discover_dedup")
-        # Join-strategy selection from ledger stats alone (no extra Spark
-        # action): reverse the dedup anti-join (broadcast the maybe-seen
-        # hashes, scan the seen table narrow) only when the seen table
-        # dwarfs the wave's discoveries — A/B at 2.5M seen / 0.5M cand
-        # measured the reversed plan ~40% SLOWER (sequential broadcast
-        # chaining + re-evaluating the bloom tag), while at the 10^10
-        # design point (seen 3-4 orders of magnitude over per-wave
-        # discoveries) shuffling the seen side is the single biggest
-        # cost in the wave. next_seq == |seen| by the enqueue invariant.
-        reverse_join = (int(n_discovered) <= 4_000_000
-                        and next_seq >= 50 * max(int(n_discovered), 1))
-        # pin only the tiny anti-join branch (checked_ck): the rest of
-        # the unseen chain is a native filter over the cand checkpoint,
-        # cheap to re-evaluate — so the seq assigner can skip its own
-        # full input materialization (one fewer 0.5M-row checkpoint per
-        # wave). With the bloom OFF the whole chain IS the anti-join, so
-        # the assigner materializes as before.
-        new = seen_ops.filter_unseen(
-            cand, seen_df, bloom=bloom, broadcast_candidates=reverse_join,
-            checked_ck=_ck if bloom is not None else None)
-        if self.deny_patterns is not None:
-            new = frontier_ops.gate_trap_patterns(new, self.deny_patterns)
-        if self.robots is not None:
-            new = gate_frontier(
-                frontier_ops.with_salt(new, self.n_salts), self.robots
-            )
-        else:
+            if self.scope_filter:
+                cand = self._apply_scope(cand)
+            cand = seen_ops.first_occurrence_dedup(cand, "url_hash",
+                                                   "_disc_ord")
+            if bloom is not None:
+                cand = seen_ops.bloom_tag(cand, bloom)
+            # checkpoint: (a) the bloom split consumes cand on two
+            # branches — without materialization both branches would
+            # recompute the explode+dedup(+tag) lineage; (b) the
+            # observation counts once.
+            obs_disc = Observation(f"w{wave}_discovered")
+            # min/max of the discovery order key ride the same
+            # observation: they bound every post-filter subset, so the seq
+            # assigner can skip its own min/max driver job (a superset
+            # range only buckets; exact offsets come from the assigner's
+            # counts job)
+            cand = cand.observe(
+                obs_disc, F.count(F.lit(1)).alias("n"),
+                F.min(F.col("_disc_ord").cast("long")).alias("lo"),
+                F.max(F.col("_disc_ord").cast("long")).alias("hi"))
+            cand = _ck(cand)
+            n_discovered = obs_disc.get["n"]
+            disc_bounds = (obs_disc.get["lo"], obs_disc.get["hi"])
+            clock.mark("discover_dedup")
+            # Join-strategy selection from ledger stats alone (no extra
+            # Spark action): reverse the dedup anti-join (broadcast the
+            # maybe-seen hashes, scan the seen table narrow) only when the
+            # seen table dwarfs the wave's discoveries — A/B at 2.5M seen
+            # / 0.5M cand measured the reversed plan ~40% SLOWER
+            # (sequential broadcast chaining + re-evaluating the bloom
+            # tag), while at the 10^10 design point (seen 3-4 orders of
+            # magnitude over per-wave discoveries) shuffling the seen side
+            # is the single biggest cost in the wave. next_seq == |seen|
+            # by the enqueue invariant.
+            reverse_join = (int(n_discovered) <= 4_000_000
+                            and next_seq >= 50 * max(int(n_discovered), 1))
+            # pin only the tiny anti-join branch (checked_ck): the rest of
+            # the unseen chain is a native filter over the cand
+            # checkpoint, cheap to re-evaluate — so the seq assigner can
+            # skip its own full input materialization (one fewer
+            # 0.5M-row checkpoint per wave). With the bloom OFF the whole
+            # chain IS the anti-join, so the assigner materializes as
+            # before.
+            new = seen_ops.filter_unseen(
+                cand, seen_df, bloom=bloom, broadcast_candidates=reverse_join,
+                checked_ck=_ck if bloom is not None else None)
+            if self.deny_patterns is not None:
+                new = frontier_ops.gate_trap_patterns(new, self.deny_patterns)
             new = frontier_ops.with_salt(new, self.n_salts)
+            if self.robots is not None:
+                new = gate_frontier(new, self.robots)
 
-        new = frontier_ops.assign_global_seq(
-            new, next_seq, ("_disc_ord",), ck_sink=wave_ck,
-            materialize_input=bloom is None, bounds=disc_bounds)
-        obs_new = Observation(f"w{wave}_new")
-        new_frontier_rows = (
-            new.withColumn("priority", F.lit(self.link_priority))
-            .withColumn("wave", F.lit(wave + 1))
-            .withColumn("status", F.lit("pending"))
-            .select("url", "canonical_url", "host", "salt", "url_hash",
-                    "priority", "wave", "seq", "status")
-            .observe(obs_new, F.count(F.lit(1)).alias("n"))
-        )
-        # tracked separately from wave_ck: the DEFERRED bloom-delta job
-        # (below) reads these blocks past the commit barrier, so they are
-        # released by _join_bloom_delta, not the wave-end sweep
-        new_frontier_rows, nfr_ids = local_checkpoint_tracked(new_frontier_rows)
-        n_new = obs_new.get["n"]
-        _mark("unseen_seq")
-        # everything downstream of the new-rows checkpoint launches now
-        # and overlaps the bloom delta + the remaining wave bookkeeping
-        _submit_write(
-            "write_seen_delta", "seen_delta", wave + 1,
-            new_frontier_rows.select(
-                "url_hash",
-                F.md5(F.col("url")).alias("key_hex"),
-                F.lit(wave + 1).alias("first_seen_wave"),
-            ))
-        _submit_write("write_frontier_delta", "frontier_delta", wave,
-                      new_frontier_rows)
-
-        # incremental filter update: merge a delta built (executor-side,
-        # against the already-checkpointed new rows) with the standing
-        # filter's geometry — bitmap OR for the Bloom, fingerprint
-        # re-insert for the cuckoo. Runs on the PERSISTENT bloom thread:
-        # it is only needed by the NEXT wave's dedup, so it is NOT joined
-        # at this wave's commit barrier — it keeps running through the
-        # commit and the next wave's schedule/fetch, and _standing_bloom
-        # joins it right before the next tag (r4 profile: the join cost
-        # ~1.1s of pure barrier wall when it had to finish pre-commit).
-        def _bloom_delta():
-            if self._bloom is None or n_new <= 0:
-                return 0.0
-            t0 = _time.time()
-            if self.seen_filter == "bloom":
-                delta = seen_ops.build_bloom_distributed(
-                    new_frontier_rows, geometry=self._bloom.geometry())
-                self._bloom.or_(delta)
-            else:
-                delta = cuckoo_ops.build_cuckoo_distributed(
-                    new_frontier_rows, geometry=self._bloom.geometry())
-                self._bloom.merge_(delta)
-            return round(_time.time() - t0, 3)
-
-        if self._bloom_pool is None:
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            self._bloom_pool = _TPE(max_workers=1)
-        # any prior in-flight merge was joined by _standing_bloom above
-        # (or by the defensive join in _run_wave_body's entry)
-        assert self._bloom_fut is None
-        self._bloom_ck_ids = nfr_ids
-        self._bloom_fut = self._bloom_pool.submit(_bloom_delta)
-        _mark("bloom_delta_submit")
-
-        # --- next pending = pending - scheduled + new
-        # NOT checkpointed: the union has exactly one consumer (the
-        # frontier parquet write below) and both inputs are already
-        # materialized (pending = parquet, scheduled/new = checkpoints),
-        # so a checkpoint here would materialize the full multi-million-row
-        # frontier twice per wave for nothing (profiled at 1M seeds:
-        # 7-22s/wave of pure duplicate work).
-        # next pending is DELTA state (state.py): this wave commits only
-        # its new rows (frontier_delta) and its fetch tombstones (fetched,
-        # budget-bounded) — read_pending folds base + deltas - tombstones
-        # at the next wave's read, broadcasting the tombstone side off the
-        # ledger's own counts. O(new + scheduled) state writes per wave
-        # instead of O(frontier): the full-snapshot rewrite was the one
-        # remaining at-scale bottleneck at the 10^10-URL design point.
-        _mark("next_frontier")
-
-        # --- metrics: per-partition lineage + fetch/dedup counts (A7/T7)
-        metrics = (
-            pages.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("scheduled"),
-                F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("fetched_ok"),
-                F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("fetch_failed"),
+            new = frontier_ops.assign_global_seq(
+                new, next_seq, ("_disc_ord",), ck_sink=wave_ck,
+                materialize_input=bloom is None, bounds=disc_bounds)
+            obs_new = Observation(f"w{wave}_new")
+            new_frontier_rows = (
+                new.withColumn("priority", F.lit(self.link_priority))
+                .withColumn("wave", F.lit(wave + 1))
+                .withColumn("status", F.lit("pending"))
+                .select("url", "canonical_url", "host", "salt", "url_hash",
+                        "priority", "wave", "seq", "status")
+                .observe(obs_new, F.count(F.lit(1)).alias("n"))
             )
-            .withColumn("wave", F.lit(wave))
-            .withColumn("discovered", F.lit(n_discovered))
-            .withColumn("deduped_new", F.lit(n_new))
-        )
+            # tracked separately from wave_ck: the DEFERRED bloom-delta job
+            # (below) reads these blocks past the commit barrier, so they
+            # are released by _join_bloom_delta, not the wave-end sweep
+            new_frontier_rows, nfr_ids = local_checkpoint_tracked(
+                new_frontier_rows)
+            n_new = obs_new.get["n"]
+            clock.mark("unseen_seq")
+            # everything downstream of the new-rows checkpoint launches now
+            # and overlaps the bloom delta + the remaining wave bookkeeping
+            _submit_write(
+                "write_seen_delta", "seen_delta", wave + 1,
+                new_frontier_rows.select(
+                    "url_hash",
+                    F.md5(F.col("url")).alias("key_hex"),
+                    F.lit(wave + 1).alias("first_seen_wave"),
+                ))
+            _submit_write("write_frontier_delta", "frontier_delta", wave,
+                          new_frontier_rows)
 
-        _submit_write("write_metrics", "metrics", wave, metrics)
+            # incremental filter update: merge a delta built
+            # (executor-side, against the already-checkpointed new rows)
+            # with the standing filter's geometry — bitmap OR for the
+            # Bloom, fingerprint re-insert for the cuckoo. Runs on the
+            # PERSISTENT bloom thread: it is only needed by the NEXT
+            # wave's dedup, so it is NOT joined at this wave's commit
+            # barrier — it keeps running through the commit and the next
+            # wave's schedule/fetch, and _standing_bloom joins it right
+            # before the next tag (r4 profile: the join cost ~1.1s of pure
+            # barrier wall when it had to finish pre-commit).
+            def _bloom_delta():
+                if self._bloom is None or n_new <= 0:
+                    return 0.0
+                t0 = time.time()
+                if self.seen_filter == "bloom":
+                    delta = seen_ops.build_bloom_distributed(
+                        new_frontier_rows, geometry=self._bloom.geometry())
+                    self._bloom.or_(delta)
+                else:
+                    delta = cuckoo_ops.build_cuckoo_distributed(
+                        new_frontier_rows, geometry=self._bloom.geometry())
+                    self._bloom.merge_(delta)
+                return round(time.time() - t0, 3)
 
-        # --- commit barrier (data first, ledger last): JOIN every
-        # pipelined write + the bloom delta, then commit. The recorded
-        # per-write times are submit-to-finish walls (they include any
-        # scheduler queueing behind the wave's own jobs); state_writes is
-        # the wall spent BLOCKED here — i.e. only the part of the write
-        # work the overlap failed to hide.
-        _tw0 = _time.time()
-        for key, fut in write_futs.items():
-            timings[key] = fut.result()
-        pool.shutdown(wait=True)
-        _t0 = _time.time()
-        timings["state_writes"] = round(_t0 - _tw0, 3)
+            if self._bloom_pool is None:
+                self._bloom_pool = ThreadPoolExecutor(max_workers=1)
+            # any prior in-flight merge was joined by _standing_bloom
+            # above (or at run_wave's entry when the filter is off)
+            assert self._bloom_fut is None
+            self._bloom_ck_ids = nfr_ids
+            self._bloom_fut = self._bloom_pool.submit(_bloom_delta)
+            clock.mark("bloom_delta_submit")
+
+            # --- next pending = pending - scheduled + new, as DELTA state
+            # (state.py): this wave commits only its new rows
+            # (frontier_delta) and its fetch tombstones (fetched,
+            # budget-bounded) — read_pending folds base + deltas -
+            # tombstones at the next wave's read, broadcasting the
+            # tombstone side off the ledger's own counts. O(new +
+            # scheduled) state writes per wave instead of O(frontier): the
+            # full-snapshot rewrite was the one remaining at-scale
+            # bottleneck at the 10^10-URL design point.
+            clock.mark("next_frontier")
+
+            # --- metrics: per-partition lineage + fetch/dedup counts
+            metrics = (
+                pages.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(
+                    F.count("*").alias("scheduled"),
+                    F.sum(F.when(F.col("ok"), 1).otherwise(0))
+                    .alias("fetched_ok"),
+                    F.sum(F.when(~F.col("ok"), 1).otherwise(0))
+                    .alias("fetch_failed"),
+                )
+                .withColumn("wave", F.lit(wave))
+                .withColumn("discovered", F.lit(n_discovered))
+                .withColumn("deduped_new", F.lit(n_new))
+            )
+            _submit_write("write_metrics", "metrics", wave, metrics)
+
+            # --- commit barrier (data first, ledger last): JOIN every
+            # pipelined write, then commit. The recorded per-write times
+            # are submit-to-finish walls (they include any scheduler
+            # queueing behind the wave's own jobs); state_writes is the
+            # wall spent BLOCKED here — i.e. only the part of the write
+            # work the overlap failed to hide.
+            clock.restart()
+            for key, fut in write_futs.items():
+                timings[key] = fut.result()
+        clock.mark("state_writes")
         stats = {
             "scheduled": n_scheduled,
             "discovered": int(n_discovered),
@@ -804,16 +722,15 @@ class CrawlRun:
             base = st.frontier_base_wave()
             if wave - (base if base is not None else -1) >= self.compact_every:
                 st.compact_frontier(wave)
-                timings["compact_frontier"] = round(
-                    _time.time() - _t0, 3)
+                clock.mark("compact_frontier")
         # output-table fold (same boundary, own crash protocol): runs
         # AFTER the wave commit so a crash mid-fold settles on resume
         # without touching the wave ledger
         if self.compact_tables_every and \
                 (wave + 1) % self.compact_tables_every == 0:
-            _tc = _time.time()
+            clock.restart()
             st.compact_output_tables(capacity=self.compact_target_bytes)
-            timings["compact_tables"] = round(_time.time() - _tc, 3)
+            clock.mark("compact_tables")
         # every cross-wave input is re-read from the committed parquet
         # (CrawlState), so this wave's checkpoint blocks are dead weight
         # now — release them or a long crawl accumulates one wave's

@@ -16,12 +16,14 @@ Re-implements, semantics-exact, the reference chunkers:
 Word/token heuristics follow /root/reference/src/llm_scraper/utils/text.py:
 ``WORD_RE = \\w+`` (unicode), ``tokens = ceil(words * 1.33)``.
 
-The Spark surface is ONE pandas UDF family: ``make_spans_udf`` maps a text
-column (plus optional title and media refs) to the interleaved
-``spans array<struct<kind,text,media_ref,offset>>`` column of the
-north-rule ``documents`` table. Per-row invariant vs the reference: the
-subsequence of kind='text' spans equals the reference chunker output on
-``(text, order)`` exactly.
+The Spark surface is ONE batch function: ``doc_ids_and_spans`` maps a
+batch of ``(url, content, media_refs)`` to the uuid5 doc ids and the
+interleaved ``spans`` column (``schemas.SPAN_DDL``) of the north-rule
+``documents`` table. Every producer of that table calls it inside its own
+Arrow batch (the crawl fetch, ``extract_documents``, the synthetic and
+streaming document builders), so a page crosses into Python once.
+Per-row invariant vs the reference: the subsequence of kind='text' spans
+equals the reference chunker output on ``(text, order)`` exactly.
 
 Media interleaving policy (engine-defined; the reference carries media only
 as document-level metadata, models/meta.py:211-223): media ref ``i`` of
@@ -36,11 +38,7 @@ import re
 import uuid
 from collections.abc import Iterable
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..schemas import SPAN_STRUCT
 
 # /root/reference/src/llm_scraper/utils/text.py:22
 WORD_RE = re.compile(r"\w+", re.UNICODE)
@@ -257,32 +255,26 @@ def doc_id_for_url(url: str) -> str:
     return str(uuid.uuid5(uuid.NAMESPACE_URL, url))
 
 
+def doc_ids_and_spans(urls: Iterable, contents: Iterable,
+                      media_refs: Iterable) -> tuple[list, list]:
+    """One batch of ``(url, content, media_refs)`` -> ``(doc_ids, spans)``
+    with the production chunker params (512/50). None-tolerant: a null
+    url gets a null doc id and null content or media count as empty, so
+    one bad row degrades that row instead of failing the task."""
+    doc_ids = [doc_id_for_url(u) if isinstance(u, str) else None
+               for u in urls]
+    spans = [
+        interleave_spans(
+            chunk_by_token_estimate(c if isinstance(c, str) else ""),
+            list(m) if m is not None else [])
+        for c, m in zip(contents, media_refs)
+    ]
+    return doc_ids, spans
+
+
 # ---------------------------------------------------------------------------
-# Spark surface — Arrow-batched pandas UDFs (no per-row Python at plan level)
+# Spark surface — native expressions over the spans column
 # ---------------------------------------------------------------------------
-
-@F.pandas_udf(T.ArrayType(SPAN_STRUCT))
-def spans_from_text(text: pd.Series, media_refs: pd.Series) -> pd.Series:
-    """(content, array<media_ref>) -> interleaved spans, production params 512/50."""
-    out = []
-    for t, refs in zip(text, media_refs):
-        chunks = chunk_by_token_estimate(t if isinstance(t, str) else "")
-        refs_list = list(refs) if refs is not None else []
-        out.append(interleave_spans(chunks, refs_list))
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.StringType())
-def uuid5_url(url: pd.Series) -> pd.Series:
-    ns = uuid.NAMESPACE_URL
-    return url.map(lambda u: str(uuid.uuid5(ns, u)) if isinstance(u, str) else None)
-
-
-def with_spans(df, text_col: str = "text", media_col=None, out_col: str = "spans"):
-    """Attach the interleaved spans column to a DataFrame of documents."""
-    media = F.col(media_col) if media_col else F.array().cast("array<string>")
-    return df.withColumn(out_col, spans_from_text(F.col(text_col), media))
-
 
 def to_rag_documents(df, doc_id_col: str = "doc_id", spans_col: str = "spans",
                      title_col: str | None = None, url_col: str | None = None,

@@ -444,33 +444,20 @@ def extract_documents(df_raw, configs: dict[str, dict],
     in/out, chunker in/out) — at 100 TB the production path's wall is
     this stage, and the re-serialization of every article's content
     into two more Python stages was pure overhead."""
-    from pyspark.sql import functions as F
-
-    from ..chunker import (
-        chunk_by_token_estimate, doc_id_for_url, interleave_spans)
+    from ...schemas import SPAN_DDL
+    from ..chunker import doc_ids_and_spans
 
     sc = df_raw.sparkSession.sparkContext
     bc = sc.broadcast(configs)
-    span_ddl = ("array<struct<kind:string,text:string,"
-                "media_ref:string,offset:int>>")
 
     def gen(batches):
         inner = extract_articles_udf(bc.value, output_format)
         for pdf in inner(batches):
-            keep = pdf["status"] == "ok"
-            out = pdf[keep].copy()
-            # None-tolerant like the old uuid5_url UDF: a null url must
-            # degrade that row, not abort the task
-            out["doc_id"] = [doc_id_for_url(u) if isinstance(u, str)
-                             else None for u in out["url"]]
-            out["spans"] = [
-                interleave_spans(
-                    chunk_by_token_estimate(c if isinstance(c, str) else ""),
-                    list(m) if m is not None else [])
-                for c, m in zip(out["content"], out["media_refs"])
-            ]
+            out = pdf[pdf["status"] == "ok"].copy()
+            out["doc_id"], out["spans"] = doc_ids_and_spans(
+                out["url"], out["content"], out["media_refs"])
             yield out
 
     return df_raw.select("url", "domain", "raw_html").mapInPandas(
-        gen, schema=EXTRACT_RESULT_DDL + f", doc_id string, spans {span_ddl}"
+        gen, schema=EXTRACT_RESULT_DDL + f", doc_id string, spans {SPAN_DDL}"
     )

@@ -25,6 +25,8 @@ SPAN_STRUCT = T.StructType(
         T.StructField("offset", T.IntegerType(), False),    # 0-based span order
     ]
 )
+# the same type as a DDL string, for mapInPandas output schemas
+SPAN_DDL = T.ArrayType(SPAN_STRUCT).simpleString()
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -118,5 +120,3 @@ ASSETS_SCHEMA = T.StructType(
         T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
-
-SPAN_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"

@@ -126,7 +126,8 @@ def build_documents_interleaved(
     doc_id = uuid5 of a synthetic per-row URL; media refs are a pure
     function of (doc_id, text hash) so the table is reproducible anywhere.
     """
-    from ..operators.chunker import spans_from_text, uuid5_url
+    from ..operators.chunker import doc_ids_and_spans
+    from ..schemas import SPAN_DDL
 
     raw = spark.read.parquet(f"{base_dir}/documents.parquet")
     url = F.concat(F.lit("https://docs.example.com/"), F.col("doc_id").cast("string"))
@@ -141,9 +142,12 @@ def build_documents_interleaved(
         ),
     )
     media = F.when(n_media > 0, media).otherwise(F.array().cast("array<string>"))
-    return (
-        raw.withColumn("url", url)
-        .withColumn("doc_uuid", uuid5_url(F.col("url")))
-        .withColumn("spans", spans_from_text(F.col("text"), media))
-        .select(F.col("doc_uuid").alias("doc_id"), "spans")
-    )
+
+    def gen(batches):
+        for pdf in batches:
+            pdf["doc_id"], pdf["spans"] = doc_ids_and_spans(
+                pdf["url"], pdf["text"], pdf["media"])
+            yield pdf[["doc_id", "spans"]]
+
+    return raw.select(url.alias("url"), "text", media.alias("media")) \
+        .mapInPandas(gen, schema=f"doc_id string, spans {SPAN_DDL}")

@@ -7,7 +7,7 @@ operators cover the continuous-ingest side a production deployment adds
 around the wave loop:
 
 - ``stream_chunk_documents``  — continuously chunk newly landed raw docs
-  into the interleaved spans table (readStream -> pandas UDF -> sink)
+  into the interleaved spans table (readStream -> mapInPandas -> sink)
 - ``stream_discovery_counts`` — watermarked windowed fetch/discovery
   metrics (late data tolerated; reference analogue: per-task counters,
   worker.py:110-219)
@@ -47,7 +47,8 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 
 def stream_chunk_documents(spark: SparkSession, input_dir: str) -> DataFrame:
     """readStream over a landing dir of raw documents -> spans."""
-    from ..operators.chunker import spans_from_text, uuid5_url
+    from ..operators.chunker import doc_ids_and_spans
+    from ..schemas import SPAN_DDL
 
     raw = (
         spark.readStream.schema(RAW_DOC_STREAM_SCHEMA)
@@ -55,15 +56,15 @@ def stream_chunk_documents(spark: SparkSession, input_dir: str) -> DataFrame:
         .parquet(input_dir)
     )
     url = F.concat(F.lit("https://docs.example.com/"), F.col("doc_id").cast("string"))
-    return (
-        raw.withColumn("url", url)
-        .withColumn("doc_uuid", uuid5_url(F.col("url")))
-        .withColumn(
-            "spans",
-            spans_from_text(F.col("text"), F.array().cast("array<string>")),
-        )
-        .select(F.col("doc_uuid").alias("doc_id"), "spans")
-    )
+
+    def gen(batches):
+        for pdf in batches:  # raw docs carry no media refs
+            pdf["doc_id"], pdf["spans"] = doc_ids_and_spans(
+                pdf["url"], pdf["text"], [None] * len(pdf))
+            yield pdf[["doc_id", "spans"]]
+
+    return raw.select(url.alias("url"), "text").mapInPandas(
+        gen, schema=f"doc_id string, spans {SPAN_DDL}")
 
 
 def stream_discovery_counts(spark: SparkSession, input_dir: str,

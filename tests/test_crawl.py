@@ -20,13 +20,13 @@ def _mk_seeds(spark, n):
 
 
 def _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget=3, robots=None,
-                     use_bloom=True, seen_filter=None, seen_layout="delta"):
+                     seen_filter="bloom", seen_layout="delta"):
     state_dir = str(tmp_path / "state")
     shutil.rmtree(state_dir, ignore_errors=True)
     run = CrawlRun(
         spark, state_dir,
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-        robots=robots, default_budget=budget, n_salts=4, use_bloom=use_bloom,
+        robots=robots, default_budget=budget, n_salts=4,
         seen_filter=seen_filter, seen_layout=seen_layout, n_seen_buckets=8,
     )
     run.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
@@ -49,20 +49,23 @@ def _spark_schedule_log(run):
     ]
 
 
-@pytest.mark.parametrize("use_bloom,seen_filter,seen_layout", [
-    (True, "bloom", "delta"),    # default: sharded-Bloom + anti-join
-    (True, "cuckoo", "delta"),   # cuckoo-filter pre-filter
-    (False, None, "delta"),      # exact anti-join only
-    (True, "bloom", "bucketed"),    # bucketed catalog seen table
-    (False, None, "bucketed"),      # every candidate takes the
-                                    # exchange-free bucketed anti-join
+# test ids read <pre-filter on>-<seen_filter>-<seen_layout>
+@pytest.mark.parametrize("seen_filter,seen_layout", [
+    # default: sharded-Bloom + anti-join
+    pytest.param("bloom", "delta", id="True-bloom-delta"),
+    # cuckoo-filter pre-filter
+    pytest.param("cuckoo", "delta", id="True-cuckoo-delta"),
+    # exact anti-join only
+    pytest.param(None, "delta", id="False-None-delta"),
+    # bucketed catalog seen table
+    pytest.param("bloom", "bucketed", id="True-bloom-bucketed"),
+    # every candidate takes the exchange-free bucketed anti-join
+    pytest.param(None, "bucketed", id="False-None-bucketed"),
 ])
-def test_crawl_matches_simulator(spark, tmp_path, use_bloom, seen_filter,
-                                 seen_layout):
+def test_crawl_matches_simulator(spark, tmp_path, seen_filter, seen_layout):
     n_seeds, n_waves, budget = 40, 3, 3
     run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget,
-                           use_bloom=use_bloom, seen_filter=seen_filter,
-                           seen_layout=seen_layout)
+                           seen_filter=seen_filter, seen_layout=seen_layout)
     seed_urls = [r["url"] for r in
                  _mk_seeds(spark, n_seeds).orderBy("seq").collect()]
     sim = _sim(seed_urls, n_waves, budget)
@@ -83,6 +86,68 @@ def test_crawl_matches_simulator(spark, tmp_path, use_bloom, seen_filter,
 
     # 3. next_seq agreement (contiguous global FIFO numbering)
     assert run.state.read_ledger()["next_seq"] == sim["next_seq"]
+
+
+def test_unknown_seen_filter_raises(spark, tmp_path):
+    with pytest.raises(ValueError, match="unknown seen_filter 'bogus'"):
+        CrawlRun(spark, str(tmp_path / "state"), seen_filter="bogus")
+
+
+def test_outlink_cap_keeps_discovery_order_unique(spark, tmp_path,
+                                                  monkeypatch):
+    """Discoveries are ordered by parent_seq * MAX_OUTLINKS_PER_PAGE +
+    link_idx. With the cap below the fanout, the wave plan and the
+    simulator both drop each page's links past the cap, so the key never
+    aliases the next parent's first links and the crawl still equals the
+    simulator (schedule log, seen set, next_seq)."""
+    from llm_scraper_spark.crawl import simulator, waves
+
+    monkeypatch.setattr(simulator, "MAX_OUTLINKS_PER_PAGE", 3)
+    monkeypatch.setattr(waves, "MAX_OUTLINKS_PER_PAGE", 3)
+    assert FANOUT == 4
+    n_seeds, n_waves, budget = 40, 3, 3
+    run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget)
+    seed_urls = [r["url"] for r in
+                 _mk_seeds(spark, n_seeds).orderBy("seq").collect()]
+    sim = _sim(seed_urls, n_waves, budget)
+
+    assert _spark_schedule_log(run) == sim["schedule_log"]
+    seen = run.state.read_seen(n_waves)
+    assert {r["key_hex"] for r in seen.select("key_hex").collect()} \
+        == sim["seen_md5"]
+    assert run.state.read_ledger()["next_seq"] == sim["next_seq"]
+
+
+def test_fetcher_off_contract_raises_before_commit(spark, tmp_path):
+    """A fetcher emitting the plain content/outlinks columns instead of
+    the fetch contract fails at run_wave's schema check with one
+    ValueError naming the missing columns and fetch_frame; no wave
+    commits."""
+    cols = ["url", "canonical_url", "host", "salt", "url_hash",
+            "priority", "wave", "seq"]
+
+    def plain_fetcher(scheduled):
+        def gen(batches):
+            for pdf in batches:
+                out = pdf[cols].copy()
+                out["content"] = ""
+                out["outlinks"] = [[] for _ in range(len(pdf))]
+                out["media_refs"] = [[] for _ in range(len(pdf))]
+                out["ok"] = True
+                yield out
+
+        return scheduled.select(*cols).mapInPandas(
+            gen, schema="url string, canonical_url string, host string, "
+            "salt int, url_hash long, priority double, wave int, seq long, "
+            "content string, outlinks array<string>, "
+            "media_refs array<string>, ok boolean")
+
+    run = CrawlRun(spark, str(tmp_path / "state"), fetcher=plain_fetcher,
+                   default_budget=3, n_salts=4)
+    with pytest.raises(ValueError, match="fetch_frame") as exc:
+        run.run(1, seeds=_mk_seeds(spark, 10))
+    assert "['doc_id', 'spans', 'outlinks_canon']" in str(exc.value)
+    assert run.state.last_wave() == -1
 
 
 def test_crawl_documents_match_simulator(spark, tmp_path):
@@ -340,8 +405,8 @@ def test_feature_combination_crawl_equality(spark, tmp_path):
 
 
 def test_archive_requires_content_column(spark, tmp_path):
-    """Archive mode needs the raw payload; a fused fetcher (no content
-    column) must fail loudly at the wave, not write empty WARCs."""
+    """Archive mode needs the raw payload; a fetcher without the optional
+    content column must fail loudly at the wave, not write empty WARCs."""
     run = CrawlRun(spark, str(tmp_path / "state"),
                    fetcher=synthetic_fetcher(n_hosts=4, fanout=2),
                    archive_dir=str(tmp_path / "arc"))
@@ -476,6 +541,66 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
     # survivors equal the plain run's last-2-waves rows exactly
     keep = {d for d in docs_set(plain) if d[1] >= 4}
     assert docs_set(folded) == keep
+
+
+def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
+                                                               tmp_path):
+    """expire_results over two compaction folds decides per flat file from
+    its parquet footer's wave min/max: a repeated expiry writes nothing,
+    a fold of only newer waves is never rewritten, a fold straddling the
+    cutoff is rewritten filtered and a fold of only expired waves is
+    deleted."""
+    import os
+
+    from llm_scraper_spark.crawl.state import CrawlState
+    from llm_scraper_spark.sinks.compaction import compact_files
+
+    st = CrawlState(spark, str(tmp_path / "state"))
+    base = os.path.join(st.dir, "schedule_log")
+
+    def commit(w):
+        st.write("schedule_log", w, spark.createDataFrame(
+            [(w, w * 10 + i, f"https://h/{w}/{i}") for i in range(5)],
+            "wave int, seq long, url string").coalesce(1))
+        st.commit_wave(w, (w + 1) * 10, {})
+
+    def flat_files():
+        return {n: open(os.path.join(base, n), "rb").read()
+                for n in os.listdir(base) if n.endswith(".parquet")}
+
+    def waves():
+        return sorted(r["wave"] for r in st.read_all("schedule_log")
+                      .select("wave").distinct().collect())
+
+    for w in (0, 1):
+        commit(w)
+    compact_files(spark, base)  # older fold: waves 0-1
+    for w in (2, 3):
+        commit(w)
+    # by row count, the older fold (10 rows) fills group 0 alone and is
+    # retained; waves 2-3 fold into the newer file
+    compact_files(spark, base, capacity=10, by_rows=True)
+    folds = flat_files()
+    assert len(folds) == 2 and waves() == [0, 1, 2, 3]
+    older = min(folds)  # lower epoch
+    newer = max(folds)
+
+    # cutoff 0 straddles the older fold: it is rewritten, the newer one
+    # is left in place byte for byte
+    assert st.expire_results(keep_last_n_waves=3) == [0]
+    after = flat_files()
+    assert older not in after and after[newer] == folds[newer]
+    assert waves() == [1, 2, 3]
+    # (a) the same expiry again finds no expired rows and writes nothing
+    st.expire_results(keep_last_n_waves=3)
+    assert flat_files() == after
+    # (b) cutting only the older fold deletes it without touching the
+    # newer fold's file
+    assert st.expire_results(keep_last_n_waves=2) == [0, 1]
+    final = flat_files()
+    assert final == {newer: folds[newer]}
+    assert waves() == [2, 3]
+    assert st.read_all("schedule_log").count() == 10
 
 
 def test_bucketed_seen_crash_and_resume_exact(spark, tmp_path, monkeypatch):
@@ -668,7 +793,7 @@ def _alias_fetcher():
     """Fetcher whose every page links to one clean URL, a tracking-param
     alias of the SAME URL, and one non-content asset — exercising the
     scope_filter splice."""
-    from llm_scraper_spark.crawl.waves import FETCH_RESULT_DDL
+    from llm_scraper_spark.crawl.waves import FETCH_FUSED_DDL, fetch_frame
 
     def fetch(scheduled):
         cols = ["url", "canonical_url", "host", "salt", "url_hash",
@@ -676,7 +801,6 @@ def _alias_fetcher():
 
         def gen(batches):
             for pdf in batches:
-                out = pdf[cols].copy()
                 outlinks = []
                 for u, h in zip(pdf["canonical_url"], pdf["host"]):
                     n = abs(hash(u)) % 1000
@@ -685,13 +809,10 @@ def _alias_fetcher():
                         f"https://{h}/p/{n}?utm_source=x&gclid=g",
                         f"https://{h}/img/{n}.jpg",
                     ])
-                out["content"] = ""
-                out["outlinks"] = outlinks
-                out["media_refs"] = [[] for _ in outlinks]
-                out["ok"] = True
-                yield out
+                yield fetch_frame(pdf, [""] * len(pdf), outlinks,
+                                  [[] for _ in outlinks], [True] * len(pdf))
 
-        return scheduled.select(*cols).mapInPandas(gen, schema=FETCH_RESULT_DDL)
+        return scheduled.select(*cols).mapInPandas(gen, schema=FETCH_FUSED_DDL)
 
     return fetch
 
@@ -773,95 +894,14 @@ def test_crawl_deny_patterns_gate(spark, tmp_path):
     assert (frontier_urls - denied - gated_urls) == set() or True
 
 
-# ---------------------------------------------------------------------------
-# Iceberg readiness (VERDICT r3 #10): the catalog branch has no jars in this
-# sandbox, so its routing + the ordered-commit protocol are pinned with a
-# fake catalog and instrumented writes instead of a live table.
-# ---------------------------------------------------------------------------
-
-def test_iceberg_catalog_detection_and_write_routing(spark, tmp_path,
-                                                     monkeypatch):
-    """crawl/state.py:73-86,191-204: a configured Iceberg catalog is
-    auto-detected, writes route through writeTo(<catalog>.crawl.<table>)
-    .overwritePartitions() with the _wave_part literal attached, and
-    reads route through spark.read.table with the wave filter."""
-    import pyspark.sql as pysql
-
-    from llm_scraper_spark.crawl import state as state_mod
-
-    # detection: a SparkConf entry spark.sql.catalog.<name> = ...Iceberg...
-    class FakeConf:
-        def getAll(self):
-            return [("spark.app.name", "x"),
-                    ("spark.sql.catalog.icecat",
-                     "org.apache.iceberg.spark.SparkCatalog"),
-                    ("spark.sql.catalog.icecat.type", "hadoop")]
-
-    class FakeSC:
-        def getConf(self):
-            return FakeConf()
-
-    class FakeSpark:
-        sparkContext = FakeSC()
-
-    assert state_mod._detect_iceberg_catalog(FakeSpark()) == "icecat"
-    # .type sub-key (4 dots) and non-iceberg values must NOT match
-    class NoCatConf:
-        def getAll(self):
-            return [("spark.sql.catalog.hive", "HiveCatalogImpl")]
-
-    class NoCatSC:
-        def getConf(self):
-            return NoCatConf()
-
-    class NoCatSpark:
-        sparkContext = NoCatSC()
-
-    assert state_mod._detect_iceberg_catalog(NoCatSpark()) is None
-
-    # write routing: stub writeTo on the CONCRETE DataFrame class (the
-    # classic backend subclasses the pyspark.sql.DataFrame ABC and
-    # overrides writeTo, so patching the base would not intercept)
-    calls = []
-
-    class FakeWriter:
-        def __init__(self, df, table):
-            self.df, self.table = df, table
-
-        def overwritePartitions(self):
-            calls.append((self.table, self.df.columns))
-
-    st = state_mod.CrawlState(spark, str(tmp_path), iceberg_catalog="icecat")
-    df = spark.range(3).selectExpr("id AS url_hash")
-    monkeypatch.setattr(type(df), "writeTo",
-                        lambda self, t: FakeWriter(self, t))
-    st.write("fetched", 4, df)
-    assert calls == [("icecat.crawl.fetched", ["url_hash", "_wave_part"])]
-
-    # read routing: spark.read.table(<catalog>.crawl.<table>) + wave filter
-    tables = []
-
-    class FakeReader:
-        def table(self, name):
-            tables.append(name)
-            return spark.range(2).selectExpr(
-                "id AS url_hash", "CAST(4 AS INT) AS _wave_part")
-
-    monkeypatch.setattr(
-        type(spark), "read", property(lambda self: FakeReader()))
-    out = st.read("fetched", 4)
-    assert tables == ["icecat.crawl.fetched"]
-    assert out.columns == ["url_hash"] and out.count() == 2
-
-
 def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
                                                           monkeypatch):
     """The documented commit protocol (crawl/state.py module docs): every
     wave's data-table writes COMPLETE before the ledger rename, for the
     seed commit and every wave — pinned by instrumenting the real
-    parquet-backed state under a live 2-wave CrawlRun. This is the same
-    ordering contract the Iceberg branch relies on (per-table snapshot
-    commits, ledger as the cross-table transaction point)."""
+    parquet-backed state under a live 2-wave CrawlRun: per-table
+    commits first, the ledger as the one cross-table transaction point
+    (the shape any per-table snapshot format would need too)."""
     from llm_scraper_spark.crawl import state as state_mod
     from llm_scraper_spark.crawl.waves import CrawlRun, synthetic_fetcher
     from llm_scraper_spark.sources.synthetic import synth_seeds

@@ -185,7 +185,7 @@ def test_crawl_run_end_to_end_over_loopback(spark, tmp_path, loopback):
         [(f"{base}/site/p0", 1.0, 0)], "url string, priority double, seq long")
     run = CrawlRun(spark, str(tmp_path / "crawl"),
                    fetcher=http_fetcher(timeout_s=10.0),
-                   default_budget=100, use_bloom=True)
+                   default_budget=100)
     run.run(2, seeds=seeds)
 
     seen = {r["key_hex"] for r in

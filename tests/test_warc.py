@@ -203,10 +203,9 @@ def test_crawl_wave_warc_archive(spark, tmp_path):
     from llm_scraper_spark.sources.warc import fetch_warc_records, read_warc
 
     arc = str(tmp_path / "arc")
-    # archive mode needs the raw payload column -> unfused contract
     run = CrawlRun(spark, str(tmp_path / "state"),
                    fetcher=synthetic_fetcher(n_hosts=10, fanout=3,
-                                             fused=False),
+                                             with_content=True),
                    archive_dir=arc, archive_shards=3)
     run.run(2, seeds=synth_seeds(spark, 20, n_hosts=10))
 
