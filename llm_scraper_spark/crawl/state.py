@@ -67,6 +67,19 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA, SEEN_SCHEMA
+
+# The cross-wave state tables have pinned schemas: ``write`` conforms each
+# frame to its table's schema and the reads pass it to the parquet
+# reader, so a read plans from metadata alone instead of launching a
+# footer-inference job on the wave's serial path.
+STATE_SCHEMAS = {
+    "frontier_delta": FRONTIER_SCHEMA,
+    "frontier_base": FRONTIER_SCHEMA,
+    "fetched": FETCHED_SCHEMA,
+    "seen_delta": SEEN_SCHEMA,
+}
+
 
 def _wave_bounds(path: str) -> tuple[float, float] | None:
     """(min, max) of a parquet file's ``wave`` column from its footer
@@ -274,13 +287,10 @@ class CrawlState:
                 if n.endswith(".parquet") and not n.startswith(("_", "."))}
 
     def _write_seen_bucketed(self, wave: int, df: DataFrame) -> None:
-        from pyspark.sql import functions as F
-
+        # df is already conformed to SEEN_SCHEMA (write)
         name = self._ensure_seen_table()
         before = self._seen_data_files()
-        (df.select("url_hash", "key_hex",
-                   F.col("first_seen_wave").cast("int"))
-         .write.mode("append").format("parquet")
+        (df.write.mode("append").format("parquet")
          .bucketBy(self.n_seen_buckets, "url_hash").sortBy("url_hash")
          .saveAsTable(name))
         added = sorted(self._seen_data_files() - before)
@@ -347,13 +357,26 @@ class CrawlState:
         return removed
 
     def write(self, table: str, wave: int, df: DataFrame) -> None:
+        schema = STATE_SCHEMAS.get(table)
+        if schema is not None:
+            # a pinned read trusts the files: e.g. an int link_priority
+            # lands as double
+            from pyspark.sql import functions as F
+
+            df = df.select(*[F.col(f.name).cast(f.dataType)
+                             for f in schema.fields])
         if table == "seen_delta" and self.seen_layout == "bucketed":
             self._write_seen_bucketed(wave, df)
             return
         df.write.mode("overwrite").parquet(self._p(table, wave))
 
+    def _reader(self, table: str):
+        schema = STATE_SCHEMAS.get(table)
+        reader = self.spark.read
+        return reader if schema is None else reader.schema(schema)
+
     def read(self, table: str, wave: int) -> DataFrame:
-        return self.spark.read.parquet(self._p(table, wave))
+        return self._reader(table).parquet(self._p(table, wave))
 
     def frontier_base_wave(self) -> int | None:
         """Wave id of the live compacted pending fold, or None."""
@@ -400,7 +423,7 @@ class CrawlState:
         if base is not None:
             parts.append(self.read("frontier_base", base))
         if delta_paths:
-            parts.append(self.spark.read.parquet(*delta_paths))
+            parts.append(self._reader("frontier_delta").parquet(*delta_paths))
         if not parts:
             raise FileNotFoundError(
                 f"no committed frontier state for wave {wave} in {self.dir}")
@@ -409,9 +432,8 @@ class CrawlState:
             pending = pending.unionByName(p)
         fetched_waves, n_tombstones = self._fetched_since_base(wave - 1)
         if fetched_waves:
-            tomb = self.spark.read.parquet(
-                *[self._p("fetched", f) for f in fetched_waves]
-            ).select("url_hash")
+            tomb = self._reader("fetched").parquet(
+                *[self._p("fetched", f) for f in fetched_waves])
             if n_tombstones <= 4_000_000:
                 tomb = F.broadcast(tomb)
             pending = pending.join(tomb, on="url_hash", how="left_anti")
@@ -472,7 +494,7 @@ class CrawlState:
         ]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._reader("seen_delta").parquet(*paths)
 
     def expire_results(self, keep_last_n_waves: int) -> list[int]:
         """T5 retention (reference TTL, cache.py:229-263): drop result

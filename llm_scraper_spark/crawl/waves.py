@@ -9,9 +9,16 @@ Each wave is one batch of the reference's consume-loop
            in-wave first-occurrence dedup --bloom + anti-join vs seen-->
            assign global seq --> frontier append + seen delta
 
-Shuffle inventory per wave (the two the north rule names):
+Shuffle inventory per wave (the two the north rule names, plus one):
   1. per-host politeness window (salted: capped shards before exact rank)
   2. the dedup anti-join (bloom pre-filtered; AQE-coalesced)
+  3. the fetch spread: ``scheduled`` hashed on (host, salt) into
+     min(task slots, rows) partitions before the fetch crossing. AQE
+     sizes the window's output by bytes and scheduled rows are tiny, so
+     without it the wave's heaviest Python stage (and http_fetcher's
+     only network concurrency) runs as ONE task. Always taken when more
+     than one row is scheduled: the window's exchange is keyed on host
+     alone, so at scale it would put a host's whole budget in one task.
 Everything else is narrow or a broadcast.
 
 Ordering contract vs the reference (cache.py:138-148 FIFO): ``seq`` is the
@@ -102,7 +109,8 @@ def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
 
     mapInPandas: one Arrow batch in, ``fetch_frame`` batches out — the
     slot where a real deployment runs bounded async HTTP (http_fetcher
-    below). ``with_content=True`` adds the raw page text as the optional
+    below); run_wave spreads the scheduled rows over every task slot.
+    ``with_content=True`` adds the raw page text as the optional
     ``content`` column (as http_fetcher does) for archive mode; CrawlRun
     asks for it when ``archive_dir`` is set and no fetcher is passed.
     """
@@ -136,6 +144,10 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
     4xx/5xx raise and the page fails (ok=False, crawl continues), and
     links/media absolutize against the POST-redirect URL — the
     reference passes ``str(response.url)`` to Article.from_html.
+    ``timeout_s`` is both the socket timeout and each URL's total wall
+    deadline: a timer hangs up the URL's sockets once it passes, so a
+    server that drips its headers or body (each recv inside the socket
+    timeout) fails the page (ok=False) instead of holding the slot.
     Emits the fetch contract (``fetch_frame``) plus the raw ``content``,
     ``outlinks`` and ``media_refs`` columns: the WARC archive and the
     parity tests need them, and for live HTTP the network dominates.
@@ -143,22 +155,77 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
 
     def fetch(scheduled: DataFrame) -> DataFrame:
         def gen(batches):
-            from urllib.request import Request, urlopen
+            import socket
+            import threading
+            from urllib.request import (HTTPHandler, HTTPSHandler, Request,
+                                        build_opener)
 
             from ..operators.extraction.dom import parse_html
             from ..operators.extraction.values import extract_links_and_media
 
+            class Watch:
+                """Records every socket the opener connects (each redirect
+                hop's too) in ``self.socks``, for the deadline timer."""
+
+                def do_open(self, http_class, req, **kw):
+                    def connection(host, **conn_kw):
+                        conn = http_class(host, **conn_kw)
+                        create = conn._create_connection
+
+                        def watched(*args, **create_kw):
+                            sock = create(*args, **create_kw)
+                            self.socks.append(sock)
+                            if self.expired.is_set():  # connected too late
+                                sock.close()
+                                raise TimeoutError("per-URL deadline")
+                            return sock
+
+                        conn._create_connection = watched
+                        return conn
+
+                    return super().do_open(connection, req, **kw)
+
+            class WatchedHTTP(Watch, HTTPHandler):
+                pass
+
+            class WatchedHTTPS(Watch, HTTPSHandler):
+                pass
+
             def get(url: str):
+                # the socket timeout bounds each recv, not the page: at
+                # the deadline the timer shuts the URL's sockets down, so
+                # a blocked connect, header or body read returns at once
+                handlers = [WatchedHTTP(), WatchedHTTPS()]
+                socks, expired = [], threading.Event()
+                for h in handlers:
+                    h.socks, h.expired = socks, expired
+
+                def hang_up():
+                    expired.set()
+                    for sock in list(socks):
+                        try:
+                            sock.shutdown(socket.SHUT_RDWR)
+                        except OSError:
+                            pass
+
+                timer = threading.Timer(timeout_s, hang_up)
+                timer.daemon = True
+                timer.start()
                 try:
                     req = Request(url, headers={"User-Agent": user_agent})
-                    with urlopen(req, timeout=timeout_s) as resp:
-                        html = resp.read().decode("utf-8", errors="ignore")
+                    with build_opener(*handlers).open(
+                            req, timeout=timeout_s) as resp:
                         final_url = resp.geturl()  # post-redirect base
+                        html = resp.read().decode("utf-8", errors="ignore")
+                    if expired.is_set():  # a hung-up body may read short
+                        raise TimeoutError(f"{url}: over {timeout_s}s")
                     root = parse_html(html)
                     text, links, media = extract_links_and_media(root, final_url)
                     return text, links, media, True
                 except Exception:
                     return "", [], [], False
+                finally:
+                    timer.cancel()
 
             with ThreadPoolExecutor(max_workers=max_concurrent_per_task) as pool:
                 for pdf in batches:
@@ -469,7 +536,15 @@ class CrawlRun:
             _submit_write("write_fetched", "fetched", wave,
                           scheduled.select("url_hash"))
 
-            pages = self.fetcher(scheduled)
+            # fetch spread (shuffle 3 above): one fetch task per slot.
+            # (host, salt) is the politeness shard unit, so one host's
+            # URLs still reach at most n_salts tasks
+            n_fetch = min(self.spark.sparkContext.defaultParallelism,
+                          n_scheduled)
+            to_fetch = scheduled
+            if n_fetch > 1:
+                to_fetch = scheduled.repartition(n_fetch, "host", "salt")
+            pages = self.fetcher(to_fetch)
             # schema metadata only (no Spark job): a fetcher off the
             # contract fails here, not deep in the wave plan
             missing = [c for c in _FETCH_FUSED_COLS if c not in pages.columns]

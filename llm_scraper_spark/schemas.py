@@ -67,6 +67,13 @@ SEEN_SCHEMA = T.StructType(
     ]
 )
 
+# fetch tombstones: the url_hash of every URL a wave scheduled
+FETCHED_SCHEMA = T.StructType(
+    [
+        T.StructField("url_hash", T.LongType(), False),
+    ]
+)
+
 SEEDS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -984,3 +984,95 @@ def test_legacy_ledger_without_seen_layout_is_delta(spark, tmp_path):
                                                    "next_seq": 0}))
     assert CrawlState(spark, str(fresh),
                       seen_layout="bucketed").seen_layout == "bucketed"
+
+
+def test_fetch_spreads_over_every_task_slot(spark, tmp_path):
+    """run_wave hands the fetcher ``scheduled`` hashed on (host, salt)
+    into min(task slots, scheduled rows) partitions. AQE coalesces the
+    politeness window's tiny output to one partition, which would run
+    the whole fetch crossing as one task."""
+    slots = spark.sparkContext.defaultParallelism
+    inner = synthetic_fetcher(n_hosts=64, fanout=2)
+    widths = []
+
+    def recording(scheduled):
+        # under AQE df.rdd runs the exchange's map stage: a test-only cost
+        widths.append(scheduled.rdd.getNumPartitions())
+        return inner(scheduled)
+
+    def one_wave(name, urls, budget):
+        seeds = spark.createDataFrame(
+            [(u, 1.0, i) for i, u in enumerate(urls)],
+            "url string, priority double, seq long")
+        run = CrawlRun(spark, str(tmp_path / name), fetcher=recording,
+                       default_budget=budget)
+        return run.run(1, seeds=seeds)[0]["scheduled"]
+
+    wide = one_wave("wide", [f"https://host{i % 64}.example.com/seed/{i}"
+                             for i in range(256)], budget=8)
+    assert wide == 256 and widths[-1] == min(slots, wide)
+    # one host, fewer scheduled rows than slots: one task per row at most
+    narrow = one_wave("narrow", [f"https://solo.example.com/seed/{i}"
+                                 for i in range(20)], budget=2)
+    assert narrow == 2 < slots and widths[-1] == narrow
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs run by one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_state_reads_run_no_spark_job(spark, tmp_path):
+    """read_pending and read_seen read through the pinned state schemas,
+    so neither launches a parquet schema-inference job: with plain
+    deltas, and with a compacted base under later deltas and
+    tombstones."""
+    run = _run_spark_crawl(spark, tmp_path, 40, 2)
+    st = run.state
+
+    def read_all_state(layout):
+        df, jobs = _jobs_run_by(spark, lambda: st.read_pending(2))
+        assert not jobs, (layout, jobs)
+        seen, jobs = _jobs_run_by(spark, lambda: st.read_seen(2))
+        assert seen is not None and not jobs, (layout, jobs)
+        return {r[0] for r in df.select("url_hash").collect()}
+
+    before = read_all_state("deltas")
+    # fold through wave 0: wave 1's delta and tombstones stay live
+    st.compact_frontier(0)
+    assert st.frontier_base_wave() == 0
+    assert before and read_all_state("compacted base") == before
+
+
+def test_state_files_match_pinned_schemas(spark, tmp_path):
+    """Schema-drift guard: pinned reads trust the files, so every state
+    table's files must infer to exactly its pinned schema, also when the
+    seeds carry float priorities and the link priority is an int."""
+    from llm_scraper_spark.crawl.state import STATE_SCHEMAS
+
+    state_dir = tmp_path / "state"
+    run = CrawlRun(spark, str(state_dir),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4, link_priority=1,
+                   compact_every=0)
+    run.run(2, seeds=_mk_seeds(spark, 40).withColumn(
+        "priority", F.col("priority").cast("float")))
+    run.state.compact_frontier(0)
+    checked = set()
+    for table, schema in STATE_SCHEMAS.items():
+        for wave_dir in sorted((state_dir / table).iterdir()):
+            inferred = spark.read.parquet(str(wave_dir)).schema
+            assert ([(f.name, f.dataType) for f in inferred]
+                    == [(f.name, f.dataType) for f in schema]), \
+                (table, wave_dir.name, inferred.simpleString())
+            checked.add(table)
+    assert checked == set(STATE_SCHEMAS)

@@ -11,7 +11,9 @@ needs none. Covers, with reference parity targets from
   ``str(response.url)``
 - raise_for_status parity: 4xx/5xx -> page fails (ok=False), the crawl
   continues — scrape_url catches HTTPError and returns None
-- timeout: a handler slower than timeout_s fails the page, not the job
+- timeout: a handler slower than timeout_s fails the page, not the job;
+  so does a server that drips its headers or its body, each byte well
+  inside the socket timeout, for longer than the per-URL deadline
 - per-task concurrency bound: one mapInPandas task never holds more than
   max_concurrent_per_task sockets open (reference envelope: 8,
   worker.py:31-32)
@@ -40,6 +42,7 @@ class _State:
         self.max_in_flight = 0
         self.user_agents = set()
         self.paths = []
+        self.drip_held_s = {}  # drip path -> wall its client stayed
 
 
 def _make_handler(state: _State):
@@ -83,6 +86,9 @@ def _make_handler(state: _State):
                 elif self.path == "/slow":
                     time.sleep(3.0)
                     self._html("<html><body>late</body></html>")
+                elif self.path in ("/drip", "/header-drip"):
+                    self._drip(n_bytes=50, every_s=0.2,
+                               in_headers=self.path == "/header-drip")
                 elif self.path.startswith("/hold"):
                     time.sleep(0.4)
                     self._html("<html><body>held</body></html>")
@@ -98,6 +104,34 @@ def _make_handler(state: _State):
             finally:
                 with state.lock:
                     state.in_flight -= 1
+
+        def _drip(self, n_bytes: int, every_s: float, in_headers: bool):
+            """A slow-drip server: one byte every ``every_s`` until
+            ``n_bytes`` are sent or the client hangs up, either of the
+            body (headers at once) or of one long header line (status
+            line at once, body empty); records how long the client
+            stayed."""
+            import time
+
+            t0 = time.monotonic()
+            if in_headers:
+                self.wfile.write(b"HTTP/1.1 200 OK\r\nX-Pad: ")
+                tail = b"\r\nContent-Length: 0\r\n\r\n"
+            else:
+                self.send_response(200)
+                self.send_header("Content-Type", "text/html; charset=utf-8")
+                self.send_header("Content-Length", str(n_bytes))
+                self.end_headers()
+                tail = b""
+            try:
+                for _ in range(n_bytes):
+                    self.wfile.write(b"x")
+                    self.wfile.flush()
+                    time.sleep(every_s)
+                self.wfile.write(tail)
+            except (BrokenPipeError, ConnectionResetError):
+                pass
+            state.drip_held_s[self.path] = time.monotonic() - t0
 
         def _html(self, body: str):
             data = body.encode()
@@ -161,6 +195,32 @@ def test_fetch_redirect_404_500_timeout(spark, loopback):
     assert not out[f"{base}/slow"]["ok"]
     # every row came back exactly once despite the failures
     assert len(out) == len(urls)
+
+
+def test_slow_drip_fails_at_the_per_url_deadline(spark, loopback):
+    """Servers that drip one byte every 0.2 s for 10 s, in the headers
+    or in the body, never trip the 1 s socket timeout; the per-URL wall
+    deadline fails those pages while the rest of the batch succeeds."""
+    import time
+
+    base, state = loopback
+    drips = [f"{base}/drip", f"{base}/header-drip"]
+    urls = drips + [f"{base}/", f"{base}/final/page"]
+    fetch = http_fetcher(timeout_s=1.0, max_concurrent_per_task=4)
+    out = {r["url"]: r for r in
+           fetch(_scheduled(spark, urls).coalesce(1)).collect()}
+
+    for url in drips:
+        assert not out[url]["ok"] and out[url]["content"] == "", url
+    assert out[f"{base}/"]["ok"] and out[f"{base}/final/page"]["ok"]
+    # each client hung up long before its 10 s drip ended (the server
+    # notices on a write after the hang-up, every 0.2 s)
+    deadline = time.monotonic() + 10
+    while len(state.drip_held_s) < 2 and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert set(state.drip_held_s) == {"/drip", "/header-drip"}
+    assert all(held < 5.0 for held in state.drip_held_s.values()), \
+        state.drip_held_s
 
 
 def test_concurrency_bound_and_user_agent(spark, loopback):
