@@ -150,15 +150,10 @@ def bench_wave_loop(spark, n_seeds: int, n_waves: int = 3,
     state_dir = tempfile.mkdtemp(prefix="bench_wave_loop_", dir=state_root)
     try:
         t0 = time.time()
-        # A/B knob for the bucketed catalog seen table (VERDICT r4 #2):
-        # SPARK_GRAFT_SEEN_LAYOUT=bucketed
-        seen_layout = os.environ.get("SPARK_GRAFT_SEEN_LAYOUT", "delta")
         run = CrawlRun(
             spark, state_dir,
             fetcher=synthetic_fetcher(n_hosts=n_hosts, fanout=fanout),
-            default_budget=budget, n_salts=4, seen_layout=seen_layout,
-            n_seen_buckets=int(os.environ.get("SPARK_GRAFT_SEEN_BUCKETS",
-                                              "32")),
+            default_budget=budget, n_salts=4,
         )
         stats = run.run(n_waves,
                         seeds=synth_seeds(spark, n_seeds, n_hosts=n_hosts))
@@ -739,11 +734,11 @@ def _default_runs_section() -> str:
         "hunted best window at 116,702 (BENCH/wave_profile.json). The\n"
         "bucketed seen layout A/B at this config: ~3s/run SLOWER than\n"
         "the delta layout (the bloom keeps the anti-join tiny while the\n"
-        "bucketed append pays a shuffle+sort per wave), so delta stays\n"
-        "the default and bucketed is the 10^10 regime option — the A/B\n"
-        "knob is SPARK_GRAFT_SEEN_LAYOUT. Runs since round 5 also carry\n"
-        "the extraction headline (pages/s over synthetic HTML cycling\n"
-        "the 93 real parser configs; 'extract p/s' column).\n\n"
+        "bucketed append pays a shuffle+sort per wave); the bucketed\n"
+        "layout has since been removed (BENCH/BUCKETED_AB.md). Runs\n"
+        "since round 5 also carry the extraction headline (pages/s over\n"
+        "synthetic HTML cycling the 93 real parser configs; 'extract\n"
+        "p/s' column).\n\n"
         f"**Median throughput over {len(thr)} runs: {med:,.0f} URLs "
         f"scheduled+deduped/sec** (min {thr[0]:,.0f}, max {thr[-1]:,.0f})\n\n"
         + wl_line +

@@ -40,7 +40,7 @@ two invariants, both tested with a simulated mid-commit crash
 (tests/test_crawl.py::test_crash_between_table_writes_resumes_exactly):
 
 - READS never see orphans: every cross-wave read path
-  (``read_seen``/``read_all``/``read_frontier``) is bounded by the
+  (``read_seen``/``read_all``/``read_pending``) is bounded by the
   committed ledger, so between crash and replay the state is exactly the
   wave-(K-1) snapshot.
 - REPLAY is idempotent: resume re-runs wave K from the committed
@@ -100,42 +100,17 @@ def _wave_bounds(path: str) -> tuple[float, float] | None:
 
 
 class CrawlState:
-    def __init__(self, spark: SparkSession, state_dir: str,
-                 seen_layout: str = "delta",
-                 n_seen_buckets: int = 32):
-        if seen_layout not in ("delta", "bucketed"):
-            raise ValueError(f"unknown seen_layout {seen_layout!r}")
+    def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.dir = state_dir
-        # "bucketed": the seen set lives in a bucketBy(url_hash) catalog
-        # table, so the per-wave dedup anti-join plans with ZERO Exchange
-        # on the seen side — at the 10^10 design point re-shuffling the
-        # biggest table in the system every wave is the dominant cost
-        # (sinks/bucketed.py rationale, wired here per VERDICT r4 #2).
-        self.seen_layout = seen_layout
-        self.n_seen_buckets = n_seen_buckets
         os.makedirs(state_dir, exist_ok=True)
-        ledger = self.read_ledger()
-        recorded = ledger.get("seen_layout")
-        if recorded is None and ledger.get("waves"):
-            # committed before the layout was recorded: such dirs were
-            # always written with the delta layout
-            recorded = "delta"
-        if recorded is not None and recorded != seen_layout:
+        if self.read_ledger().get("seen_layout") == "bucketed":
+            # its seen set lives in a catalog table this engine no longer
+            # reads: as delta dirs it would read empty and re-enqueue
+            # every URL
             raise ValueError(
-                f"state dir was created with seen_layout={recorded!r}; "
-                f"resume with the same layout (got {seen_layout!r})")
-        rec_buckets = ledger.get("n_seen_buckets")
-        if (seen_layout == "bucketed" and rec_buckets is not None
-                and int(rec_buckets) != n_seen_buckets):
-            # a mismatched bucket count would re-register the catalog
-            # table with the wrong INTO N BUCKETS over existing files —
-            # the scan then claims a partitioning the data doesn't have
-            # and the dedup anti-join silently drops/misses rows
-            raise ValueError(
-                f"state dir's bucketed seen table was written with "
-                f"{rec_buckets} buckets; resume with the same count "
-                f"(got {n_seen_buckets})")
+                "state dir was written with the bucketed seen layout, "
+                "which was removed; only the seen_delta layout is read")
 
     # --- ledger ---------------------------------------------------------
     @property
@@ -168,9 +143,6 @@ class CrawlState:
         ledger["waves"].append({"wave": wave, "next_seq": next_seq, **stats})
         ledger["waves"].sort(key=lambda w: w["wave"])
         ledger["next_seq"] = next_seq
-        ledger["seen_layout"] = self.seen_layout
-        if self.seen_layout == "bucketed":
-            ledger["n_seen_buckets"] = self.n_seen_buckets
         self._write_ledger(ledger)
 
     def last_wave(self) -> int | None:
@@ -199,7 +171,7 @@ class CrawlState:
         import shutil
 
         removed = []
-        for table in ("frontier", "frontier_delta", "fetched", "seen_delta",
+        for table in ("frontier_delta", "fetched", "seen_delta",
                       "documents", "schedule_log", "metrics"):
             base = os.path.join(self.dir, table)
             if not os.path.isdir(base):
@@ -216,8 +188,6 @@ class CrawlState:
                     path = os.path.join(base, name)
                     shutil.rmtree(path, ignore_errors=True)
                     removed.append(path)
-        if self.seen_layout == "bucketed":
-            removed += self._clean_seen_bucketed()
         # settle a crashed output-table compaction (manifest committed ->
         # roll forward; staged only -> roll back)
         from ..sinks.compaction import recover_compaction
@@ -244,118 +214,6 @@ class CrawlState:
     def _p(self, table: str, wave: int) -> str:
         return os.path.join(self.dir, table, f"wave={wave}")
 
-    # --- bucketed seen layout ------------------------------------------
-    # The seen set as a bucketBy(url_hash) parquet CATALOG table: every
-    # wave APPENDS its delta (<= n_buckets files), and the per-wave
-    # anti-join streams the seen side bucket-aligned with no Exchange.
-    # Crash protocol: the append lands files, then a per-wave sidecar
-    # (_files_wave_K.json) records exactly which files belong to wave K,
-    # then the ledger commits as usual. On resume, files of uncommitted
-    # waves (or covered by no sidecar at all — a mid-append crash) are
-    # deleted before replay, so the replayed append recreates them and
-    # the table never holds duplicate rows.
-
-    def _seen_table_name(self) -> str:
-        import hashlib
-
-        h = hashlib.md5(os.path.abspath(self.dir).encode()).hexdigest()[:12]
-        return f"seen_b_{h}"
-
-    def _seen_bucket_dir(self) -> str:
-        return os.path.join(self.dir, "seen_bucketed")
-
-    def _ensure_seen_table(self) -> str:
-        """Register the bucketed table in THIS session's catalog (catalog
-        metadata is session-scoped; the files are the durable state)."""
-        name = self._seen_table_name()
-        if not self.spark.catalog.tableExists(name):
-            os.makedirs(self._seen_bucket_dir(), exist_ok=True)
-            self.spark.sql(
-                f"CREATE TABLE {name} "
-                "(url_hash BIGINT, key_hex STRING, first_seen_wave INT) "
-                "USING PARQUET "
-                "CLUSTERED BY (url_hash) SORTED BY (url_hash) "
-                f"INTO {self.n_seen_buckets} BUCKETS "
-                f"LOCATION '{self._seen_bucket_dir()}'")
-        return name
-
-    def _seen_data_files(self) -> set[str]:
-        d = self._seen_bucket_dir()
-        if not os.path.isdir(d):
-            return set()
-        return {n for n in os.listdir(d)
-                if n.endswith(".parquet") and not n.startswith(("_", "."))}
-
-    def _write_seen_bucketed(self, wave: int, df: DataFrame) -> None:
-        # df is already conformed to SEEN_SCHEMA (write)
-        name = self._ensure_seen_table()
-        before = self._seen_data_files()
-        (df.write.mode("append").format("parquet")
-         .bucketBy(self.n_seen_buckets, "url_hash").sortBy("url_hash")
-         .saveAsTable(name))
-        added = sorted(self._seen_data_files() - before)
-        sidecar = os.path.join(self._seen_bucket_dir(),
-                               f"_files_wave_{wave}.json")
-        fd, tmp = tempfile.mkstemp(dir=self._seen_bucket_dir(),
-                                   suffix=".sidecar.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"wave": wave, "files": added}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, sidecar)
-
-    def _read_seen_bucketed(self, upto_wave: int) -> DataFrame | None:
-        from pyspark.sql import functions as F
-
-        committed = {w for w in self._committed_for("seen_delta")
-                     if w <= upto_wave}
-        if not committed or not os.path.isdir(self._seen_bucket_dir()):
-            return None
-        name = self._ensure_seen_table()
-        # bound by the LEDGER, not the caller's wave: between a crash and
-        # the resume's clean_uncommitted() the table can hold an
-        # uncommitted delta (or mid-append orphans) — waves commit in
-        # order, so first_seen_wave <= max(committed) is exactly the
-        # committed snapshot (same guarantee as the delta layout's
-        # per-dir reads)
-        return (self.spark.table(name)
-                .where(F.col("first_seen_wave") <= max(committed)))
-
-    def _clean_seen_bucketed(self) -> list[str]:
-        d = self._seen_bucket_dir()
-        if not os.path.isdir(d):
-            return []
-        committed = self._committed_for("seen_delta")
-        keep: set[str] = set()
-        removed = []
-        for n in sorted(os.listdir(d)):
-            if not (n.startswith("_files_wave_") and n.endswith(".json")):
-                continue
-            w = int(n[len("_files_wave_"):-len(".json")])
-            with open(os.path.join(d, n)) as f:
-                files = json.load(f)["files"]
-            if w in committed:
-                keep.update(files)
-            else:
-                for rel in files:
-                    p = os.path.join(d, rel)
-                    if os.path.exists(p):
-                        os.remove(p)
-                        removed.append(p)
-                os.remove(os.path.join(d, n))
-        # data files covered by NO sidecar = a mid-append crash's orphans
-        for n in sorted(self._seen_data_files() - keep):
-            p = os.path.join(d, n)
-            os.remove(p)
-            removed.append(p)
-        if removed:
-            # drop the session's cached file listing for the table — a
-            # stale index would read the just-deleted files
-            name = self._seen_table_name()
-            if self.spark.catalog.tableExists(name):
-                self.spark.catalog.refreshTable(name)
-        return removed
-
     def write(self, table: str, wave: int, df: DataFrame) -> None:
         schema = STATE_SCHEMAS.get(table)
         if schema is not None:
@@ -365,9 +223,6 @@ class CrawlState:
 
             df = df.select(*[F.col(f.name).cast(f.dataType)
                              for f in schema.fields])
-        if table == "seen_delta" and self.seen_layout == "bucketed":
-            self._write_seen_bucketed(wave, df)
-            return
         df.write.mode("overwrite").parquet(self._p(table, wave))
 
     def _reader(self, table: str):
@@ -476,14 +331,7 @@ class CrawlState:
             shutil.rmtree(self._p("frontier_base", old_base),
                           ignore_errors=True)
 
-    def read_frontier(self, wave: int) -> DataFrame:
-        """Pending snapshot AFTER ``wave`` (compat alias: the delta-state
-        equivalent of the old full-snapshot table)."""
-        return self.read_pending(wave + 1)
-
     def read_seen(self, upto_wave: int) -> DataFrame | None:
-        if self.seen_layout == "bucketed":
-            return self._read_seen_bucketed(upto_wave)
         committed = self._committed_for("seen_delta")
         paths = [
             self._p("seen_delta", w)

@@ -283,14 +283,11 @@ class CrawlRun:
         archive_dir: str | None = None,
         archive_shards: int = 8,
         deny_patterns: DataFrame | None = None,
-        seen_layout: str = "delta",
-        n_seen_buckets: int = 32,
         compact_tables_every: int = 0,
         compact_target_bytes: int = 128 * 1024 * 1024,
     ):
         self.spark = spark
-        self.state = CrawlState(spark, state_dir, seen_layout=seen_layout,
-                                n_seen_buckets=n_seen_buckets)
+        self.state = CrawlState(spark, state_dir)
         self.fetcher = fetcher or synthetic_fetcher(
             with_content=bool(archive_dir))
         self.budgets = budgets
@@ -746,17 +743,6 @@ class CrawlRun:
             self._bloom_ck_ids = nfr_ids
             self._bloom_fut = self._bloom_pool.submit(_bloom_delta)
             clock.mark("bloom_delta_submit")
-
-            # --- next pending = pending - scheduled + new, as DELTA state
-            # (state.py): this wave commits only its new rows
-            # (frontier_delta) and its fetch tombstones (fetched,
-            # budget-bounded) — read_pending folds base + deltas -
-            # tombstones at the next wave's read, broadcasting the
-            # tombstone side off the ledger's own counts. O(new +
-            # scheduled) state writes per wave instead of O(frontier): the
-            # full-snapshot rewrite was the one remaining at-scale
-            # bottleneck at the 10^10-URL design point.
-            clock.mark("next_frontier")
 
             # --- metrics: per-partition lineage + fetch/dedup counts
             metrics = (

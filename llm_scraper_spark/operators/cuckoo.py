@@ -41,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .seen import NumpyBloom
+from .seen import NumpyBloom, shard_of
 
 _FP_MIX = 0x51  # probe offsets into the splitmix64 remix (seen.NumpyBloom)
 _B1_MIX = 0x52
@@ -221,7 +221,7 @@ class CuckooShard:
 class ShardedCuckoo:
     """Hash-prefix-sharded cuckoo filter over int64 hashes.
 
-    Same sharding contract as ``ShardedBloom`` (shard = hash % n_shards;
+    Same sharding contract as ``ShardedBloom`` (``seen.shard_of``;
     in-shard probing consumes independent remix bits), same duck-typed
     ``contains_many`` consumed by ``seen.filter_unseen``, same saturation
     protocol consumed by the wave loop — plus ``delete_many`` and a
@@ -252,13 +252,10 @@ class ShardedCuckoo:
     def geometry(self) -> tuple[int, int]:
         return (self.n_shards, self.n_buckets)
 
-    def shard_of(self, hashes: np.ndarray) -> np.ndarray:
-        return (hashes.astype(np.uint64, copy=False)
-                % np.uint64(self.n_shards)).astype(np.int64)
-
     def _split(self, hashes: np.ndarray):
         h = hashes.astype(np.uint64, copy=False)
-        return self.shard_of(h), _bucket1(h, self.n_buckets), _fingerprints(h)
+        return (shard_of(hashes, self.n_shards), _bucket1(h, self.n_buckets),
+                _fingerprints(h))
 
     def add_many(self, hashes: np.ndarray) -> None:
         sid, b1, fp = self._split(hashes)

@@ -3,8 +3,8 @@
 Design for 10^10 URLs:
 
 - State = a columnar ``seen`` table of 64-bit hashes (xxhash64 of the
-  canonical URL), partitioned/stored as Parquet now, Iceberg when the
-  catalog jars are present (``crawl/state.py`` handles commits).
+  canonical URL), stored as per-wave Parquet deltas (``crawl/state.py``
+  handles commits).
 - Membership = **Bloom pre-filter + exact left_anti join**. The Bloom is a
   ``ShardedBloom``: hash-prefix shards, each shard's bit array built
   **executor-side** by the reducer that owns that shard
@@ -95,12 +95,21 @@ def _geometry(capacity: int, fpp: float) -> tuple[int, int, int]:
     return n_shards, bits_per_shard, k
 
 
+def shard_of(hashes: np.ndarray, n_shards: int) -> np.ndarray:
+    """Shard id of each int64 hash for the sharded filters: the signed
+    floor-mod, which is Spark's ``pmod(hash, n_shards)`` that the
+    distributed builds group by. An unsigned mod agrees with it only for
+    power-of-two shard counts; elsewhere a negative hash would be probed
+    in a shard it was never built into (a false negative)."""
+    return np.mod(np.asarray(hashes).astype(np.int64, copy=False), n_shards)
+
+
 class ShardedBloom:
     """Hash-prefix-sharded Bloom over int64 hashes.
 
-    Shard routing uses the raw hash mod n_shards; bit positions within a
-    shard use the splitmix64 remix (NumpyBloom._mix), so routing and
-    probing consume independent bits. Two ShardedBlooms with the same
+    Shard routing is ``shard_of`` (pmod of the raw hash); bit positions
+    within a shard use the splitmix64 remix (NumpyBloom._mix), so routing
+    and probing consume independent bits. Two ShardedBlooms with the same
     geometry OR together — the basis of the incremental wave update.
 
     Scale note: total bitmap bytes = capacity * 1.2 bytes at fpp=1%
@@ -125,13 +134,9 @@ class ShardedBloom:
     def geometry(self) -> tuple[int, int, int]:
         return (self.n_shards, self.bits_per_shard, self.k)
 
-    def shard_of(self, hashes: np.ndarray) -> np.ndarray:
-        return (hashes.astype(np.uint64, copy=False)
-                % np.uint64(self.n_shards)).astype(np.int64)
-
     def add_many(self, hashes: np.ndarray) -> None:
         h = hashes.astype(np.uint64, copy=False)
-        sid = self.shard_of(h)
+        sid = shard_of(hashes, self.n_shards)
         for s in np.unique(sid):
             sub = h[sid == s]
             for i in range(self.k):
@@ -145,7 +150,7 @@ class ShardedBloom:
 
     def contains_many(self, hashes: np.ndarray) -> np.ndarray:
         h = hashes.astype(np.uint64, copy=False)
-        sid = self.shard_of(h)
+        sid = shard_of(hashes, self.n_shards)
         result = np.ones(len(h), dtype=bool)
         for s in np.unique(sid):
             mask = sid == s
@@ -182,7 +187,7 @@ def build_bloom_distributed(
 ) -> ShardedBloom:
     """Build a ShardedBloom fully executor-side.
 
-    Plan: hashes -> groupBy(shard = hash % n_shards) -> applyInPandas
+    Plan: hashes -> groupBy(shard = pmod(hash, n_shards)) -> applyInPandas
     builds that shard's bit array in the reducer that owns it -> the only
     rows reaching the driver are the finished (shard_id, bitmap) pairs,
     i.e. exactly the bytes that must be broadcast anyway. No toPandas of

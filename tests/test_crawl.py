@@ -20,14 +20,14 @@ def _mk_seeds(spark, n):
 
 
 def _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget=3, robots=None,
-                     seen_filter="bloom", seen_layout="delta"):
+                     seen_filter="bloom"):
     state_dir = str(tmp_path / "state")
     shutil.rmtree(state_dir, ignore_errors=True)
     run = CrawlRun(
         spark, state_dir,
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
         robots=robots, default_budget=budget, n_salts=4,
-        seen_filter=seen_filter, seen_layout=seen_layout, n_seen_buckets=8,
+        seen_filter=seen_filter,
     )
     run.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
     return run
@@ -49,23 +49,20 @@ def _spark_schedule_log(run):
     ]
 
 
-# test ids read <pre-filter on>-<seen_filter>-<seen_layout>
-@pytest.mark.parametrize("seen_filter,seen_layout", [
+# test ids read <pre-filter on>-<seen_filter>-<seen layout>; the seen set
+# has one layout, the per-wave seen_delta parquet dirs
+@pytest.mark.parametrize("seen_filter", [
     # default: sharded-Bloom + anti-join
-    pytest.param("bloom", "delta", id="True-bloom-delta"),
+    pytest.param("bloom", id="True-bloom-delta"),
     # cuckoo-filter pre-filter
-    pytest.param("cuckoo", "delta", id="True-cuckoo-delta"),
+    pytest.param("cuckoo", id="True-cuckoo-delta"),
     # exact anti-join only
-    pytest.param(None, "delta", id="False-None-delta"),
-    # bucketed catalog seen table
-    pytest.param("bloom", "bucketed", id="True-bloom-bucketed"),
-    # every candidate takes the exchange-free bucketed anti-join
-    pytest.param(None, "bucketed", id="False-None-bucketed"),
+    pytest.param(None, id="False-None-delta"),
 ])
-def test_crawl_matches_simulator(spark, tmp_path, seen_filter, seen_layout):
+def test_crawl_matches_simulator(spark, tmp_path, seen_filter):
     n_seeds, n_waves, budget = 40, 3, 3
     run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget,
-                           seen_filter=seen_filter, seen_layout=seen_layout)
+                           seen_filter=seen_filter)
     seed_urls = [r["url"] for r in
                  _mk_seeds(spark, n_seeds).orderBy("seq").collect()]
     sim = _sim(seed_urls, n_waves, budget)
@@ -79,7 +76,7 @@ def test_crawl_matches_simulator(spark, tmp_path, seen_filter, seen_layout):
     assert got_md5 == sim["seen_md5"]
     frontier_urls = {
         r["canonical_url"]
-        for r in run.state.read_frontier(n_waves - 1).collect()
+        for r in run.state.read_pending(n_waves).collect()
     }
     sim_pending = {p[2] for p in sim["pending"]}
     assert frontier_urls == sim_pending
@@ -381,10 +378,10 @@ def test_resume_after_midcommit_crash(spark, tmp_path, monkeypatch):
 
 
 def test_feature_combination_crawl_equality(spark, tmp_path):
-    """The round-5 features compose: ONE crawl with the bucketed seen
-    layout + output-table folding every 2 waves + the cuckoo standing
-    filter must still match the plain-config run exactly (schedule log,
-    seen keys, next_seq) over 4 waves."""
+    """The round-5 features compose: ONE crawl with output-table folding
+    every 2 waves + the cuckoo standing filter must still match the
+    plain-config run exactly (schedule log, seen keys, next_seq) over 4
+    waves."""
     n_seeds, n_waves, budget = 40, 4, 3
     plain = _run_spark_crawl(spark, tmp_path / "plain", n_seeds, n_waves,
                              budget)
@@ -392,7 +389,7 @@ def test_feature_combination_crawl_equality(spark, tmp_path):
         spark, str(tmp_path / "combo" / "state"),
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
         default_budget=budget, n_salts=4,
-        seen_layout="bucketed", n_seen_buckets=8, seen_filter="cuckoo",
+        seen_filter="cuckoo",
         compact_tables_every=2, compact_target_bytes=1 << 30,
     )
     combo.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
@@ -601,76 +598,6 @@ def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
     assert final == {newer: folds[newer]}
     assert waves() == [2, 3]
     assert st.read_all("schedule_log").count() == 10
-
-
-def test_bucketed_seen_crash_and_resume_exact(spark, tmp_path, monkeypatch):
-    """seen_layout='bucketed' (VERDICT r4 #2) under BOTH crash shapes:
-    (a) append + sidecar landed but the ledger never committed — resume
-    deletes the uncommitted wave's files by sidecar; (b) append landed
-    with NO sidecar (mid-append crash) — resume deletes the unlisted
-    orphans. Either way the replay recreates them and the final state
-    equals an uninterrupted run's, with zero duplicate rows in the
-    bucketed table."""
-    import os
-
-    from llm_scraper_spark.crawl.state import CrawlState
-
-    n_seeds, budget = 30, 3
-    full = _run_spark_crawl(spark, tmp_path / "full", n_seeds, 2, budget,
-                            seen_layout="bucketed")
-
-    for shape in ("after_sidecar", "mid_append"):
-        crash_dir = str(tmp_path / f"crash_{shape}" / "state")
-        run_a = CrawlRun(spark, crash_dir,
-                         fetcher=synthetic_fetcher(n_hosts=N_HOSTS,
-                                                   fanout=FANOUT),
-                         default_budget=budget, n_salts=4,
-                         seen_layout="bucketed", n_seen_buckets=8)
-        orig = CrawlState._write_seen_bucketed
-
-        def crashing(self, wave, df, _shape=shape):
-            if wave == 2:  # wave 1's delta
-                orig(self, wave, df)
-                if _shape == "mid_append":
-                    os.remove(os.path.join(self._seen_bucket_dir(),
-                                           "_files_wave_2.json"))
-                raise RuntimeError("simulated crash at bucketed append")
-            return orig(self, wave, df)
-
-        monkeypatch.setattr(CrawlState, "_write_seen_bucketed", crashing)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            run_a.run(2, seeds=_mk_seeds(spark, n_seeds))
-        monkeypatch.setattr(CrawlState, "_write_seen_bucketed", orig)
-
-        assert run_a.state.last_wave() == 0
-        # ledger-bounded read hides the uncommitted delta either way
-        seen_waves = {r["first_seen_wave"] for r in run_a.state.read_seen(2)
-                      .select("first_seen_wave").distinct().collect()}
-        assert seen_waves == {0, 1}
-
-        run_b = CrawlRun(spark, crash_dir,
-                         fetcher=synthetic_fetcher(n_hosts=N_HOSTS,
-                                                   fanout=FANOUT),
-                         default_budget=budget, n_salts=4,
-                         seen_layout="bucketed", n_seen_buckets=8)
-        run_b.run(2)
-
-        assert _spark_schedule_log(full) == _spark_schedule_log(run_b)
-        a = {r["key_hex"] for r in full.state.read_seen(2).collect()}
-        b_rows = run_b.state.read_seen(2).collect()
-        assert a == {r["key_hex"] for r in b_rows}
-        # replay left no duplicate rows behind
-        assert len(b_rows) == len({r["key_hex"] for r in b_rows})
-
-    # layout is recorded: resuming with the default delta layout refuses
-    with pytest.raises(ValueError, match="seen_layout"):
-        CrawlState(spark, str(tmp_path / "full" / "state"))
-    # ... and so is the bucket count: a mismatched resume would
-    # re-register the table with the wrong INTO N BUCKETS and silently
-    # mis-align the anti-join
-    with pytest.raises(ValueError, match="buckets"):
-        CrawlState(spark, str(tmp_path / "full" / "state"),
-                   seen_layout="bucketed", n_seen_buckets=32)
 
 
 def test_compaction_preserves_crawl_equality(spark, tmp_path):
@@ -959,31 +886,30 @@ def test_seen_filter_with_empty_seen_set_joins_bloom_delta(spark, tmp_path,
     assert run.state.last_wave() == 1
 
 
-def test_legacy_ledger_without_seen_layout_is_delta(spark, tmp_path):
-    """A state dir with committed waves but no recorded ``seen_layout``
-    predates bucketed seen tables: it resumes as ``delta`` and refuses
-    ``bucketed`` (which would read an empty seen set)."""
+def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
+    """The bucketed seen layout was removed. A state dir whose ledger
+    records it kept its seen set in a catalog table, so opening it as
+    delta state would read an empty seen set and re-enqueue every URL:
+    it is refused. Ledgers recording ``delta``, or no layout at all,
+    open as before."""
     import json
 
     from llm_scraper_spark.crawl.state import CrawlState
 
-    legacy = tmp_path / "legacy"
-    legacy.mkdir()
-    (legacy / "ledger.json").write_text(json.dumps({
-        "waves": [{"wave": -1, "next_seq": 30, "seeded": 30},
-                  {"wave": 0, "next_seq": 52}],
-        "next_seq": 52}))
-    with pytest.raises(ValueError, match="seen_layout='delta'"):
-        CrawlState(spark, str(legacy), seen_layout="bucketed")
-    assert CrawlState(spark, str(legacy)).seen_layout == "delta"
-
-    # a ledger with nothing committed yet takes either layout
-    fresh = tmp_path / "fresh"
-    fresh.mkdir()
-    (fresh / "ledger.json").write_text(json.dumps({"waves": [],
-                                                   "next_seq": 0}))
-    assert CrawlState(spark, str(fresh),
-                      seen_layout="bucketed").seen_layout == "bucketed"
+    waves = [{"wave": -1, "next_seq": 30, "seeded": 30},
+             {"wave": 0, "next_seq": 52}]
+    for layout in ("bucketed", "delta", None):
+        d = tmp_path / str(layout)
+        d.mkdir()
+        ledger = {"waves": waves, "next_seq": 52}
+        if layout is not None:
+            ledger["seen_layout"] = layout
+        (d / "ledger.json").write_text(json.dumps(ledger))
+        if layout == "bucketed":
+            with pytest.raises(ValueError, match="bucketed seen layout"):
+                CrawlState(spark, str(d))
+        else:
+            assert CrawlState(spark, str(d)).last_wave() == 0
 
 
 def test_fetch_spreads_over_every_task_slot(spark, tmp_path):

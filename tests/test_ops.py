@@ -284,6 +284,28 @@ def test_sharded_bloom_distributed_build_over_driver_limit(spark):
     assert bloom.contains_many(absent).mean() < 0.05
 
 
+def test_sharded_bloom_non_power_of_two_shards_no_false_negatives(spark):
+    """The distributed build files each hash under Spark's pmod(h, n);
+    the probe must route every hash to the same shard for ANY shard
+    count. An unsigned mod agrees with pmod only for powers of two: with
+    3 shards it probed about half the negative hashes in a shard they
+    were never built into, i.e. reported members absent."""
+    from llm_scraper_spark.operators import seen
+    from llm_scraper_spark.operators.cuckoo import build_cuckoo_distributed
+
+    df = spark.range(2000).select(F.xxhash64("id").alias("url_hash"))
+    members = df.toPandas()["url_hash"].to_numpy(dtype=np.int64)
+    assert (members < 0).any() and (members >= 0).any()
+    bloom = seen.build_bloom_distributed(df, geometry=(3, 1 << 16, 5))
+    assert bloom.contains_many(members).all()
+    cuckoo = build_cuckoo_distributed(df, geometry=(3, 1 << 10))
+    assert cuckoo.contains_many(members).all()
+    for n in (3, 5, 7):
+        want = [r["s"] for r in df.select(
+            F.pmod("url_hash", F.lit(n)).alias("s")).collect()]
+        assert seen.shard_of(members, n).tolist() == want
+
+
 def test_sharded_bloom_incremental_equals_fresh(spark):
     from llm_scraper_spark.operators.seen import build_bloom_distributed
 
