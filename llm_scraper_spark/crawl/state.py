@@ -170,22 +170,16 @@ class CrawlState:
         Idempotent; returns the removed paths."""
         import shutil
 
+        keep = {t: self._committed_for(t)
+                for t in ("frontier_delta", "fetched", "seen_delta",
+                          "documents", "schedule_log", "metrics")}
+        # frontier_base: only the ledger-named fold is live; any other dir
+        # is an orphan of a crashed compaction
+        keep["frontier_base"] = {self.frontier_base_wave()}
         removed = []
-        for table in ("frontier_delta", "fetched", "seen_delta",
-                      "documents", "schedule_log", "metrics"):
-            base = os.path.join(self.dir, table)
-            if not os.path.isdir(base):
-                continue
-            keep = self._committed_for(table)
-            for name in os.listdir(base):
-                if not name.startswith("wave="):
-                    continue
-                try:
-                    w = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if w not in keep:
-                    path = os.path.join(base, name)
+        for table, live in keep.items():
+            for w, path in self._wave_dirs(table).items():
+                if w not in live:
                     shutil.rmtree(path, ignore_errors=True)
                     removed.append(path)
         # settle a crashed output-table compaction (manifest committed ->
@@ -198,21 +192,24 @@ class CrawlState:
                 action = recover_compaction(base)
                 if action != "clean":
                     removed.append(f"{base} (compaction {action})")
-        # frontier_base: only the ledger-named fold is live; any other dir
-        # is an orphan of a crashed compaction
-        basedir = os.path.join(self.dir, "frontier_base")
-        live = self.frontier_base_wave()
-        if os.path.isdir(basedir):
-            for name in os.listdir(basedir):
-                if name.startswith("wave=") and name != f"wave={live}":
-                    path = os.path.join(basedir, name)
-                    shutil.rmtree(path, ignore_errors=True)
-                    removed.append(path)
         return removed
 
     # --- table IO -------------------------------------------------------
     def _p(self, table: str, wave: int) -> str:
         return os.path.join(self.dir, table, f"wave={wave}")
+
+    def _wave_dirs(self, table: str) -> dict[int, str]:
+        """{wave: path} of the ``wave=K`` dirs on disk under ``table``."""
+        base = os.path.join(self.dir, table)
+        names = os.listdir(base) if os.path.isdir(base) else []
+        out = {}
+        for name in names:
+            if name.startswith("wave="):
+                try:
+                    out[int(name[5:])] = os.path.join(base, name)
+                except ValueError:
+                    pass
+        return out
 
     def write(self, table: str, wave: int, df: DataFrame) -> None:
         schema = STATE_SCHEMAS.get(table)
@@ -314,19 +311,9 @@ class CrawlState:
         # GC superseded state (post-commit; crash here only leaves extra
         # dirs that clean_uncommitted-style hygiene may remove later)
         for table in ("frontier_delta", "fetched"):
-            basedir = os.path.join(self.dir, table)
-            if not os.path.isdir(basedir):
-                continue
-            for name in os.listdir(basedir):
-                if not name.startswith("wave="):
-                    continue
-                try:
-                    w = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
+            for w, path in self._wave_dirs(table).items():
                 if w <= after_wave:
-                    shutil.rmtree(os.path.join(basedir, name),
-                                  ignore_errors=True)
+                    shutil.rmtree(path, ignore_errors=True)
         if old_base is not None and old_base != after_wave:
             shutil.rmtree(self._p("frontier_base", old_base),
                           ignore_errors=True)

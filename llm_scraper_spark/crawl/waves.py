@@ -39,10 +39,10 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.urls import canonicalize_batch, with_canonical
-from ..operators import cuckoo as cuckoo_ops
 from ..operators import frontier as frontier_ops
 from ..operators import seen as seen_ops
-from ..operators.checkpoints import local_checkpoint_tracked, release_checkpoint
+from ..operators.checkpoints import (local_checkpoint_tracked,
+                                     release_checkpoint, released_on_exit)
 from ..operators.chunker import doc_ids_and_spans
 from ..operators.robots import gate_frontier
 from ..schemas import SPAN_DDL
@@ -277,7 +277,6 @@ class CrawlRun:
         default_budget: int = frontier_ops.DEFAULT_BUDGET,
         n_salts: int = frontier_ops.DEFAULT_SALTS,
         link_priority: float = 1.0,
-        seen_filter: str | None = "bloom",
         compact_every: int = 8,
         scope_filter: bool = False,
         archive_dir: str | None = None,
@@ -302,15 +301,10 @@ class CrawlRun:
         # before they enter the frontier. Off by default: reference crawl-
         # ordering equality is defined on raw canonical URLs.
         self.scope_filter = scope_filter
-        # the standing approximate seen-filter: "bloom" (default) or
-        # "cuckoo" (operators/cuckoo.py — deletable fingerprints, same
-        # no-false-negative contract, same executor-side build + per-wave
-        # delta merge); None disables the pre-filter and every candidate
-        # takes the exact anti-join
-        if seen_filter not in (None, "bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter {seen_filter!r}")
-        self.seen_filter = seen_filter
-        self._bloom = None  # standing filter, delta-merged per wave
+        # the standing Bloom seen filter (operators/seen.py), delta-merged
+        # per wave; candidates it reports maybe-seen take the exact
+        # anti-join
+        self._bloom = None
         # in-flight delta merge (see _join_bloom_delta): the per-wave
         # delta build+merge is NOT state — only the NEXT wave's dedup
         # needs it — so it runs on this single persistent thread PAST the
@@ -365,13 +359,10 @@ class CrawlRun:
         return self._last_bloom_join_wait
 
     def _standing_bloom(self, seen_df: DataFrame | None):
-        """Maintain the standing seen filter (Bloom or cuckoo) across
-        waves: build executor-side from the full seen table only when
-        missing (fresh run / resume) or saturated; otherwise the per-wave
-        delta merge (in run_wave) keeps it current without touching the
-        10^10-row table (VERDICT #4)."""
-        if self.seen_filter is None:
-            return None
+        """Maintain the standing Bloom across waves: build executor-side
+        from the full seen table only when missing (fresh run / resume) or
+        saturated; otherwise the per-wave delta merge (in run_wave) keeps
+        it current without touching the 10^10-row table (VERDICT #4)."""
         # the previous wave's delta must be merged before this wave
         # tags candidates: a missing merge would mark last wave's URLs
         # "definitely new" and re-enqueue them (false negative). Joined
@@ -384,15 +375,13 @@ class CrawlRun:
             # next_seq == total URLs ever enqueued == |seen| (seq is
             # assigned per enqueue), so capacity needs no counting job
             n_seen = max(self.state.read_ledger()["next_seq"], 1)
-            build = (seen_ops.build_bloom_distributed
-                     if self.seen_filter == "bloom"
-                     else cuckoo_ops.build_cuckoo_distributed)
             # growth factor 4x (not 2x): every saturation rebuild scans the
             # FULL seen table (profiled ~20s at 2.5M; O(10^10) at the design
             # point), while filter memory is bits-per-key — quartering the
             # rebuild frequency costs ~2x bitmap for 3x less amortized
             # rebuild work per insert (1/(g-1) full scans per |seen|).
-            self._bloom = build(seen_df, capacity=max(4 * n_seen, 100_000))
+            self._bloom = seen_ops.build_bloom_distributed(
+                seen_df, capacity=max(4 * n_seen, 100_000))
         return self._bloom
 
     def _apply_scope(self, cand: DataFrame) -> DataFrame:
@@ -465,22 +454,9 @@ class CrawlRun:
         (counts + per-phase driver wall times under ``timings``)."""
         clock = _PhaseClock()
         timings = clock.timings
-        wave_ck: list = []
-
-        def _ck(df: DataFrame) -> DataFrame:
-            out, ids = local_checkpoint_tracked(df)
-            wave_ck.append(ids)
-            return out
-
         st = self.state
         next_seq = st.read_ledger()["next_seq"]
         pending = st.read_pending(wave)
-
-        # with the filter disabled the tag path (whose _standing_bloom
-        # joins the previous wave's delta future) never runs — join the
-        # trivial future here to keep the single-in-flight invariant
-        if self.seen_filter is None:
-            self._join_bloom_delta()
 
         # Commit pipeline: every state write launches AS SOON AS its
         # (checkpointed) input exists, so the writes overlap the wave's
@@ -493,8 +469,20 @@ class CrawlRun:
         # pool's exit waits for every write on the error path too, so a
         # failed wave never leaks write threads; it leaves only orphan
         # table dirs, which clean_uncommitted removes on resume.
+        # Every cross-wave input is re-read from the committed parquet
+        # (CrawlState), so once the writes are joined this wave's
+        # checkpoint blocks are dead weight: wave_ck releases them at the
+        # block's exit, on the error path too, or a long crawl (or a
+        # retried failed wave) keeps one wave's MEMORY_AND_DISK blocks
+        # per wave.
         write_futs: dict = {}
-        with ThreadPoolExecutor(max_workers=7) as pool:
+        with released_on_exit(self.spark) as wave_ck, \
+                ThreadPoolExecutor(max_workers=7) as pool:
+
+            def _ck(df: DataFrame) -> DataFrame:
+                out, ids = local_checkpoint_tracked(df)
+                wave_ck.append(ids)
+                return out
 
             def _submit_write(key: str, table: str, w: int, df: DataFrame):
                 t_sub = time.time()
@@ -668,12 +656,11 @@ class CrawlRun:
             # the unseen chain is a native filter over the cand
             # checkpoint, cheap to re-evaluate — so the seq assigner can
             # skip its own full input materialization (one fewer
-            # 0.5M-row checkpoint per wave). With the bloom OFF the whole
-            # chain IS the anti-join, so the assigner materializes as
-            # before.
+            # 0.5M-row checkpoint per wave). With no seen table the chain
+            # is the cand checkpoint itself.
             new = seen_ops.filter_unseen(
                 cand, seen_df, bloom=bloom, broadcast_candidates=reverse_join,
-                checked_ck=_ck if bloom is not None else None)
+                checked_ck=_ck)
             if self.deny_patterns is not None:
                 new = frontier_ops.gate_trap_patterns(new, self.deny_patterns)
             new = frontier_ops.with_salt(new, self.n_salts)
@@ -681,8 +668,8 @@ class CrawlRun:
                 new = gate_frontier(new, self.robots)
 
             new = frontier_ops.assign_global_seq(
-                new, next_seq, ("_disc_ord",), ck_sink=wave_ck,
-                materialize_input=bloom is None, bounds=disc_bounds)
+                new, next_seq, ("_disc_ord",), materialize_input=False,
+                bounds=disc_bounds)
             obs_new = Observation(f"w{wave}_new")
             new_frontier_rows = (
                 new.withColumn("priority", F.lit(self.link_priority))
@@ -694,7 +681,7 @@ class CrawlRun:
             )
             # tracked separately from wave_ck: the DEFERRED bloom-delta job
             # (below) reads these blocks past the commit barrier, so they
-            # are released by _join_bloom_delta, not the wave-end sweep
+            # are released by _join_bloom_delta, not at wave_ck's exit
             new_frontier_rows, nfr_ids = local_checkpoint_tracked(
                 new_frontier_rows)
             n_new = obs_new.get["n"]
@@ -713,9 +700,8 @@ class CrawlRun:
 
             # incremental filter update: merge a delta built
             # (executor-side, against the already-checkpointed new rows)
-            # with the standing filter's geometry — bitmap OR for the
-            # Bloom, fingerprint re-insert for the cuckoo. Runs on the
-            # PERSISTENT bloom thread: it is only needed by the NEXT
+            # with the standing Bloom's geometry, then bitmap OR. Runs on
+            # the PERSISTENT bloom thread: it is only needed by the NEXT
             # wave's dedup, so it is NOT joined at this wave's commit
             # barrier — it keeps running through the commit and the next
             # wave's schedule/fetch, and _standing_bloom joins it right
@@ -725,20 +711,13 @@ class CrawlRun:
                 if self._bloom is None or n_new <= 0:
                     return 0.0
                 t0 = time.time()
-                if self.seen_filter == "bloom":
-                    delta = seen_ops.build_bloom_distributed(
-                        new_frontier_rows, geometry=self._bloom.geometry())
-                    self._bloom.or_(delta)
-                else:
-                    delta = cuckoo_ops.build_cuckoo_distributed(
-                        new_frontier_rows, geometry=self._bloom.geometry())
-                    self._bloom.merge_(delta)
+                self._bloom.or_(seen_ops.build_bloom_distributed(
+                    new_frontier_rows, geometry=self._bloom.geometry()))
                 return round(time.time() - t0, 3)
 
             if self._bloom_pool is None:
                 self._bloom_pool = ThreadPoolExecutor(max_workers=1)
-            # any prior in-flight merge was joined by _standing_bloom
-            # above (or at run_wave's entry when the filter is off)
+            # any prior in-flight merge was joined by _standing_bloom above
             assert self._bloom_fut is None
             self._bloom_ck_ids = nfr_ids
             self._bloom_fut = self._bloom_pool.submit(_bloom_delta)
@@ -792,11 +771,6 @@ class CrawlRun:
             clock.restart()
             st.compact_output_tables(capacity=self.compact_target_bytes)
             clock.mark("compact_tables")
-        # every cross-wave input is re-read from the committed parquet
-        # (CrawlState), so this wave's checkpoint blocks are dead weight
-        # now — release them or a long crawl accumulates one wave's
-        # MEMORY_AND_DISK blocks per wave
-        release_checkpoint(self.spark, set().union(*wave_ck))
         return stats
 
     # ------------------------------------------------------------------

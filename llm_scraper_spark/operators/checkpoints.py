@@ -14,13 +14,17 @@ unusable (the lineage was truncated — there is nothing to recompute
 from), so only release frames the loop will never touch again; the final
 round's checkpoint is always left alive for the caller.
 
-The id diff is taken around a single eager checkpoint call; a concurrent
-persist from another thread in the same session could be misattributed.
-The iterative operators using this run their loops single-threaded on
-the driver, where the window is a few milliseconds of planning time.
+The id diff is taken around a single eager checkpoint call, so it is
+exact as long as no other thread persists an RDD during that call; a
+concurrent persist would be misattributed. ``run_wave`` takes its
+checkpoints while its state-write threads and the Bloom-delta thread are
+running jobs, and stays exact because those threads only write parquet
+and collect (build_bloom_distributed): they persist no RDD.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -50,3 +54,14 @@ def release_checkpoint(spark, ids: set[int]) -> None:
         jrdd = jmap.get(rid)
         if jrdd is not None:
             jrdd.unpersist(False)
+
+
+@contextmanager
+def released_on_exit(spark):
+    """A list for tracked checkpoint id sets; every set appended to it is
+    released when the block exits, on the error path too."""
+    sink: list = []
+    try:
+        yield sink
+    finally:
+        release_checkpoint(spark, set().union(*sink))

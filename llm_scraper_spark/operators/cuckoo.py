@@ -1,8 +1,10 @@
 """Cuckoo-filter URL-seen set — the bloom's sibling (SURVEY.md §2.2 D2).
 
 The north rule names "bloom/cuckoo URL-seen"; ``seen.py`` ships the
-sharded Bloom. This module is the cuckoo-filter alternative with the same
-executor-side build discipline and the two properties a Bloom cannot give:
+sharded Bloom, which is the crawl's one seen filter (no crawl path
+deletes from the seen set). This module is a standalone operator (the
+``cuckoo_dedup`` query) with the same executor-side build discipline and
+the two properties a Bloom cannot give:
 
 - **Deletion.** TTL-expired URLs (``CrawlState.expire_results`` retention,
   reference cache.py:229-263) can be *retired from the filter* so a
@@ -20,14 +22,14 @@ unchanged; exactness is restored by the anti-join either way.
 
 No false negatives is guaranteed structurally: an insert whose
 kick-random-walk fails lands in a per-shard *stash* that membership
-always consults; a growing stash flips ``saturated()`` so the wave loop
+always consults; a growing stash flips ``saturated()`` so the caller
 rebuilds with fresh capacity (exactly the Bloom's saturation protocol).
 
 Partial-key cuckoo hashing (Fan et al., CoNEXT'14, public): the alternate
 bucket is ``b XOR H(fp)``, so any stored (bucket, fp) pair reconstructs
 its other bucket — that makes two same-geometry filters mergeable by
 re-inserting one side's fingerprints, the cuckoo analogue of the Bloom's
-bitmap OR (used by the per-wave delta update).
+bitmap OR (an incremental delta update).
 
 Everything is numpy-vectorized per Arrow batch: bulk placement sorts
 items by target bucket and places by rank-within-group against current
@@ -41,9 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .seen import NumpyBloom, shard_of
+from .seen import mix64, shard_of
 
-_FP_MIX = 0x51  # probe offsets into the splitmix64 remix (seen.NumpyBloom)
+_FP_MIX = 0x51  # probe offsets into the splitmix64 remix (seen.mix64)
 _B1_MIX = 0x52
 _ALT_MIX = 0x53
 
@@ -57,20 +59,20 @@ def _next_pow2(n: int) -> int:
 
 def _fingerprints(h: np.ndarray) -> np.ndarray:
     """16-bit nonzero fingerprint per 64-bit hash (0 marks an empty slot)."""
-    fp = (NumpyBloom._mix(h, _FP_MIX) & np.uint64(0xFFFF)).astype(np.uint16)
+    fp = (mix64(h, _FP_MIX) & np.uint64(0xFFFF)).astype(np.uint16)
     fp[fp == 0] = 1
     return fp
 
 
 def _bucket1(h: np.ndarray, n_buckets: int) -> np.ndarray:
-    return (NumpyBloom._mix(h, _B1_MIX)
+    return (mix64(h, _B1_MIX)
             & np.uint64(n_buckets - 1)).astype(np.int64)
 
 
 def _alt_bucket(b: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarray:
     """Partial-key alternate: b XOR H(fp) — involutive, so it maps b1->b2
     AND b2->b1, which is what makes stored pairs re-insertable (merge)."""
-    mix = NumpyBloom._mix(fp.astype(np.uint64), _ALT_MIX)
+    mix = mix64(fp.astype(np.uint64), _ALT_MIX)
     return (b.astype(np.int64)
             ^ (mix & np.uint64(n_buckets - 1)).astype(np.int64))
 
@@ -224,7 +226,7 @@ class ShardedCuckoo:
     Same sharding contract as ``ShardedBloom`` (``seen.shard_of``;
     in-shard probing consumes independent remix bits), same duck-typed
     ``contains_many`` consumed by ``seen.filter_unseen``, same saturation
-    protocol consumed by the wave loop — plus ``delete_many`` and a
+    protocol as the crawl's standing Bloom — plus ``delete_many`` and a
     ``merge_`` that re-inserts a same-geometry delta's fingerprints.
     """
 
@@ -313,7 +315,7 @@ def build_cuckoo_distributed(
     applyInPandas builds that shard's bucket table in the reducer that
     owns it -> only finished (shard, table) blobs reach the driver —
     exactly the broadcast payload. ``geometry`` pins a standing filter's
-    shape so the per-wave delta can ``merge_`` in.
+    shape so a delta can ``merge_`` in.
     """
     if geometry is None:
         if capacity is None:

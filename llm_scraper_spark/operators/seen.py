@@ -40,48 +40,41 @@ from pyspark.sql import DataFrame, functions as F
 SHARD_TARGET_BITS = 1 << 27  # ~16 MiB of bits per shard bitmap
 
 
-class NumpyBloom:
-    """A minimal split-Bloom filter over int64 hashes, vectorized with numpy.
+def mix64(h: np.ndarray, i: int) -> np.ndarray:
+    """splitmix64 finalizer of uint64 hashes with a per-probe offset ``i``:
+    the k Bloom bit positions are ``mix64(h, 0..k-1)``, and the cuckoo's
+    fingerprint and buckets use their own offsets. The offset is reduced
+    mod 2^64 in Python int space (same value as uint64 wraparound, without
+    numpy's scalar-overflow RuntimeWarning)."""
+    z = h + np.uint64((0x9E3779B97F4A7C15 * (i + 1)) & 0xFFFFFFFFFFFFFFFF)
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
 
-    k bit-positions are derived from the 64-bit hash by splitmix64-style
-    remixing — no per-row Python, one numpy pass per Arrow batch.
-    """
 
-    __slots__ = ("m_bits", "k", "bits")
+def _bit_positions(bits: np.ndarray, h: np.ndarray, i: int):
+    """(word index, bit mask) of probe ``i`` of each uint64 hash in one
+    shard's uint64 word array (``bits_per_shard`` is a multiple of 64,
+    so ``len(bits) * 64`` is the shard's bit count)."""
+    pos = mix64(h, i) % np.uint64(len(bits) * 64)
+    return (pos >> np.uint64(6)).astype(np.int64), \
+        np.uint64(1) << (pos & np.uint64(63))
 
-    def __init__(self, n_items: int, fpp: float = 0.01):
-        n_items = max(n_items, 1)
-        m = int(-n_items * math.log(fpp) / (math.log(2) ** 2))
-        self.m_bits = max(64, m)
-        self.k = max(1, int(round(self.m_bits / n_items * math.log(2))))
-        self.bits = np.zeros((self.m_bits + 63) // 64, dtype=np.uint64)
 
-    @staticmethod
-    def _mix(h: np.ndarray, i: int) -> np.ndarray:
-        # splitmix64 finalizer with a per-probe offset; the offset is
-        # reduced mod 2^64 in Python int space (same value as uint64
-        # wraparound, without numpy's scalar-overflow RuntimeWarning)
-        z = h + np.uint64((0x9E3779B97F4A7C15 * (i + 1)) & 0xFFFFFFFFFFFFFFFF)
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
+def add_bits(bits: np.ndarray, h: np.ndarray, k: int) -> None:
+    """Set the k probe bits of each uint64 hash in the shard ``bits``."""
+    for i in range(k):
+        np.bitwise_or.at(bits, *_bit_positions(bits, h, i))
 
-    def add_many(self, hashes: np.ndarray) -> None:
-        h = hashes.astype(np.uint64, copy=False)
-        for i in range(self.k):
-            pos = self._mix(h, i) % np.uint64(self.m_bits)
-            np.bitwise_or.at(self.bits, (pos >> np.uint64(6)).astype(np.int64),
-                             np.uint64(1) << (pos & np.uint64(63)))
 
-    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized membership: True = maybe present, False = definitely not."""
-        h = hashes.astype(np.uint64, copy=False)
-        result = np.ones(len(h), dtype=bool)
-        for i in range(self.k):
-            pos = self._mix(h, i) % np.uint64(self.m_bits)
-            word = self.bits[(pos >> np.uint64(6)).astype(np.int64)]
-            result &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
-        return result
+def has_bits(bits: np.ndarray, h: np.ndarray, k: int) -> np.ndarray:
+    """True where all k probe bits of a uint64 hash are set in the shard
+    ``bits`` (maybe present), False where one is clear (definitely not)."""
+    result = np.ones(len(h), dtype=bool)
+    for i in range(k):
+        word, mask = _bit_positions(bits, h, i)
+        result &= (bits[word] & mask) != 0
+    return result
 
 
 def _geometry(capacity: int, fpp: float) -> tuple[int, int, int]:
@@ -108,9 +101,10 @@ class ShardedBloom:
     """Hash-prefix-sharded Bloom over int64 hashes.
 
     Shard routing is ``shard_of`` (pmod of the raw hash); bit positions
-    within a shard use the splitmix64 remix (NumpyBloom._mix), so routing
-    and probing consume independent bits. Two ShardedBlooms with the same
-    geometry OR together — the basis of the incremental wave update.
+    within a shard are ``add_bits``/``has_bits`` over the splitmix64
+    remix (``mix64``), so routing and probing consume independent bits.
+    Two ShardedBlooms with the same geometry OR together — the basis of
+    the incremental wave update.
 
     Scale note: total bitmap bytes = capacity * 1.2 bytes at fpp=1%
     (50M URLs -> ~60 MB broadcast; at the 10^10 design point you either
@@ -122,8 +116,10 @@ class ShardedBloom:
 
     __slots__ = ("n_shards", "bits_per_shard", "k", "shards", "capacity", "items")
 
-    def __init__(self, capacity: int, fpp: float = 0.01):
-        self.n_shards, self.bits_per_shard, self.k = _geometry(capacity, fpp)
+    def __init__(self, capacity: int, fpp: float = 0.01,
+                 geometry: tuple[int, int, int] | None = None):
+        self.n_shards, self.bits_per_shard, self.k = \
+            geometry or _geometry(capacity, fpp)
         self.capacity = max(capacity, 1)
         self.items = 0
         self.shards = [
@@ -138,14 +134,7 @@ class ShardedBloom:
         h = hashes.astype(np.uint64, copy=False)
         sid = shard_of(hashes, self.n_shards)
         for s in np.unique(sid):
-            sub = h[sid == s]
-            for i in range(self.k):
-                pos = NumpyBloom._mix(sub, i) % np.uint64(self.bits_per_shard)
-                np.bitwise_or.at(
-                    self.shards[int(s)],
-                    (pos >> np.uint64(6)).astype(np.int64),
-                    np.uint64(1) << (pos & np.uint64(63)),
-                )
+            add_bits(self.shards[int(s)], h[sid == s], self.k)
         self.items += len(h)
 
     def contains_many(self, hashes: np.ndarray) -> np.ndarray:
@@ -154,14 +143,7 @@ class ShardedBloom:
         result = np.ones(len(h), dtype=bool)
         for s in np.unique(sid):
             mask = sid == s
-            sub = h[mask]
-            bits = self.shards[int(s)]
-            r = np.ones(len(sub), dtype=bool)
-            for i in range(self.k):
-                pos = NumpyBloom._mix(sub, i) % np.uint64(self.bits_per_shard)
-                word = bits[(pos >> np.uint64(6)).astype(np.int64)]
-                r &= (word >> (pos & np.uint64(63))) & np.uint64(1) != 0
-            result[mask] = r
+            result[mask] = has_bits(self.shards[int(s)], h[mask], self.k)
         return result
 
     def or_(self, other: "ShardedBloom") -> None:
@@ -197,18 +179,9 @@ def build_bloom_distributed(
     ``geometry`` overrides capacity sizing so delta blooms match a standing
     bloom's geometry and can be OR-merged (incremental wave updates).
     """
-    if geometry is None:
-        if capacity is None:
-            capacity = seen_df.count()
-        bloom = ShardedBloom(capacity, fpp)
-    else:
-        bloom = ShardedBloom(1, fpp)
-        bloom.n_shards, bloom.bits_per_shard, bloom.k = geometry
-        bloom.capacity = max(capacity or 1, 1)
-        bloom.shards = [
-            np.zeros(bloom.bits_per_shard // 64, dtype=np.uint64)
-            for _ in range(bloom.n_shards)
-        ]
+    if geometry is None and capacity is None:
+        capacity = seen_df.count()
+    bloom = ShardedBloom(capacity or 1, fpp, geometry)
     n_shards, bits_per_shard, k = bloom.geometry()
 
     hashes = seen_df.select(F.col(hash_col).alias("h"))
@@ -219,10 +192,7 @@ def build_bloom_distributed(
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         h = pdf["h"].to_numpy(dtype=np.int64).astype(np.uint64)
         bits = np.zeros(bits_per_shard // 64, dtype=np.uint64)
-        for i in range(k):
-            pos = NumpyBloom._mix(h, i) % np.uint64(bits_per_shard)
-            np.bitwise_or.at(bits, (pos >> np.uint64(6)).astype(np.int64),
-                             np.uint64(1) << (pos & np.uint64(63)))
+        add_bits(bits, h, k)
         return pd.DataFrame(
             {"shard": [int(pdf["shard"].iloc[0])], "n": [len(h)],
              "bits": [bits.tobytes()]}
@@ -264,7 +234,7 @@ def filter_unseen(
     candidates: DataFrame,
     seen_df: DataFrame | None,
     hash_col: str = "url_hash",
-    bloom: "ShardedBloom | NumpyBloom | None" = None,
+    bloom=None,
     broadcast_candidates: bool = False,
     checked_ck=None,
 ) -> DataFrame:
@@ -273,6 +243,9 @@ def filter_unseen(
     Plan shape: [bloom split] -> definitely-new ∪ (maybe-seen ANTI JOIN seen).
     The anti join only ever sees the maybe-seen minority; at steady state on
     a growing crawl most candidates are new and skip the shuffle.
+    ``bloom`` is any filter with ``contains_many`` (the crawl's
+    ShardedBloom, or a ShardedCuckoo from operators/cuckoo.py); without
+    one every candidate takes the plain anti join.
 
     The seen side is NOT de-duplicated before the join: anti-join results
     are invariant under build-side duplicates (a candidate is dropped iff

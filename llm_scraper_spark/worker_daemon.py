@@ -31,8 +31,7 @@ import zipimport
 
 PREIMPORTS = (
     "pandas", "pyarrow", "pyspark.worker", "pyspark.sql.pandas.serializers",
-    # pulls in operators.seen/.cuckoo/.chunker, functions.urls,
-    # sources.synthetic
+    # pulls in operators.seen/.chunker, functions.urls, sources.synthetic
     "llm_scraper_spark.crawl.waves",
     "llm_scraper_spark.operators.extraction.pipeline",
 )

@@ -19,15 +19,13 @@ def _mk_seeds(spark, n):
     return synth_seeds(spark, n, n_hosts=N_HOSTS)
 
 
-def _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget=3, robots=None,
-                     seen_filter="bloom"):
+def _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget=3, robots=None):
     state_dir = str(tmp_path / "state")
     shutil.rmtree(state_dir, ignore_errors=True)
     run = CrawlRun(
         spark, state_dir,
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
         robots=robots, default_budget=budget, n_salts=4,
-        seen_filter=seen_filter,
     )
     run.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
     return run
@@ -49,20 +47,9 @@ def _spark_schedule_log(run):
     ]
 
 
-# test ids read <pre-filter on>-<seen_filter>-<seen layout>; the seen set
-# has one layout, the per-wave seen_delta parquet dirs
-@pytest.mark.parametrize("seen_filter", [
-    # default: sharded-Bloom + anti-join
-    pytest.param("bloom", id="True-bloom-delta"),
-    # cuckoo-filter pre-filter
-    pytest.param("cuckoo", id="True-cuckoo-delta"),
-    # exact anti-join only
-    pytest.param(None, id="False-None-delta"),
-])
-def test_crawl_matches_simulator(spark, tmp_path, seen_filter):
+def test_crawl_matches_simulator(spark, tmp_path):
     n_seeds, n_waves, budget = 40, 3, 3
-    run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget,
-                           seen_filter=seen_filter)
+    run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget)
     seed_urls = [r["url"] for r in
                  _mk_seeds(spark, n_seeds).orderBy("seq").collect()]
     sim = _sim(seed_urls, n_waves, budget)
@@ -83,11 +70,6 @@ def test_crawl_matches_simulator(spark, tmp_path, seen_filter):
 
     # 3. next_seq agreement (contiguous global FIFO numbering)
     assert run.state.read_ledger()["next_seq"] == sim["next_seq"]
-
-
-def test_unknown_seen_filter_raises(spark, tmp_path):
-    with pytest.raises(ValueError, match="unknown seen_filter 'bogus'"):
-        CrawlRun(spark, str(tmp_path / "state"), seen_filter="bogus")
 
 
 def test_outlink_cap_keeps_discovery_order_unique(spark, tmp_path,
@@ -379,9 +361,8 @@ def test_resume_after_midcommit_crash(spark, tmp_path, monkeypatch):
 
 def test_feature_combination_crawl_equality(spark, tmp_path):
     """The round-5 features compose: ONE crawl with output-table folding
-    every 2 waves + the cuckoo standing filter must still match the
-    plain-config run exactly (schedule log, seen keys, next_seq) over 4
-    waves."""
+    every 2 waves must still match the plain-config run exactly (schedule
+    log, seen keys, next_seq) over 4 waves."""
     n_seeds, n_waves, budget = 40, 4, 3
     plain = _run_spark_crawl(spark, tmp_path / "plain", n_seeds, n_waves,
                              budget)
@@ -389,7 +370,6 @@ def test_feature_combination_crawl_equality(spark, tmp_path):
         spark, str(tmp_path / "combo" / "state"),
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
         default_budget=budget, n_salts=4,
-        seen_filter="cuckoo",
         compact_tables_every=2, compact_target_bytes=1 << 30,
     )
     combo.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
@@ -870,13 +850,13 @@ def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
 
 def test_seen_filter_with_empty_seen_set_joins_bloom_delta(spark, tmp_path,
                                                            monkeypatch):
-    """With a seen filter on, a wave whose ``read_seen`` is None still joins
-    the previous wave's in-flight Bloom delta before submitting its own,
-    so consecutive waves over an empty seen set do not trip the
+    """A wave whose ``read_seen`` is None still joins the previous
+    wave's in-flight Bloom delta before submitting its own, so
+    consecutive waves over an empty seen set do not trip the
     single-in-flight assert."""
     run = CrawlRun(spark, str(tmp_path / "state"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-                   default_budget=3, n_salts=4, seen_filter="bloom")
+                   default_budget=3, n_salts=4)
     run.init_from_seeds(_mk_seeds(spark, 20))
     monkeypatch.setattr(run.state, "read_seen", lambda upto_wave: None)
     run.run_wave(0)
@@ -884,6 +864,41 @@ def test_seen_filter_with_empty_seen_set_joins_bloom_delta(spark, tmp_path,
     run.run_wave(1)
     assert run._bloom is None
     assert run.state.last_wave() == 1
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_crawl_releases_every_checkpoint(spark, tmp_path):
+    """A finished run holds no persisted RDD it created: each wave's
+    checkpoints are released when the wave ends, and the new-rows
+    checkpoint the deferred Bloom delta reads is released when that
+    delta is joined. The same holds for a run whose wave-1 fetcher
+    raises after the wave's schedule checkpoint exists."""
+    before = _persistent_rdd_ids(spark)
+    run = CrawlRun(spark, str(tmp_path / "ok"),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4)
+    run.run(3, seeds=_mk_seeds(spark, 30))
+    assert run.state.last_wave() == 2
+    assert _persistent_rdd_ids(spark) - before == set()
+
+    inner = synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT)
+    calls = []
+
+    def fails_at_wave_1(scheduled):
+        calls.append(scheduled)
+        if len(calls) == 2:
+            raise RuntimeError("fetcher down")
+        return inner(scheduled)
+
+    run = CrawlRun(spark, str(tmp_path / "fail"), fetcher=fails_at_wave_1,
+                   default_budget=3, n_salts=4)
+    with pytest.raises(RuntimeError, match="fetcher down"):
+        run.run(3, seeds=_mk_seeds(spark, 30))
+    assert run.state.last_wave() == 0
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_bucketed_seen_ledger_is_refused(spark, tmp_path):

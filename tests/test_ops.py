@@ -13,7 +13,6 @@ from llm_scraper_spark.operators import discovery as disc
 from llm_scraper_spark.operators import multimodal as mm
 from llm_scraper_spark.operators import similarity as sim
 from llm_scraper_spark.operators.robots import parse_robots_txt
-from llm_scraper_spark.operators.seen import NumpyBloom
 
 
 # ---------------------------------------------------------------- dedup ----
@@ -223,17 +222,6 @@ def test_multimodal_plumbing(spark, sf_small):
 
 
 # ------------------------------------------------------------------ misc ----
-def test_numpy_bloom_no_false_negatives():
-    rng = np.random.RandomState(11)
-    present = rng.randint(-2**62, 2**62, size=5000).astype(np.int64)
-    absent = rng.randint(-2**62, 2**62, size=5000).astype(np.int64)
-    bloom = NumpyBloom(len(present), fpp=0.01)
-    bloom.add_many(present)
-    assert bloom.contains_many(present).all()  # no false negatives, ever
-    fp_rate = bloom.contains_many(absent).mean()
-    assert fp_rate < 0.05
-
-
 def test_sharded_bloom_union_and_geometry():
     from llm_scraper_spark.operators.seen import ShardedBloom
 
@@ -304,6 +292,30 @@ def test_sharded_bloom_non_power_of_two_shards_no_false_negatives(spark):
         want = [r["s"] for r in df.select(
             F.pmod("url_hash", F.lit(n)).alias("s")).collect()]
         assert seen.shard_of(members, n).tolist() == want
+
+
+@pytest.mark.parametrize("n_shards", [1, 3])
+def test_bloom_driver_and_executor_builds_are_bit_identical(spark, n_shards):
+    """The driver-side ``ShardedBloom.add_many`` and the executor-side
+    ``build_bloom_distributed`` set bits through the same kernel, so the
+    same xxhash64 members (both signs) under the same geometry give
+    bit-identical shards, and each build reports every member present."""
+    from llm_scraper_spark.operators.seen import (
+        ShardedBloom, build_bloom_distributed)
+
+    df = spark.range(3000).select(F.xxhash64("id").alias("url_hash"))
+    members = df.toPandas()["url_hash"].to_numpy(dtype=np.int64)
+    assert (members < 0).any() and (members >= 0).any()
+    geometry = (n_shards, 1 << 15, 5)
+    driver = ShardedBloom(1, geometry=geometry)
+    driver.add_many(members)
+    executor = build_bloom_distributed(df, geometry=geometry)
+    assert driver.geometry() == executor.geometry() == geometry
+    assert driver.items == executor.items == len(members)
+    for d, e in zip(driver.shards, executor.shards, strict=True):
+        assert np.array_equal(d, e)
+    assert driver.contains_many(members).all()
+    assert executor.contains_many(members).all()
 
 
 def test_sharded_bloom_incremental_equals_fresh(spark):
