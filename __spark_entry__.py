@@ -1645,7 +1645,7 @@ def q_rag_documents(spark, sf_dir):
 def q_crawl_schedule_log(spark, sf_dir):
     """The north-rule centerpiece under the driver's correctness gate
     (VERDICT #5): a bounded synthetic crawl — seed canonicalization,
-    per-host politeness windows, bloom + anti-join URL-seen dedup, global
+    per-host politeness windows, exact anti-join URL-seen dedup, global
     FIFO seq assignment — over 3 waves (crawl/waves.py:run_wave). The
     oracle is the committed output of the single-node reference-semantics
     simulator (crawl/simulator.py -> goldens/crawl_schedule_log.parquet):

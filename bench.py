@@ -125,15 +125,15 @@ def bench_frontier(spark, n_seeds: int, n_hosts: int, budget: int = 32) -> dict:
 def bench_wave_loop(spark, n_seeds: int, n_waves: int = 3,
                     budget: int = 64, fanout: int = 4) -> dict:
     """The PRODUCTION crawl loop end-to-end (VERDICT r2 #3): drives
-    ``CrawlRun.run_wave`` — politeness windows, the standing-Bloom split +
-    per-wave delta OR, anti-join dedup, native global seq assignment,
-    Observation metrics, and the per-wave state commits — so the north-rule
+    ``CrawlRun.run_wave`` — politeness windows, the exact anti-join
+    dedup, native global seq assignment, Observation metrics, and the
+    per-wave state commits — so the north-rule
     centerpiece's throughput is measured on the SHIPPED loop, not on an
     inline one-wave kernel (bench_frontier isolates that kernel).
 
     URL-ops counted: seed enqueue (canonicalize+dedup+seq) once, plus per
     wave every scheduled fetch and every discovered candidate (each
-    canonicalized, hashed, robots/bloom/anti-join checked)."""
+    canonicalized, hashed, robots/anti-join checked)."""
     import shutil
     import tempfile
 
@@ -662,10 +662,9 @@ def _wave_profile_section() -> str:
         "(spans + uuid5 doc ids + canonicalized outlink structs computed\n"
         "inside the fetch Arrow batch — the page corpus crosses Python\n"
         "once per wave, which is why `fetch` grew while discover_dedup\n"
-        "fell 3.2->1.0s and write_documents 2.0->0.3s), and the bloom\n"
-        "delta merge runs PAST the commit barrier on a persistent thread\n"
-        "(`bloom_delta` is now the wall blocked at the next wave's tag\n"
-        "point — ~0).\n\n"
+        "fell 3.2->1.0s and write_documents 2.0->0.3s). The standing\n"
+        "Bloom and its deferred delta merge are gone: the dedup is the\n"
+        "exact anti-join alone, so no `bloom_*` phase is recorded.\n\n"
         "| phase | median sec |\n|---|---|\n" + rows +
         f"\nSeed-init phase walls: {init_line}.\n"
         + ("\nAll profile attempts (best window kept above; the shared "
@@ -706,7 +705,7 @@ def _default_runs_section() -> str:
     wl_line = (
         f"**Median wave-loop throughput over {len(wl)} runs: "
         f"{statistics.median(wl):,.0f} URL-ops/sec** (the production "
-        "CrawlRun.run_wave over 3 waves — bloom split, politeness windows, "
+        "CrawlRun.run_wave over 3 waves — politeness windows, anti-join, "
         "seq assignment, state commits; 1M seeds).\n\n" if wl else ""
     )
     return (

@@ -1,23 +1,28 @@
-"""Seen-set regime table: the dedup anti-join under each seen layout.
+"""Seen-set regime table: the dedup anti-join under each seen layout and
+with or without a Bloom pre-filter.
 
-Three ways to drop the already-seen candidates of one wave:
+Four ways to drop the already-seen candidates of one wave:
 
-- delta, no Bloom: the seen set as per-wave parquet dirs (the crawl's
-  ``seen_delta`` layout), every candidate through a shuffled anti-join;
+- delta, no Bloom, shuffled: the seen set as per-wave parquet dirs (the
+  crawl's ``seen_delta`` layout), every candidate through a shuffled
+  anti-join;
 - bucketed, no Bloom: the seen set as a ``bucketBy(url_hash, 32)``
   catalog table (``sinks/bucketed.py``), so the anti-join has no
   Exchange on the seen side;
-- the crawl's default plan: delta layout, candidates tagged by the
-  standing sharded Bloom, and the join ``run_wave`` auto-selects from
-  the seen:candidate ratio (the reversed broadcast anti-join at >= 50:1,
-  the shuffled anti-join over the maybe-seen rows below it).
+- the crawl's plan: delta layout, no pre-filter, and the join
+  ``run_wave`` auto-selects from the seen:candidate ratio (the reversed
+  broadcast anti-join at >= 50:1, the shuffled anti-join below it);
+- Bloom tag + the same join: the plan the crawl ran before the standing
+  Bloom was removed — candidates tagged by a sharded Bloom over the seen
+  set, only the maybe-seen rows joined.
 
 Seen = N rows spread over ``n_waves`` dirs; candidates = N / ratio, half
-of them seen. Each cell is the median wall of ``reps`` counts of the
-join alone; the Bloom tag is materialized first (the wave fuses it into
-its discovery checkpoint) and its wall is reported beside the join, as
-is the wall of one wave's seen write under each layout. Survivor counts
-must agree across the three regimes.
+of them seen. Each cell is the median wall of ``reps`` runs. The crawl's
+plan and the Bloom plan alternate which runs first in each rep; a Bloom
+rep re-materializes the tag (the wave fused it into its discovery
+checkpoint) and its wall is tag plus join. The standing filter's build
+wall and one wave's seen write under each layout are reported beside
+them. Survivor counts must agree across all four plans.
 
 Usage: python jobs/bucketed_ab.py [n_seen,...] [ratio,...] [n_waves] [reps]
 Runs at local[nproc] and writes BENCH/BUCKETED_AB.md.
@@ -42,6 +47,8 @@ REVERSE_RATIO = 50  # run_wave's reversed-join threshold (next_seq >= 50x)
 def run_point(spark, n_seen, ratio, n_waves, reps, tbl):
     from pyspark.sql import functions as F
 
+    from llm_scraper_spark.operators.checkpoints import (
+        local_checkpoint_tracked, release_checkpoint)
     from llm_scraper_spark.operators.seen import (
         bloom_tag, build_bloom_distributed, filter_unseen)
     from llm_scraper_spark.sinks.bucketed import write_bucketed
@@ -72,8 +79,11 @@ def run_point(spark, n_seen, ratio, n_waves, reps, tbl):
             *[f"{base}/delta/wave={w}" for w in range(n_waves)])
         buck_seen = spark.table(tbl)
 
+        def plan_of(j):
+            return j._jdf.queryExecution().executedPlan().toString()
+
         def time_join(j):
-            plan = j._jdf.queryExecution().executedPlan().toString()
+            plan = plan_of(j)
             walls = []
             for _ in range(reps):
                 t0 = time.time()
@@ -88,16 +98,44 @@ def run_point(spark, n_seen, ratio, n_waves, reps, tbl):
 
         delta = time_join(anti(delta_seen))
         buck = time_join(anti(buck_seen))
-        # the standing filter as the wave loop sizes it (4x the seen set)
-        bloom = build_bloom_distributed(delta_seen, capacity=4 * n_seen)
+        # the standing filter as the wave loop sized it (4x the seen set)
         t0 = time.time()
-        tagged = bloom_tag(cand, bloom).localCheckpoint()
-        tag_s = round(time.time() - t0, 3)
+        bloom = build_bloom_distributed(delta_seen, capacity=4 * n_seen)
+        build_s = round(time.time() - t0, 3)
         reverse = ratio >= REVERSE_RATIO
-        default = time_join(filter_unseen(
-            tagged, delta_seen, bloom=bloom, broadcast_candidates=reverse))
-        assert delta["n"] == buck["n"] == default["n"], (
-            delta["n"], buck["n"], default["n"])
+        crawl_j = filter_unseen(cand, delta_seen,
+                                broadcast_candidates=reverse)
+
+        def bloom_rep():
+            t0 = time.time()
+            tagged, ids = local_checkpoint_tracked(bloom_tag(cand, bloom))
+            bloomed["tag"].append(round(time.time() - t0, 3))
+            try:
+                j = filter_unseen(tagged, delta_seen, bloom=bloom,
+                                  broadcast_candidates=reverse)
+                return j.count(), plan_of(j)
+            finally:
+                release_checkpoint(spark, ids)
+
+        crawl = {"walls": [], "hash_ex": plan_of(crawl_j).count(
+            "Exchange hashpartitioning")}
+        bloomed = {"walls": [], "tag": []}
+        for r in range(reps):
+            for which in (("crawl", "bloom") if r % 2 == 0
+                          else ("bloom", "crawl")):
+                t0 = time.time()
+                if which == "crawl":
+                    crawl["n"] = crawl_j.count()
+                    crawl["walls"].append(round(time.time() - t0, 3))
+                else:
+                    bloomed["n"], plan = bloom_rep()
+                    bloomed["walls"].append(round(time.time() - t0, 3))
+                    bloomed["hash_ex"] = plan.count(
+                        "Exchange hashpartitioning")
+        for c in (crawl, bloomed):
+            c["med"] = statistics.median(c["walls"])
+        assert delta["n"] == buck["n"] == crawl["n"] == bloomed["n"], (
+            delta["n"], buck["n"], crawl["n"], bloomed["n"])
 
         # a wave's seen write: its new rows as one more delta dir, or
         # appended to the bucketed table (a shuffle + sort per append)
@@ -119,9 +157,10 @@ def run_point(spark, n_seen, ratio, n_waves, reps, tbl):
             .bucketBy(N_BUCKETS, "url_hash").sortBy("url_hash")
             .saveAsTable(tbl)))
         return {"n_seen": n_seen, "ratio": ratio, "survivors": delta["n"],
-                "delta": delta, "buck": buck, "default": default,
+                "delta": delta, "buck": buck, "crawl": crawl,
+                "bloom": bloomed,
                 "join": "reversed" if reverse else "shuffled",
-                "tag_s": tag_s, "w_delta": w_delta, "w_buck": w_buck}
+                "build_s": build_s, "w_delta": w_delta, "w_buck": w_buck}
     finally:
         shutil.rmtree(base, ignore_errors=True)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -156,28 +195,36 @@ def main() -> None:
     rows = "".join(
         f"| {p['n_seen']:,} | {p['ratio']}:1 | {p['survivors']:,} "
         f"| {cell(p['delta'])} | {cell(p['buck'])} "
-        f"| {cell(p['default'])} {p['join']} | {p['tag_s']} "
+        f"| {cell(p['crawl'])} {p['join']} | {cell(p['bloom'])} "
+        f"| {statistics.median(p['bloom']['tag'])} | {p['build_s']} "
         f"| {p['w_delta']} | {p['w_buck']} |\n"
         for p in points)
     walls = "".join(
         f"- {p['n_seen']:,} at {p['ratio']}:1: delta {p['delta']['walls']}, "
-        f"bucketed {p['buck']['walls']}, default {p['default']['walls']}\n"
+        f"bucketed {p['buck']['walls']}, crawl {p['crawl']['walls']}, "
+        f"Bloom tag + join {p['bloom']['walls']} "
+        f"(tag {p['bloom']['tag']})\n"
         for p in points)
     md = f"""# Seen-set regime table
 
 Generated by `python jobs/bucketed_ab.py` at local[{nproc}] ({nproc} cores),
 {n_waves} seen_delta dirs, {N_BUCKETS} buckets, median of {reps} reps.
-Each join cell is the median join wall in seconds, with the plan's
-number of `Exchange hashpartitioning` nodes in brackets. Candidates are
-half seen, half new. The default column is the crawl's plan: Bloom tag
-plus the join `run_wave` picks at that ratio. Its tag wall is the next
-column (the wave pays it inside its discovery checkpoint). The last two
-columns are the median wall of one wave's seen write (about half the
-candidates): a new delta dir, or an append to the bucketed table.
-Survivor counts agree across the three regimes at every point.
+Each join cell is the median wall in seconds, with the plan's number of
+`Exchange hashpartitioning` nodes in brackets. Candidates are half seen,
+half new. The crawl column is `run_wave`'s plan: no pre-filter, and the
+join it picks at that ratio. The Bloom column is the plan it ran before
+the standing Bloom was removed: the tag (materialized, as the wave's
+discovery checkpoint did) plus the same join over the maybe-seen rows;
+its cell is tag plus join, and the tag alone is the next column. The
+two plans alternate which runs first in each rep. The standing build is
+the one-off wall of building the Bloom over the whole seen set (paid on
+every fresh run, resume and saturation). The last two columns are the
+median wall of one wave's seen write (about half the candidates): a new
+delta dir, or an append to the bucketed table. Survivor counts agree
+across the four plans at every point.
 
-| seen rows | seen:cand | survivors | delta, no Bloom | bucketed, no Bloom | default: Bloom + delta | Bloom tag (s) | delta write (s) | bucketed append (s) |
-|---|---|---|---|---|---|---|---|---|
+| seen rows | seen:cand | survivors | delta, no Bloom, shuffled | bucketed, no Bloom | crawl: no Bloom + delta | Bloom tag + join | Bloom tag (s) | standing build (s) | delta write (s) | bucketed append (s) |
+|---|---|---|---|---|---|---|---|---|---|---|
 {rows}
 All walls (s):
 

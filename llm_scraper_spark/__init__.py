@@ -5,8 +5,9 @@ A brand-new engine (not a port) re-expressing the semantics of the public
 
 - URL frontier + fetch scheduler: priority frontier, per-host politeness
   budgets, robots gating, skew-aware salting (``crawl/``, ``operators/frontier.py``)
-- URL-seen set: vectorized batch canonicalization + 64-bit hashing, Bloom
-  pre-filter + exact ``left_anti`` join (``operators/seen.py``)
+- URL-seen set: vectorized batch canonicalization + 64-bit hashing and an
+  exact ``left_anti`` join; Bloom and cuckoo filters as standalone
+  operators (``operators/seen.py``, ``operators/cuckoo.py``)
 - per-document scrape -> clean -> chunk pipeline as pandas/Arrow UDFs that
   preserve span-sequence equality ``(kind, text, media_ref, order)``
   (``operators/chunker.py``, ``operators/extraction/``)

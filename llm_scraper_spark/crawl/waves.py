@@ -6,12 +6,14 @@ Each wave is one batch of the reference's consume-loop
     pending --politeness window--> scheduled --fetch (mapInPandas: page,
     chunker, uuid5 doc id, outlink canonicalize)--> pages --> documents
          \--outlinks explode--> native hash --robots gate-->
-           in-wave first-occurrence dedup --bloom + anti-join vs seen-->
+           in-wave first-occurrence dedup --exact anti-join vs seen-->
            assign global seq --> frontier append + seen delta
 
 Shuffle inventory per wave (the two the north rule names, plus one):
   1. per-host politeness window (salted: capped shards before exact rank)
-  2. the dedup anti-join (bloom pre-filtered; AQE-coalesced)
+  2. the dedup anti-join over 64-bit hashes, exact and unfiltered:
+     shuffled, or reversed into two broadcasts (no exchange) when the
+     seen set is >= 50x the wave's discoveries; AQE-coalesced
   3. the fetch spread: ``scheduled`` hashed on (host, salt) into
      min(task slots, rows) partitions before the fetch crossing. AQE
      sizes the window's output by bytes and scheduled rows are tiny, so
@@ -301,20 +303,6 @@ class CrawlRun:
         # before they enter the frontier. Off by default: reference crawl-
         # ordering equality is defined on raw canonical URLs.
         self.scope_filter = scope_filter
-        # the standing Bloom seen filter (operators/seen.py), delta-merged
-        # per wave; candidates it reports maybe-seen take the exact
-        # anti-join
-        self._bloom = None
-        # in-flight delta merge (see _join_bloom_delta): the per-wave
-        # delta build+merge is NOT state — only the NEXT wave's dedup
-        # needs it — so it runs on this single persistent thread PAST the
-        # commit barrier and is joined lazily at its first use. A crash
-        # in between loses only in-memory bits; resume rebuilds from the
-        # committed seen table.
-        self._bloom_fut = None
-        self._bloom_pool = None
-        self._bloom_ck_ids = None  # the in-flight merge's input blocks
-        self._last_bloom_join_wait = 0.0
         # fold the delta frontier every N waves (state.compact_frontier):
         # bounds both the per-read delta dir count and the tombstone
         # anti-join side (<= N waves x budget rows). 0 disables.
@@ -341,49 +329,6 @@ class CrawlRun:
         self.deny_patterns = deny_patterns
 
     # ------------------------------------------------------------------
-    def _join_bloom_delta(self) -> float:
-        """Join the previous wave's in-flight delta merge. Returns the
-        wall spent BLOCKED here (usually ~0: the merge ran during the
-        previous commit barrier + this wave's schedule/fetch)."""
-        if self._bloom_fut is None:
-            return 0.0
-        t0 = time.time()
-        self._bloom_fut.result()
-        self._bloom_fut = None
-        # the delta job was the last reader of its wave's new-rows
-        # checkpoint — safe to free those blocks now
-        if self._bloom_ck_ids:
-            release_checkpoint(self.spark, set(self._bloom_ck_ids))
-            self._bloom_ck_ids = None
-        self._last_bloom_join_wait = round(time.time() - t0, 3)
-        return self._last_bloom_join_wait
-
-    def _standing_bloom(self, seen_df: DataFrame | None):
-        """Maintain the standing Bloom across waves: build executor-side
-        from the full seen table only when missing (fresh run / resume) or
-        saturated; otherwise the per-wave delta merge (in run_wave) keeps
-        it current without touching the 10^10-row table (VERDICT #4)."""
-        # the previous wave's delta must be merged before this wave
-        # tags candidates: a missing merge would mark last wave's URLs
-        # "definitely new" and re-enqueue them (false negative). Joined
-        # before the empty-seen return too: this wave submits its own
-        # delta, and only one may be in flight.
-        self._join_bloom_delta()
-        if seen_df is None:
-            return None
-        if self._bloom is None or self._bloom.saturated():
-            # next_seq == total URLs ever enqueued == |seen| (seq is
-            # assigned per enqueue), so capacity needs no counting job
-            n_seen = max(self.state.read_ledger()["next_seq"], 1)
-            # growth factor 4x (not 2x): every saturation rebuild scans the
-            # FULL seen table (profiled ~20s at 2.5M; O(10^10) at the design
-            # point), while filter memory is bits-per-key — quartering the
-            # rebuild frequency costs ~2x bitmap for 3x less amortized
-            # rebuild work per insert (1/(g-1) full scans per |seen|).
-            self._bloom = seen_ops.build_bloom_distributed(
-                seen_df, capacity=max(4 * n_seen, 100_000))
-        return self._bloom
-
     def _apply_scope(self, cand: DataFrame) -> DataFrame:
         """Frontier hygiene splice (scope_filter=True): tracking-param strip
         + native re-hash + crawl-scope drop, all JVM expressions — adds no
@@ -570,18 +515,9 @@ class CrawlRun:
                     os.path.join(arc_dir, "cdx.parquet"))
                 clock.mark("archive_warc")
 
-            # standing filter BEFORE the documents write is submitted: the
-            # seen read's tiny schema job would otherwise FIFO-queue behind
-            # the cluster-wide documents write (profiled ~1.2s of driver
-            # stall attributed to bloom_standing)
+            # pinned-schema read: lists the committed seen_delta dirs and
+            # runs no Spark job, so it never queues behind the writes
             seen_df = st.read_seen(wave)
-            bloom = self._standing_bloom(seen_df)
-            clock.mark("bloom_standing")
-            # wall actually BLOCKED waiting on the previous wave's deferred
-            # delta merge (inside bloom_standing above; usually ~0 — the
-            # merge ran during the previous commit barrier + this fetch)
-            timings["bloom_delta"] = self._last_bloom_join_wait
-            self._last_bloom_join_wait = 0.0
 
             # --- documents: doc_id + spans were computed inside the fetch
             # batch, so the page corpus never re-crosses the Arrow
@@ -597,8 +533,7 @@ class CrawlRun:
             # hash stays JVM-side — native xxhash64, codegen. parent_seq/
             # link_idx fold into _disc_ord (unique while link_idx stays
             # under the cap) and nothing downstream reads them — dropping
-            # them narrows the dedup shuffle rows. Membership tag FUSED
-            # into the discovery checkpoint below.
+            # them narrows the dedup shuffle rows.
             cand = (
                 pages.select(
                     F.col("seq").alias("parent_seq"),
@@ -620,12 +555,11 @@ class CrawlRun:
                 cand = self._apply_scope(cand)
             cand = seen_ops.first_occurrence_dedup(cand, "url_hash",
                                                    "_disc_ord")
-            if bloom is not None:
-                cand = seen_ops.bloom_tag(cand, bloom)
-            # checkpoint: (a) the bloom split consumes cand on two
-            # branches — without materialization both branches would
-            # recompute the explode+dedup(+tag) lineage; (b) the
-            # observation counts once.
+            # checkpoint: (a) the reversed join below consumes cand on two
+            # branches (its broadcast side and its probe side) — without
+            # materialization both would recompute the explode+dedup
+            # lineage; (b) the observation counts once, before the join
+            # is picked.
             obs_disc = Observation(f"w{wave}_discovered")
             # min/max of the discovery order key ride the same
             # observation: they bound every post-filter subset, so the seq
@@ -641,25 +575,25 @@ class CrawlRun:
             disc_bounds = (obs_disc.get["lo"], obs_disc.get["hi"])
             clock.mark("discover_dedup")
             # Join-strategy selection from ledger stats alone (no extra
-            # Spark action): reverse the dedup anti-join (broadcast the
-            # maybe-seen hashes, scan the seen table narrow) only when the
-            # seen table dwarfs the wave's discoveries — A/B at 2.5M seen
-            # / 0.5M cand measured the reversed plan ~40% SLOWER
-            # (sequential broadcast chaining + re-evaluating the bloom
-            # tag), while at the 10^10 design point (seen 3-4 orders of
-            # magnitude over per-wave discoveries) shuffling the seen side
-            # is the single biggest cost in the wave. next_seq == |seen|
-            # by the enqueue invariant.
+            # Spark action): reverse the dedup anti-join (broadcast every
+            # candidate hash, at most 4M, and scan the seen table narrow)
+            # only when the seen table dwarfs the wave's discoveries — A/B
+            # at 2.5M seen / 0.5M cand measured the reversed plan ~40%
+            # SLOWER (sequential broadcast chaining), while at the 10^10
+            # design point (seen 3-4 orders of magnitude over per-wave
+            # discoveries) shuffling the seen side is the single biggest
+            # cost in the wave. next_seq == |seen| by the enqueue
+            # invariant. The exact join is the only membership test: an
+            # approximate pre-filter could only shrink the broadcast side,
+            # never skip the seen scan, and it cost more than it saved at
+            # every measured ratio (BENCH/BUCKETED_AB.md).
             reverse_join = (int(n_discovered) <= 4_000_000
                             and next_seq >= 50 * max(int(n_discovered), 1))
-            # pin only the tiny anti-join branch (checked_ck): the rest of
-            # the unseen chain is a native filter over the cand
-            # checkpoint, cheap to re-evaluate — so the seq assigner can
-            # skip its own full input materialization (one fewer
-            # 0.5M-row checkpoint per wave). With no seen table the chain
-            # is the cand checkpoint itself.
+            # pin the anti-join's output (checked_ck), so the seq
+            # assigner can skip its own input materialization. With no
+            # seen table the chain is the cand checkpoint itself.
             new = seen_ops.filter_unseen(
-                cand, seen_df, bloom=bloom, broadcast_candidates=reverse_join,
+                cand, seen_df, broadcast_candidates=reverse_join,
                 checked_ck=_ck)
             if self.deny_patterns is not None:
                 new = frontier_ops.gate_trap_patterns(new, self.deny_patterns)
@@ -679,15 +613,11 @@ class CrawlRun:
                         "priority", "wave", "seq", "status")
                 .observe(obs_new, F.count(F.lit(1)).alias("n"))
             )
-            # tracked separately from wave_ck: the DEFERRED bloom-delta job
-            # (below) reads these blocks past the commit barrier, so they
-            # are released by _join_bloom_delta, not at wave_ck's exit
-            new_frontier_rows, nfr_ids = local_checkpoint_tracked(
-                new_frontier_rows)
+            new_frontier_rows = _ck(new_frontier_rows)
             n_new = obs_new.get["n"]
             clock.mark("unseen_seq")
             # everything downstream of the new-rows checkpoint launches now
-            # and overlaps the bloom delta + the remaining wave bookkeeping
+            # and overlaps the remaining wave bookkeeping
             _submit_write(
                 "write_seen_delta", "seen_delta", wave + 1,
                 new_frontier_rows.select(
@@ -697,31 +627,6 @@ class CrawlRun:
                 ))
             _submit_write("write_frontier_delta", "frontier_delta", wave,
                           new_frontier_rows)
-
-            # incremental filter update: merge a delta built
-            # (executor-side, against the already-checkpointed new rows)
-            # with the standing Bloom's geometry, then bitmap OR. Runs on
-            # the PERSISTENT bloom thread: it is only needed by the NEXT
-            # wave's dedup, so it is NOT joined at this wave's commit
-            # barrier — it keeps running through the commit and the next
-            # wave's schedule/fetch, and _standing_bloom joins it right
-            # before the next tag (r4 profile: the join cost ~1.1s of pure
-            # barrier wall when it had to finish pre-commit).
-            def _bloom_delta():
-                if self._bloom is None or n_new <= 0:
-                    return 0.0
-                t0 = time.time()
-                self._bloom.or_(seen_ops.build_bloom_distributed(
-                    new_frontier_rows, geometry=self._bloom.geometry()))
-                return round(time.time() - t0, 3)
-
-            if self._bloom_pool is None:
-                self._bloom_pool = ThreadPoolExecutor(max_workers=1)
-            # any prior in-flight merge was joined by _standing_bloom above
-            assert self._bloom_fut is None
-            self._bloom_ck_ids = nfr_ids
-            self._bloom_fut = self._bloom_pool.submit(_bloom_delta)
-            clock.mark("bloom_delta_submit")
 
             # --- metrics: per-partition lineage + fetch/dedup counts
             metrics = (
@@ -787,24 +692,4 @@ class CrawlRun:
             # (reads are already ledger-bounded; replay overwrites anyway —
             # this keeps the on-disk state exactly the committed snapshot)
             self.state.clean_uncommitted()
-        stats = []
-        try:
-            for wave in range(last + 1, n_waves):
-                stats.append(self.run_wave(wave))
-            # settle the last wave's deferred delta merge on the success
-            # path (surfaces a failed merge as this run's error)
-            self._join_bloom_delta()
-        finally:
-            # ERROR path too, or a failed run leaks one wave's
-            # frontier-sized checkpoint blocks plus a thread per run;
-            # best-effort here so a join failure can't mask the
-            # original exception (idempotent — no-op after the join
-            # above succeeded)
-            try:
-                self._join_bloom_delta()
-            except Exception:
-                pass
-            if self._bloom_pool is not None:
-                self._bloom_pool.shutdown(wait=True)
-                self._bloom_pool = None
-        return stats
+        return [self.run_wave(wave) for wave in range(last + 1, n_waves)]

@@ -17,9 +17,8 @@ round's checkpoint is always left alive for the caller.
 The id diff is taken around a single eager checkpoint call, so it is
 exact as long as no other thread persists an RDD during that call; a
 concurrent persist would be misattributed. ``run_wave`` takes its
-checkpoints while its state-write threads and the Bloom-delta thread are
-running jobs, and stays exact because those threads only write parquet
-and collect (build_bloom_distributed): they persist no RDD.
+checkpoints while its state-write threads are running jobs, and stays
+exact because those threads only write parquet: they persist no RDD.
 """
 
 from __future__ import annotations

@@ -212,7 +212,7 @@ def assign_global_seq(
     dropped rows at 1M+ seeds). This implementation replaces the sampled
     exchange with DETERMINISTIC width bucketing:
 
-    1. checkpoint the input once (the chain behind it — bloom tag +
+    1. checkpoint the input once (the chain behind it — the seen
        anti-join — is the wave's most expensive lineage);
     2. two tiny driver jobs over the checkpointed blocks: min/max of the
        leading order column, then per-bucket counts for

@@ -5,24 +5,25 @@ Design for 10^10 URLs:
 - State = a columnar ``seen`` table of 64-bit hashes (xxhash64 of the
   canonical URL), stored as per-wave Parquet deltas (``crawl/state.py``
   handles commits).
-- Membership = **Bloom pre-filter + exact left_anti join**. The Bloom is a
-  ``ShardedBloom``: hash-prefix shards, each shard's bit array built
-  **executor-side** by the reducer that owns that shard
-  (``groupBy(shard).applyInPandas`` — the only driver transfer is the
-  finished bitmaps, which IS the broadcast payload; no row ever crosses to
-  the driver). Membership is evaluated vectorized in numpy inside an Arrow
-  UDF: candidate rows whose hash is *definitely unseen* bypass the
-  anti-join entirely, so the shuffle carries only the maybe-seen minority.
-  Exactness is restored by the anti-join (Bloom has no false negatives ⇒
-  no lost URLs; false positives are re-checked).
-- Incremental across waves: blooms built with the same geometry
-  (n_shards, bits, k) OR together, so the wave loop builds a small delta
-  bloom from the newly seen rows and ORs it into the standing filter
-  instead of rebuilding from the full 10^10-row seen table every wave
-  (rebuild only when item count outgrows the sized capacity).
+- Membership = **one exact anti-join** on the hash (``filter_unseen``),
+  in one of two shapes picked by the caller from the seen:candidate
+  ratio: a shuffled left-anti join, or (seen set far larger than the
+  candidates) the reversed join that broadcasts the candidate hashes
+  into a semi join over a narrow seen scan and broadcasts the matched
+  set back. The broadcast candidate hashes are already an exact hash
+  table probed by the seen scan, so the wave loop keeps no approximate
+  pre-filter: a Bloom would only shrink the broadcast side, never skip
+  the seen scan, and its tag is a second Python crossing per wave
+  (``BENCH/BUCKETED_AB.md`` measured it slower at 10:1 to 400:1).
+- ``ShardedBloom`` (hash-prefix shards, each shard's bit array built
+  **executor-side** by ``build_bloom_distributed``) and ``bloom_tag``
+  stay as standalone operators, as does the cuckoo filter
+  (``operators/cuckoo.py``). ``filter_unseen(bloom=...)`` splits
+  candidates on such a filter's verdict and sends only the maybe-seen
+  rows through the same exact join; blooms of one geometry OR together.
 - Spark's runtime bloom-filter join
-  (spark.sql.optimizer.runtime.bloomFilter.enabled) adds a second,
-  automatic layer inside the join itself.
+  (spark.sql.optimizer.runtime.bloomFilter.enabled) adds an automatic
+  layer inside the shuffled join itself.
 
 The reference's check-then-insert (cache.py:88-92) maps to:
 ``new = candidates ANTI JOIN seen`` then ``seen += new`` — same semantics,
@@ -103,8 +104,8 @@ class ShardedBloom:
     Shard routing is ``shard_of`` (pmod of the raw hash); bit positions
     within a shard are ``add_bits``/``has_bits`` over the splitmix64
     remix (``mix64``), so routing and probing consume independent bits.
-    Two ShardedBlooms with the same geometry OR together — the basis of
-    the incremental wave update.
+    Two ShardedBlooms with the same geometry OR together, so a delta
+    filter merges into a standing one without a rebuild.
 
     Scale note: total bitmap bytes = capacity * 1.2 bytes at fpp=1%
     (50M URLs -> ~60 MB broadcast; at the 10^10 design point you either
@@ -177,7 +178,7 @@ def build_bloom_distributed(
     to 50M hashes; this replaces it per VERDICT #4).
 
     ``geometry`` overrides capacity sizing so delta blooms match a standing
-    bloom's geometry and can be OR-merged (incremental wave updates).
+    bloom's geometry and can be OR-merged (incremental updates).
     """
     if geometry is None and capacity is None:
         capacity = seen_df.count()
@@ -217,8 +218,8 @@ def bloom_tag(candidates: DataFrame, bloom,
               out_col: str = "_maybe_seen") -> DataFrame:
     """Attach the approximate-membership verdict as a boolean column —
     one vectorized probe of the broadcast filter per Arrow batch. Split
-    out of filter_unseen so the wave loop can FUSE the tag into its
-    discovery checkpoint (the tag then computes once, during that
+    out of filter_unseen so a caller can FUSE the tag into its own
+    checkpoint (the tag then computes once, during that
     materialization, instead of once per consumer branch)."""
     bc = candidates.sparkSession.sparkContext.broadcast(bloom)
 
@@ -240,12 +241,11 @@ def filter_unseen(
 ) -> DataFrame:
     """Return the candidate rows whose hash is not in the seen set.
 
-    Plan shape: [bloom split] -> definitely-new ∪ (maybe-seen ANTI JOIN seen).
-    The anti join only ever sees the maybe-seen minority; at steady state on
-    a growing crawl most candidates are new and skip the shuffle.
-    ``bloom`` is any filter with ``contains_many`` (the crawl's
-    ShardedBloom, or a ShardedCuckoo from operators/cuckoo.py); without
-    one every candidate takes the plain anti join.
+    Plan shape: candidates ANTI JOIN seen on the hash, exact. ``bloom``
+    is an optional pre-filter with ``contains_many`` (a ShardedBloom, or
+    a ShardedCuckoo from operators/cuckoo.py): with one, the plan is
+    definitely-new ∪ (maybe-seen ANTI JOIN seen), so the join sees only
+    the maybe-seen rows. The crawl's wave loop passes none.
 
     The seen side is NOT de-duplicated before the join: anti-join results
     are invariant under build-side duplicates (a candidate is dropped iff
@@ -256,57 +256,43 @@ def filter_unseen(
     design point that's re-shuffling the biggest table in the system
     every wave for zero semantic effect.
 
-    ``broadcast_candidates=True`` (bloom path only) REVERSES the join so
-    the seen table is never shuffled at all: broadcast the maybe-seen
-    hashes, LEFT SEMI them against a narrow scan of seen (map-side,
-    no exchange on the 10^10-row side), then broadcast the tiny matched
-    set back as a broadcast anti join. Correct whenever the maybe side
-    fits a broadcast — the caller gates it on the wave's discovered
-    count (an upper bound on the maybe side it already has from the
-    wave Observation), falling back to the shuffled anti join beyond
-    the threshold. This is the wave loop's default regime: per-wave
-    discoveries are millions of rows while the seen table is the
-    biggest table in the system.
+    ``broadcast_candidates=True`` REVERSES the join, with or without a
+    pre-filter, so the seen table is never shuffled at all: broadcast
+    the joined candidates' hashes, LEFT SEMI them against a narrow scan
+    of seen (map-side, no exchange on the 10^10-row side), then
+    broadcast the matched set back as a broadcast anti join. Correct
+    whenever the candidates fit a broadcast — the wave loop gates it on
+    the wave's discovered count, which it has from the wave Observation,
+    and falls back to the shuffled anti join beyond the threshold.
+
+    ``checked_ck``: optional materializer (the wave loop passes its
+    tracked-localCheckpoint helper) for the anti-join's output, the only
+    expensive sub-plan here. Pinning it makes the returned frame cheap to
+    re-evaluate, so downstream seq assignment can skip ITS input
+    materialization.
     """
     if seen_df is None:
-        return candidates.drop("_maybe_seen") \
-            if "_maybe_seen" in candidates.columns else candidates
-
+        return candidates.drop("_maybe_seen")
+    definitely_new, maybe = None, candidates
     if bloom is not None:
         # callers that already materialized the tag (bloom_tag fused into
-        # their discovery checkpoint — one Arrow pass instead of one per
-        # branch below) are detected by the column's presence
-        if "_maybe_seen" in candidates.columns:
-            tagged = candidates
-        else:
-            tagged = bloom_tag(candidates, bloom, hash_col)
+        # their own checkpoint) are detected by the column's presence
+        tagged = candidates if "_maybe_seen" in candidates.columns \
+            else bloom_tag(candidates, bloom, hash_col)
         definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        if broadcast_candidates:
-            matched = seen_df.select(F.col(hash_col)).join(
-                F.broadcast(maybe.select(F.col(hash_col))),
-                on=hash_col, how="left_semi")
-            checked = maybe.join(F.broadcast(matched),
-                                 on=hash_col, how="left_anti")
-        else:
-            checked = maybe.join(
-                seen_df.select(F.col(hash_col)), on=hash_col, how="left_anti"
-            )
-        # ``checked_ck``: optional materializer (wave loop passes its
-        # tracked-localCheckpoint helper) for JUST the anti-join branch —
-        # it is the only expensive sub-plan here (the seen-side shuffle),
-        # and it is tiny in rows (bloom false positives + true in-wave
-        # re-sights), so pinning it makes the whole returned union cheap
-        # to re-evaluate: a native filter over the caller's candidate
-        # checkpoint plus cached small blocks. That lets downstream seq
-        # assignment skip ITS input materialization entirely.
-        if checked_ck is not None:
-            checked = checked_ck(checked)
-        return definitely_new.unionByName(checked)
-
-    return candidates.join(
-        seen_df.select(F.col(hash_col)), on=hash_col, how="left_anti"
-    )
+    seen_hashes = seen_df.select(F.col(hash_col))
+    if broadcast_candidates:
+        matched = seen_hashes.join(F.broadcast(maybe.select(F.col(hash_col))),
+                                   on=hash_col, how="left_semi")
+        checked = maybe.join(F.broadcast(matched), on=hash_col, how="left_anti")
+    else:
+        checked = maybe.join(seen_hashes, on=hash_col, how="left_anti")
+    if checked_ck is not None:
+        checked = checked_ck(checked)
+    if definitely_new is None:
+        return checked
+    return definitely_new.unionByName(checked)
 
 
 def first_occurrence_dedup(df: DataFrame, key_col: str, order_col: str) -> DataFrame:

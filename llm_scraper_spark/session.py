@@ -4,7 +4,7 @@ Local mode is the sandbox proxy for a multi-executor cluster; every knob here
 is chosen so the same code scales to a 1000-executor deployment:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
-- runtime Bloom-filter join pushdown (first line of the seen-set pre-filter)
+- runtime Bloom-filter join pushdown (inside the seen-set's shuffled anti-join)
 - Arrow batches for every pandas UDF (the only Python in the engine)
 - UTC session timezone so results compare exactly against DuckDB oracles
 """

@@ -324,10 +324,10 @@ def stream_url_dedup(spark: SparkSession, input_dir: str,
     first time it arrives; re-arrivals inside the watermark horizon are
     dropped, and state for URLs older than the watermark is EVICTED —
     the property that keeps a perpetual discovery feed's dedup state
-    O(horizon traffic), not O(all URLs ever) (the standing Bloom +
-    periodic compaction covers the beyond-horizon tail in the batch
-    loop). Rows emit in the trigger they arrive (dedup does not wait for
-    the watermark; the watermark only bounds state retention)."""
+    O(horizon traffic), not O(all URLs ever) (the batch loop's exact
+    anti-join against the seen table covers the beyond-horizon tail).
+    Rows emit in the trigger they arrive (dedup does not wait for the
+    watermark; the watermark only bounds state retention)."""
     schema = T.StructType([
         T.StructField("ts", T.TimestampType()),
         T.StructField("url", T.StringType()),

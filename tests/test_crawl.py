@@ -848,21 +848,18 @@ def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
             f"wave {k}: {wave_tables}"
 
 
-def test_seen_filter_with_empty_seen_set_joins_bloom_delta(spark, tmp_path,
-                                                           monkeypatch):
-    """A wave whose ``read_seen`` is None still joins the previous
-    wave's in-flight Bloom delta before submitting its own, so
-    consecutive waves over an empty seen set do not trip the
-    single-in-flight assert."""
+def test_consecutive_waves_over_empty_seen_set(spark, tmp_path, monkeypatch):
+    """Waves whose ``read_seen`` is None keep every deduped discovery
+    (the unseen chain is the discovery checkpoint itself) and commit one
+    after another."""
     run = CrawlRun(spark, str(tmp_path / "state"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
                    default_budget=3, n_salts=4)
     run.init_from_seeds(_mk_seeds(spark, 20))
     monkeypatch.setattr(run.state, "read_seen", lambda upto_wave: None)
-    run.run_wave(0)
-    assert run._bloom_fut is not None  # wave 0's delta is in flight
-    run.run_wave(1)
-    assert run._bloom is None
+    for k in (0, 1):
+        stats = run.run_wave(k)
+        assert stats["deduped_new"] == stats["discovered"] > 0
     assert run.state.last_wave() == 1
 
 
@@ -872,17 +869,20 @@ def _persistent_rdd_ids(spark):
 
 def test_crawl_releases_every_checkpoint(spark, tmp_path):
     """A finished run holds no persisted RDD it created: each wave's
-    checkpoints are released when the wave ends, and the new-rows
-    checkpoint the deferred Bloom delta reads is released when that
-    delta is joined. The same holds for a run whose wave-1 fetcher
-    raises after the wave's schedule checkpoint exists."""
+    checkpoints, the new-rows checkpoint included, are released when
+    that wave's ``run_wave`` returns, so no wave's blocks outlive it.
+    The same holds for a run whose wave-1 fetcher raises after the
+    wave's schedule checkpoint exists."""
     before = _persistent_rdd_ids(spark)
     run = CrawlRun(spark, str(tmp_path / "ok"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
                    default_budget=3, n_salts=4)
-    run.run(3, seeds=_mk_seeds(spark, 30))
-    assert run.state.last_wave() == 2
+    run.init_from_seeds(_mk_seeds(spark, 30))
     assert _persistent_rdd_ids(spark) - before == set()
+    for k in range(3):
+        run.run_wave(k)
+        assert _persistent_rdd_ids(spark) - before == set(), f"wave {k}"
+    assert run.state.last_wave() == 2
 
     inner = synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT)
     calls = []

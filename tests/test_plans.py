@@ -4,6 +4,7 @@ Correct results with the wrong plan fail here — the 100 TB contract is
 about plan shape as much as output values.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -346,9 +347,10 @@ def test_wave_loop_python_stages_only_fetch_and_chunk(spark, tmp_path):
 
 def test_fused_wave_single_python_crossing(spark, tmp_path):
     """Round 5: the fused fetch contract means the page corpus crosses
-    the Python boundary ONCE per wave — the fetch mapInPandas. The only
-    other Python stage in a fused wave is the bloom tag (an Arrow UDF
-    over 8-byte hash rows, not the corpus). Pin that: the documents
+    the Python boundary ONCE per wave — the fetch mapInPandas, the
+    wave's only Python stage (the seen-set dedup is an exact JVM
+    anti-join; test_wave_checkpoints_hold_only_the_fetch_python_stage
+    pins that over a whole crawl). Pin it here: the documents
     write plan off a fused fetcher must contain the fetch MapInPandas
     and NO ArrowEvalPython (no uuid5/chunker stages), and the fused
     discovery chain up to the dedup must be Python-free past the fetch."""
@@ -390,15 +392,66 @@ def test_fused_wave_single_python_crossing(spark, tmp_path):
     assert "ArrowEvalPython" not in p2 and "BatchEvalPython" not in p2
 
 
-def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path):
-    """The wave loop's reversed dedup join (Bloom tag, then
-    filter_unseen(..., broadcast_candidates=True), picked when the seen
-    set dwarfs a wave's discoveries) must plan with ZERO hash-partition
-    Exchange over the seen_delta scan: the maybe-seen hashes are
-    broadcast into a semi join that streams the seen scan, and the
-    matched set is broadcast back into the anti join. The shuffled
-    regime over the same inputs does exchange, so the assertion is about
-    the join choice, not input size."""
+def test_wave_checkpoints_hold_only_the_fetch_python_stage(spark, tmp_path,
+                                                          monkeypatch):
+    """Every frame a wave checkpoints, over a 2-wave crawl with a seen
+    table, plans exactly one Python stage in total: the fetch
+    MapInPandas. The dedup chain (discovery checkpoint, anti-join,
+    new rows) is all JVM — no Arrow UDF tag, no grouped pandas build."""
+    from llm_scraper_spark.crawl import waves
+    from llm_scraper_spark.plans.explain import physical_plan
+    from llm_scraper_spark.sources.synthetic import synth_page, synth_seeds
+
+    # the seeds' own outlinks are seeded too, so the seen set holds
+    # URLs the waves rediscover and the anti-join drops real rows
+    urls = [r["url"] for r in synth_seeds(spark, 300, n_hosts=8)
+            .orderBy("seq").collect()]
+    urls += [link for u in urls
+             for link in synth_page(u, n_hosts=8, fanout=3)["outlinks"]]
+    seeds = spark.createDataFrame(
+        [(u, 1.0, i) for i, u in enumerate(dict.fromkeys(urls))],
+        "url string, priority double, seq long")
+    run = waves.CrawlRun(spark, str(tmp_path / "state"),
+                         fetcher=waves.synthetic_fetcher(n_hosts=8, fanout=3),
+                         default_budget=16, n_salts=2)
+    run.init_from_seeds(seeds)
+    real = waves.local_checkpoint_tracked
+    plans: list = []
+
+    def recording(df, *a, **k):
+        plans.append(physical_plan(df, "simple"))
+        return real(df, *a, **k)
+
+    monkeypatch.setattr(waves, "local_checkpoint_tracked", recording)
+    dropped = 0
+    for wave in (0, 1):
+        plans.clear()
+        stats = run.run_wave(wave)
+        assert stats["deduped_new"] > 0
+        dropped += stats["discovered"] - stats["deduped_new"]
+        assert len(plans) >= 4, plans  # schedule, fetch, discovery, new
+        assert sum("MapInPandas" in p for p in plans) == 1, plans
+        for p in plans:
+            for node in ("ArrowEvalPython", "FlatMapGroupsInPandas",
+                         "BatchEvalPython"):
+                assert node not in p, p
+    assert dropped > 0  # the anti-join ran against real seen rows
+
+
+@pytest.mark.parametrize("with_bloom", [False, True],
+                         ids=["no_filter", "bloom"])
+def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path,
+                                                          with_bloom):
+    """The wave loop's reversed dedup join (filter_unseen(...,
+    broadcast_candidates=True), picked when the seen set dwarfs a
+    wave's discoveries) must plan with ZERO hash-partition Exchange
+    over the seen_delta scan: the candidate hashes are broadcast into a
+    semi join that streams the seen scan, and the matched set is
+    broadcast back into the anti join. The same holds behind an
+    optional Bloom pre-filter (only its maybe-seen rows are joined),
+    with the same survivors. The shuffled regime over the same inputs
+    does exchange, so the assertion is about the join choice, not
+    input size."""
     from llm_scraper_spark.crawl.state import CrawlState
     from llm_scraper_spark.operators.seen import (build_bloom_distributed,
                                                   filter_unseen)
@@ -416,7 +469,8 @@ def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path):
             .alias("key_hex"), F.lit(w).alias("first_seen_wave")))
         st.commit_wave(w - 1, (w + 1) * 5000, {})
     seen = st.read_seen(1)
-    bloom = build_bloom_distributed(seen, capacity=100_000)
+    bloom = build_bloom_distributed(seen, capacity=100_000) \
+        if with_bloom else None
     cand = hashes(9900, 10100)  # 100 seen, 100 new
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -433,6 +487,8 @@ def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path):
         shuffled = filter_unseen(cand, seen, bloom=bloom)
         assert "Exchange hashpartitioning" in physical_plan(shuffled,
                                                             "simple")
+        assert sorted(r["_disc_ord"] for r in shuffled.collect()) == \
+            list(range(10000, 10100))
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
