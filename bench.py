@@ -7,7 +7,7 @@ BENCH scale factor:
     seeds (spark.range, Zipf-skewed hosts)
       -> Arrow-UDF batch canonicalization + native xxhash64
       -> first-occurrence dedup (min_by hash agg)
-      -> per-host politeness window (salted rank)
+      -> per-host politeness window (WindowGroupLimit rank)
       -> synthetic link expansion (native exprs, ~fanout x seeds)
       -> canonicalize + hash -> anti-join vs seen -> new-URL count
 

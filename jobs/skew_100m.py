@@ -1,7 +1,7 @@
 """Skew evidence at the 100M-row scale point (VERDICT r3 #6).
 
-Runs the politeness window (schedule_wave, unsalted WindowGroupLimit
-default AND the manual salted two-stage variant) plus the adaptive
+Runs the politeness window (schedule_wave, one WindowGroupLimit window
+per host; the manual salted two-stage variant was deleted) plus the adaptive
 fetch-shard salting over a 100,000,000-row synthetic frontier with a
 pathologically hot host, at local[32], and reports PER-TASK duration
 distributions (median / p95 / max per stage) parsed from the Spark
@@ -109,8 +109,6 @@ def main() -> None:
         jobs = {
             "window_unsalted": lambda: schedule_wave(
                 frontier, default_budget=64),
-            "window_salted": lambda: schedule_wave(
-                frontier, default_budget=64, salted=True),
         }
         job_windows = {}
         for name, build in jobs.items():

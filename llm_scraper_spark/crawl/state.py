@@ -214,7 +214,7 @@ class CrawlState:
     def write(self, table: str, wave: int, df: DataFrame) -> None:
         schema = STATE_SCHEMAS.get(table)
         if schema is not None:
-            # a pinned read trusts the files: e.g. an int link_priority
+            # a pinned read trusts the files: e.g. a float seed priority
             # lands as double
             from pyspark.sql import functions as F
 
@@ -259,18 +259,15 @@ class CrawlState:
         from pyspark.sql import functions as F
 
         base = self.frontier_base_wave()
-        lo = -1 if base is None else base
-        committed = self.committed_waves()
+        # the seeds are delta -1 (committed by wave -1), so with no base
+        # the bound sits below them
+        lo = -2 if base is None else base
         delta_paths = [
             self._p("frontier_delta", d)
-            for d in sorted(committed)
+            for d in sorted(self.committed_waves())
             if lo < d <= wave - 1 and os.path.exists(
                 self._p("frontier_delta", d))
         ]
-        # seeds live in dir -1, committed by wave -1
-        if base is None and -1 in committed and wave >= 0 \
-                and os.path.exists(self._p("frontier_delta", -1)):
-            delta_paths.insert(0, self._p("frontier_delta", -1))
         parts = []
         if base is not None:
             parts.append(self.read("frontier_base", base))

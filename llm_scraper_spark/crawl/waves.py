@@ -10,7 +10,8 @@ Each wave is one batch of the reference's consume-loop
            assign global seq --> frontier append + seen delta
 
 Shuffle inventory per wave (the two the north rule names, plus one):
-  1. per-host politeness window (salted: capped shards before exact rank)
+  1. per-host politeness window (WindowGroupLimit: each map task ships at
+     most ``budget`` rows per host into the exchange)
   2. the dedup anti-join over 64-bit hashes, exact and unfiltered:
      shuffled, or reversed into two broadcasts (no exchange) when the
      seen set is >= 50x the wave's discoveries; AQE-coalesced
@@ -44,7 +45,7 @@ from ..functions.urls import canonicalize_batch, with_canonical
 from ..operators import frontier as frontier_ops
 from ..operators import seen as seen_ops
 from ..operators.checkpoints import (local_checkpoint_tracked,
-                                     release_checkpoint, released_on_exit)
+                                     release_checkpoint)
 from ..operators.chunker import doc_ids_and_spans
 from ..operators.robots import gate_frontier
 from ..schemas import SPAN_DDL
@@ -69,6 +70,10 @@ FETCH_FUSED_DDL = (
 _FETCH_FUSED_COLS = [f.split(" ")[0] for f in FETCH_FUSED_DDL.split(", ")]
 
 Fetcher = Callable[[DataFrame], DataFrame]
+
+# every discovered link's priority: constant, so the politeness window
+# schedules discoveries per host in seq order (the reference FIFO)
+LINK_PRIORITY = 1.0
 
 _FETCH_COLS = ["url", "canonical_url", "host", "salt", "url_hash",
                "priority", "wave", "seq"]
@@ -249,13 +254,37 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
     return fetch
 
 
-class _PhaseClock:
-    """Per-phase driver wall times: ``mark(phase)`` records the wall since
-    the previous mark (or ``restart``) under ``timings[phase]``."""
+class _WavePipeline:
+    """One wave's commit pipeline, for ``run_wave`` and the seed init
+    (wave -1): per-phase driver walls (``mark`` stores the wall since the
+    last mark or ``restart``), tracked checkpoints (``ck``), and state
+    writes (``write``) launched on a pool as soon as their input exists.
 
-    def __init__(self):
+    The caller joins every write (``join_writes``) before the ledger
+    commit, so a failed write raises before any commit. Leaving the
+    ``with`` block waits for the writes, on the error path too (a failed
+    wave leaks no thread, only orphan dirs that ``clean_uncommitted``
+    removes), then releases the wave's checkpoints: every cross-wave
+    input is re-read from the committed parquet, and a long crawl would
+    otherwise keep one wave's MEMORY_AND_DISK blocks per wave."""
+
+    def __init__(self, state: CrawlState):
+        self.state = state
         self.timings: dict[str, float] = {}
+        self._ck_ids: set[int] = set()
+        self._writes: dict = {}
+        # a wave writes six tables; threads start only as writes arrive
+        self._pool = ThreadPoolExecutor(max_workers=6)
         self.restart()
+
+    def __enter__(self) -> _WavePipeline:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        try:
+            self._pool.shutdown(wait=True)
+        finally:
+            release_checkpoint(self.state.spark, self._ck_ids)
 
     def restart(self) -> None:
         self._t0 = time.time()
@@ -264,6 +293,28 @@ class _PhaseClock:
         now = time.time()
         self.timings[phase] = round(now - self._t0, 3)
         self._t0 = now
+
+    def ck(self, df: DataFrame) -> DataFrame:
+        """Eager tracked checkpoint, released when the block exits."""
+        out, ids = local_checkpoint_tracked(df)
+        self._ck_ids |= ids
+        return out
+
+    def write(self, table: str, wave: int, df: DataFrame) -> None:
+        """Launch ``state.write(table, wave, df)`` on the pool now."""
+        t_sub = time.time()
+
+        def _do():
+            self.state.write(table, wave, df)
+            return round(time.time() - t_sub, 3)
+
+        self._writes[f"write_{table}"] = self._pool.submit(_do)
+
+    def join_writes(self) -> dict[str, float]:
+        """Wait for every submitted write; a failed one raises here.
+        Returns each write's submit-to-finish wall by ``write_<table>``
+        (it includes any queueing behind the wave's own jobs)."""
+        return {key: fut.result() for key, fut in self._writes.items()}
 
 
 class CrawlRun:
@@ -278,14 +329,12 @@ class CrawlRun:
         robots: DataFrame | None = None,
         default_budget: int = frontier_ops.DEFAULT_BUDGET,
         n_salts: int = frontier_ops.DEFAULT_SALTS,
-        link_priority: float = 1.0,
         compact_every: int = 8,
         scope_filter: bool = False,
         archive_dir: str | None = None,
         archive_shards: int = 8,
         deny_patterns: DataFrame | None = None,
         compact_tables_every: int = 0,
-        compact_target_bytes: int = 128 * 1024 * 1024,
     ):
         self.spark = spark
         self.state = CrawlState(spark, state_dir)
@@ -295,7 +344,6 @@ class CrawlRun:
         self.robots = robots
         self.default_budget = default_budget
         self.n_salts = n_salts
-        self.link_priority = link_priority
         # opt-in frontier URL hygiene (functions/urls.py): strip tracking/
         # session params from canonical URLs (re-hashing natively so alias
         # URLs collapse in dedup and the seen set) and drop out-of-scope
@@ -313,7 +361,6 @@ class CrawlRun:
         # files per table, so an un-folded long crawl's full-table reads
         # open O(waves) files. 0 disables (short runs don't need it).
         self.compact_tables_every = compact_tables_every
-        self.compact_target_bytes = compact_target_bytes
         # opt-in Common-Crawl-style archiving (sources/warc.py): each
         # wave's fetch output is written as wave=N/.warc.gz shards plus a
         # CDX capture index. Shards are byte-deterministic and published
@@ -345,99 +392,62 @@ class CrawlRun:
         """Wave -1 'commit': canonicalize seeds, first-occurrence dedup,
         mark seen at enqueue (reference add_url semantics, cache.py:78-92).
         Returns per-phase driver wall times (same shape as run_wave)."""
-        clock = _PhaseClock()
-        canon = with_canonical(seeds.select("url", "priority", "seq"),
-                               key_hex=False)
-        if self.scope_filter:
-            canon = self._apply_scope(canon)
-        deduped = seen_ops.first_occurrence_dedup(canon, "url_hash", "seq")
-        frontier = (
-            frontier_ops.with_salt(deduped, self.n_salts)
-            .withColumn("wave", F.lit(0))
-            .withColumn("status", F.lit("pending"))
-            .select("url", "canonical_url", "host", "salt", "url_hash",
-                    "priority", "wave", "seq", "status")
-        )
-        # re-number seeds contiguously in first-occurrence order
-        ck_sink: list = []
-        frontier = frontier_ops.assign_global_seq(
-            frontier.withColumnRenamed("seq", "_orig_seq"), 0, ("_orig_seq",),
-            ck_sink=ck_sink,
-        ).drop("_orig_seq")
-        clock.mark("seed_canon_dedup_seq")
-        # Observation rides the eager checkpoint, so no separate count job
-        obs = Observation("seed_n")
-        frontier, ids = local_checkpoint_tracked(
-            frontier.observe(obs, F.count(F.lit(1)).alias("n")))
-        ck_sink.append(ids)
-        n = int(obs.get["n"])
-        clock.mark("seed_materialize")
-        # both seed tables derive from the same checkpoint — overlap the
-        # writes (same protocol as run_wave: data concurrent, ledger last)
-        seen = frontier.select(
-            "url_hash",
-            F.md5(F.col("url")).alias("key_hex"),
-            F.lit(0).alias("first_seen_wave"),
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(self.state.write, "frontier_delta", -1,
-                                frontier),
-                    pool.submit(self.state.write, "seen_delta", 0, seen)]
-            for f in futs:
-                f.result()
-        clock.mark("seed_writes")
-        stats = {"seeded": n, "timings": clock.timings}
+        with _WavePipeline(self.state) as pipe:
+            canon = with_canonical(seeds.select("url", "priority", "seq"),
+                                   key_hex=False)
+            if self.scope_filter:
+                canon = self._apply_scope(canon)
+            deduped = seen_ops.first_occurrence_dedup(canon, "url_hash", "seq")
+            frontier = (
+                frontier_ops.with_salt(deduped, self.n_salts)
+                .withColumn("wave", F.lit(0))
+                .withColumn("status", F.lit("pending"))
+                .select("url", "canonical_url", "host", "salt", "url_hash",
+                        "priority", "wave", F.col("seq").alias("_orig_seq"),
+                        "status")
+            )
+            # the count and the seq assigner's bounds ride the eager
+            # checkpoint: no separate count or min/max job
+            obs = Observation("seed_n")
+            frontier = pipe.ck(frontier.observe(
+                obs, F.count(F.lit(1)).alias("n"),
+                F.min(F.col("_orig_seq").cast("long")).alias("lo"),
+                F.max(F.col("_orig_seq").cast("long")).alias("hi")))
+            n = int(obs.get["n"])
+            # re-number seeds contiguously in first-occurrence order
+            frontier = frontier_ops.assign_global_seq(
+                frontier, 0, ("_orig_seq",),
+                bounds=(obs.get["lo"], obs.get["hi"]),
+            ).drop("_orig_seq")
+            pipe.mark("seed_canon_dedup_seq")
+            frontier = pipe.ck(frontier)
+            pipe.mark("seed_materialize")
+            # both seed tables derive from the same checkpoint
+            pipe.write("frontier_delta", -1, frontier)
+            pipe.write("seen_delta", 0, frontier.select(
+                "url_hash",
+                F.md5(F.col("url")).alias("key_hex"),
+                F.lit(0).alias("first_seen_wave"),
+            ))
+            pipe.join_writes()
+        pipe.mark("seed_writes")
+        stats = {"seeded": n, "timings": pipe.timings}
         self.state.commit_wave(-1, n, stats)
-        # seed state is committed to parquet — the in-memory checkpoint
-        # blocks behind it are dead weight from here on
-        release_checkpoint(self.spark, set().union(*ck_sink))
         return stats
 
     # ------------------------------------------------------------------
     def run_wave(self, wave: int) -> dict:
         """Execute wave K (0-based) and commit. Returns wave stats
         (counts + per-phase driver wall times under ``timings``)."""
-        clock = _PhaseClock()
-        timings = clock.timings
         st = self.state
         next_seq = st.read_ledger()["next_seq"]
         pending = st.read_pending(wave)
 
-        # Commit pipeline: every state write launches AS SOON AS its
-        # (checkpointed) input exists, so the writes overlap the wave's
-        # remaining compute instead of serializing after it — e.g. the
-        # documents write (the full span payload, the slowest table) runs
-        # during discover/dedup/seq (~6s of compute at 1M seeds) and is
-        # fully hidden. The crash protocol is unchanged: every write is
-        # JOINED before commit_wave below, the ledger stays last, and a
-        # failed write surfaces at its .result() before any commit. The
-        # pool's exit waits for every write on the error path too, so a
-        # failed wave never leaks write threads; it leaves only orphan
-        # table dirs, which clean_uncommitted removes on resume.
-        # Every cross-wave input is re-read from the committed parquet
-        # (CrawlState), so once the writes are joined this wave's
-        # checkpoint blocks are dead weight: wave_ck releases them at the
-        # block's exit, on the error path too, or a long crawl (or a
-        # retried failed wave) keeps one wave's MEMORY_AND_DISK blocks
-        # per wave.
-        write_futs: dict = {}
-        with released_on_exit(self.spark) as wave_ck, \
-                ThreadPoolExecutor(max_workers=7) as pool:
-
-            def _ck(df: DataFrame) -> DataFrame:
-                out, ids = local_checkpoint_tracked(df)
-                wave_ck.append(ids)
-                return out
-
-            def _submit_write(key: str, table: str, w: int, df: DataFrame):
-                t_sub = time.time()
-
-                def _do():
-                    st.write(table, w, df)
-                    return round(time.time() - t_sub, 3)
-
-                write_futs[key] = pool.submit(_do)
-
+        # each state write launches as soon as its checkpointed input
+        # exists and overlaps the wave's remaining compute: e.g. the
+        # documents write (the slowest table) runs during discover/dedup/
+        # seq (~6s of compute at 1M seeds) and is fully hidden
+        with _WavePipeline(st) as pipe:
             if self.robots is not None:
                 pending = gate_frontier(pending, self.robots)
 
@@ -451,20 +461,19 @@ class CrawlRun:
             scheduled = frontier_ops.schedule_wave(
                 pending, self.budgets, self.default_budget
             ).withColumn("wave", F.lit(wave))
-            scheduled = _ck(scheduled.observe(
+            scheduled = pipe.ck(scheduled.observe(
                 obs_sched, F.count(F.lit(1)).alias("n")
             ))
             # the checkpoint above is eager, so the observed count is
             # already final — read it here; it sizes the anti-join below
             n_scheduled = int(obs_sched.get["n"])
-            clock.mark("schedule")
+            pipe.mark("schedule")
             # both derive from the scheduled checkpoint alone — write
             # while the fetch runs
-            _submit_write("write_schedule_log", "schedule_log", wave,
-                          scheduled.select("wave", "seq", "url", "host",
-                                           "priority"))
-            _submit_write("write_fetched", "fetched", wave,
-                          scheduled.select("url_hash"))
+            pipe.write("schedule_log", wave,
+                       scheduled.select("wave", "seq", "url", "host",
+                                        "priority"))
+            pipe.write("fetched", wave, scheduled.select("url_hash"))
 
             # fetch spread (shuffle 3 above): one fetch task per slot.
             # (host, salt) is the politeness shard unit, so one host's
@@ -484,8 +493,8 @@ class CrawlRun:
                     "build each batch with crawl.waves.fetch_frame and "
                     "declare FETCH_FUSED_DDL (plus any extra columns) as "
                     "the mapInPandas schema")
-            pages = _ck(pages)
-            clock.mark("fetch")
+            pages = pipe.ck(pages)
+            pipe.mark("fetch")
 
             if self.archive_dir:
                 import os
@@ -513,7 +522,7 @@ class CrawlRun:
                 # idempotent
                 write_warc_cdx(recs, arc_dir).write.mode("overwrite").parquet(
                     os.path.join(arc_dir, "cdx.parquet"))
-                clock.mark("archive_warc")
+                pipe.mark("archive_warc")
 
             # pinned-schema read: lists the committed seen_delta dirs and
             # runs no Spark job, so it never queues behind the writes
@@ -523,10 +532,10 @@ class CrawlRun:
             # batch, so the page corpus never re-crosses the Arrow
             # boundary. The slowest table write (the full span payload) —
             # launch now so it runs under the discovery/dedup/seq phases
-            _submit_write("write_documents", "documents", wave,
-                          pages.filter(F.col("ok"))
-                          .select("doc_id", "spans", "url", "host", "wave",
-                                  "seq"))
+            pipe.write("documents", wave,
+                       pages.filter(F.col("ok"))
+                       .select("doc_id", "spans", "url", "host", "wave",
+                               "seq"))
 
             # --- discovery: outlinks -> in-wave dedup -> unseen. Outlinks
             # arrive pre-canonicalized (struct per link); only the 64-bit
@@ -570,10 +579,10 @@ class CrawlRun:
                 obs_disc, F.count(F.lit(1)).alias("n"),
                 F.min(F.col("_disc_ord").cast("long")).alias("lo"),
                 F.max(F.col("_disc_ord").cast("long")).alias("hi"))
-            cand = _ck(cand)
+            cand = pipe.ck(cand)
             n_discovered = obs_disc.get["n"]
             disc_bounds = (obs_disc.get["lo"], obs_disc.get["hi"])
-            clock.mark("discover_dedup")
+            pipe.mark("discover_dedup")
             # Join-strategy selection from ledger stats alone (no extra
             # Spark action): reverse the dedup anti-join (broadcast every
             # candidate hash, at most 4M, and scan the seen table narrow)
@@ -589,12 +598,13 @@ class CrawlRun:
             # every measured ratio (BENCH/BUCKETED_AB.md).
             reverse_join = (int(n_discovered) <= 4_000_000
                             and next_seq >= 50 * max(int(n_discovered), 1))
-            # pin the anti-join's output (checked_ck), so the seq
-            # assigner can skip its own input materialization. With no
-            # seen table the chain is the cand checkpoint itself.
             new = seen_ops.filter_unseen(
-                cand, seen_df, broadcast_candidates=reverse_join,
-                checked_ck=_ck)
+                cand, seen_df, broadcast_candidates=reverse_join)
+            # pin the anti-join's output: the seq assigner reads its
+            # input twice (counts job, window). With no seen table the
+            # chain is the cand checkpoint itself.
+            if seen_df is not None:
+                new = pipe.ck(new)
             if self.deny_patterns is not None:
                 new = frontier_ops.gate_trap_patterns(new, self.deny_patterns)
             new = frontier_ops.with_salt(new, self.n_salts)
@@ -602,31 +612,27 @@ class CrawlRun:
                 new = gate_frontier(new, self.robots)
 
             new = frontier_ops.assign_global_seq(
-                new, next_seq, ("_disc_ord",), materialize_input=False,
-                bounds=disc_bounds)
+                new, next_seq, ("_disc_ord",), bounds=disc_bounds)
             obs_new = Observation(f"w{wave}_new")
             new_frontier_rows = (
-                new.withColumn("priority", F.lit(self.link_priority))
+                new.withColumn("priority", F.lit(LINK_PRIORITY))
                 .withColumn("wave", F.lit(wave + 1))
                 .withColumn("status", F.lit("pending"))
                 .select("url", "canonical_url", "host", "salt", "url_hash",
                         "priority", "wave", "seq", "status")
                 .observe(obs_new, F.count(F.lit(1)).alias("n"))
             )
-            new_frontier_rows = _ck(new_frontier_rows)
+            new_frontier_rows = pipe.ck(new_frontier_rows)
             n_new = obs_new.get["n"]
-            clock.mark("unseen_seq")
+            pipe.mark("unseen_seq")
             # everything downstream of the new-rows checkpoint launches now
             # and overlaps the remaining wave bookkeeping
-            _submit_write(
-                "write_seen_delta", "seen_delta", wave + 1,
-                new_frontier_rows.select(
-                    "url_hash",
-                    F.md5(F.col("url")).alias("key_hex"),
-                    F.lit(wave + 1).alias("first_seen_wave"),
-                ))
-            _submit_write("write_frontier_delta", "frontier_delta", wave,
-                          new_frontier_rows)
+            pipe.write("seen_delta", wave + 1, new_frontier_rows.select(
+                "url_hash",
+                F.md5(F.col("url")).alias("key_hex"),
+                F.lit(wave + 1).alias("first_seen_wave"),
+            ))
+            pipe.write("frontier_delta", wave, new_frontier_rows)
 
             # --- metrics: per-partition lineage + fetch/dedup counts
             metrics = (
@@ -642,7 +648,7 @@ class CrawlRun:
                 .withColumn("discovered", F.lit(n_discovered))
                 .withColumn("deduped_new", F.lit(n_new))
             )
-            _submit_write("write_metrics", "metrics", wave, metrics)
+            pipe.write("metrics", wave, metrics)
 
             # --- commit barrier (data first, ledger last): JOIN every
             # pipelined write, then commit. The recorded per-write times
@@ -650,15 +656,14 @@ class CrawlRun:
             # queueing behind the wave's own jobs); state_writes is the
             # wall spent BLOCKED here — i.e. only the part of the write
             # work the overlap failed to hide.
-            clock.restart()
-            for key, fut in write_futs.items():
-                timings[key] = fut.result()
-        clock.mark("state_writes")
+            pipe.restart()
+            pipe.timings.update(pipe.join_writes())
+        pipe.mark("state_writes")
         stats = {
             "scheduled": n_scheduled,
             "discovered": int(n_discovered),
             "deduped_new": int(n_new),
-            "timings": timings,
+            "timings": pipe.timings,
         }
         st.commit_wave(wave, next_seq + n_new, stats)
         # periodic fold of the delta frontier (after the wave commit —
@@ -666,16 +671,17 @@ class CrawlRun:
         if self.compact_every:
             base = st.frontier_base_wave()
             if wave - (base if base is not None else -1) >= self.compact_every:
+                pipe.restart()
                 st.compact_frontier(wave)
-                clock.mark("compact_frontier")
+                pipe.mark("compact_frontier")
         # output-table fold (same boundary, own crash protocol): runs
         # AFTER the wave commit so a crash mid-fold settles on resume
         # without touching the wave ledger
         if self.compact_tables_every and \
                 (wave + 1) % self.compact_tables_every == 0:
-            clock.restart()
-            st.compact_output_tables(capacity=self.compact_target_bytes)
-            clock.mark("compact_tables")
+            pipe.restart()
+            st.compact_output_tables()
+            pipe.mark("compact_tables")
         return stats
 
     # ------------------------------------------------------------------

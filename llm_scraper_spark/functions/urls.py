@@ -134,44 +134,7 @@ def canonicalize_urls(urls: pd.Series) -> pd.DataFrame:
     return canonicalize_batch(urls)
 
 
-# native-eligible URL shape: explicit scheme, plain lowercase-able host
-# (no userinfo/port/IPv6), path absent or /-rooted, optional query, no
-# fragment, no whitespace anywhere. For these rows the canonical form is
-# computable with codegen'd JVM regex — no Python worker, no Arrow
-# round-trip. Everything else (a tiny minority of real-web URLs) takes
-# the exact pandas-UDF path; outputs agree by construction
-# (property-tested in tests/test_urls.py).
-#
-# MEASURED (local[8], 2M URLs, A/B in one session): the all-native
-# split-union plan is ~2x SLOWER than the Arrow UDF (4.15s vs 1.85s;
-# string-intrinsics variant 3.5s) — five JVM regex/string scans per row
-# plus double branch evaluation lose to ONE C-compiled pandas regex over
-# each Arrow batch. "UDFs are the slow path" does not apply to batched
-# C-vectorized regex, so the UDF plan stays the default; the native path
-# is kept (tested equal) for executors where Python workers are
-# unavailable.
-_NATIVE_ELIGIBLE = (
-    r"^[A-Za-z][A-Za-z0-9+.\-]*://[A-Za-z0-9.\-]+(/[^?#\s]*)?(\?[^#\s]*)?$"
-)
-_SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
-_HOST_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([A-Za-z0-9.\-]+)"
-_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
-_QUERY_RE = r"\?([^#]*)"
-
-
-def _native_canonical(u):
-    scheme = F.lower(F.regexp_extract(u, _SCHEME_RE, 1))
-    host = F.lower(F.regexp_extract(u, _HOST_RE, 1))
-    path = F.regexp_extract(u, _PATH_RE, 1)
-    path = F.when(path == "", "/").otherwise(path)
-    query = F.regexp_extract(u, _QUERY_RE, 1)
-    canon = F.concat(scheme, F.lit("://"), host, path)
-    canon = F.when(query != "", F.concat(canon, F.lit("?"), query)).otherwise(canon)
-    return canon, host
-
-
 def with_canonical(df: DataFrame, url_col: str = "url",
-                   native_fast_path: bool = False,
                    key_hex: bool = True) -> DataFrame:
     """Attach canonical_url, host and the hash key(s).
 
@@ -183,36 +146,23 @@ def with_canonical(df: DataFrame, url_col: str = "url",
       wastes one md5 per duplicate and widens the dedup shuffle rows by a
       32-char column.
 
-    Default is the single-pass Arrow-UDF plan — measured ~2x faster than
-    the all-native split-union (see module comment). ``native_fast_path``
-    canonicalizes common-shape rows entirely JVM-side instead (split-union
-    with the UDF path for the rest) for deployments without Python
-    workers.
+    Canonicalization is the single-pass Arrow UDF (``canonicalize_urls``).
+    MEASURED (local[8], 2M URLs, A/B in one session): an all-native
+    JVM-regex split-union was ~2x SLOWER (4.15s vs 1.85s) — five regex
+    scans per row plus double branch evaluation lose to one C-vectorized
+    regex over each Arrow batch — so there is no JVM-regex path, and the
+    engine needs Python workers for its fetch crossing anyway.
     """
     u = F.col(url_col)
-    if not native_fast_path:
-        c = canonicalize_urls(u).alias("_c")
-        out = (
-            df.withColumn("_c", c)
-            .withColumn("canonical_url", F.col("_c.canonical_url"))
-            .withColumn("host", F.col("_c.host"))
-            .drop("_c")
-            .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
-        )
-        return out.withColumn("key_hex", F.md5(u)) if key_hex else out
-    eligible = u.isNotNull() & u.rlike(_NATIVE_ELIGIBLE)
-    canon, host = _native_canonical(u)
-    fast = (
-        df.filter(eligible)
-        .withColumn("canonical_url", canon)
-        .withColumn("host", host)
+    c = canonicalize_urls(u).alias("_c")
+    out = (
+        df.withColumn("_c", c)
+        .withColumn("canonical_url", F.col("_c.canonical_url"))
+        .withColumn("host", F.col("_c.host"))
+        .drop("_c")
         .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
     )
-    if key_hex:
-        fast = fast.withColumn("key_hex", F.md5(u))
-    slow = with_canonical(df.filter(~eligible | u.isNull()), url_col,
-                          native_fast_path=False, key_hex=key_hex)
-    return fast.unionByName(slow)
+    return out.withColumn("key_hex", F.md5(u)) if key_hex else out
 
 
 def cache_key_expr(col, algorithm: str = "md5"):

@@ -16,14 +16,13 @@ round's checkpoint is always left alive for the caller.
 
 The id diff is taken around a single eager checkpoint call, so it is
 exact as long as no other thread persists an RDD during that call; a
-concurrent persist would be misattributed. ``run_wave`` takes its
-checkpoints while its state-write threads are running jobs, and stays
-exact because those threads only write parquet: they persist no RDD.
+concurrent persist would be misattributed. The crawl's commit pipeline
+(``crawl/waves.py``) takes its checkpoints while its state-write threads
+are running jobs, and stays exact because those threads only write
+parquet: they persist no RDD.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -32,13 +31,12 @@ def _persistent_ids(sc) -> set[int]:
     return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
 
-def local_checkpoint_tracked(df: DataFrame, eager: bool = True
-                             ) -> tuple[DataFrame, set[int]]:
-    """``df.localCheckpoint(eager)`` plus the set of persistent-RDD ids the
-    call registered (usually one)."""
+def local_checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Eager ``df.localCheckpoint()`` plus the set of persistent-RDD ids
+    the call registered (usually one)."""
     sc = df.sparkSession.sparkContext
     before = _persistent_ids(sc)
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     created = _persistent_ids(sc) - before
     return ck, created
 
@@ -54,13 +52,3 @@ def release_checkpoint(spark, ids: set[int]) -> None:
         if jrdd is not None:
             jrdd.unpersist(False)
 
-
-@contextmanager
-def released_on_exit(spark):
-    """A list for tracked checkpoint id sets; every set appended to it is
-    released when the block exits, on the error path too."""
-    sink: list = []
-    try:
-        yield sink
-    finally:
-        release_checkpoint(spark, set().union(*sink))

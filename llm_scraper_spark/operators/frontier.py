@@ -11,13 +11,12 @@ The distributed re-expression is wave-based:
   ``(priority DESC, seq ASC)`` order — the north rule's per-host politeness
   upgrade of the reference's single global semaphore,
 - hot hosts are salted: rows are sharded as ``(host, salt)`` with
-  ``n_salts(host)`` proportional to the host's frontier mass, so the
-  politeness window shuffle stays even at 10^10 rows. Budget accounting is
-  computed pre-salt (per host) and enforced post-salt by ranking over the
-  un-salted host key but partition-pruned by the salted key first: a cheap
-  per-(host,salt) pre-rank caps each shard at ``budget`` rows before the
-  exact per-host rank, so the per-host window never sees more than
-  ``budget * n_salts`` rows regardless of skew.
+  ``n_salts(host)`` proportional to the host's frontier mass, so the fetch
+  stage's per-(host, salt) batches stay bounded at 10^10 rows. Budget
+  accounting is per host: one ``row_number() <= budget`` window over the
+  un-salted host key, which Spark plans as WindowGroupLimit with a partial
+  pass before the exchange, so the window is skew-immune without a manual
+  per-shard pre-rank (``BENCH/SKEW.md``).
 """
 
 from __future__ import annotations
@@ -72,7 +71,6 @@ def schedule_wave(
     pending: DataFrame,
     budgets: DataFrame | None = None,
     default_budget: int = DEFAULT_BUDGET,
-    salted: bool = False,
 ) -> DataFrame:
     """Pick this wave's fetch set: per host the first ``budget`` pending URLs
     by (priority DESC, seq ASC); FIFO equality with the reference holds when
@@ -85,11 +83,10 @@ def schedule_wave(
     WindowGroupLimit with a *Partial* pass before the exchange — every map
     task ships at most ``budget`` rows per host into the shuffle, so the
     window is natively skew-immune (a 20M-row frontier with 90% of rows on
-    ONE host schedules in 1.3s at local[8]; the salted two-stage pre-rank
-    took 4.4s doing the same work twice). ``salted=True`` keeps the manual
-    pre-rank for engines without WindowGroupLimit; salting still matters
-    for the FETCH stage (bounded per-(host,salt) task batches) — see
-    with_adaptive_salt.
+    ONE host schedules in 1.3s at local[8]; a manual salted two-stage
+    pre-rank took 4.4s doing the same work twice, so there is none).
+    Salting still matters for the FETCH stage (bounded per-(host,salt)
+    task batches) — see with_adaptive_salt.
     """
     df = pending
     if budgets is not None:
@@ -97,19 +94,6 @@ def schedule_wave(
         df = df.withColumn("budget", F.coalesce(F.col("budget"), F.lit(default_budget)))
     else:
         df = df.withColumn("budget", F.lit(default_budget))
-
-    if salted and "salt" in df.columns:
-        # stage 1: cap each (host, salt) shard at `budget` rows — bounds the
-        # rows entering the exact per-host rank to budget * n_salts even for
-        # pathological hosts, keeping the final window partition tiny.
-        w_shard = W.partitionBy("host", "salt").orderBy(
-            F.col("priority").desc(), F.col("seq").asc()
-        )
-        df = (
-            df.withColumn("_shard_rank", F.row_number().over(w_shard))
-            .filter(F.col("_shard_rank") <= F.col("budget"))
-            .drop("_shard_rank")
-        )
 
     w_host = W.partitionBy("host").orderBy(F.col("priority").desc(), F.col("seq").asc())
     return (
@@ -188,8 +172,6 @@ def assign_global_seq(
     candidates: DataFrame,
     base_seq: int,
     order_cols: tuple[str, ...] = ("parent_seq", "link_idx"),
-    ck_sink: list | None = None,
-    materialize_input: bool = True,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Assign the contiguous global FIFO ``seq`` to newly discovered URLs.
@@ -201,28 +183,34 @@ def assign_global_seq(
     range-partitioned sort, per-partition local index, driver-side
     partition offsets.
 
-    Fully JVM-side (no Python stage in the hot wave loop), and ONE
-    materialization of the candidate chain. The classic zipWithIndex
-    shape (repartitionByRange -> per-partition index -> offset join)
-    costs the hot loop twice: the range exchange runs a separate
-    bounds-SAMPLING job, and because the sampled bounds carry a per-RDD
-    seed the placement is nondeterministic, forcing a SECOND eager
-    checkpoint of the shuffled rows before offsets can be collected
-    (round-3 regression: deriving offsets from a re-evaluation silently
-    dropped rows at 1M+ seeds). This implementation replaces the sampled
-    exchange with DETERMINISTIC width bucketing:
+    Fully JVM-side (no Python stage in the hot wave loop), and it
+    materializes nothing itself. The classic zipWithIndex shape
+    (repartitionByRange -> per-partition index -> offset join) costs the
+    hot loop twice: the range exchange runs a separate bounds-SAMPLING
+    job, and because the sampled bounds carry a per-RDD seed the
+    placement is nondeterministic, forcing a checkpoint of the shuffled
+    rows before offsets can be collected (round-3 regression: deriving
+    offsets from a re-evaluation silently dropped rows at 1M+ seeds).
+    This implementation replaces the sampled exchange with DETERMINISTIC
+    width bucketing:
 
-    1. checkpoint the input once (the chain behind it — the seen
-       anti-join — is the wave's most expensive lineage);
-    2. two tiny driver jobs over the checkpointed blocks: min/max of the
-       leading order column, then per-bucket counts for
+    1. [lo, hi] of the leading order column: ``bounds`` when the caller
+       has them (the crawl rides min/max on the Observation of the
+       checkpoint that feeds this call), else one tiny driver job;
+    2. one driver job of per-bucket counts for
        ``bucket = (v - lo) DIV ceil(span / P)`` — exact integer driver
        math, no sampling, same result on every evaluation;
     3. ``seq = base + offset[bucket] + row_number() over (bucket,
        ORDER BY order_cols..)``— the bucket offsets fold into one
        literal ``create_map`` so the projection is codegen arithmetic,
        and the single window exchange executes when the CALLER first
-       materializes the result (no extra materialization here at all).
+       materializes the result.
+
+    Every step reads the input again, so a caller whose input lineage is
+    expensive passes a checkpointed frame (the crawl checkpoints the
+    deduped seeds and the anti-join output, and releases those blocks
+    itself). Bucket counts depend only on VALUES, so determinism needs no
+    checkpoint — only cost does.
 
     Bucket boundaries are value-ranges of the leading order column, so
     cross-bucket ordering is preserved by construction; within a bucket
@@ -233,36 +221,15 @@ def assign_global_seq(
     free to disagree between two evaluations). Wave discovery volumes
     have near-uniform leading keys (``_disc_ord`` ~ parent seq range),
     so the value-width buckets stay balanced without sampling.
-
-    ``ck_sink``: optional list — the checkpoint's block-id set is
-    appended so the caller can release it (operators/checkpoints.py)
-    once the returned frame has been materialized/persisted downstream;
-    without a sink the blocks live until session end (matching plain
-    localCheckpoint semantics).
     """
-    from .checkpoints import local_checkpoint_tracked
-
-    # ``materialize_input=False`` is for callers whose candidate lineage
-    # is ALREADY cheap and value-deterministic to re-evaluate (the wave
-    # loop: a native filter + union of two checkpointed frames) — the
-    # two metadata aggregates and the final window then re-read cached
-    # blocks instead of paying one more full materialization. Bucket
-    # counts depend only on VALUES, so determinism needs no checkpoint —
-    # only cost does.
-    if materialize_input:
-        candidates, cand_ck_ids = local_checkpoint_tracked(candidates)
-        if ck_sink is not None:
-            ck_sink.append(cand_ck_ids)
-
     spark = candidates.sparkSession
     first = order_cols[0]
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if bounds is not None and bounds[0] is not None:
         # caller-provided [lo, hi] covering every candidate's leading
         # key (a SUPERSET range is correct — boundaries only bucket,
-        # exact offsets come from the counts job below). The wave loop
-        # rides min/max on its discovery Observation, saving one
-        # driver job per wave.
+        # exact offsets come from the counts job below). The crawl rides
+        # min/max on an Observation, saving one driver job per call.
         lo, hi = int(bounds[0]), int(bounds[1])
     else:
         mm = candidates.agg(

@@ -237,7 +237,6 @@ def filter_unseen(
     hash_col: str = "url_hash",
     bloom=None,
     broadcast_candidates: bool = False,
-    checked_ck=None,
 ) -> DataFrame:
     """Return the candidate rows whose hash is not in the seen set.
 
@@ -265,11 +264,9 @@ def filter_unseen(
     the wave's discovered count, which it has from the wave Observation,
     and falls back to the shuffled anti join beyond the threshold.
 
-    ``checked_ck``: optional materializer (the wave loop passes its
-    tracked-localCheckpoint helper) for the anti-join's output, the only
-    expensive sub-plan here. Pinning it makes the returned frame cheap to
-    re-evaluate, so downstream seq assignment can skip ITS input
-    materialization.
+    The result is lazy: a caller that reads it more than once (the wave
+    loop's seq assignment runs a counts job, then its window) checkpoints
+    it.
     """
     if seen_df is None:
         return candidates.drop("_maybe_seen")
@@ -288,8 +285,6 @@ def filter_unseen(
         checked = maybe.join(F.broadcast(matched), on=hash_col, how="left_anti")
     else:
         checked = maybe.join(seen_hashes, on=hash_col, how="left_anti")
-    if checked_ck is not None:
-        checked = checked_ck(checked)
     if definitely_new is None:
         return checked
     return definitely_new.unionByName(checked)

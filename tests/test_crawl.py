@@ -370,7 +370,7 @@ def test_feature_combination_crawl_equality(spark, tmp_path):
         spark, str(tmp_path / "combo" / "state"),
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
         default_budget=budget, n_salts=4,
-        compact_tables_every=2, compact_target_bytes=1 << 30,
+        compact_tables_every=2,
     )
     combo.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
     assert _spark_schedule_log(plain) == _spark_schedule_log(combo)
@@ -441,8 +441,7 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
                        fetcher=synthetic_fetcher(n_hosts=N_HOSTS,
                                                  fanout=FANOUT),
                        default_budget=budget, n_salts=4,
-                       compact_tables_every=every,
-                       compact_target_bytes=1 << 30, **kw)
+                       compact_tables_every=every, **kw)
         run.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
         return run
 
@@ -457,7 +456,7 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
 
     assert _spark_schedule_log(plain) == _spark_schedule_log(folded)
     assert docs_set(plain) == docs_set(folded)
-    # file counts bounded: at 1 GiB capacity each fold leaves ~1 flat
+    # file counts bounded: at the 128 MB target each fold leaves ~1 flat
     # file; only waves since the last fold still hold per-wave files
     def n_files(run, table):
         base = os.path.join(run.state.dir, table)
@@ -477,7 +476,7 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
                      fetcher=synthetic_fetcher(n_hosts=N_HOSTS,
                                                fanout=FANOUT),
                      default_budget=budget, n_salts=4,
-                     compact_tables_every=2, compact_target_bytes=1 << 30)
+                     compact_tables_every=2)
     orig_finish = comp._finish
     calls = {"n": 0}
 
@@ -500,7 +499,7 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
                      fetcher=synthetic_fetcher(n_hosts=N_HOSTS,
                                                fanout=FANOUT),
                      default_budget=budget, n_salts=4,
-                     compact_tables_every=2, compact_target_bytes=1 << 30)
+                     compact_tables_every=2)
     run_b.run(n_waves)
     assert _spark_schedule_log(run_b) == _spark_schedule_log(plain)
     assert docs_set(run_b) == docs_set(plain)
@@ -872,7 +871,8 @@ def test_crawl_releases_every_checkpoint(spark, tmp_path):
     checkpoints, the new-rows checkpoint included, are released when
     that wave's ``run_wave`` returns, so no wave's blocks outlive it.
     The same holds for a run whose wave-1 fetcher raises after the
-    wave's schedule checkpoint exists."""
+    wave's schedule checkpoint exists, and for a seed init whose
+    seen_delta write raises after both seed checkpoints exist."""
     before = _persistent_rdd_ids(spark)
     run = CrawlRun(spark, str(tmp_path / "ok"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
@@ -899,6 +899,56 @@ def test_crawl_releases_every_checkpoint(spark, tmp_path):
         run.run(3, seeds=_mk_seeds(spark, 30))
     assert run.state.last_wave() == 0
     assert _persistent_rdd_ids(spark) - before == set()
+
+    run = CrawlRun(spark, str(tmp_path / "seed_fail"),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4)
+    write = run.state.write
+
+    def seen_write_fails(table, wave, df):
+        if table == "seen_delta":
+            raise RuntimeError("seen write failed")
+        write(table, wave, df)
+
+    run.state.write = seen_write_fails
+    with pytest.raises(RuntimeError, match="seen write failed"):
+        run.init_from_seeds(_mk_seeds(spark, 30))
+    assert run.state.last_wave() is None
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_compact_frontier_timing_holds_only_the_compaction(spark, tmp_path,
+                                                        monkeypatch):
+    """``timings["compact_frontier"]`` is the wall of the frontier fold
+    alone: the ledger commit just before it is not counted, even when
+    that commit is slow."""
+    import time
+
+    from llm_scraper_spark.crawl.state import CrawlState
+
+    slow_s = 2.0
+    commit, compact = CrawlState.commit_wave, CrawlState.compact_frontier
+    fold_s = []
+
+    def slow_commit(self, *a, **k):
+        time.sleep(slow_s)
+        commit(self, *a, **k)
+
+    def timed_compact(self, *a, **k):
+        t = time.time()
+        compact(self, *a, **k)
+        fold_s.append(time.time() - t)
+
+    run = CrawlRun(spark, str(tmp_path / "state"),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4, compact_every=1)
+    run.init_from_seeds(_mk_seeds(spark, 30))
+    monkeypatch.setattr(CrawlState, "commit_wave", slow_commit)
+    monkeypatch.setattr(CrawlState, "compact_frontier", timed_compact)
+    stats = run.run_wave(0)
+    assert run.state.frontier_base_wave() == 0
+    assert len(fold_s) == 1
+    assert stats["timings"]["compact_frontier"] < fold_s[0] + slow_s / 2
 
 
 def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
@@ -997,14 +1047,13 @@ def test_state_reads_run_no_spark_job(spark, tmp_path):
 def test_state_files_match_pinned_schemas(spark, tmp_path):
     """Schema-drift guard: pinned reads trust the files, so every state
     table's files must infer to exactly its pinned schema, also when the
-    seeds carry float priorities and the link priority is an int."""
+    seeds carry float priorities."""
     from llm_scraper_spark.crawl.state import STATE_SCHEMAS
 
     state_dir = tmp_path / "state"
     run = CrawlRun(spark, str(state_dir),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-                   default_budget=3, n_salts=4, link_priority=1,
-                   compact_every=0)
+                   default_budget=3, n_salts=4, compact_every=0)
     run.run(2, seeds=_mk_seeds(spark, 40).withColumn(
         "priority", F.col("priority").cast("float")))
     run.state.compact_frontier(0)

@@ -782,9 +782,10 @@ def test_assign_global_seq_deterministic_at_multipartition_scale(spark):
     so a two-phase seq assignment whose offsets are derived from a SECOND
     evaluation could misnumber or drop rows at multi-partition scale
     (observed as run-to-run wave-0 scheduled-count drift at 1M seeds).
-    The operator must materialize one evaluation and derive everything
-    from it: two independent calls over 100k skewed rows must produce the
-    identical url->seq mapping, exactly contiguous."""
+    The operator must derive its buckets and offsets from values alone,
+    so every evaluation agrees: two independent calls over 100k skewed
+    rows must produce the identical url->seq mapping, exactly
+    contiguous."""
     from pyspark.sql import functions as F
 
     from llm_scraper_spark.operators.frontier import assign_global_seq
@@ -801,6 +802,30 @@ def test_assign_global_seq_deterministic_at_multipartition_scale(spark):
     m1, m2 = build(), build()
     assert m1 == m2
     assert sorted(m1.values()) == list(range(500, 500 + 100_000))
+
+
+def test_assign_global_seq_persists_nothing(spark):
+    """The seq assigner materializes nothing itself: with or without
+    caller bounds, no persisted RDD outlives the call or the read of its
+    result (a caller that needs its input pinned checkpoints it, and
+    releases it)."""
+    from pyspark.sql import functions as F
+
+    from llm_scraper_spark.operators.frontier import assign_global_seq
+
+    def persisted():
+        return set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted()
+    cand = spark.range(2_000).select(
+        (F.col("id") * 3).alias("parent_seq"),
+        (F.col("id") % 5).cast("int").alias("link_idx"))
+    for bounds in (None, (0, 3 * 1_999)):
+        out = assign_global_seq(cand, base_seq=10, bounds=bounds)
+        assert sorted(r["seq"] for r in out.collect()) == \
+            list(range(10, 10 + 2_000))
+        assert persisted() - before == set(), bounds
 
 
 def test_png_pixel_decode_round_trip_all_filters():

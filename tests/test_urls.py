@@ -70,37 +70,6 @@ def test_md5_key_matches_reference_cache_key():
     )
 
 
-def test_native_fast_path_agrees_with_udf(spark):
-    """with_canonical's split-union (native JVM regex fast path + UDF
-    fallback) must equal the single-pass UDF plan row-for-row on a mix of
-    common and adversarial URLs."""
-    from llm_scraper_spark.functions.urls import with_canonical
-
-    urls = [c[0] for c in CASES] + [
-        "https://sub.host9.example.com/deep/path/x.html?a=1&b=2",
-        "HtTpS://MiXeD.Case/Path",
-        "ftp://files.example.com/pub",
-        "https://h.com/p#frag",
-        "https://h.com/p?q=#frag",
-        "https://h.com:9443/p",
-        "https://[2001:db8::1]/p",
-        "https://h.com/p q",          # whitespace in path -> UDF path
-        "nonsense without structure",
-        "https://h.com/%7Euser",
-        None,
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = {
-        r["url"]: (r["canonical_url"], r["host"], r["url_hash"], r["key_hex"])
-        for r in with_canonical(df).collect()
-    }
-    want = {
-        r["url"]: (r["canonical_url"], r["host"], r["url_hash"], r["key_hex"])
-        for r in with_canonical(df, native_fast_path=False).collect()
-    }
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # Frontier URL hygiene (strip_tracking_params / with_crawl_scope)
 # ---------------------------------------------------------------------------
