@@ -4,8 +4,8 @@ with or without a Bloom pre-filter.
 Four ways to drop the already-seen candidates of one wave:
 
 - delta, no Bloom, shuffled: the seen set as per-wave parquet dirs (the
-  crawl's ``seen_delta`` layout), every candidate through a shuffled
-  anti-join;
+  crawl's layout, its ``frontier_delta`` dirs), every candidate through
+  a shuffled anti-join;
 - bucketed, no Bloom: the seen set as a ``bucketBy(url_hash, 32)``
   catalog table (``sinks/bucketed.py``), so the anti-join has no
   Exchange on the seen side;
@@ -208,7 +208,7 @@ def main() -> None:
     md = f"""# Seen-set regime table
 
 Generated by `python jobs/bucketed_ab.py` at local[{nproc}] ({nproc} cores),
-{n_waves} seen_delta dirs, {N_BUCKETS} buckets, median of {reps} reps.
+{n_waves} per-wave seen dirs, {N_BUCKETS} buckets, median of {reps} reps.
 Each join cell is the median wall in seconds, with the plan's number of
 `Exchange hashpartitioning` nodes in brackets. Candidates are half seen,
 half new. The crawl column is `run_wave`'s plan: no pre-filter, and the

@@ -5,14 +5,14 @@ The reference's resumability is "frontier + seen live on disk"
 
     state_dir/
       ledger.json                # committed waves + next_seq (written LAST)
-      frontier_delta/wave=K/     # rows that became pending AT wave K
-                                 # (K=-1: the seeds) — append-only
+      frontier_delta/wave=K/     # rows wave K enqueued, i.e. first seen
+                                 # (K=-1: the seeds) — append-only, never
+                                 # deleted: it is also the seen set
       fetched/wave=K/            # url_hash tombstones of wave K's fetches
                                  # (budget-bounded: <= hosts x budget rows)
       frontier_base/wave=B/      # periodic compaction: the folded pending
                                  # set after wave B (ledger frontier_base
                                  # names the live one)
-      seen_delta/wave=K/         # hashes first seen in wave K (append-only)
       documents/wave=K/          # documents emitted in wave K
       schedule_log/wave=K/       # (wave, seq, url) fetch order — golden_crawl
       metrics/wave=K/            # per-partition lineage + fetch/dedup metrics
@@ -27,6 +27,13 @@ The reference's resumability is "frontier + seen live on disk"
     state writes per wave — the full-snapshot rewrite was the loop's one
     remaining at-scale bottleneck. A url_hash enters at most ONE delta
     ever (the seen set gates enqueue), so the fold needs no ordering.
+
+    The seen set is the same log. The reference marks a URL seen in the
+    step that enqueues it (cache.py:78-92), so the committed
+    ``frontier_delta`` dirs hold exactly the seen URLs, each once, with
+    the wave it was first seen in its ``wave`` column. ``read_seen``
+    projects them; compaction folds the pending set into a base but
+    keeps the deltas.
 
 Commit protocol (crash-consistent, idempotent replay keyed by wave id):
 
@@ -44,7 +51,7 @@ two invariants, both tested with a simulated mid-commit crash
   committed ledger, so between crash and replay the state is exactly the
   wave-(K-1) snapshot.
 - REPLAY is idempotent: resume re-runs wave K from the committed
-  wave-(K-1) inputs (frontier snapshot, seen deltas, ``next_seq``);
+  wave-(K-1) inputs (frontier deltas and base, ``next_seq``);
   ``clean_uncommitted()`` removes orphan dirs first (mode=overwrite would
   also truncate them — the cleanup makes the snapshot property hold for
   out-of-band readers too).
@@ -54,8 +61,8 @@ is parquet ``wave=K`` dirs and the ledger rename is the one cross-table
 transaction point. (A table format such as Iceberg commits one table per
 transaction, so it would need the same ordered-commit + replay protocol;
 none is wired in — every read and write here is a parquet path.)
-The seen set is append-only (delta per wave), so resuming reads
-``seen_delta/wave<=K`` — no rewrite of 10^10 rows per wave.
+The seen set is append-only (the frontier delta per wave), so resuming
+reads ``frontier_delta/wave<K`` — no rewrite of 10^10 rows per wave.
 """
 
 from __future__ import annotations
@@ -63,11 +70,10 @@ from __future__ import annotations
 import json
 import math
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA, SEEN_SCHEMA
+from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA
 
 # The cross-wave state tables have pinned schemas: ``write`` conforms each
 # frame to its table's schema and the reads pass it to the parquet
@@ -77,7 +83,6 @@ STATE_SCHEMAS = {
     "frontier_delta": FRONTIER_SCHEMA,
     "frontier_base": FRONTIER_SCHEMA,
     "fetched": FETCHED_SCHEMA,
-    "seen_delta": SEEN_SCHEMA,
 }
 
 
@@ -104,13 +109,17 @@ class CrawlState:
         self.spark = spark
         self.dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-        if self.read_ledger().get("seen_layout") == "bucketed":
-            # its seen set lives in a catalog table this engine no longer
-            # reads: as delta dirs it would read empty and re-enqueue
-            # every URL
+        # Old seen layouts, both removed: a bucketed catalog table (read
+        # as deltas it would be empty), or seen_delta dirs beside
+        # frontier deltas that compaction deleted (the seen set is read
+        # from the frontier deltas now, so it would lose rows). Either
+        # would re-enqueue seen URLs.
+        if (self.read_ledger().get("seen_layout") == "bucketed"
+                or os.path.isdir(os.path.join(state_dir, "seen_delta"))):
             raise ValueError(
-                "state dir was written with the bucketed seen layout, "
-                "which was removed; only the seen_delta layout is read")
+                "state dir was written with a removed seen layout (a "
+                "bucketed seen table or seen_delta dirs); the seen set "
+                "is read from the frontier_delta dirs only")
 
     # --- ledger ---------------------------------------------------------
     @property
@@ -124,18 +133,9 @@ class CrawlState:
             return json.load(f)
 
     def _write_ledger(self, ledger: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".ledger.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(ledger, f, indent=2)
-            f.flush()
-            os.fsync(f.fileno())  # durable before the rename below
-        os.replace(tmp, self._ledger_path)  # atomic commit point
-        try:  # persist the rename itself (directory entry)
-            dfd = os.open(self.dir, os.O_RDONLY)
-            os.fsync(dfd)
-            os.close(dfd)
-        except OSError:
-            pass
+        from ..sinks.compaction import commit_json
+
+        commit_json(self._ledger_path, ledger)  # the atomic commit point
 
     def commit_wave(self, wave: int, next_seq: int, stats: dict) -> None:
         ledger = self.read_ledger()
@@ -152,16 +152,6 @@ class CrawlState:
     def committed_waves(self) -> set[int]:
         return {w["wave"] for w in self.read_ledger()["waves"]}
 
-    def _committed_for(self, table: str) -> set[int]:
-        """Wave ids of ``table`` dirs covered by the ledger. ``seen_delta``
-        is written one wave ahead (wave K commits seen_delta/wave=K+1, the
-        seed commit -1 writes seen_delta/wave=0), so its dir K is committed
-        iff wave K-1 is."""
-        committed = self.committed_waves()
-        if table == "seen_delta":
-            return {w + 1 for w in committed}
-        return committed
-
     def clean_uncommitted(self) -> list[str]:
         """Remove orphan ``wave=K`` dirs no committed wave references —
         leftovers of a crash between table writes and the ledger commit.
@@ -170,9 +160,10 @@ class CrawlState:
         Idempotent; returns the removed paths."""
         import shutil
 
-        keep = {t: self._committed_for(t)
-                for t in ("frontier_delta", "fetched", "seen_delta",
-                          "documents", "schedule_log", "metrics")}
+        committed = self.committed_waves()
+        keep = {t: committed
+                for t in ("frontier_delta", "fetched", "documents",
+                          "schedule_log", "metrics")}
         # frontier_base: only the ledger-named fold is live; any other dir
         # is an orphan of a crashed compaction
         keep["frontier_base"] = {self.frontier_base_wave()}
@@ -250,6 +241,19 @@ class CrawlState:
                 total += int(w.get("scheduled", 0))
         return waves, total
 
+    def _frontier_deltas(self, base: int | None, upto: int) -> list[str]:
+        """Paths of the committed ``frontier_delta`` dirs in (base, upto],
+        as leaf dirs: a read of the table root would discover ``wave``
+        from the dir name (K) instead of the rows (K+1). The seeds are
+        delta -1, so with no base the bound sits below them. Ledger-
+        bounded: orphan deltas of a crashed commit are invisible even
+        before clean_uncommitted() runs."""
+        lo = -2 if base is None else base
+        return [self._p("frontier_delta", d)
+                for d in sorted(self.committed_waves())
+                if lo < d <= upto
+                and os.path.exists(self._p("frontier_delta", d))]
+
     def read_pending(self, wave: int) -> DataFrame:
         """The pending frontier AS INPUT TO ``wave``: compacted base (if
         any) + frontier deltas - fetch tombstones, all ledger-bounded.
@@ -259,15 +263,7 @@ class CrawlState:
         from pyspark.sql import functions as F
 
         base = self.frontier_base_wave()
-        # the seeds are delta -1 (committed by wave -1), so with no base
-        # the bound sits below them
-        lo = -2 if base is None else base
-        delta_paths = [
-            self._p("frontier_delta", d)
-            for d in sorted(self.committed_waves())
-            if lo < d <= wave - 1 and os.path.exists(
-                self._p("frontier_delta", d))
-        ]
+        delta_paths = self._frontier_deltas(base, wave - 1)
         parts = []
         if base is not None:
             parts.append(self.read("frontier_base", base))
@@ -293,10 +289,9 @@ class CrawlState:
         frontier_base/wave=after_wave and point the ledger at it (same
         crash protocol: table dir first, atomic ledger rename last — an
         orphan base dir is invisible until the ledger names it). The
-        superseded delta/tombstone/base dirs are then removed; reads
-        below the new compaction point become unavailable, which is the
-        standard retention trade (the live pending set is what the crawl
-        needs; schedule_log/documents keep full history)."""
+        superseded tombstone and base dirs are then removed, so pending
+        reads below the new compaction point become unavailable. The
+        frontier deltas stay: they are the seen set."""
         import shutil
 
         folded = self.read_pending(after_wave + 1)
@@ -307,32 +302,34 @@ class CrawlState:
         self._write_ledger(ledger)
         # GC superseded state (post-commit; crash here only leaves extra
         # dirs that clean_uncommitted-style hygiene may remove later)
-        for table in ("frontier_delta", "fetched"):
-            for w, path in self._wave_dirs(table).items():
-                if w <= after_wave:
-                    shutil.rmtree(path, ignore_errors=True)
+        for w, path in self._wave_dirs("fetched").items():
+            if w <= after_wave:
+                shutil.rmtree(path, ignore_errors=True)
         if old_base is not None and old_base != after_wave:
             shutil.rmtree(self._p("frontier_base", old_base),
                           ignore_errors=True)
 
     def read_seen(self, upto_wave: int) -> DataFrame | None:
-        committed = self._committed_for("seen_delta")
-        paths = [
-            self._p("seen_delta", w)
-            for w in range(upto_wave + 1)
-            # ledger-bounded: orphan deltas from a crashed commit are
-            # invisible even before clean_uncommitted() runs
-            if w in committed and os.path.exists(self._p("seen_delta", w))
-        ]
+        """The seen set AS INPUT TO ``upto_wave``: every URL a committed
+        wave before it enqueued (the seeds included), as ``(url_hash,
+        key_hex, first_seen_wave)``. ``key_hex`` is md5(url), the
+        reference seen-set key (cache.py:34); a read that selects only
+        ``url_hash``, as the dedup anti-join does, prunes it."""
+        from pyspark.sql import functions as F
+
+        paths = self._frontier_deltas(None, upto_wave - 1)
         if not paths:
             return None
-        return self._reader("seen_delta").parquet(*paths)
+        return self._reader("frontier_delta").parquet(*paths).select(
+            "url_hash", F.md5(F.col("url")).alias("key_hex"),
+            F.col("wave").alias("first_seen_wave"))
 
     def expire_results(self, keep_last_n_waves: int) -> list[int]:
         """T5 retention (reference TTL, cache.py:229-263): drop result
         tables (documents / schedule_log / metrics) for waves older than
-        the last N. Crawl STATE (frontier snapshots, seen deltas) is never
-        expired — the seen set must stay exact.
+        the last N. Crawl STATE (frontier deltas and base, fetch
+        tombstones) is never expired — the frontier deltas are the seen
+        set, which must stay exact.
 
         Compaction-aware: waves folded into flat ``part-compact-*``
         files by compact_output_tables carry their wave id in the data's
@@ -369,8 +366,8 @@ class CrawlState:
         from pyspark.sql import functions as F
 
         from ..sinks.compaction import (
-            MANIFEST, STAGE, _finish, _next_epoch, data_files,
-            recover_compaction)
+            MANIFEST, _finish, _next_epoch, commit_json, data_files,
+            recover_compaction, stage_one_file)
 
         base = os.path.join(self.dir, table)
         if not os.path.isdir(base):
@@ -390,28 +387,14 @@ class CrawlState:
         if not old:
             return
         epoch = _next_epoch(files)
-        stage = os.path.join(base, STAGE)
-        os.makedirs(stage, exist_ok=True)
         new = []
         for g, rel in enumerate(rewrite):
-            out_tmp = os.path.join(stage, f"expire-g{g}")
-            (self.spark.read.parquet(os.path.join(base, rel))
-             .filter(F.col("wave") > cutoff_wave)
-             .coalesce(1).write.mode("overwrite").parquet(out_tmp))
-            part = [n for n in os.listdir(out_tmp)
-                    if n.endswith(".parquet") and not n.startswith(("_", "."))]
-            assert len(part) == 1, part
             dst = f"part-compact-e{epoch}-g{g}.parquet"
-            staged_rel = os.path.join(STAGE, dst)
-            os.replace(os.path.join(out_tmp, part[0]),
-                       os.path.join(base, staged_rel))
+            staged_rel = stage_one_file(
+                self.spark.read.parquet(os.path.join(base, rel))
+                .filter(F.col("wave") > cutoff_wave), base, dst)
             new.append({"src": staged_rel, "dst": dst})
-        fd, tmp = tempfile.mkstemp(dir=base, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"new": new, "old": old}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(base, MANIFEST))
+        commit_json(os.path.join(base, MANIFEST), {"new": new, "old": old})
         _finish(base)
 
     def read_all(self, table: str) -> DataFrame | None:
@@ -428,7 +411,7 @@ class CrawlState:
             return None
         paths = [
             self._p(table, w)
-            for w in sorted(self._committed_for(table))
+            for w in sorted(self.committed_waves())
             if os.path.exists(self._p(table, w))
         ]
         flat = sorted(
@@ -458,8 +441,8 @@ class CrawlState:
         (sinks/compaction.py) — every wave appends a few files per
         table, so a long crawl's read amplification grows linearly
         until folded. Only tables whose reads go through read_all are
-        eligible: the per-wave state tables (seen/frontier deltas,
-        fetch tombstones) are read wave-bounded and keep their dirs.
+        eligible: the per-wave state tables (frontier deltas, fetch
+        tombstones) are read wave-bounded and keep their dirs.
         Runs at a wave boundary (single writer); a crash mid-compaction
         settles on resume via recover_compaction."""
         from ..sinks.compaction import compact_files

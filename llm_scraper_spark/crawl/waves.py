@@ -7,7 +7,7 @@ Each wave is one batch of the reference's consume-loop
     chunker, uuid5 doc id, outlink canonicalize)--> pages --> documents
          \--outlinks explode--> native hash --robots gate-->
            in-wave first-occurrence dedup --exact anti-join vs seen-->
-           assign global seq --> frontier append + seen delta
+           assign global seq --> frontier delta (the seen set's growth)
 
 Shuffle inventory per wave (the two the north rule names, plus one):
   1. per-host politeness window (WindowGroupLimit: each map task ships at
@@ -273,8 +273,8 @@ class _WavePipeline:
         self.timings: dict[str, float] = {}
         self._ck_ids: set[int] = set()
         self._writes: dict = {}
-        # a wave writes six tables; threads start only as writes arrive
-        self._pool = ThreadPoolExecutor(max_workers=6)
+        # a wave writes five tables; threads start only as writes arrive
+        self._pool = ThreadPoolExecutor(max_workers=5)
         self.restart()
 
     def __enter__(self) -> _WavePipeline:
@@ -401,10 +401,8 @@ class CrawlRun:
             frontier = (
                 frontier_ops.with_salt(deduped, self.n_salts)
                 .withColumn("wave", F.lit(0))
-                .withColumn("status", F.lit("pending"))
                 .select("url", "canonical_url", "host", "salt", "url_hash",
-                        "priority", "wave", F.col("seq").alias("_orig_seq"),
-                        "status")
+                        "priority", "wave", F.col("seq").alias("_orig_seq"))
             )
             # the count and the seq assigner's bounds ride the eager
             # checkpoint: no separate count or min/max job
@@ -422,13 +420,8 @@ class CrawlRun:
             pipe.mark("seed_canon_dedup_seq")
             frontier = pipe.ck(frontier)
             pipe.mark("seed_materialize")
-            # both seed tables derive from the same checkpoint
+            # the seed delta is the seed frontier and the first seen rows
             pipe.write("frontier_delta", -1, frontier)
-            pipe.write("seen_delta", 0, frontier.select(
-                "url_hash",
-                F.md5(F.col("url")).alias("key_hex"),
-                F.lit(0).alias("first_seen_wave"),
-            ))
             pipe.join_writes()
         pipe.mark("seed_writes")
         stats = {"seeded": n, "timings": pipe.timings}
@@ -524,8 +517,8 @@ class CrawlRun:
                     os.path.join(arc_dir, "cdx.parquet"))
                 pipe.mark("archive_warc")
 
-            # pinned-schema read: lists the committed seen_delta dirs and
-            # runs no Spark job, so it never queues behind the writes
+            # pinned-schema read: lists the committed frontier_delta dirs
+            # and runs no Spark job, so it never queues behind the writes
             seen_df = st.read_seen(wave)
 
             # --- documents: doc_id + spans were computed inside the fetch
@@ -617,21 +610,16 @@ class CrawlRun:
             new_frontier_rows = (
                 new.withColumn("priority", F.lit(LINK_PRIORITY))
                 .withColumn("wave", F.lit(wave + 1))
-                .withColumn("status", F.lit("pending"))
                 .select("url", "canonical_url", "host", "salt", "url_hash",
-                        "priority", "wave", "seq", "status")
+                        "priority", "wave", "seq")
                 .observe(obs_new, F.count(F.lit(1)).alias("n"))
             )
             new_frontier_rows = pipe.ck(new_frontier_rows)
             n_new = obs_new.get["n"]
             pipe.mark("unseen_seq")
-            # everything downstream of the new-rows checkpoint launches now
-            # and overlaps the remaining wave bookkeeping
-            pipe.write("seen_delta", wave + 1, new_frontier_rows.select(
-                "url_hash",
-                F.md5(F.col("url")).alias("key_hex"),
-                F.lit(wave + 1).alias("first_seen_wave"),
-            ))
+            # the new rows are both the next pending rows and the seen
+            # set's growth: one write, launched now so it overlaps the
+            # remaining wave bookkeeping
             pipe.write("frontier_delta", wave, new_frontier_rows)
 
             # --- metrics: per-partition lineage + fetch/dedup counts

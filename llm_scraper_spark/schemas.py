@@ -7,8 +7,9 @@ interleaved text+media ``documents`` table::
               spans array<struct<kind:string, text:string,
                                  media_ref:string, offset:int>>)
 
-State tables (frontier / seen / robots / metrics) follow FIXTURES.md §5-6,
-mapping the reference's diskcache structures
+State tables (frontier / robots / metrics; the frontier's per-wave deltas
+are also the seen set) follow FIXTURES.md §5-6, mapping the reference's
+diskcache structures
 (/root/reference/cache.py:71-76) to partitioned columnar tables.
 """
 
@@ -55,15 +56,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("priority", T.DoubleType(), False),
         T.StructField("wave", T.IntegerType(), False),      # wave discovered
         T.StructField("seq", T.LongType(), False),          # global FIFO order
-        T.StructField("status", T.StringType(), False),     # pending|scheduled|done
-    ]
-)
-
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("key_hex", T.StringType(), True),     # md5 hex for reference-equality mode
-        T.StructField("first_seen_wave", T.IntegerType(), False),
     ]
 )
 

@@ -77,6 +77,44 @@ def _next_epoch(files: list[tuple[str, int]]) -> int:
     return best + 1
 
 
+def commit_json(path: str, obj) -> None:
+    """Durably replace ``path`` with ``obj`` as JSON: a temp file in the
+    same dir is fsynced, renamed over ``path`` (the atomic commit point)
+    and the dir is fsynced, so the rename itself survives a crash. The
+    crawl ledger and every compaction manifest commit through here."""
+    d = os.path.dirname(path)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f, indent=2)
+        f.flush()
+        os.fsync(f.fileno())  # durable before the rename
+    os.replace(tmp, path)
+    try:  # persist the rename (the directory entry)
+        dfd = os.open(d, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    except OSError:
+        pass
+
+
+def stage_one_file(df: DataFrame, table_dir: str, name: str) -> str:
+    """Write ``df`` as ONE parquet file staged at ``_compacting/<name>``
+    (coalesce(1), then the single part file moved out of its writer
+    dir). Returns the staged relpath, for a manifest ``src``."""
+    out_tmp = os.path.join(table_dir, STAGE, f"{name}.out")
+    df.coalesce(1).write.mode("overwrite").parquet(out_tmp)
+    part = [n for n in os.listdir(out_tmp)
+            if n.endswith(".parquet") and not n.startswith(("_", "."))]
+    assert len(part) == 1, part
+    staged_rel = os.path.join(STAGE, name)
+    os.replace(os.path.join(out_tmp, part[0]),
+               os.path.join(table_dir, staged_rel))
+    shutil.rmtree(out_tmp)
+    return staged_rel
+
+
 def data_files(table_dir: str) -> list[tuple[str, int]]:
     """(relpath, size_bytes) of every committed data file, sorted by
     relpath. Staging/metadata (``_``/``.`` prefixed anywhere in the
@@ -227,18 +265,10 @@ def compact_files(spark: SparkSession, table_dir: str,
             retained += 1
             retained_names.add(inputs[0])
             continue
-        out_tmp = os.path.join(stage, f"g{g}")
-        (spark.read.parquet(*[os.path.join(table_dir, rel)
-                              for rel in inputs])
-         .coalesce(1).write.mode("overwrite").parquet(out_tmp))
-        part = [n for n in os.listdir(out_tmp)
-                if n.endswith(".parquet") and not n.startswith(("_", "."))]
-        assert len(part) == 1, part
         dst = f"part-compact-e{epoch}-g{g}.parquet"
-        staged_rel = os.path.join(STAGE, dst)
-        os.replace(os.path.join(out_tmp, part[0]),
-                   os.path.join(table_dir, staged_rel))
-        shutil.rmtree(out_tmp)
+        staged_rel = stage_one_file(
+            spark.read.parquet(*[os.path.join(table_dir, rel)
+                                 for rel in inputs]), table_dir, dst)
         new.append({"src": staged_rel, "dst": dst})
         old.extend(inputs)
     # belt-and-braces: the epoch scheme makes every dst fresh; if that
@@ -248,20 +278,8 @@ def compact_files(spark: SparkSession, table_dir: str,
     clobbered = {mv["dst"] for mv in new} & retained_names
     assert not clobbered, f"compaction dst collides with retained {clobbered}"
 
-    # COMMIT: fsync'd manifest + atomic rename (crash before = rollback,
-    # crash after = roll forward; same shape as CrawlState._write_ledger)
-    fd, tmp = tempfile.mkstemp(dir=table_dir, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"new": new, "old": old}, f, indent=2)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(table_dir, MANIFEST))
-    try:
-        dfd = os.open(table_dir, os.O_RDONLY)
-        os.fsync(dfd)
-        os.close(dfd)
-    except OSError:
-        pass
+    # COMMIT (crash before = rollback, crash after = roll forward)
+    commit_json(os.path.join(table_dir, MANIFEST), {"new": new, "old": old})
     _finish(table_dir)
 
     after = data_files(table_dir)

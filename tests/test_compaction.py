@@ -178,3 +178,48 @@ def test_zero_row_part_file_compacts_away(spark, tmp_path):
     stats = compact_files(spark, table, capacity=1_000_000, by_rows=True)
     assert stats["files_after"] == 1
     assert _content(spark, table) == before
+
+
+def test_expire_results_fsyncs_the_table_dir_after_the_manifest_rename(
+        spark, tmp_path, monkeypatch):
+    """The expiry's manifest rename is its commit point, so it must be
+    durable: after the rename the table dir itself is fsynced, as the
+    ledger and the compaction manifest are. Recorded by wrapping
+    ``os.replace`` and ``os.fsync``."""
+    import stat
+
+    from llm_scraper_spark.crawl.state import CrawlState
+
+    st = CrawlState(spark, str(tmp_path / "state"))
+    base = os.path.join(st.dir, "schedule_log")
+    for w in (0, 1):
+        st.write("schedule_log", w, spark.createDataFrame(
+            [(w, w * 10 + i, f"https://h/{w}/{i}") for i in range(5)],
+            "wave int, seq long, url string").coalesce(1))
+        st.commit_wave(w, (w + 1) * 10, {})
+    compact_files(spark, base)  # one flat file holding waves 0 and 1
+
+    events = []
+    real_replace, real_fsync = os.replace, os.fsync
+
+    def rec_replace(src, dst):
+        real_replace(src, dst)
+        events.append(("replace", os.path.basename(dst)))
+
+    def rec_fsync(fd):
+        real_fsync(fd)
+        sb = os.fstat(fd)
+        if stat.S_ISDIR(sb.st_mode):
+            events.append(("fsync_dir", sb.st_ino))
+
+    monkeypatch.setattr(os, "replace", rec_replace)
+    monkeypatch.setattr(os, "fsync", rec_fsync)
+    # cutoff 0 straddles the flat file: a filtered rewrite committed by
+    # a manifest
+    assert st.expire_results(keep_last_n_waves=1) == [0]
+    monkeypatch.undo()
+
+    i = events.index(("replace", MANIFEST))
+    assert ("fsync_dir", os.stat(base).st_ino) in events[i + 1:], events
+    assert sorted(r["wave"] for r in st.read_all("schedule_log")
+                  .select("wave").distinct().collect()) == [1]

@@ -302,7 +302,7 @@ def test_budgets_from_pagerank_end_to_end(spark):
 def test_resume_after_midcommit_crash(spark, tmp_path, monkeypatch):
     """VERDICT r2 #9 — Iceberg-snapshot semantics on plain parquet: a
     crash BETWEEN table writes (here after wave 1's schedule_log and
-    documents landed but before its seen_delta/frontier/metrics and the
+    documents landed, with its frontier delta failing, before the
     ledger commit) must leave the ledger at the previous complete wave;
     a fresh driver replays wave 1 idempotently (every table dir is keyed
     by wave id and overwritten), and the final ledger, schedule log, and
@@ -319,7 +319,7 @@ def test_resume_after_midcommit_crash(spark, tmp_path, monkeypatch):
     orig_write = CrawlState.write
 
     def crashing_write(self, table, wave, df):
-        if table == "seen_delta" and wave == 2:  # mid-commit of wave 1
+        if table == "frontier_delta" and wave == 1:  # mid-commit of wave 1
             raise RuntimeError("simulated crash between table writes")
         return orig_write(self, table, wave, df)
 
@@ -583,7 +583,8 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
     """Delta-frontier compaction (state.compact_frontier, auto-run every
     compact_every waves) must not change the crawl: schedule log, seen
     set, pending fold, and next_seq all equal an uncompacted run's, the
-    ledger names the fold, and superseded delta/tombstone dirs are GC'd."""
+    ledger names the fold, superseded tombstone dirs are GC'd, and the
+    frontier deltas, which are the seen set, stay."""
     import os
 
     from llm_scraper_spark.crawl.waves import CrawlRun, synthetic_fetcher
@@ -619,9 +620,12 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
     assert base is not None and base >= 1
     assert os.path.isdir(os.path.join(str(tmp_path / "compact"),
                                       "frontier_base", f"wave={base}"))
-    # superseded deltas/tombstones are gone; later ones remain
-    for w in range(-1, base + 1):
+    # superseded tombstones are gone; every frontier delta remains
+    for w in range(0, base + 1):
         assert not os.path.exists(os.path.join(
+            str(tmp_path / "compact"), "fetched", f"wave={w}"))
+    for w in range(-1, n_waves):
+        assert os.path.isdir(os.path.join(
             str(tmp_path / "compact"), "frontier_delta", f"wave={w}"))
     # a RESUMED run over the compacted state keeps matching the plain one
     resumed = CrawlRun(
@@ -835,16 +839,45 @@ def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
 
     ledger_ix = [i for i, e in enumerate(events) if e[0] == "ledger"]
     assert len(ledger_ix) == 2 + 1  # seed commit + 2 waves
-    # seed commit: both seed tables precede the first ledger write
+    # seed commit: the seed table precedes the first ledger write
     seed_tables = {e[1] for e in events[:ledger_ix[0]] if e[0] == "table"}
-    assert seed_tables == {"frontier_delta", "seen_delta"}
-    # each wave: all six tables written between the previous ledger
+    assert seed_tables == {"frontier_delta"}
+    # each wave: all five tables written between the previous ledger
     # commit and this wave's
     for k, (lo, hi) in enumerate(zip(ledger_ix, ledger_ix[1:])):
         wave_tables = {e[1] for e in events[lo + 1:hi] if e[0] == "table"}
         assert wave_tables == {"schedule_log", "fetched", "documents",
-                               "seen_delta", "frontier_delta", "metrics"}, \
+                               "frontier_delta", "metrics"}, \
             f"wave {k}: {wave_tables}"
+
+
+def test_crawl_spark_job_counts(spark, tmp_path):
+    """The number of Spark jobs the seed init and each wave launch is
+    pinned, so a change that adds an action to the hot loop shows here.
+    Jobs are counted as the growth of the status tracker's ungrouped job
+    ids, which also holds the jobs of the pipelined write threads, once
+    the listener bus has drained. The seed init runs 7 jobs and a wave
+    19. Wave 0 runs 18: its pending read has no fetch tombstones, so no
+    tombstone broadcast job runs before the schedule."""
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def job_ids():
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    run = CrawlRun(spark, str(tmp_path / "state"),
+                   fetcher=synthetic_fetcher(n_hosts=8, fanout=3),
+                   default_budget=16, n_salts=2)
+    seeds = synth_seeds(spark, 300, n_hosts=8)
+    before = job_ids()
+    run.init_from_seeds(seeds)
+    counts = [len(job_ids() - before)]
+    for k in range(3):
+        before = job_ids()
+        run.run_wave(k)
+        counts.append(len(job_ids() - before))
+    assert counts == [7, 18, 19, 19]
 
 
 def test_consecutive_waves_over_empty_seen_set(spark, tmp_path, monkeypatch):
@@ -872,7 +905,7 @@ def test_crawl_releases_every_checkpoint(spark, tmp_path):
     that wave's ``run_wave`` returns, so no wave's blocks outlive it.
     The same holds for a run whose wave-1 fetcher raises after the
     wave's schedule checkpoint exists, and for a seed init whose
-    seen_delta write raises after both seed checkpoints exist."""
+    frontier_delta write raises after both seed checkpoints exist."""
     before = _persistent_rdd_ids(spark)
     run = CrawlRun(spark, str(tmp_path / "ok"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
@@ -905,13 +938,13 @@ def test_crawl_releases_every_checkpoint(spark, tmp_path):
                    default_budget=3, n_salts=4)
     write = run.state.write
 
-    def seen_write_fails(table, wave, df):
-        if table == "seen_delta":
-            raise RuntimeError("seen write failed")
+    def seed_write_fails(table, wave, df):
+        if table == "frontier_delta":
+            raise RuntimeError("seed write failed")
         write(table, wave, df)
 
-    run.state.write = seen_write_fails
-    with pytest.raises(RuntimeError, match="seen write failed"):
+    run.state.write = seed_write_fails
+    with pytest.raises(RuntimeError, match="seed write failed"):
         run.init_from_seeds(_mk_seeds(spark, 30))
     assert run.state.last_wave() is None
     assert _persistent_rdd_ids(spark) - before == set()
@@ -952,26 +985,29 @@ def test_compact_frontier_timing_holds_only_the_compaction(spark, tmp_path,
 
 
 def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
-    """The bucketed seen layout was removed. A state dir whose ledger
-    records it kept its seen set in a catalog table, so opening it as
-    delta state would read an empty seen set and re-enqueue every URL:
-    it is refused. Ledgers recording ``delta``, or no layout at all,
-    open as before."""
+    """Removed seen layouts are refused on open. A ledger recording the
+    bucketed layout kept its seen set in a catalog table, and a state
+    dir holding ``seen_delta/`` kept it beside frontier deltas that its
+    compaction deleted: read from the frontier deltas, either seen set
+    would be short and the crawl would re-enqueue seen URLs. Ledgers
+    recording ``delta``, or no layout at all, open as before."""
     import json
 
     from llm_scraper_spark.crawl.state import CrawlState
 
     waves = [{"wave": -1, "next_seq": 30, "seeded": 30},
              {"wave": 0, "next_seq": 52}]
-    for layout in ("bucketed", "delta", None):
+    for layout in ("bucketed", "seen_delta", "delta", None):
         d = tmp_path / str(layout)
         d.mkdir()
         ledger = {"waves": waves, "next_seq": 52}
-        if layout is not None:
+        if layout == "seen_delta":
+            (d / "seen_delta" / "wave=0").mkdir(parents=True)
+        elif layout is not None:
             ledger["seen_layout"] = layout
         (d / "ledger.json").write_text(json.dumps(ledger))
-        if layout == "bucketed":
-            with pytest.raises(ValueError, match="bucketed seen layout"):
+        if layout in ("bucketed", "seen_delta"):
+            with pytest.raises(ValueError, match="seen layout"):
                 CrawlState(spark, str(d))
         else:
             assert CrawlState(spark, str(d)).last_wave() == 0

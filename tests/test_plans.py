@@ -334,7 +334,7 @@ def test_wave_loop_python_stages_only_fetch_and_chunk(spark, tmp_path):
     stats = run.run(2, seeds=synth_seeds(spark, 300, n_hosts=8))
     assert stats[0]["scheduled"] > 0 and stats[0]["deduped_new"] > 0
     # per-write timing keys committed with the wave stats (round 3)
-    for k in ("write_schedule_log", "write_documents", "write_seen_delta",
+    for k in ("write_schedule_log", "write_documents",
               "write_fetched", "write_frontier_delta", "write_metrics",
               "state_writes"):
         assert k in stats[0]["timings"], k
@@ -445,9 +445,9 @@ def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path,
     """The wave loop's reversed dedup join (filter_unseen(...,
     broadcast_candidates=True), picked when the seen set dwarfs a
     wave's discoveries) must plan with ZERO hash-partition Exchange
-    over the seen_delta scan: the candidate hashes are broadcast into a
-    semi join that streams the seen scan, and the matched set is
-    broadcast back into the anti join. The same holds behind an
+    over the seen scan (the frontier_delta dirs): the candidate hashes
+    are broadcast into a semi join that streams the seen scan, and the
+    matched set is broadcast back into the anti join. The same holds behind an
     optional Bloom pre-filter (only its maybe-seen rows are joined),
     with the same survivors. The shuffled regime over the same inputs
     does exchange, so the assertion is about the join choice, not
@@ -463,11 +463,15 @@ def test_reversed_seen_anti_join_no_exchange_on_seen_side(spark, tmp_path,
             F.col("id").alias("_disc_ord"))
 
     st = CrawlState(spark, str(tmp_path / "state"))
-    for w in (0, 1):  # two committed seen_delta dirs, 10k hashes
-        st.write("seen_delta", w, hashes(w * 5000, (w + 1) * 5000).select(
-            "url_hash", F.md5(F.col("url_hash").cast("string"))
-            .alias("key_hex"), F.lit(w).alias("first_seen_wave")))
-        st.commit_wave(w - 1, (w + 1) * 5000, {})
+    for d in (-1, 0):  # two committed frontier_delta dirs, 10k hashes
+        url = F.concat(F.lit("http://h/"), F.col("_disc_ord").cast("string"))
+        st.write("frontier_delta", d, hashes(
+            (d + 1) * 5000, (d + 2) * 5000).select(
+            url.alias("url"), url.alias("canonical_url"),
+            F.lit("h").alias("host"), F.lit(0).alias("salt"), "url_hash",
+            F.lit(1.0).alias("priority"), F.lit(d + 1).alias("wave"),
+            F.col("_disc_ord").alias("seq")))
+        st.commit_wave(d, (d + 2) * 5000, {})
     seen = st.read_seen(1)
     bloom = build_bloom_distributed(seen, capacity=100_000) \
         if with_bloom else None
