@@ -1,39 +1,39 @@
 """Checkpointed crawl state with a wave ledger (SURVEY.md §2.10 T3/T4).
 
 The reference's resumability is "frontier + seen live on disk"
-(/root/reference/cache.py:47-76). Here every wave commits:
+(reference cache.py:47-76), in two structures: a FIFO deque and a
+seen index (cache.py:71-72). Here the crawl state is two append-only
+logs keyed by ``url_hash``, and every wave commits:
 
     state_dir/
       ledger.json                # committed waves + next_seq (written LAST)
-      frontier_delta/wave=K/     # rows wave K enqueued, i.e. first seen
-                                 # (K=-1: the seeds) — append-only, never
-                                 # deleted: it is also the seen set
-      fetched/wave=K/            # url_hash tombstones of wave K's fetches
-                                 # (budget-bounded: <= hosts x budget rows)
-      frontier_base/wave=B/      # periodic compaction: the folded pending
-                                 # set after wave B (ledger frontier_base
-                                 # names the live one)
+      frontier_delta/wave=K/     # the enqueue log: rows wave K enqueued,
+                                 # i.e. first seen (K=-1: the seeds)
+      fetched/wave=K/            # the fetch log: url_hash of wave K's
+                                 # fetches (<= hosts x budget rows)
       documents/wave=K/          # documents emitted in wave K
       schedule_log/wave=K/       # (wave, seq, url) fetch order — golden_crawl
       metrics/wave=K/            # per-partition lineage + fetch/dedup metrics
 
-    The pending frontier is DELTA state, like the seen set: wave K writes
-    only its new discoveries (frontier_delta) and its fetch tombstones
-    (fetched); ``read_pending`` folds base + deltas - tombstones at read
-    time, and ``compact_frontier`` periodically rewrites the fold so both
-    the per-read delta count and the tombstone anti-join side stay
-    bounded by the compaction interval. At the 10^10-URL design point
-    this is the difference between O(new + scheduled) and O(frontier)
-    state writes per wave — the full-snapshot rewrite was the loop's one
-    remaining at-scale bottleneck. A url_hash enters at most ONE delta
-    ever (the seen set gates enqueue), so the fold needs no ordering.
+    Pending is the committed enqueue log minus the committed fetch log:
+    ``read_pending`` anti-joins the two at read time. A url_hash enters
+    the enqueue log at most ONCE ever (the seen set gates enqueue), so
+    the difference needs no ordering, and a wave writes only its new
+    discoveries and its fetches: O(new + scheduled) state writes per
+    wave, never O(frontier).
 
-    The seen set is the same log. The reference marks a URL seen in the
-    step that enqueues it (cache.py:78-92), so the committed
-    ``frontier_delta`` dirs hold exactly the seen URLs, each once, with
-    the wave it was first seen in its ``wave`` column. ``read_seen``
-    projects them; compaction folds the pending set into a base but
-    keeps the deltas.
+    The seen set is the enqueue log itself. The reference marks a URL
+    seen in the step that enqueues it (cache.py:78-92), so the committed
+    ``frontier_delta`` rows are exactly the seen URLs, each once, with
+    the wave it was first seen in its ``wave`` column (seeds 0, a wave-K
+    discovery K+1). ``read_seen`` projects them.
+
+    ``compact_frontier`` folds both logs' per-wave dirs into flat
+    ``part-compact-*`` files through the executor the output tables use
+    (sinks/compaction.py: stage -> manifest -> finish). A fold changes
+    files, never rows, so it needs no ledger entry: a flat file holds
+    only rows of waves committed when it was written, and every row
+    keeps its own ``wave``.
 
 Commit protocol (crash-consistent, idempotent replay keyed by wave id):
 
@@ -46,27 +46,29 @@ partially-written ``wave=K`` dirs are ORPHANS. Consistency then rests on
 two invariants, both tested with a simulated mid-commit crash
 (tests/test_crawl.py::test_crash_between_table_writes_resumes_exactly):
 
-- READS never see orphans: every cross-wave read path
-  (``read_seen``/``read_all``/``read_pending``) is bounded by the
-  committed ledger, so between crash and replay the state is exactly the
-  wave-(K-1) snapshot.
+- READS never see orphans: every read (``read_seen``/``read_all``/
+  ``read_pending``) takes the flat files plus only the ``wave=K`` dirs
+  the committed ledger names, so between crash and replay the state is
+  exactly the wave-(K-1) snapshot.
 - REPLAY is idempotent: resume re-runs wave K from the committed
-  wave-(K-1) inputs (frontier deltas and base, ``next_seq``);
-  ``clean_uncommitted()`` removes orphan dirs first (mode=overwrite would
-  also truncate them — the cleanup makes the snapshot property hold for
-  out-of-band readers too).
+  wave-(K-1) logs and ``next_seq``; ``clean_uncommitted()`` removes
+  orphan dirs first (mode=overwrite would also truncate them — the
+  cleanup makes the snapshot property hold for out-of-band readers too).
+
+A crashed fold is settled when the state is opened (``recover_compaction``
+on every table: a committed manifest rolls forward, a bare stage rolls
+back), so no read sees a half-finished fold's rows twice.
 
 This is the table-snapshot analogue on a plain filesystem: every table
-is parquet ``wave=K`` dirs and the ledger rename is the one cross-table
+is parquet files and the ledger rename is the one cross-table
 transaction point. (A table format such as Iceberg commits one table per
 transaction, so it would need the same ordered-commit + replay protocol;
 none is wired in — every read and write here is a parquet path.)
-The seen set is append-only (the frontier delta per wave), so resuming
-reads ``frontier_delta/wave<K`` — no rewrite of 10^10 rows per wave.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -81,7 +83,6 @@ from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA
 # footer-inference job on the wave's serial path.
 STATE_SCHEMAS = {
     "frontier_delta": FRONTIER_SCHEMA,
-    "frontier_base": FRONTIER_SCHEMA,
     "fetched": FETCHED_SCHEMA,
 }
 
@@ -105,21 +106,33 @@ def _wave_bounds(path: str) -> tuple[float, float] | None:
 
 
 class CrawlState:
+    # the append-only output tables; the two logs are STATE_SCHEMAS
+    OUTPUT_TABLES = ("documents", "schedule_log", "metrics")
+
     def __init__(self, spark: SparkSession, state_dir: str):
+        from ..sinks.compaction import recover_compaction
+
         self.spark = spark
         self.dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
-        # Old seen layouts, both removed: a bucketed catalog table (read
-        # as deltas it would be empty), or seen_delta dirs beside
-        # frontier deltas that compaction deleted (the seen set is read
-        # from the frontier deltas now, so it would lose rows). Either
-        # would re-enqueue seen URLs.
+        # Removed layouts: a bucketed seen catalog table (read as deltas
+        # it would be empty), seen_delta dirs beside frontier deltas that
+        # their compaction deleted, or a frontier_base snapshot whose
+        # fetched dirs up to the base were deleted. Read as two logs,
+        # each would re-enqueue seen URLs or schedule fetched ones again.
         if (self.read_ledger().get("seen_layout") == "bucketed"
-                or os.path.isdir(os.path.join(state_dir, "seen_delta"))):
+                or any(os.path.isdir(os.path.join(state_dir, t))
+                       for t in ("seen_delta", "frontier_base"))):
             raise ValueError(
-                "state dir was written with a removed seen layout (a "
-                "bucketed seen table or seen_delta dirs); the seen set "
-                "is read from the frontier_delta dirs only")
+                "state dir was written with a removed layout (a bucketed "
+                "seen table, seen_delta dirs or a frontier_base snapshot); "
+                "the crawl state is the frontier_delta and fetched logs")
+        # settle a crashed fold (manifest committed -> roll forward;
+        # staged only -> roll back): a half-finished fold of a log
+        # holds some rows twice
+        for t in (*STATE_SCHEMAS, *self.OUTPUT_TABLES):
+            if os.path.isdir(os.path.join(state_dir, t)):
+                recover_compaction(os.path.join(state_dir, t))
 
     # --- ledger ---------------------------------------------------------
     @property
@@ -161,28 +174,12 @@ class CrawlState:
         import shutil
 
         committed = self.committed_waves()
-        keep = {t: committed
-                for t in ("frontier_delta", "fetched", "documents",
-                          "schedule_log", "metrics")}
-        # frontier_base: only the ledger-named fold is live; any other dir
-        # is an orphan of a crashed compaction
-        keep["frontier_base"] = {self.frontier_base_wave()}
         removed = []
-        for table, live in keep.items():
+        for table in (*STATE_SCHEMAS, *self.OUTPUT_TABLES):
             for w, path in self._wave_dirs(table).items():
-                if w not in live:
+                if w not in committed:
                     shutil.rmtree(path, ignore_errors=True)
                     removed.append(path)
-        # settle a crashed output-table compaction (manifest committed ->
-        # roll forward; staged only -> roll back)
-        from ..sinks.compaction import recover_compaction
-
-        for t in self.OUTPUT_TABLES:
-            base = os.path.join(self.dir, t)
-            if os.path.isdir(base):
-                action = recover_compaction(base)
-                if action != "clean":
-                    removed.append(f"{base} (compaction {action})")
         return removed
 
     # --- table IO -------------------------------------------------------
@@ -221,122 +218,74 @@ class CrawlState:
     def read(self, table: str, wave: int) -> DataFrame:
         return self._reader(table).parquet(self._p(table, wave))
 
-    def frontier_base_wave(self) -> int | None:
-        """Wave id of the live compacted pending fold, or None."""
-        return self.read_ledger().get("frontier_base")
-
-    def _fetched_since_base(self, upto_wave: int) -> tuple[list[int], int]:
-        """(wave ids of committed fetch-tombstone dirs in (base, upto_wave],
-        total tombstone rows from the ledger's per-wave scheduled counts).
-        The count is free (ledger stats) and sizes the anti-join strategy
-        in read_pending without a Spark action."""
-        base = self.frontier_base_wave()
-        lo = -1 if base is None else base
-        ledger = self.read_ledger()
-        waves, total = [], 0
-        for w in ledger["waves"]:
-            if lo < w["wave"] <= upto_wave and w["wave"] >= 0 \
-                    and os.path.exists(self._p("fetched", w["wave"])):
-                waves.append(w["wave"])
-                total += int(w.get("scheduled", 0))
-        return waves, total
-
-    def _frontier_deltas(self, base: int | None, upto: int) -> list[str]:
-        """Paths of the committed ``frontier_delta`` dirs in (base, upto],
-        as leaf dirs: a read of the table root would discover ``wave``
-        from the dir name (K) instead of the rows (K+1). The seeds are
-        delta -1, so with no base the bound sits below them. Ledger-
-        bounded: orphan deltas of a crashed commit are invisible even
-        before clean_uncommitted() runs."""
-        lo = -2 if base is None else base
-        return [self._p("frontier_delta", d)
-                for d in sorted(self.committed_waves())
-                if lo < d <= upto
-                and os.path.exists(self._p("frontier_delta", d))]
-
     def read_pending(self, wave: int) -> DataFrame:
-        """The pending frontier AS INPUT TO ``wave``: compacted base (if
-        any) + frontier deltas - fetch tombstones, all ledger-bounded.
-        The tombstone side is budget-bounded per wave and reset by each
-        compaction, so it is BROADCAST whenever the ledger's own counts
-        say it fits (no Spark action needed to decide)."""
+        """The pending frontier AS INPUT TO ``wave``: the enqueue log
+        minus the fetch log, both through wave - 1. The fetch log side is
+        BROADCAST whenever the ledger's own scheduled counts say it fits
+        (no Spark action needed to decide). After a fold through wave F
+        the flat fetch log holds waves <= F, so only reads for a wave
+        past F are exact."""
         from pyspark.sql import functions as F
 
-        base = self.frontier_base_wave()
-        delta_paths = self._frontier_deltas(base, wave - 1)
-        parts = []
-        if base is not None:
-            parts.append(self.read("frontier_base", base))
-        if delta_paths:
-            parts.append(self._reader("frontier_delta").parquet(*delta_paths))
-        if not parts:
+        pending = self.read_all("frontier_delta", wave - 1)
+        if pending is None:
             raise FileNotFoundError(
                 f"no committed frontier state for wave {wave} in {self.dir}")
-        pending = parts[0]
-        for p in parts[1:]:
-            pending = pending.unionByName(p)
-        fetched_waves, n_tombstones = self._fetched_since_base(wave - 1)
-        if fetched_waves:
-            tomb = self._reader("fetched").parquet(
-                *[self._p("fetched", f) for f in fetched_waves])
-            if n_tombstones <= 4_000_000:
-                tomb = F.broadcast(tomb)
-            pending = pending.join(tomb, on="url_hash", how="left_anti")
+        fetched = self.read_all("fetched", wave - 1)
+        if fetched is not None:
+            n_fetched = sum(int(w.get("scheduled", 0))
+                            for w in self.read_ledger()["waves"]
+                            if 0 <= w["wave"] < wave)
+            if n_fetched <= 4_000_000:
+                fetched = F.broadcast(fetched)
+            pending = pending.join(fetched, on="url_hash", how="left_anti")
         return pending
 
     def compact_frontier(self, after_wave: int) -> None:
-        """Fold base + deltas - tombstones through ``after_wave`` into
-        frontier_base/wave=after_wave and point the ledger at it (same
-        crash protocol: table dir first, atomic ledger rename last — an
-        orphan base dir is invisible until the ledger names it). The
-        superseded tombstone and base dirs are then removed, so pending
-        reads below the new compaction point become unavailable. The
-        frontier deltas stay: they are the seen set."""
-        import shutil
+        """Fold both logs through ``after_wave`` — their committed
+        ``wave=K`` dirs with K <= after_wave, and their earlier folds —
+        into flat ``part-compact-*`` files via the output tables'
+        crash-safe executor, reading each group with the log's pinned
+        schema. Rows and their ``wave`` are unchanged, so the fold
+        writes no ledger key. Single writer, at a wave boundary."""
+        from ..sinks.compaction import compact_files
 
-        folded = self.read_pending(after_wave + 1)
-        self.write("frontier_base", after_wave, folded)
-        old_base = self.frontier_base_wave()
-        ledger = self.read_ledger()
-        ledger["frontier_base"] = after_wave
-        self._write_ledger(ledger)
-        # GC superseded state (post-commit; crash here only leaves extra
-        # dirs that clean_uncommitted-style hygiene may remove later)
-        for w, path in self._wave_dirs("fetched").items():
-            if w <= after_wave:
-                shutil.rmtree(path, ignore_errors=True)
-        if old_base is not None and old_base != after_wave:
-            shutil.rmtree(self._p("frontier_base", old_base),
-                          ignore_errors=True)
+        # the table root's flat files ("") and the folded wave dirs
+        folded = {""} | {f"wave={w}" for w in self.committed_waves()
+                         if w <= after_wave}
+        for table, schema in STATE_SCHEMAS.items():
+            compact_files(
+                self.spark, os.path.join(self.dir, table), schema=schema,
+                include=lambda rel: os.path.dirname(rel) in folded)
 
     def read_seen(self, upto_wave: int) -> DataFrame | None:
         """The seen set AS INPUT TO ``upto_wave``: every URL a committed
         wave before it enqueued (the seeds included), as ``(url_hash,
         key_hex, first_seen_wave)``. ``key_hex`` is md5(url), the
         reference seen-set key (cache.py:34); a read that selects only
-        ``url_hash``, as the dedup anti-join does, prunes it."""
+        ``url_hash``, as the dedup anti-join does, prunes it. Folded rows
+        are bounded by their own ``wave``."""
         from pyspark.sql import functions as F
 
-        paths = self._frontier_deltas(None, upto_wave - 1)
-        if not paths:
+        seen = self.read_all("frontier_delta", upto_wave - 1)
+        if seen is None:
             return None
-        return self._reader("frontier_delta").parquet(*paths).select(
+        return seen.filter(F.col("wave") <= upto_wave).select(
             "url_hash", F.md5(F.col("url")).alias("key_hex"),
             F.col("wave").alias("first_seen_wave"))
 
     def expire_results(self, keep_last_n_waves: int) -> list[int]:
         """T5 retention (reference TTL, cache.py:229-263): drop result
         tables (documents / schedule_log / metrics) for waves older than
-        the last N. Crawl STATE (frontier deltas and base, fetch
-        tombstones) is never expired — the frontier deltas are the seen
-        set, which must stay exact.
+        the last N. The crawl STATE (the enqueue and fetch logs) is never
+        expired — the enqueue log is the seen set, which must stay exact.
 
         Compaction-aware: waves folded into flat ``part-compact-*``
         files by compact_output_tables carry their wave id in the data's
         own ``wave`` column, so expiring them is a filtered rewrite of
         the flat files under the SAME stage -> manifest -> finish crash
-        protocol the compaction executor uses (a crash settles on the
-        resume path's recover_compaction)."""
+        protocol the compaction executor uses (a crash settles when the
+        state is next opened)."""
         import shutil
 
         ledger = self.read_ledger()
@@ -397,42 +346,36 @@ class CrawlState:
         commit_json(os.path.join(base, MANIFEST), {"new": new, "old": old})
         _finish(base)
 
-    def read_all(self, table: str) -> DataFrame | None:
-        """Committed-snapshot read of every wave of ``table``: only dirs
-        the ledger covers — a crash that left orphan ``wave=K`` dirs does
-        not leak uncommitted rows into queries (snapshot isolation at wave
-        granularity, the table-snapshot-read analogue). After output-table
-        compaction (compact_output_tables) some waves live in FLAT
-        ``part-compact-*`` files at the table root — those hold only
-        rows of waves that were committed when the compaction ran, so
-        they are committed by construction and read unconditionally."""
+    def read_all(self, table: str,
+                 upto_wave: int | None = None) -> DataFrame | None:
+        """Committed-snapshot read of ``table`` (the table-snapshot-read
+        analogue): its flat ``part-compact-*`` files (a fold holds only
+        rows of waves committed when it ran) plus the committed
+        ``wave=K`` dirs, K <= ``upto_wave`` when given. Orphan dirs of a
+        crashed commit are invisible even before clean_uncommitted()
+        runs. A log is ONE pinned read of leaf dirs with no partition
+        discovery, so a row keeps its own ``wave`` (a discovery's is
+        K+1, not the dir's K) and the read runs no Spark job. An output
+        table's rows may lack ``wave``: its dirs are read with the wave
+        discovered from the dir name."""
         base = os.path.join(self.dir, table)
-        if not os.path.exists(base):
+        if not os.path.isdir(base):
             return None
-        paths = [
-            self._p(table, w)
-            for w in sorted(self.committed_waves())
-            if os.path.exists(self._p(table, w))
-        ]
-        flat = sorted(
-            os.path.join(base, n) for n in os.listdir(base)
-            if n.endswith(".parquet") and not n.startswith(("_", ".")))
-        readers = []
-        if flat:
-            readers.append(self.spark.read.parquet(*flat))
-        if paths:
-            readers.append(
-                self.spark.read.option("basePath", base).parquet(*paths))
-        if not readers:
-            return None
-        out = readers[0]
-        for r in readers[1:]:
-            out = out.unionByName(r)
-        return out
+        flat = [os.path.join(base, n) for n in sorted(os.listdir(base))
+                if n.endswith(".parquet") and not n.startswith(("_", "."))]
+        dirs = [self._p(table, w) for w in sorted(self.committed_waves())
+                if (upto_wave is None or w <= upto_wave)
+                and os.path.isdir(self._p(table, w))]
+        if table in STATE_SCHEMAS and (flat or dirs):
+            return self._reader(table).parquet(*flat, *dirs)
+        parts = [self.spark.read.parquet(*flat)] if flat else []
+        if dirs:
+            parts.append(self.spark.read.option("basePath", base)
+                         .parquet(*dirs))
+        return functools.reduce(DataFrame.unionByName, parts) \
+            if parts else None
 
     # --- output-table compaction ---------------------------------------
-    OUTPUT_TABLES = ("documents", "schedule_log", "metrics")
-
     def compact_output_tables(
             self, capacity: int = 128 * 1024 * 1024,
             tables: tuple[str, ...] = OUTPUT_TABLES) -> dict:
@@ -440,11 +383,9 @@ class CrawlState:
         ~capacity-sized flat files via the crash-safe executor
         (sinks/compaction.py) — every wave appends a few files per
         table, so a long crawl's read amplification grows linearly
-        until folded. Only tables whose reads go through read_all are
-        eligible: the per-wave state tables (frontier deltas, fetch
-        tombstones) are read wave-bounded and keep their dirs.
+        until folded. The two logs fold in compact_frontier instead.
         Runs at a wave boundary (single writer); a crash mid-compaction
-        settles on resume via recover_compaction."""
+        settles when the state is next opened."""
         from ..sinks.compaction import compact_files
 
         stats = {}

@@ -351,9 +351,9 @@ class CrawlRun:
         # before they enter the frontier. Off by default: reference crawl-
         # ordering equality is defined on raw canonical URLs.
         self.scope_filter = scope_filter
-        # fold the delta frontier every N waves (state.compact_frontier):
-        # bounds both the per-read delta dir count and the tombstone
-        # anti-join side (<= N waves x budget rows). 0 disables.
+        # fold the enqueue and fetch logs' per-wave dirs into flat files
+        # every N waves (state.compact_frontier): bounds the file count
+        # each state read opens. 0 disables.
         self.compact_every = compact_every
         # fold the append-only OUTPUT tables (documents/schedule_log/
         # metrics) every N waves via the crash-safe compaction executor
@@ -418,8 +418,6 @@ class CrawlRun:
                 bounds=(obs.get["lo"], obs.get["hi"]),
             ).drop("_orig_seq")
             pipe.mark("seed_canon_dedup_seq")
-            frontier = pipe.ck(frontier)
-            pipe.mark("seed_materialize")
             # the seed delta is the seed frontier and the first seen rows
             pipe.write("frontier_delta", -1, frontier)
             pipe.join_writes()
@@ -654,14 +652,12 @@ class CrawlRun:
             "timings": pipe.timings,
         }
         st.commit_wave(wave, next_seq + n_new, stats)
-        # periodic fold of the delta frontier (after the wave commit —
-        # compaction has its own table-then-ledger crash protocol)
-        if self.compact_every:
-            base = st.frontier_base_wave()
-            if wave - (base if base is not None else -1) >= self.compact_every:
-                pipe.restart()
-                st.compact_frontier(wave)
-                pipe.mark("compact_frontier")
+        # periodic fold of the two logs (after the wave commit — the
+        # fold has its own stage -> manifest -> finish crash protocol)
+        if self.compact_every and (wave + 1) % self.compact_every == 0:
+            pipe.restart()
+            st.compact_frontier(wave)
+            pipe.mark("compact_frontier")
         # output-table fold (same boundary, own crash protocol): runs
         # AFTER the wave commit so a crash mid-fold settles on resume
         # without touching the wave ledger

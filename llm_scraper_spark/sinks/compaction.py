@@ -2,7 +2,7 @@
 wave-fragmented parquet table into ~target-size files, crash-safe.
 
 ``q_compaction_plan`` plans groups with the sequence-packing window
-(corpus.pack_sequences on file metadata); this module executes such a
+(corpus.pack_sequences on file metadata); this module executes the same
 plan against real files with the same commit discipline as the crawl
 state (crawl/state.py): stage everything, commit with ONE atomic rename,
 then garbage-collect — a crash at any point either rolls back (nothing
@@ -12,15 +12,18 @@ Protocol:
 
 1. ``data_files`` enumerates the committed ``*.parquet`` leaves (driver-
    side listing — the same metadata-scale work an Iceberg planner does;
-   file COUNT, not data size, bounds it).
-2. The plan runs through ``corpus.pack_sequences`` over the files-sized
-   metadata table: files ordered by path, packed greedily into
-   ``capacity`` groups by byte size (or exact row counts with
-   ``by_rows=True`` — one extra metadata scan, used by the driver oracle
-   because parquet byte sizes are encoder-dependent while row counts are
-   engine-portable).
+   file COUNT, not data size, bounds it). A caller may fold a subset
+   (``include``): the crawl state folds only committed waves.
+2. ``plan_groups`` packs the files on the driver with pack_sequences'
+   arithmetic: files ordered by path, each in group ``(weight of the
+   files before it) DIV capacity``. The weight is the byte size, or the
+   exact row count from each file's parquet footer with ``by_rows=True``
+   (used by the driver oracle: byte sizes are encoder-dependent, row
+   counts engine-portable). Planning runs no Spark job.
 3. Each multi-file group is rewritten into ``_compacting/part-compact-
-   e<E>-g<N>.parquet`` (read exactly that group's files, coalesce(1));
+   e<E>-g<N>.parquet`` (read exactly that group's files, coalesce(1):
+   one Spark job per group when the caller passes the table's
+   ``schema``, else a footer-inference job more);
    ``E`` is a per-pass epoch (1 + max epoch among committed files), so
    output names are collision-free across passes — a re-compaction can
    never overwrite a RETAINED file from a prior pass. Single-file
@@ -38,7 +41,7 @@ missing targets); stage dir without manifest → roll BACK (delete the
 stage; the committed table was never touched). ``compact_files`` calls
 it first, so a crashed compaction self-heals on the next attempt.
 
-Single-writer contract (documented, same as CrawlState.compact_frontier):
+Single-writer contract (documented; CrawlState folds at a wave boundary):
 run compaction offline or behind the crawl's own wave serialization —
 a concurrent reader inside the finish window could see both layouts.
 The post-compaction layout is FLAT (wave=K fragmentation is what is
@@ -53,8 +56,10 @@ import os
 import re
 import shutil
 import tempfile
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_compaction_manifest.json"
 STAGE = "_compacting"
@@ -182,65 +187,45 @@ def recover_compaction(table_dir: str) -> str:
     return "clean"
 
 
-def _row_counts(spark: SparkSession, table_dir: str,
+def _row_counts(table_dir: str,
                 files: list[tuple[str, int]]) -> dict[str, int]:
-    """relpath -> exact row count, from one metadata-cheap scan grouped
-    by input_file_name (count(*) over parquet reads footers, not data)."""
-    paths = [os.path.join(table_dir, rel) for rel, _ in files]
-    rows = (
-        spark.read.parquet(*paths)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_abs = {}
-    for r in rows:
-        f = r["f"]
-        if f.startswith("file:"):
-            f = f[len("file:"):]
-            while f.startswith("//"):
-                f = f[1:]
-            if not f.startswith("/"):
-                f = "/" + f
-        by_abs[os.path.normpath(f)] = int(r["n"])
-    # a zero-row part file never appears in the grouped scan — weight 0
-    # (it still joins some group and is GC'd with it)
-    return {rel: by_abs.get(os.path.normpath(os.path.join(table_dir, rel)), 0)
+    """relpath -> exact row count, from each file's parquet footer (read
+    on the driver: no Spark job). A zero-row part file weighs 0; it
+    still joins some group and is GC'd with it."""
+    import pyarrow.parquet as pq
+
+    return {rel: pq.read_metadata(os.path.join(table_dir, rel)).num_rows
             for rel, _ in files}
 
 
-def plan_groups(spark: SparkSession, files: list[tuple[str, int]],
-                capacity: int,
+def plan_groups(files: list[tuple[str, int]], capacity: int,
                 weights: dict[str, int] | None = None) -> dict[int, list[str]]:
-    """group id -> ordered input relpaths, via the SAME packing window
-    q_compaction_plan uses (corpus.pack_sequences: files ordered by
-    path, greedy running-sum DIV capacity)."""
-    from ..operators.corpus import pack_sequences
-
-    fdf = spark.createDataFrame(
-        [(rel, int(weights[rel] if weights else size))
-         for rel, size in files],
-        "path string, weight long",
-    )
-    plan = pack_sequences(fdf, tokens_col="weight", capacity=capacity,
-                          order_col="path").select("path", "seq_id").collect()
+    """group id -> ordered input relpaths, with the packing window
+    q_compaction_plan runs through corpus.pack_sequences: files ordered
+    by path, each in group ``(weight of the files before it) DIV
+    capacity``. The weight is the file's size, or ``weights[relpath]``."""
     groups: dict[int, list[str]] = {}
-    for r in plan:
-        groups.setdefault(int(r["seq_id"]), []).append(r["path"])
-    for g in groups.values():
-        g.sort()
+    before = 0
+    for rel, size in sorted(files):
+        groups.setdefault(before // int(capacity), []).append(rel)
+        before += int(size if weights is None else weights[rel])
     return groups
 
 
 def compact_files(spark: SparkSession, table_dir: str,
                   capacity: int = DEFAULT_TARGET,
-                  by_rows: bool = False) -> dict:
-    """Execute a compaction pass. Returns stats: files/bytes before and
-    after, group count, rewritten vs retained groups, and the
-    read-amplification ratio (files a full-table read must open, before
-    / after)."""
+                  by_rows: bool = False,
+                  schema: StructType | None = None,
+                  include: Callable[[str], bool] | None = None) -> dict:
+    """Execute a compaction pass over the data files whose relpath
+    ``include`` accepts (default: all). ``schema`` pins the group reads,
+    so a rewritten group runs one Spark job (its write) and no footer
+    inference. Returns stats: files/bytes before and after, group count,
+    rewritten vs retained groups, and the read-amplification ratio
+    (files a full-table read must open, before / after)."""
     recover_compaction(table_dir)
-    files = data_files(table_dir)
+    every = data_files(table_dir)
+    files = [f for f in every if include is None or include(f[0])]
     stats = {
         "files_before": len(files),
         "bytes_before": sum(s for _, s in files),
@@ -250,13 +235,14 @@ def compact_files(spark: SparkSession, table_dir: str,
                      groups=len(files), rewritten=0, retained=len(files),
                      read_amplification=1.0)
         return stats
-    weights = _row_counts(spark, table_dir, files) if by_rows else None
-    groups = plan_groups(spark, files, capacity, weights)
+    weights = _row_counts(table_dir, files) if by_rows else None
+    groups = plan_groups(files, capacity, weights)
+    reader = spark.read if schema is None else spark.read.schema(schema)
 
     stage = os.path.join(table_dir, STAGE)
     shutil.rmtree(stage, ignore_errors=True)
     os.makedirs(stage)
-    epoch = _next_epoch(files)
+    epoch = _next_epoch(every)
     retained_names = set()
     new, old, retained = [], [], 0
     for g in sorted(groups):
@@ -267,8 +253,8 @@ def compact_files(spark: SparkSession, table_dir: str,
             continue
         dst = f"part-compact-e{epoch}-g{g}.parquet"
         staged_rel = stage_one_file(
-            spark.read.parquet(*[os.path.join(table_dir, rel)
-                                 for rel in inputs]), table_dir, dst)
+            reader.parquet(*[os.path.join(table_dir, rel)
+                             for rel in inputs]), table_dir, dst)
         new.append({"src": staged_rel, "dst": dst})
         old.extend(inputs)
     # belt-and-braces: the epoch scheme makes every dst fresh; if that

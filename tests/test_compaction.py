@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_scraper_spark.sinks.compaction import (
-    MANIFEST, STAGE, compact_files, data_files, recover_compaction)
+    MANIFEST, STAGE, compact_files, data_files, plan_groups,
+    recover_compaction)
 
 
 def _fragmented_table(spark, path, n_waves=6, rows_per_wave=300):
@@ -223,3 +224,71 @@ def test_expire_results_fsyncs_the_table_dir_after_the_manifest_rename(
     assert ("fsync_dir", os.stat(base).st_ino) in events[i + 1:], events
     assert sorted(r["wave"] for r in st.read_all("schedule_log")
                   .select("wave").distinct().collect()) == [1]
+
+
+def _pack_sequences_plan(spark, files, capacity, weights=None):
+    """The reference plan: corpus.pack_sequences over the file metadata,
+    as q_compaction_plan runs it (files ordered by path, group = running
+    weight before the file DIV capacity)."""
+    from llm_scraper_spark.operators.corpus import pack_sequences
+
+    fdf = spark.createDataFrame(
+        [(rel, size if weights is None else weights[rel])
+         for rel, size in files], "path string, weight long")
+    groups = {}
+    for r in pack_sequences(fdf, tokens_col="weight", capacity=capacity,
+                            order_col="path").select("path",
+                                                     "seq_id").collect():
+        groups.setdefault(int(r["seq_id"]), []).append(r["path"])
+    return {g: sorted(paths) for g, paths in groups.items()}
+
+
+@pytest.mark.parametrize("weighting", ["bytes", "rows", "zero_rows"])
+def test_driver_plan_equals_pack_sequences_plan(spark, weighting):
+    """compact_files plans on the driver with pack_sequences' arithmetic:
+    over random file lists (flat folds and wave dirs, shuffled), the
+    plan equals the pack_sequences plan by bytes, by rows, and with
+    zero-weight (zero-row) files among them."""
+    import random
+
+    rng = random.Random(weighting)
+    for _ in range(5):
+        n = rng.randint(1, 25)
+        files = [(f"part-compact-e1-g{i}.parquet" if rng.random() < 0.2
+                  else f"wave={rng.randint(-1, 11)}/part-{i:05d}.parquet",
+                  rng.randint(1, 5000)) for i in range(n)]
+        rng.shuffle(files)
+        weights = None
+        if weighting != "bytes":
+            low = 0 if weighting == "zero_rows" else 1
+            weights = {rel: rng.choice([low, low, rng.randint(1, 400)])
+                       for rel, _ in files}
+        capacity = rng.choice([100, 700, 5000, 1 << 40])
+        assert plan_groups(files, capacity, weights) == \
+            _pack_sequences_plan(spark, files, capacity, weights)
+
+
+def test_compact_files_given_a_schema_runs_one_job_per_group(spark,
+                                                            tmp_path):
+    """With the table's schema, a group's read is pinned and the plan
+    is made on the driver, so folding one multi-file group runs exactly
+    one Spark job: its write."""
+    import uuid
+
+    from pyspark.sql import types as T
+
+    table = _fragmented_table(spark, str(tmp_path / "t"), n_waves=2)
+    before = _content(spark, table)
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("wave", T.IntegerType()),
+                           T.StructField("payload", T.StringType())])
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one compaction pass")
+    try:
+        stats = compact_files(spark, table, capacity=1 << 40, schema=schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["files_before"] == 6 and stats["rewritten"] == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _content(spark, table) == before

@@ -580,12 +580,13 @@ def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
 
 
 def test_compaction_preserves_crawl_equality(spark, tmp_path):
-    """Delta-frontier compaction (state.compact_frontier, auto-run every
+    """The fold of the two logs (state.compact_frontier, auto-run every
     compact_every waves) must not change the crawl: schedule log, seen
-    set, pending fold, and next_seq all equal an uncompacted run's, the
-    ledger names the fold, superseded tombstone dirs are GC'd, and the
-    frontier deltas, which are the seen set, stay."""
+    set, pending set, and next_seq all equal an uncompacted run's. Both
+    logs then hold flat files and no ``wave=K`` dir at or below the
+    fold, and the flat enqueue log keeps each row's own ``wave``."""
     import os
+    from collections import Counter
 
     from llm_scraper_spark.crawl.waves import CrawlRun, synthetic_fetcher
 
@@ -616,17 +617,18 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
               compacted.state.read_pending(n_waves).collect()}
     assert pend_a == pend_b
 
-    base = compacted.state.frontier_base_wave()
-    assert base is not None and base >= 1
-    assert os.path.isdir(os.path.join(str(tmp_path / "compact"),
-                                      "frontier_base", f"wave={base}"))
-    # superseded tombstones are gone; every frontier delta remains
-    for w in range(0, base + 1):
-        assert not os.path.exists(os.path.join(
-            str(tmp_path / "compact"), "fetched", f"wave={w}"))
-    for w in range(-1, n_waves):
-        assert os.path.isdir(os.path.join(
-            str(tmp_path / "compact"), "frontier_delta", f"wave={w}"))
+    # waves 1 and 3 folded: every wave dir of both logs is in a flat file
+    for table in ("frontier_delta", "fetched"):
+        names = os.listdir(str(tmp_path / "compact" / table))
+        assert any(n.startswith("part-compact-") for n in names), names
+        assert not [n for n in names if n.startswith("wave=")], names
+    # the flat enqueue log keeps each row's wave: seeds 0, wave K's
+    # discoveries K+1 (a fold that took the dir's K would shift them)
+    flat = Counter(r["wave"] for r in spark.read.parquet(
+        str(tmp_path / "compact" / "frontier_delta")).select("wave").collect())
+    assert flat == Counter(r["first_seen_wave"]
+                           for r in plain.state.read_seen(n_waves).collect())
+    assert set(flat) == set(range(n_waves + 1))
     # a RESUMED run over the compacted state keeps matching the plain one
     resumed = CrawlRun(
         spark, str(tmp_path / "compact"),
@@ -644,59 +646,62 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
 
 
 def test_crash_during_compaction_resumes_exactly(spark, tmp_path, monkeypatch):
-    """Compaction follows the same table-then-atomic-ledger protocol as
-    wave commits: a crash after the frontier_base table write but before
-    the ledger names it must leave the orphan fold invisible (reads keep
-    folding from deltas), clean_uncommitted must remove it, and the
-    resumed crawl must still match an uninterrupted uncompacted run."""
-    from llm_scraper_spark.crawl.state import CrawlState
-    from llm_scraper_spark.crawl.waves import CrawlRun, synthetic_fetcher
+    """A fold commits each log through the executor's stage -> manifest
+    -> finish protocol. A crash (a) after frontier_delta's manifest
+    commit, before its finish, or (b) after fetched is staged, before
+    its manifest, is settled when the state is opened again (roll
+    forward, roll back), and the resumed crawl equals an uninterrupted
+    uncompacted run."""
+    import os
+
+    import llm_scraper_spark.sinks.compaction as comp
 
     n_seeds, budget = 30, 3
-    plain = CrawlRun(
-        spark, str(tmp_path / "plain"),
-        fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-        default_budget=budget, n_salts=4, compact_every=0,
-    )
+
+    def crawl(d, compact_every):
+        return CrawlRun(
+            spark, str(d),
+            fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+            default_budget=budget, n_salts=4, compact_every=compact_every)
+
+    plain = crawl(tmp_path / "plain", 0)
     plain.run(4, seeds=_mk_seeds(spark, n_seeds))
+    real_finish, real_commit = comp._finish, comp.commit_json
 
-    crash_dir = str(tmp_path / "crash")
-    run_a = CrawlRun(
-        spark, crash_dir,
-        fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-        default_budget=budget, n_salts=4, compact_every=2,
-    )
-    orig_write_ledger = CrawlState._write_ledger
-
-    def crashing_ledger(self, ledger):
-        if "frontier_base" in ledger:  # the compaction's ledger update
+    def finish_crashes(table_dir):
+        if os.path.basename(table_dir) == "frontier_delta":
             raise RuntimeError("simulated crash mid-compaction")
-        return orig_write_ledger(self, ledger)
+        real_finish(table_dir)
 
-    monkeypatch.setattr(CrawlState, "_write_ledger", crashing_ledger)
-    with pytest.raises(RuntimeError, match="mid-compaction"):
-        run_a.run(2, seeds=_mk_seeds(spark, n_seeds))
-    monkeypatch.setattr(CrawlState, "_write_ledger", orig_write_ledger)
+    def manifest_crashes(path, obj):
+        if path.endswith(os.path.join("fetched", comp.MANIFEST)):
+            raise RuntimeError("simulated crash mid-compaction")
+        real_commit(path, obj)
 
-    # wave 1 committed; the fold table exists but the ledger never named
-    # it -> invisible to reads, removed by resume hygiene
-    import os
-    assert run_a.state.last_wave() == 1
-    assert run_a.state.frontier_base_wave() is None
-    assert os.path.isdir(os.path.join(crash_dir, "frontier_base", "wave=1"))
-    run_b = CrawlRun(
-        spark, crash_dir,
-        fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-        default_budget=budget, n_salts=4, compact_every=2,
-    )
-    run_b.run(4)
-    assert not os.path.isdir(os.path.join(crash_dir, "frontier_base",
-                                          "wave=1"))
-    assert _spark_schedule_log(plain) == _spark_schedule_log(run_b)
-    assert run_b.state.frontier_base_wave() is not None
-    pend_a = {r["url_hash"] for r in plain.state.read_pending(4).collect()}
-    pend_b = {r["url_hash"] for r in run_b.state.read_pending(4).collect()}
-    assert pend_a == pend_b
+    for case, patch, left in (
+            ("a", ("_finish", finish_crashes),
+             ("frontier_delta", comp.MANIFEST)),
+            ("b", ("commit_json", manifest_crashes),
+             ("fetched", comp.STAGE))):
+        crash_dir = tmp_path / case
+        monkeypatch.setattr(comp, *patch)
+        with pytest.raises(RuntimeError, match="mid-compaction"):
+            crawl(crash_dir, 2).run(2, seeds=_mk_seeds(spark, n_seeds))
+        monkeypatch.undo()
+        # wave 1 committed before its fold crashed; opening settles it
+        assert os.path.exists(crash_dir.joinpath(*left)), case
+        run_b = crawl(crash_dir, 2)
+        assert run_b.state.last_wave() == 1
+        assert not os.path.exists(crash_dir.joinpath(*left)), case
+        run_b.run(4)
+        assert _spark_schedule_log(plain) == _spark_schedule_log(run_b), case
+        # sorted lists, not sets: a half-finished fold read twice would
+        # show as duplicate rows
+        for read in ("read_pending", "read_seen"):
+            a, b = (sorted(r["url_hash"] for r in getattr(st, read)(4)
+                           .select("url_hash").collect())
+                    for st in (plain.state, run_b.state))
+            assert a == b, (case, read)
 
 
 def _alias_fetcher():
@@ -856,7 +861,7 @@ def test_crawl_spark_job_counts(spark, tmp_path):
     pinned, so a change that adds an action to the hot loop shows here.
     Jobs are counted as the growth of the status tracker's ungrouped job
     ids, which also holds the jobs of the pipelined write threads, once
-    the listener bus has drained. The seed init runs 7 jobs and a wave
+    the listener bus has drained. The seed init runs 6 jobs and a wave
     19. Wave 0 runs 18: its pending read has no fetch tombstones, so no
     tombstone broadcast job runs before the schedule."""
     sc = spark.sparkContext
@@ -877,7 +882,7 @@ def test_crawl_spark_job_counts(spark, tmp_path):
         before = job_ids()
         run.run_wave(k)
         counts.append(len(job_ids() - before))
-    assert counts == [7, 18, 19, 19]
+    assert counts == [6, 18, 19, 19]
 
 
 def test_consecutive_waves_over_empty_seen_set(spark, tmp_path, monkeypatch):
@@ -905,7 +910,7 @@ def test_crawl_releases_every_checkpoint(spark, tmp_path):
     that wave's ``run_wave`` returns, so no wave's blocks outlive it.
     The same holds for a run whose wave-1 fetcher raises after the
     wave's schedule checkpoint exists, and for a seed init whose
-    frontier_delta write raises after both seed checkpoints exist."""
+    frontier_delta write raises after its seed checkpoint exists."""
     before = _persistent_rdd_ids(spark)
     run = CrawlRun(spark, str(tmp_path / "ok"),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
@@ -955,6 +960,7 @@ def test_compact_frontier_timing_holds_only_the_compaction(spark, tmp_path,
     """``timings["compact_frontier"]`` is the wall of the frontier fold
     alone: the ledger commit just before it is not counted, even when
     that commit is slow."""
+    import os
     import time
 
     from llm_scraper_spark.crawl.state import CrawlState
@@ -979,17 +985,21 @@ def test_compact_frontier_timing_holds_only_the_compaction(spark, tmp_path,
     monkeypatch.setattr(CrawlState, "commit_wave", slow_commit)
     monkeypatch.setattr(CrawlState, "compact_frontier", timed_compact)
     stats = run.run_wave(0)
-    assert run.state.frontier_base_wave() == 0
+    assert [n for n in os.listdir(os.path.join(run.state.dir,
+                                               "frontier_delta"))
+            if n.startswith("part-compact-")]
     assert len(fold_s) == 1
     assert stats["timings"]["compact_frontier"] < fold_s[0] + slow_s / 2
 
 
 def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
-    """Removed seen layouts are refused on open. A ledger recording the
+    """Removed layouts are refused on open. A ledger recording the
     bucketed layout kept its seen set in a catalog table, and a state
     dir holding ``seen_delta/`` kept it beside frontier deltas that its
     compaction deleted: read from the frontier deltas, either seen set
-    would be short and the crawl would re-enqueue seen URLs. Ledgers
+    would be short and the crawl would re-enqueue seen URLs. A state dir
+    holding ``frontier_base/`` deleted its fetched dirs up to the base:
+    read as two logs it would schedule fetched URLs again. Ledgers
     recording ``delta``, or no layout at all, open as before."""
     import json
 
@@ -997,17 +1007,17 @@ def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
 
     waves = [{"wave": -1, "next_seq": 30, "seeded": 30},
              {"wave": 0, "next_seq": 52}]
-    for layout in ("bucketed", "seen_delta", "delta", None):
+    for layout in ("bucketed", "seen_delta", "frontier_base", "delta", None):
         d = tmp_path / str(layout)
         d.mkdir()
         ledger = {"waves": waves, "next_seq": 52}
-        if layout == "seen_delta":
-            (d / "seen_delta" / "wave=0").mkdir(parents=True)
+        if layout in ("seen_delta", "frontier_base"):
+            (d / layout / "wave=0").mkdir(parents=True)
         elif layout is not None:
             ledger["seen_layout"] = layout
         (d / "ledger.json").write_text(json.dumps(ledger))
-        if layout in ("bucketed", "seen_delta"):
-            with pytest.raises(ValueError, match="seen layout"):
+        if layout in ("bucketed", "seen_delta", "frontier_base"):
+            with pytest.raises(ValueError, match="removed layout"):
                 CrawlState(spark, str(d))
         else:
             assert CrawlState(spark, str(d)).last_wave() == 0
@@ -1060,24 +1070,29 @@ def _jobs_run_by(spark, fn):
 
 def test_state_reads_run_no_spark_job(spark, tmp_path):
     """read_pending and read_seen read through the pinned state schemas,
-    so neither launches a parquet schema-inference job: with plain
-    deltas, and with a compacted base under later deltas and
-    tombstones."""
-    run = _run_spark_crawl(spark, tmp_path, 40, 2)
+    so neither launches a parquet schema-inference job: with per-wave
+    dirs only, and with both logs folded through wave 1 under wave 2's
+    dirs."""
+    import os
+
+    run = _run_spark_crawl(spark, tmp_path, 40, 3)
     st = run.state
 
     def read_all_state(layout):
-        df, jobs = _jobs_run_by(spark, lambda: st.read_pending(2))
+        df, jobs = _jobs_run_by(spark, lambda: st.read_pending(3))
         assert not jobs, (layout, jobs)
-        seen, jobs = _jobs_run_by(spark, lambda: st.read_seen(2))
+        seen, jobs = _jobs_run_by(spark, lambda: st.read_seen(3))
         assert seen is not None and not jobs, (layout, jobs)
         return {r[0] for r in df.select("url_hash").collect()}
 
-    before = read_all_state("deltas")
-    # fold through wave 0: wave 1's delta and tombstones stay live
-    st.compact_frontier(0)
-    assert st.frontier_base_wave() == 0
-    assert before and read_all_state("compacted base") == before
+    before = read_all_state("wave dirs")
+    # fold through wave 1: wave 2's dirs stay beside the flat files
+    st.compact_frontier(1)
+    for table in ("frontier_delta", "fetched"):
+        names = os.listdir(os.path.join(st.dir, table))
+        assert "wave=2" in names and "wave=1" not in names, names
+        assert any(n.startswith("part-compact-") for n in names), names
+    assert before and read_all_state("folded logs") == before
 
 
 def test_state_files_match_pinned_schemas(spark, tmp_path):
@@ -1090,15 +1105,19 @@ def test_state_files_match_pinned_schemas(spark, tmp_path):
     run = CrawlRun(spark, str(state_dir),
                    fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
                    default_budget=3, n_salts=4, compact_every=0)
-    run.run(2, seeds=_mk_seeds(spark, 40).withColumn(
+    run.run(3, seeds=_mk_seeds(spark, 40).withColumn(
         "priority", F.col("priority").cast("float")))
-    run.state.compact_frontier(0)
+    run.state.compact_frontier(1)
     checked = set()
     for table, schema in STATE_SCHEMAS.items():
-        for wave_dir in sorted((state_dir / table).iterdir()):
-            inferred = spark.read.parquet(str(wave_dir)).schema
+        # the flat fold of waves <= 1 and wave 2's dir
+        paths = sorted((state_dir / table).iterdir())
+        assert {p.name.startswith("part-compact-") for p in paths} \
+            == {True, False}, (table, paths)
+        for path in paths:
+            inferred = spark.read.parquet(str(path)).schema
             assert ([(f.name, f.dataType) for f in inferred]
                     == [(f.name, f.dataType) for f in schema]), \
-                (table, wave_dir.name, inferred.simpleString())
+                (table, path.name, inferred.simpleString())
             checked.add(table)
-    assert checked == set(STATE_SCHEMAS)
+    assert checked == set(STATE_SCHEMAS) == {"frontier_delta", "fetched"}
