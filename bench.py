@@ -1,4 +1,4 @@
-"""Benchmark harness (driver contract + BASELINE.md protocol).
+"""Benchmark harness: the default run and the N -> 4N scaling run.
 
 Headline metric: the north-rule frontier pipeline — URLs scheduled+deduped
 per second — measured on a synthetic seed-expanded crawl frontier at the
@@ -11,17 +11,22 @@ BENCH scale factor:
       -> synthetic link expansion (native exprs, ~fanout x seeds)
       -> canonicalize + hash -> anti-join vs seen -> new-URL count
 
-Prints ONE JSON line:
+``python bench.py`` prints ONE JSON line:
   {"metric": "frontier_pipeline", "value": <sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "throughput_urls_per_sec": ...,
    "bpe": {"merges_requested": ..., "merges_learned": ..., ...}}
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-``python bench.py --scaling`` which re-execs this script at both
-parallelism levels and writes BENCH/BASELINE.md.
+``python bench.py --scaling [--reps N]`` re-execs this script with only
+the frontier job at local[1] and local[4], alternating the two within
+each rep, and prints ONE JSON line with the per-rep raw and
+probe-normalized efficiencies and their medians (scaling_summary). It
+writes no file.
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (scale-factor dir, default sf0.1),
+     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_BENCH_SEEDS (frontier seeds; 0 picks by scale factor),
+     SPARK_GRAFT_FRONTIER_ONLY (run only the frontier job; --scaling
+     sets it for its legs).
 """
 
 from __future__ import annotations
@@ -47,12 +52,10 @@ SEEDS_PER_SF = 20_000_000  # sf0.01 -> 200k seeds (small-sf smoke runs)
 # recorded one (VERDICT round-1 flagged a 2M-vs-8M config mismatch).
 BENCH_SEEDS = 8_000_000
 FANOUT = 3
-# ledger timestamp of the last scaling rep that ran with the oversized
-# 64g driver heap (BENCH/BASELINE.md "Host regimes" #1): reps after this
-# use the right-sized 8g heap and are additionally reported as the
-# current-protocol-era stratum (the all-reps median still includes
-# everything — nothing is ever dropped)
-HEAP_FIX_TS = 1787044454.3
+# --scaling: local[N] vs local[4N], and the frontier seeds of each leg
+# (4M keeps a local[1] leg under ~2 min)
+SCALE_LEVELS = (1, 4)
+SCALE_SEEDS = 4_000_000
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -134,9 +137,6 @@ def bench_wave_loop(spark, n_seeds: int, n_waves: int = 3,
     URL-ops counted: seed enqueue (canonicalize+dedup+seq) once, plus per
     wave every scheduled fetch and every discovered candidate (each
     canonicalized, hashed, robots/anti-join checked)."""
-    import shutil
-    import tempfile
-
     from llm_scraper_spark.crawl.waves import CrawlRun, synthetic_fetcher
     from llm_scraper_spark.sources.synthetic import synth_seeds
 
@@ -347,9 +347,9 @@ def run_bench() -> dict:
     # concurrent hardware probe: how many parallel cycles is the shared
     # host ACTUALLY delivering to `cpus` procs right now? (pure CPU burn,
     # no Spark). Runs in EVERY mode (VERDICT r2 #1): a contended bench run
-    # is then self-annotating — the probe value lands in the printed JSON
-    # and the run ledger, so a slow number can be read against what the
-    # host was physically delivering during that window.
+    # is then self-annotating — the probe value lands in the printed
+    # JSON, so a slow number can be read against what the host was
+    # physically delivering during that window.
     frontier_only = bool(os.environ.get("SPARK_GRAFT_FRONTIER_ONLY"))
     hw = hardware_parallel_ceiling(levels=(cpus,), work=20_000_000)[cpus]
 
@@ -360,8 +360,8 @@ def run_bench() -> dict:
         # hit one contended window and its single cold frontier rep became
         # the round's number (354s vs a 9-run median of ~150s). Reps are
         # ADAPTIVE for the flapping host (_want_more_frontier_reps;
-        # BASELINE.md "Host regimes"). FRONTIER_ONLY mode (the scaling
-        # hunt) reps at its own level instead.
+        # BASELINE.md "Host regimes"). FRONTIER_ONLY mode (a --scaling
+        # leg) runs one rep; --scaling reps across legs instead.
         frontier_runs = [bench_frontier(spark, n_seeds, n_hosts)]
         while not frontier_only and _want_more_frontier_reps(
                 [r["sec"] for r in frontier_runs]):
@@ -373,9 +373,7 @@ def run_bench() -> dict:
         bpe = None
         queries = {}
         if not frontier_only:
-            wave_seeds = int(
-                os.environ.get("SPARK_GRAFT_WAVE_SEEDS", "0")
-            ) or min(1_000_000, n_seeds)
+            wave_seeds = min(1_000_000, n_seeds)
             # min-of-2 (same rationale as the frontier headline)
             wl_runs = [bench_wave_loop(spark, wave_seeds),
                        bench_wave_loop(spark, wave_seeds)]
@@ -392,7 +390,7 @@ def run_bench() -> dict:
     finally:
         spark.stop()
     hw_post = hardware_parallel_ceiling(levels=(cpus,), work=20_000_000)[cpus]
-    result = {
+    return {
         "metric": "frontier_pipeline",
         "value": frontier["sec"],
         "unit": "sec",
@@ -407,40 +405,6 @@ def run_bench() -> dict:
         "extraction": extraction,
         "bpe": bpe,
     }
-    _log_default_run(result)
-    return result
-
-
-def _log_default_run(result: dict) -> None:
-    """Every full-config bench invocation (incl. the driver's own) appends
-    to a ledger so BASELINE.md can report the median at the exact driver
-    config, not just a best window (VERDICT #2). Best-effort: never fails
-    the bench."""
-    try:
-        if result["sf"] < 0.1 or os.environ.get("SPARK_GRAFT_FRONTIER_ONLY"):
-            return
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        with open(os.path.join(REPO, "BENCH", "default_bench_runs.jsonl"), "a") as f:
-            f.write(json.dumps({
-                "ts": round(time.time(), 1), "cpus": result["cpus"],
-                "sf": result["sf"], "sec": result["value"],
-                "urls_per_sec": result["throughput_urls_per_sec"],
-                "n_seeds": result["frontier"]["n_seeds"],
-                "all_runs_sec": result["frontier"].get("all_runs_sec"),
-                "hw_units_per_sec": result.get("hw_units_per_sec"),
-                "hw_units_per_sec_post": result.get("hw_units_per_sec_post"),
-                "wave_loop_urls_per_sec": (
-                    result["wave_loop"]["urls_per_sec"]
-                    if result.get("wave_loop") else None),
-                "wave_loop_sec": (
-                    result["wave_loop"]["sec"]
-                    if result.get("wave_loop") else None),
-                "extract_pages_per_sec": (
-                    result["extraction"]["pages_per_sec"]
-                    if result.get("extraction") else None),
-            }) + "\n")
-    except Exception:
-        pass
 
 
 def _burn(n):
@@ -470,550 +434,78 @@ def hardware_parallel_ceiling(levels=(2, 8, 32), work: int = 40_000_000) -> dict
     return thr
 
 
-def run_scaling(reps: int = 3, n: int | None = None, n4: int | None = None) -> None:
-    """Same frontier job at local[N] and local[4N]; efficiency =
-    (thr_4N / thr_N) / 4. Writes BENCH/BASELINE.md.
+def scaling_summary(reps: list[tuple[dict | None, dict | None]]) -> dict:
+    """Scaling efficiency from ``(local[N] leg, local[4N] leg)`` pairs,
+    one per rep, each leg the last JSON line of a FRONTIER_ONLY run or
+    None if that run failed. A rep counts only when both its legs ran,
+    so every ratio compares two legs of the same rep.
 
-    Defaults to N=1 vs 4N=4 (the brief's "N and 4N cores" option). Why
-    the small slice: on this SHARED 32-vCPU host, tenant load barely
-    touches a 1-core run but directly steals cycles from wider runs, so
-    2->8 raw efficiency swings 0.23-0.72 with the neighbors (ledger
-    attempts 1-19) while 1->4 sits in a tight 0.78-0.82 band — i.e. at
-    small core slices contention cancels and the JOB's scaling shows.
-    That is also the honest proxy for the rule's two-cluster-size
-    criterion: a dedicated cluster's executors get proportional cycles
-    (which is exactly what the concurrent hardware probes normalize for —
-    raw and normalized agree at 1->4, diverge wildly at 2->8). 2->8 and
-    8->32 attempts remain in the ledger for transparency. Runs alternate
-    levels tightly and each level takes best-of-N.
-    """
-    n = n or int(os.environ.get("SPARK_GRAFT_SCALE_N", "1"))
-    n4 = n4 or 4 * n
-    runs: dict[int, list[dict]] = {n: [], n4: []}
+    Raw efficiency is the throughput ratio over 4. Normalized efficiency
+    divides the throughput ratio by the ratio of the two legs' hardware
+    probes (a plain CPU burn at the leg's width, measured just before
+    it), which takes out how unevenly the host handed out cycles. The
+    headline is the median over reps of each."""
+    n, n4 = SCALE_LEVELS
+    ok = [(a, b) for a, b in reps if a is not None and b is not None]
+    thr = [(a["throughput_urls_per_sec"], b["throughput_urls_per_sec"])
+           for a, b in ok]
+    hw = [(a["hw_units_per_sec"], b["hw_units_per_sec"]) for a, b in ok]
+    raw = [round(t4 / t1 / (n4 / n), 3) for t1, t4 in thr]
+    norm = [round((t4 / t1) / (h4 / h1), 3)
+            for (t1, t4), (h1, h4) in zip(thr, hw)]
+    return {
+        "metric": "scaling_efficiency",
+        "levels": [n, n4],
+        "reps": len(reps),
+        "reps_ok": len(ok),
+        "median_raw": round(statistics.median(raw), 3) if raw else None,
+        "median_norm": round(statistics.median(norm), 3) if norm else None,
+        "per_rep_raw": raw,
+        "per_rep_norm": norm,
+        "throughput_urls_per_sec": {str(n): [t[0] for t in thr],
+                                    str(n4): [t[1] for t in thr]},
+        "hw_units_per_sec": {str(n): [h[0] for h in hw],
+                             str(n4): [h[1] for h in hw]},
+    }
+
+
+def _frontier_leg(cpus: int) -> dict | None:
+    """One FRONTIER_ONLY run of this script at local[cpus], in its own
+    process; its last JSON line, or None if it failed."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
+               SPARK_GRAFT_FRONTIER_ONLY="1")
+    env.setdefault("SPARK_GRAFT_BENCH_SEEDS", str(SCALE_SEEDS))
+    out = subprocess.run([sys.executable, __file__], env=env,
+                         capture_output=True, text=True, cwd=REPO,
+                         timeout=3600)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        sys.stderr.write(f"[scaling] local[{cpus}] run failed "
+                         f"rc={out.returncode}\n{out.stderr[-2000:]}\n")
+        return None
+    return json.loads(lines[-1])
+
+
+def run_scaling(reps: int = 3) -> dict:
+    """The frontier job at local[N] and local[4N], alternating the two
+    legs within each rep (the 4N leg first); see scaling_summary."""
+    n, n4 = SCALE_LEVELS
+    pairs = []
     for _rep in range(reps):
-        # 4N leg FIRST: it is the contention-sensitive one (a memory burst
-        # mid-leg halves its throughput; the 1-core leg barely notices),
-        # and the hunt's quiet-window gates were measured seconds ago —
-        # running it immediately minimizes gate-to-measurement latency
-        # (ledger rep 1787044322: 1-core leg quiet-fast, then a burst
-        # landed on the 4-core leg ~4 min after the gates passed).
-        for cpus in (n4, n):
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                       SPARK_GRAFT_FRONTIER_ONLY="1")
-            # scaling runs use an enlarged frontier: the ~10s fixed driver/
-            # barrier cost is amortized exactly as it would be on a real
-            # cluster job (the design point is 10^10 URLs, not 2M). 4M at
-            # N=1 keeps a local[1] leg under ~2 min; 8M otherwise.
-            env.setdefault("SPARK_GRAFT_BENCH_SEEDS",
-                           "4000000" if n == 1 else "8000000")
-            out = subprocess.run(
-                [sys.executable, __file__], env=env, capture_output=True,
-                text=True, cwd=REPO, timeout=3600,
-            )
-            lines = out.stdout.strip().splitlines()
-            if out.returncode != 0 or not lines:
-                sys.stderr.write(
-                    f"[scaling] local[{cpus}] run failed rc={out.returncode}\n"
-                    + out.stderr[-2000:] + "\n"
-                )
-                continue
-            runs[cpus].append(json.loads(lines[-1]))
-    if not runs[n] or not runs[n4]:
-        raise RuntimeError("scaling runs failed at one or both levels; see stderr")
-    results = {
-        cpus: max(rs, key=lambda r: r["throughput_urls_per_sec"])
-        for cpus, rs in runs.items()
-    }
-    for cpus in (n, n4):
-        results[cpus]["all_runs_sec"] = [r["value"] for r in runs[cpus]]
-        results[cpus]["all_hw_units_per_sec"] = [
-            r.get("hw_units_per_sec") for r in runs[cpus]]
-    thr_n = results[n]["throughput_urls_per_sec"]
-    thr_4n = results[n4]["throughput_urls_per_sec"]
-    eff = (thr_4n / thr_n) / 4.0
-    _finish_scaling(reps, n, n4, runs, results, thr_n, thr_4n, eff)
-
-
-def _finish_scaling(reps, n, n4, runs, results, thr_n, thr_4n, eff) -> None:
-    # per-rep normalization: each subprocess measured, immediately before
-    # its Spark job, how many parallel CPU cycles the shared host was
-    # actually delivering to that many procs (multiprocessing burn). The
-    # normalized efficiency divides out host contention — i.e. what the
-    # job's scaling would be if the host handed out cycles proportionally,
-    # which is exactly what a dedicated cluster's executors get.
-    per_rep_norm = []
-    per_rep_raw = []
-    for r2, r8 in zip(runs[n], runs[n4]):
-        per_rep_raw.append(round(
-            r8["throughput_urls_per_sec"]
-            / r2["throughput_urls_per_sec"] / (n4 / n), 3))
-        if r2.get("hw_units_per_sec") and r8.get("hw_units_per_sec"):
-            hw_ratio = r8["hw_units_per_sec"] / r2["hw_units_per_sec"]
-            job_ratio = (r8["throughput_urls_per_sec"]
-                         / r2["throughput_urls_per_sec"])
-            per_rep_norm.append(round(job_ratio / hw_ratio, 3))
-    # headline normalized = median over rep pairs (each pair's probes are
-    # adjacent in time, so job and hardware saw the same contention window)
-    norm_best = (round(statistics.median(per_rep_norm), 3)
-                 if per_rep_norm else None)
-    hw_eff_best = (results[n4]["hw_units_per_sec"]
-                   / results[n]["hw_units_per_sec"] / 4.0
-                   if norm_best else None)
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-
-    # attempts ledger: the shared host's contention varies 2-3x over tens
-    # of minutes and periodically erases ALL parallel speedup (Spark or
-    # not), so a single invocation's window is not a property of the job.
-    # Every attempt is appended here; BASELINE.md reports the best window
-    # (standard best-of-N under noise, extended across invocations) with
-    # the full attempt history inlined for transparency.
-    ledger_path = os.path.join(REPO, "BENCH", "scaling_attempts.jsonl")
-    attempt = {
-        "ts": round(time.time(), 1), "reps": reps, "n": n, "n4": n4,
-        "eff": round(eff, 3), "norm_eff": norm_best,
-        "per_rep_raw": per_rep_raw,
-        "per_rep_norm": per_rep_norm, "hw_eff_best_reps": hw_eff_best,
-        "thr_n": thr_n, "thr_n4": thr_4n, "results": results,
-    }
-    with open(ledger_path, "a") as f:
-        f.write(json.dumps(attempt) + "\n")
-    render_scaling_md()
-
-
-def run_profile_wave(reps: int = 2) -> dict:
-    """VERDICT r4 #1: per-phase profile of the production wave loop at the
-    default wave_loop config (1M seeds, 3 waves, local[32]). Min-of-N by
-    total wall; the chosen rep's phase medians + init walls are written
-    to BENCH/wave_profile.json and rendered into BENCH/BASELINE.md."""
-    from llm_scraper_spark.session import get_spark
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    hw = hardware_parallel_ceiling(levels=(cpus,), work=20_000_000)[cpus]
-    spark = get_spark(app_name=f"profile_wave_{cpus}",
-                      master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 8))
-    try:
-        runs = [bench_wave_loop(spark, 1_000_000) for _ in range(reps)]
-    finally:
-        spark.stop()
-    best = min(runs, key=lambda r: r["sec"])
-    best["all_runs_sec"] = [r["sec"] for r in runs]
-    best["hw_units_per_sec"] = hw
-    best["ts"] = round(time.time(), 1)
-    best["cpus"] = cpus
-    # best-window-of-all-attempts with full history (same protocol as the
-    # scaling ledger): a degraded-host attempt must not overwrite a
-    # quiet-window profile, but every attempt stays visible
-    path = os.path.join(REPO, "BENCH", "wave_profile.json")
-    prior = None
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                prior = json.load(f)
-        except ValueError:
-            prior = None
-    history = (prior or {}).get("attempts", [])
-    if prior and "urls_per_sec" in prior and not history:
-        history = [{"ts": prior.get("ts"), "sec": prior.get("sec"),
-                    "urls_per_sec": prior.get("urls_per_sec"),
-                    "hw_units_per_sec": prior.get("hw_units_per_sec")}]
-    history.append({"ts": best["ts"], "sec": best["sec"],
-                    "urls_per_sec": best["urls_per_sec"],
-                    "hw_units_per_sec": hw})
-    if prior and prior.get("urls_per_sec", 0) > best["urls_per_sec"]:
-        keep = dict(prior)
-    else:
-        keep = best
-    keep["attempts"] = history
-    with open(path, "w") as f:
-        json.dump(keep, f, indent=2)
-    render_scaling_md()
-    return best
-
-
-def _wave_profile_section() -> str:
-    """Per-phase wave-loop profile from the last `bench.py --profile-wave`."""
-    path = os.path.join(REPO, "BENCH", "wave_profile.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        p = json.load(f)
-    rows = "".join(
-        f"| {k} | {v} |\n"
-        for k, v in sorted(p.get("phase_medians", {}).items(),
-                           key=lambda kv: -kv[1]))
-    init = p.get("init_timings") or {}
-    init_line = ", ".join(f"{k}={v}s" for k, v in init.items()
-                          if k != "seeded") or "—"
-    return (
-        "## Wave-loop phase profile (`python bench.py --profile-wave`)\n\n"
-        f"Config: 1M seeds, 3 waves, local[{p.get('cpus', 32)}]; "
-        f"best-of-{len(p.get('all_runs_sec', [1]))} total "
-        f"{p['sec']}s = {p['urls_per_sec']:,.0f} URL-ops/s "
-        f"(all reps {p.get('all_runs_sec')}; concurrent hw probe "
-        f"{p.get('hw_units_per_sec')} units/s; ts {p.get('ts')}).\n\n"
-        "Per-phase MEDIAN driver wall over the 3 waves. Since round 4 the\n"
-        "six state-table writes launch as soon as their checkpointed\n"
-        "inputs exist and overlap the wave's remaining compute (ledger\n"
-        "still last) — the per-write rows below are submit-to-finish\n"
-        "walls (they include scheduler queueing behind the wave's own\n"
-        "jobs), while `state_writes` is the wall actually spent BLOCKED\n"
-        "at the commit barrier. Since round 5 the fetch stage is FUSED\n"
-        "(spans + uuid5 doc ids + canonicalized outlink structs computed\n"
-        "inside the fetch Arrow batch — the page corpus crosses Python\n"
-        "once per wave, which is why `fetch` grew while discover_dedup\n"
-        "fell 3.2->1.0s and write_documents 2.0->0.3s). The standing\n"
-        "Bloom and its deferred delta merge are gone: the dedup is the\n"
-        "exact anti-join alone, so no `bloom_*` phase is recorded.\n\n"
-        "| phase | median sec |\n|---|---|\n" + rows +
-        f"\nSeed-init phase walls: {init_line}.\n"
-        + ("\nAll profile attempts (best window kept above; the shared "
-           "host flaps — see the hw probe per attempt): "
-           + ", ".join(
-               f"{a['sec']}s@hw{a.get('hw_units_per_sec')}"
-               for a in p.get("attempts", [])) + ".\n\n"
-           if p.get("attempts") else "\n")
-    )
-
-
-def _default_runs_section() -> str:
-    """Median + spread of `python bench.py` at the driver's exact config
-    (sf0.1, local[32], 8M seeds) from the auto-appended ledger."""
-    path = os.path.join(REPO, "BENCH", "default_bench_runs.jsonl")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        runs = [json.loads(line) for line in f if line.strip()]
-    runs = [r for r in runs if r.get("cpus") == 32 and r.get("n_seeds") == BENCH_SEEDS]
-    if not runs:
-        return ""
-    thr = sorted(r["urls_per_sec"] for r in runs)
-    med = statistics.median(thr)
-
-    def _f(v, fmt="{:,.0f}"):
-        return fmt.format(v) if v is not None else "—"
-
-    rows = "".join(
-        f"| {r['ts']} | {r['sec']} | {r['urls_per_sec']:,.0f} "
-        f"| {r.get('all_runs_sec') or '—'} | {_f(r.get('hw_units_per_sec'))} "
-        f"| {_f(r.get('wave_loop_urls_per_sec'))} "
-        f"| {_f(r.get('extract_pages_per_sec'))} |\n"
-        for r in runs
-    )
-    wl = sorted(r["wave_loop_urls_per_sec"] for r in runs
-                if r.get("wave_loop_urls_per_sec"))
-    wl_line = (
-        f"**Median wave-loop throughput over {len(wl)} runs: "
-        f"{statistics.median(wl):,.0f} URL-ops/sec** (the production "
-        "CrawlRun.run_wave over 3 waves — politeness windows, anti-join, "
-        "seq assignment, state commits; 1M seeds).\n\n" if wl else ""
-    )
-    return (
-        "## Driver-config runs (default `python bench.py`: sf0.1, "
-        f"local[32], {BENCH_SEEDS:,} seeds)\n\n"
-        "Every full-config invocation (including the round driver's) is\n"
-        "auto-appended to BENCH/default_bench_runs.jsonl; the MEDIAN below\n"
-        "is the honest expectation for BENCH_r{N}.json at this config —\n"
-        "compare the driver's number against it, not against the best\n"
-        "scaling window.\n\n"
-        "Since round 3 the frontier headline is min-of-2 back-to-back reps\n"
-        "(600s wall cap) and every run records the concurrent hardware\n"
-        "probe (a plain CPU burn, units/s), so a contended invocation is\n"
-        "self-annotating. Round 2's driver run (ts 1755480418.3, 354.4s =\n"
-        "90,298 URLs/s — the slowest of all runs ever logged at this\n"
-        "config; a run 1h earlier did 166.5s) predates both fixes: it was\n"
-        "ONE cold rep in a window the hw probes around it measured at\n"
-        "0.24-0.95x delivered parallelism. Rows from before round 3 show\n"
-        "'—' in the new columns.\n\n"
-        "Round 5 restructured the wave loop (fused fetch stage: spans +\n"
-        "uuid5 + canonicalized outlinks computed inside the fetch Arrow\n"
-        "batch, ONE Python crossing per wave; bloom delta deferred past\n"
-        "the commit barrier) — the round-3 target of 100k URL-ops/s was\n"
-        "crossed in a stock run (ts 1787329814.3: 100,244) with the\n"
-        "hunted best window at 116,702 (BENCH/wave_profile.json). The\n"
-        "bucketed seen layout A/B at this config: ~3s/run SLOWER than\n"
-        "the delta layout (the bloom keeps the anti-join tiny while the\n"
-        "bucketed append pays a shuffle+sort per wave); the bucketed\n"
-        "layout has since been removed (BENCH/BUCKETED_AB.md). Runs\n"
-        "since round 5 also carry the extraction headline (pages/s over\n"
-        "synthetic HTML cycling the 93 real parser configs; 'extract\n"
-        "p/s' column).\n\n"
-        f"**Median throughput over {len(thr)} runs: {med:,.0f} URLs "
-        f"scheduled+deduped/sec** (min {thr[0]:,.0f}, max {thr[-1]:,.0f})\n\n"
-        + wl_line +
-        "| unix ts | frontier sec | URLs/sec | all reps (sec) "
-        "| hw units/s | wave-loop URL-ops/s | extract p/s |\n"
-        "|---|---|---|---|---|---|---|\n"
-        + rows + "\n"
-    )
-
-
-def _median_raw_line(attempts: list, n: int, n4: int) -> str:
-    """Median RAW efficiency over every rep pair ever logged at the
-    n->n4 protocol (not best-of — the complement the round-1 judge asked
-    for), STRATIFIED by the concurrently-measured host cycle delivery.
-
-    Every rep runs a plain multiprocessing CPU burn next to each Spark
-    leg; the hw ratio (burn units at n4 procs / units at n procs / 4) is
-    an outcome-independent measurement of whether the shared host was
-    actually handing this attempt proportional cycles DURING the run. A
-    rep where even the burn got <0.9x proportional cycles measures the
-    neighbor's workload, not this job — so the quiet-host median is the
-    job-scaling estimate, with the contended median and the all-rep
-    median right beside it (nothing is dropped; the split variable is
-    measured independently of the job's own throughput).
-
-    Falls back to per-attempt eff for pre-per_rep_raw entries."""
-    reps = []
-    norm_reps = []
-    quiet, contended, pairs = [], [], []
-    era_reps = []  # post-heap-fix protocol era (see HEAP_FIX_TS)
-    for a in attempts:
-        if a.get("n") != n or a.get("n4") != n4:
-            continue
-        raws = a.get("per_rep_raw") or [a["eff"]]
-        reps.extend(raws)
-        if a.get("ts", 0) > HEAP_FIX_TS:
-            era_reps.extend(raws)
-        norm_reps.extend(a.get("per_rep_norm") or [])
-        try:
-            res = a["results"]
-            hw_n = res[str(n)]["all_hw_units_per_sec"]
-            hw_n4 = res[str(n4)]["all_hw_units_per_sec"]
-        except (KeyError, TypeError):
-            continue
-        for i, raw in enumerate(raws):
-            if i >= len(hw_n) or i >= len(hw_n4) or not hw_n[i]:
-                continue
-            hw_ratio = hw_n4[i] / hw_n[i] / (n4 / n)
-            pairs.append((hw_ratio, raw))
-            (quiet if hw_ratio >= 0.9 else contended).append(raw)
-    if not reps:
-        return ""
-    # statistics.median (mean of the two middles on even n) — the
-    # upper-middle shortcut sorted()[n//2] overstated the headline by up
-    # to 0.018 once the ledger hit an even rep count; the hunt's stop
-    # condition (jobs/scaling_hunt.py) already used the true median.
-    med = statistics.median(reps)
-    out = (
-        f"**Median raw efficiency over all {len(reps)} rep pairs at the "
-        f"{n}->{n4} protocol: {med:.3f}** (every pair: "
-        f"{sorted(reps)})\n\n"
-    )
-    if quiet and contended:
-        qmed = statistics.median(quiet)
-        cmed = statistics.median(contended)
-        mx = sum(h for h, _ in pairs) / len(pairs)
-        my = sum(r for _, r in pairs) / len(pairs)
-        sxy = sum((h - mx) * (r - my) for h, r in pairs)
-        sxx = sum((h - mx) ** 2 for h, _ in pairs)
-        syy = sum((r - my) ** 2 for _, r in pairs)
-        corr = sxy / (sxx * syy) ** 0.5 if sxx and syy else float("nan")
-        out += (
-            f"**Quiet-host reps (concurrent burn delivery >= 0.9x "
-            f"proportional, measured during the attempt): n={len(quiet)}, "
-            f"median raw efficiency {qmed:.3f}** "
-            f"(every pair: {sorted(quiet)})\n\n"
-            f"Contended-host reps (burn delivery < 0.9x): "
-            f"n={len(contended)}, median raw efficiency {cmed:.3f} "
-            f"(every pair: {sorted(contended)}). Pearson correlation of "
-            f"raw efficiency vs concurrent cycle delivery across all "
-            f"{len(pairs)} reps: {corr:.2f} — the job's measured scaling "
-            f"tracks what the host physically delivered, i.e. the "
-            f"shortfall in contended reps is the neighbor's workload, "
-            f"not a serial section of this job.\n\n"
-        )
-    if era_reps:
-        emed = statistics.median(era_reps)
-        out += (
-            f"**Current-protocol era (right-sized 8g heap, ledger ts > "
-            f"{HEAP_FIX_TS:.0f}): n={len(era_reps)}, median raw "
-            f"efficiency {emed:.3f}** (every pair: {sorted(era_reps)}). "
-            "All earlier reps ran the 64g-heap config whose degraded-"
-            "window amplification is documented under Host regimes — "
-            "they stay in the all-reps median above; this line shows the "
-            "same statistic for the fixed configuration only.\n\n"
-        )
-    if norm_reps:
-        nmed = statistics.median(norm_reps)
-        out += (
-            f"**Median host-normalized efficiency over all "
-            f"{len(norm_reps)} rep pairs: {nmed:.3f}** (every pair: "
-            f"{sorted(norm_reps)})\n\n"
-        )
-    return out
-
-
-def _ledger_medians(attempts: list, n: int, n4: int) -> tuple[float, float]:
-    """(all-reps median, quiet-host median) raw efficiency at n->n4."""
-    reps, quiet = [], []
-    for a in attempts:
-        if a.get("n") != n or a.get("n4") != n4:
-            continue
-        raws = a.get("per_rep_raw") or [a["eff"]]
-        reps.extend(raws)
-        try:
-            hw_n = a["results"][str(n)]["all_hw_units_per_sec"]
-            hw_n4 = a["results"][str(n4)]["all_hw_units_per_sec"]
-        except (KeyError, TypeError):
-            continue
-        for i, raw in enumerate(raws):
-            if i < len(hw_n) and i < len(hw_n4) and hw_n[i] \
-                    and hw_n4[i] / hw_n[i] / (n4 / n) >= 0.9:
-                quiet.append(raw)
-    med = statistics.median(reps) if reps else 0.0
-    qmed = statistics.median(quiet) if quiet else 0.0
-    return med, qmed
-
-
-def render_scaling_md() -> None:
-    """(Re)render BENCH/BASELINE.md from the attempts ledger. HEADLINE =
-    the ledger MEDIANS (all-reps and quiet-host) — the per-attempt best
-    window is demoted to context (a single attempt's eff on this shared
-    host measures the window as much as the job; eff > ~1.05 means the
-    1-core leg itself was contended and is as junk as a low outlier)."""
-    ledger_path = os.path.join(REPO, "BENCH", "scaling_attempts.jsonl")
-    with open(ledger_path) as f:
-        attempts = [json.loads(line) for line in f if line.strip()]
-    # representative window: best PLAUSIBLE attempt (eff <= 1.05 — super-
-    # proportional "efficiency" is a contended 1-core leg, not the job)
-    plausible = [a for a in attempts if a["eff"] <= 1.05] or attempts
-    best = max(plausible, key=lambda a: a["eff"])
-    results = {int(k) if str(k).isdigit() else k: v
-               for k, v in best["results"].items()}
-    reps, n, n4 = best["reps"], best["n"], best["n4"]
-    eff, norm_best = best["eff"], best["norm_eff"]
-    per_rep_norm, hw_eff_best = best["per_rep_norm"], best["hw_eff_best_reps"]
-    thr_n, thr_4n = best["thr_n"], best["thr_n4"]
-    history = "".join(
-        f"| {a['ts']} | {a.get('n', 2)}->{a.get('n4', 8)} | {a['eff']} | "
-        f"{a['norm_eff']} | {a['thr_n']:,.0f} | {a['thr_n4']:,.0f} |\n"
-        for a in attempts
-    )
-    peak = max(attempts, key=lambda a: a["thr_n4"])
-    peak_line = (
-        f"**Peak measured throughput** (attempt {peak['ts']}): "
-        f"{peak['thr_n4']:,.0f} URLs scheduled+deduped/sec at "
-        f"local[{peak.get('n4', n4)}] "
-        f"({peak['thr_n']:,.0f} at local[{peak.get('n', n)}], raw eff "
-        f"{peak['eff']}, normalized {peak['norm_eff']}, per-rep normalized "
-        f"{peak['per_rep_norm']}).\n\n"
-    )
-
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            "# BENCH — measured frontier throughput + scaling efficiency\n\n"
-            "Protocol (BASELINE.md): same job, same input, two parallelism\n"
-            f"levels — local[{n}] vs local[{n4}] as the sandbox proxy for N vs 4N\n"
-            "executors (the task brief's 'N and 4N cores' option). Levels\n"
-            "alternate tightly, best-of-%d per level. Each rep measures its\n"
-            "own concurrent hardware ceiling (plain multiprocessing CPU burn,\n"
-            "no Spark) because this sandbox shares a host: the cycles\n"
-            "delivered to P procs vary 2-3x over minutes and bound any\n"
-            "job's measurable scaling.\n\n" % reps
-            + "## Headline: ledger medians (every rep ever logged — "
-            "nothing dropped)\n\n"
-            + _median_raw_line(attempts, n, n4)
-            + "## Host regimes (round-3 diagnosis)\n\n"
-            "The sandbox VM rebooted at round-3 start; since then the\n"
-            "shared host FLAPS on a minutes timescale between a quiet\n"
-            "regime (frontier at local[4]/3M: ~23s = 520k URLs/s) and a\n"
-            "degraded one (70-280s = 43-170k URLs/s for the SAME code,\n"
-            "back-to-back), while plain CPU-burn probes stay near-\n"
-            "proportional and guest steal time reads ~0 — i.e. the\n"
-            "interference is in the physical host's memory subsystem\n"
-            "(dmesg logged an 11.7ms hrtimer interrupt; the memcpy probe\n"
-            "drops ~25% in degraded windows while pointer-chasing Spark\n"
-            "phases drop 3-10x). Two consequences, both acted on:\n\n"
-            "1. **Oversized heaps amplify degraded windows.** A/B on a\n"
-            "   20M-row string-agg micro at local[4]: 8g heap 2.5-3.2s\n"
-            "   across five quiet hits; 31g/64g heaps 10-74s and often\n"
-            "   NEGATIVE core-scaling — every fresh young-gen page of a\n"
-            "   big heap takes a slow hypervisor-side fault. The session\n"
-            "   default is now 8g (<=8 cores) / 16g (wider); reps before\n"
-            "   the fix (ledger ts <= 1787044454.3) ran with 64g and so\n"
-            "   understate the job in exactly the windows the regime\n"
-            "   probes flag as contended.\n"
-            "2. **Attempts are gated on a mini run of the actual job**\n"
-            "   (spark_regime_probe, jobs/scaling_hunt.py) because only a\n"
-            "   probe with the job's own resource profile separates these\n"
-            "   regimes — CPU-burn and memcpy probes both pass in windows\n"
-            "   where Spark runs 10x slow.\n"
-            "3. **Reused python workers deadlocked probabilistically**\n"
-            "   (executor parked mid-Arrow-message in EPoll.wait, worker\n"
-            "   blocked in recv, zero CPU/mem/io pressure — thread dumps\n"
-            "   in BENCH/hang_evidence_*_jstack.txt): 3 hangs in 6\n"
-            "   local[4]/8M frontier legs with worker reuse on, 0 in 8\n"
-            "   with it off at unchanged throughput (550-724k URLs/s).\n"
-            "   The session default is now\n"
-            "   spark.python.worker.reuse=false (env-overridable); the\n"
-            "   hunt additionally kills any attempt stuck past 1800s\n"
-            "   (a hang is not a measurement — it writes no ledger row\n"
-            "   either way) and resumes gating.\n\n"
-            + "## Representative window (best plausible single attempt: "
-            "eff <= 1.05 —\nsuper-proportional values mean the 1-core leg "
-            "itself was contended and\nare excluded from representing, "
-            "never from the medians)\n\n"
-            + f"| config | frontier sec | URLs scheduled+deduped/sec | concurrent hw units/s |\n|---|---|---|---|\n"
-            f"| local[{n}]  | {results[n]['value']} | {thr_n:,.0f} | {results[n]['hw_units_per_sec']} |\n"
-            f"| local[{n4}] | {results[n4]['value']} | {thr_4n:,.0f} | {results[n4]['hw_units_per_sec']} |\n\n"
-            f"**Raw scaling efficiency of this window ({n} -> {n4} cores): "
-            f"{eff:.3f}** (target >= 0.8 applies to the medians above)\n\n"
-            + (
-                f"**Host-normalized scaling efficiency: {norm_best}**\n"
-                "(median over rep pairs of job-throughput ratio divided by\n"
-                "the concurrently-measured hardware cycle-delivery ratio —\n"
-                "what the job's scaling looks like once the shared host's\n"
-                "uneven cycle delivery is divided out; a real cluster's\n"
-                "executors get proportional cycles). During the best reps\n"
-                f"the host delivered {hw_eff_best:.2f} parallel efficiency\n"
-                f"for {n}->{n4} procs. Per-rep normalized values: "
-                f"{per_rep_norm}.\n\n" if norm_best else ""
-            )
-            + f"Seeds: {results[n4]['frontier']['n_seeds']:,}; candidates: "
-            f"{results[n4]['frontier']['n_candidates']:,}; "
-            f"new after dedup: {results[n4]['frontier']['n_new']:,}.\n\n"
-            "All runs (sec): "
-            f"local[{n}]={results[n]['all_runs_sec']}, "
-            f"local[{n4}]={results[n4]['all_runs_sec']}\n"
-            "Concurrent hw probes (units/s): "
-            f"local[{n}]={results[n]['all_hw_units_per_sec']}, "
-            f"local[{n4}]={results[n4]['all_hw_units_per_sec']}\n\n"
-            + peak_line
-            + _wave_profile_section()
-            + _default_runs_section()
-            + "## Attempt history (all --scaling invocations; best window "
-            "reported above)\n\n"
-            "The shared host's delivered parallelism swings between ~0.95\n"
-            "and ~0.24 efficiency over tens of minutes (see concurrent hw\n"
-            "probes per attempt in BENCH/scaling_attempts.jsonl); windows\n"
-            "where even a plain CPU burn gets no 4x cycles cannot evidence\n"
-            "the job's scaling, so the protocol is best-window-of-all-\n"
-            "attempts with every attempt logged.\n\n"
-            "| unix ts | N->4N | raw eff | normalized eff | thr_N | thr_4N |\n"
-            "|---|---|---|---|---|---|\n" + history + "\n"
-            "Raw JSON (best window):\n\n```json\n"
-            + json.dumps(results, indent=2)
-            + "\n```\n"
-        )
-    med_all, med_quiet = _ledger_medians(attempts, n, n4)
-    print(json.dumps({"median_raw_eff_all_reps": med_all,
-                      "median_raw_eff_quiet_host": med_quiet,
-                      "best_plausible_window_eff": round(eff, 3),
-                      "normalized_scaling_efficiency": norm_best,
-                      f"thr_local{n}": thr_n, f"thr_local{n4}": thr_4n}))
+        leg4 = _frontier_leg(n4)
+        pairs.append((_frontier_leg(n), leg4))
+    summary = scaling_summary(pairs)
+    if not summary["reps_ok"]:
+        raise RuntimeError("no rep ran both scaling legs; see stderr")
+    return summary
 
 
 if __name__ == "__main__":
-    if "--render" in sys.argv:
-        render_scaling_md()
-    elif "--profile-wave" in sys.argv:
-        print(json.dumps(run_profile_wave()))
-    elif "--scaling" in sys.argv:
+    if "--scaling" in sys.argv:
         reps = (
             int(sys.argv[sys.argv.index("--reps") + 1])
             if "--reps" in sys.argv else 3
         )
-        run_scaling(reps=reps)
+        print(json.dumps(run_scaling(reps=reps)))
     else:
         print(json.dumps(run_bench()))

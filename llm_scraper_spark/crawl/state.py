@@ -244,19 +244,32 @@ class CrawlState:
     def compact_frontier(self, after_wave: int) -> None:
         """Fold both logs through ``after_wave`` — their committed
         ``wave=K`` dirs with K <= after_wave, and their earlier folds —
-        into flat ``part-compact-*`` files via the output tables'
-        crash-safe executor, reading each group with the log's pinned
-        schema. Rows and their ``wave`` are unchanged, so the fold
-        writes no ledger key. Single writer, at a wave boundary."""
+        into flat ``part-compact-*`` files (_fold_committed). Rows and
+        their ``wave`` are unchanged, so the fold writes no ledger key.
+        Single writer, at a wave boundary."""
+        self._fold_committed(STATE_SCHEMAS, after_wave)
+
+    def _fold_committed(self, tables, upto_wave: int | None = None) -> dict:
+        """Fold each table's flat files and its committed ``wave=K``
+        dirs (K <= ``upto_wave`` when given) into flat ``part-compact-*``
+        files via the crash-safe executor (sinks/compaction.py), reading
+        a log's groups with its pinned schema. An orphan dir of a
+        crashed commit stays out of the fold: read_all never reads it
+        and clean_uncommitted can still remove it. Returns the
+        executor's stats per table folded."""
         from ..sinks.compaction import compact_files
 
         # the table root's flat files ("") and the folded wave dirs
         folded = {""} | {f"wave={w}" for w in self.committed_waves()
-                         if w <= after_wave}
-        for table, schema in STATE_SCHEMAS.items():
-            compact_files(
-                self.spark, os.path.join(self.dir, table), schema=schema,
-                include=lambda rel: os.path.dirname(rel) in folded)
+                         if upto_wave is None or w <= upto_wave}
+        stats = {}
+        for table in tables:
+            base = os.path.join(self.dir, table)
+            if os.path.isdir(base):
+                stats[table] = compact_files(
+                    self.spark, base, schema=STATE_SCHEMAS.get(table),
+                    include=lambda rel: os.path.dirname(rel) in folded)
+        return stats
 
     def read_seen(self, upto_wave: int) -> DataFrame | None:
         """The seen set AS INPUT TO ``upto_wave``: every URL a committed
@@ -292,13 +305,13 @@ class CrawlState:
         waves = sorted(w["wave"] for w in ledger["waves"] if w["wave"] >= 0)
         expired = waves[:-keep_last_n_waves] if keep_last_n_waves else waves
         for w in expired:
-            for table in ("documents", "schedule_log", "metrics"):
+            for table in self.OUTPUT_TABLES:
                 path = self._p(table, w)
                 if os.path.exists(path):
                     shutil.rmtree(path)
         if expired:
             cutoff = expired[-1]  # keep rows with wave > cutoff
-            for table in ("documents", "schedule_log", "metrics"):
+            for table in self.OUTPUT_TABLES:
                 self._expire_flat(table, cutoff)
         return expired
 
@@ -376,21 +389,11 @@ class CrawlState:
             if parts else None
 
     # --- output-table compaction ---------------------------------------
-    def compact_output_tables(
-            self, capacity: int = 128 * 1024 * 1024,
-            tables: tuple[str, ...] = OUTPUT_TABLES) -> dict:
-        """Fold the wave-fragmented append-only OUTPUT tables into
-        ~capacity-sized flat files via the crash-safe executor
-        (sinks/compaction.py) — every wave appends a few files per
-        table, so a long crawl's read amplification grows linearly
-        until folded. The two logs fold in compact_frontier instead.
-        Runs at a wave boundary (single writer); a crash mid-compaction
-        settles when the state is next opened."""
-        from ..sinks.compaction import compact_files
-
-        stats = {}
-        for t in tables:
-            base = os.path.join(self.dir, t)
-            if os.path.isdir(base):
-                stats[t] = compact_files(self.spark, base, capacity=capacity)
-        return stats
+    def compact_output_tables(self) -> dict:
+        """Fold the wave-fragmented append-only OUTPUT tables' committed
+        rows into flat files (_fold_committed) — every wave appends a
+        few files per table, so a long crawl's read amplification grows
+        linearly until folded. The two logs fold in compact_frontier
+        instead. Runs at a wave boundary (single writer); a crash
+        mid-compaction settles when the state is next opened."""
+        return self._fold_committed(self.OUTPUT_TABLES)

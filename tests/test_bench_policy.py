@@ -1,4 +1,5 @@
-"""Pure-Python tests for bench.py's adaptive-rep headline policy.
+"""Pure-Python tests for bench.py's adaptive-rep headline policy and
+its scaling arithmetic.
 
 No Spark: the policy decides, from rep durations alone, whether the
 default bench should run another frontier rep (BASELINE.md "Host
@@ -54,6 +55,50 @@ def test_total_wall_budget():
     assert want_more([250.0, 260.0])
     # over it -> stop even though best is degraded
     assert not want_more([450.0, 460.0])
+
+
+def _leg(thr, hw):
+    return {"throughput_urls_per_sec": thr, "hw_units_per_sec": hw}
+
+
+def test_scaling_summary_raw_normalized_and_medians():
+    s = bench.scaling_summary([
+        (_leg(100.0, 1.0), _leg(320.0, 4.0)),   # raw 0.8, norm 0.8
+        (_leg(100.0, 1.0), _leg(360.0, 3.0)),   # raw 0.9, norm 1.2
+        (_leg(200.0, 2.0), _leg(400.0, 4.0)),   # raw 0.5, norm 1.0
+    ])
+    assert s["levels"] == [1, 4]
+    assert s["per_rep_raw"] == [0.8, 0.9, 0.5]
+    assert s["per_rep_norm"] == [0.8, 1.2, 1.0]
+    assert s["median_raw"] == 0.8
+    assert s["median_norm"] == 1.0
+    assert s["throughput_urls_per_sec"] == {"1": [100.0, 100.0, 200.0],
+                                            "4": [320.0, 360.0, 400.0]}
+    assert s["hw_units_per_sec"] == {"1": [1.0, 1.0, 2.0],
+                                     "4": [4.0, 3.0, 4.0]}
+
+
+def test_scaling_summary_drops_a_rep_with_a_failed_leg():
+    # a failed leg drops its whole rep: the later reps still pair their
+    # own two legs (zipping the two levels' lists would pair rep 1's
+    # local[1] leg with rep 2's local[4] leg)
+    s = bench.scaling_summary([
+        (_leg(100.0, 1.0), None),
+        (None, _leg(999.0, 4.0)),
+        (_leg(100.0, 1.0), _leg(320.0, 4.0)),
+        (_leg(50.0, 1.0), _leg(100.0, 2.0)),
+    ])
+    assert (s["reps"], s["reps_ok"]) == (4, 2)
+    assert s["per_rep_raw"] == [0.8, 0.5]
+    assert s["per_rep_norm"] == [0.8, 1.0]
+    assert s["median_raw"] == 0.65
+    assert s["throughput_urls_per_sec"]["4"] == [320.0, 100.0]
+
+
+def test_scaling_summary_with_no_complete_rep():
+    s = bench.scaling_summary([(None, _leg(1.0, 1.0))])
+    assert s["reps_ok"] == 0
+    assert s["median_raw"] is None and s["median_norm"] is None
 
 
 # ---------------------------------------------------------------------------

@@ -292,3 +292,33 @@ def test_compact_files_given_a_schema_runs_one_job_per_group(spark,
     assert stats["files_before"] == 6 and stats["rewritten"] == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert _content(spark, table) == before
+
+
+def test_output_table_fold_leaves_an_orphan_wave_dir_out(spark, tmp_path):
+    """A ``wave=K`` dir that no ledger entry names (a crash between the
+    table writes and the ledger commit) stays out of the output-table
+    fold: folded into the flat files, its rows would be read by every
+    read_all and clean_uncommitted could no longer remove them."""
+    from llm_scraper_spark.crawl.state import CrawlState
+
+    st = CrawlState(spark, str(tmp_path / "state"))
+    for w in (0, 1, 2):
+        st.write("documents", w, spark.createDataFrame(
+            [(w, f"d{w}")], "wave int, doc_id string").coalesce(1))
+        if w < 2:
+            st.commit_wave(w, w + 1, {})
+
+    def docs():
+        return sorted(r["doc_id"] for r in
+                      st.read_all("documents").select("doc_id").collect())
+
+    assert docs() == ["d0", "d1"]
+    stats = st.compact_output_tables()
+    assert stats["documents"]["rewritten"] == 1
+    assert docs() == ["d0", "d1"]
+    base = os.path.join(st.dir, "documents")
+    flat = [os.path.join(base, rel) for rel, _ in data_files(base)
+            if os.sep not in rel]
+    assert sorted(r["doc_id"] for r in spark.read.parquet(*flat)
+                  .select("doc_id").collect()) == ["d0", "d1"]
+    assert st.clean_uncommitted() == [os.path.join(base, "wave=2")]
