@@ -3,16 +3,16 @@
 The reference's resumability is "frontier + seen live on disk"
 (reference cache.py:47-76), in two structures: a FIFO deque and a
 seen index (cache.py:71-72). Here the crawl state is two append-only
-logs keyed by ``url_hash``, and every wave commits:
+logs keyed by ``url_hash``, and every wave commits four tables:
 
     state_dir/
       ledger.json                # committed waves + next_seq (written LAST)
       frontier_delta/wave=K/     # the enqueue log: rows wave K enqueued,
                                  # i.e. first seen (K=-1: the seeds)
-      fetched/wave=K/            # the fetch log: url_hash of wave K's
-                                 # fetches (<= hosts x budget rows)
+      schedule_log/wave=K/       # the fetch log: wave K's fetches in
+                                 # (wave, seq) order, with url_hash
+                                 # (<= hosts x budget rows) — golden_crawl
       documents/wave=K/          # documents emitted in wave K
-      schedule_log/wave=K/       # (wave, seq, url) fetch order — golden_crawl
       metrics/wave=K/            # per-partition lineage + fetch/dedup metrics
 
     Pending is the committed enqueue log minus the committed fetch log:
@@ -33,7 +33,8 @@ logs keyed by ``url_hash``, and every wave commits:
     (sinks/compaction.py: stage -> manifest -> finish). A fold changes
     files, never rows, so it needs no ledger entry: a flat file holds
     only rows of waves committed when it was written, and every row
-    keeps its own ``wave``.
+    keeps its own ``wave``. Neither log is ever expired: only the output
+    tables (documents, metrics) have a TTL.
 
 Commit protocol (crash-consistent, idempotent replay keyed by wave id):
 
@@ -75,7 +76,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA
+from ..schemas import FRONTIER_SCHEMA, SCHEDULE_LOG_SCHEMA
 
 # The cross-wave state tables have pinned schemas: ``write`` conforms each
 # frame to its table's schema and the reads pass it to the parquet
@@ -83,7 +84,7 @@ from ..schemas import FETCHED_SCHEMA, FRONTIER_SCHEMA
 # footer-inference job on the wave's serial path.
 STATE_SCHEMAS = {
     "frontier_delta": FRONTIER_SCHEMA,
-    "fetched": FETCHED_SCHEMA,
+    "schedule_log": SCHEDULE_LOG_SCHEMA,
 }
 
 
@@ -107,7 +108,7 @@ def _wave_bounds(path: str) -> tuple[float, float] | None:
 
 class CrawlState:
     # the append-only output tables; the two logs are STATE_SCHEMAS
-    OUTPUT_TABLES = ("documents", "schedule_log", "metrics")
+    OUTPUT_TABLES = ("documents", "metrics")
 
     def __init__(self, spark: SparkSession, state_dir: str):
         from ..sinks.compaction import recover_compaction
@@ -117,16 +118,19 @@ class CrawlState:
         os.makedirs(state_dir, exist_ok=True)
         # Removed layouts: a bucketed seen catalog table (read as deltas
         # it would be empty), seen_delta dirs beside frontier deltas that
-        # their compaction deleted, or a frontier_base snapshot whose
-        # fetched dirs up to the base were deleted. Read as two logs,
-        # each would re-enqueue seen URLs or schedule fetched ones again.
+        # their compaction deleted, a frontier_base snapshot whose fetch
+        # dirs up to the base were deleted, or a fetched log (its
+        # schedule_log rows carry no url_hash, and their TTL expired old
+        # waves). Read as two logs, each would re-enqueue seen URLs or
+        # schedule fetched ones again.
         if (self.read_ledger().get("seen_layout") == "bucketed"
                 or any(os.path.isdir(os.path.join(state_dir, t))
-                       for t in ("seen_delta", "frontier_base"))):
+                       for t in ("seen_delta", "frontier_base", "fetched"))):
             raise ValueError(
                 "state dir was written with a removed layout (a bucketed "
-                "seen table, seen_delta dirs or a frontier_base snapshot); "
-                "the crawl state is the frontier_delta and fetched logs")
+                "seen table, seen_delta dirs, a frontier_base snapshot or "
+                "a fetched log); the crawl state is the frontier_delta "
+                "and schedule_log logs")
         # settle a crashed fold (manifest committed -> roll forward;
         # staged only -> roll back): a half-finished fold of a log
         # holds some rows twice
@@ -220,19 +224,21 @@ class CrawlState:
 
     def read_pending(self, wave: int) -> DataFrame:
         """The pending frontier AS INPUT TO ``wave``: the enqueue log
-        minus the fetch log, both through wave - 1. The fetch log side is
-        BROADCAST whenever the ledger's own scheduled counts say it fits
-        (no Spark action needed to decide). After a fold through wave F
-        the flat fetch log holds waves <= F, so only reads for a wave
-        past F are exact."""
+        minus the fetch log (``schedule_log``'s ``url_hash``), both
+        through wave - 1. The fetch log side is BROADCAST whenever the
+        ledger's own scheduled counts say it fits (no Spark action
+        needed to decide). After a fold through wave F the flat fetch
+        log holds waves <= F, so only reads for a wave past F are
+        exact."""
         from pyspark.sql import functions as F
 
         pending = self.read_all("frontier_delta", wave - 1)
         if pending is None:
             raise FileNotFoundError(
                 f"no committed frontier state for wave {wave} in {self.dir}")
-        fetched = self.read_all("fetched", wave - 1)
+        fetched = self.read_all("schedule_log", wave - 1)
         if fetched is not None:
+            fetched = fetched.select("url_hash")
             n_fetched = sum(int(w.get("scheduled", 0))
                             for w in self.read_ledger()["waves"]
                             if 0 <= w["wave"] < wave)
@@ -288,10 +294,12 @@ class CrawlState:
             F.col("wave").alias("first_seen_wave"))
 
     def expire_results(self, keep_last_n_waves: int) -> list[int]:
-        """T5 retention (reference TTL, cache.py:229-263): drop result
-        tables (documents / schedule_log / metrics) for waves older than
-        the last N. The crawl STATE (the enqueue and fetch logs) is never
-        expired — the enqueue log is the seen set, which must stay exact.
+        """T5 retention (reference TTL, cache.py:229-263): drop the result
+        tables (documents / metrics) for waves older than the last N. The
+        crawl STATE (the enqueue log and the fetch log ``schedule_log``)
+        is never expired: the enqueue log is the seen set and the fetch
+        log is what keeps a fetched URL out of pending, so both must stay
+        exact.
 
         Compaction-aware: waves folded into flat ``part-compact-*``
         files by compact_output_tables carry their wave id in the data's

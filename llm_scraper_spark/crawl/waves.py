@@ -273,8 +273,8 @@ class _WavePipeline:
         self.timings: dict[str, float] = {}
         self._ck_ids: set[int] = set()
         self._writes: dict = {}
-        # a wave writes five tables; threads start only as writes arrive
-        self._pool = ThreadPoolExecutor(max_workers=5)
+        # a wave writes four tables; threads start only as writes arrive
+        self._pool = ThreadPoolExecutor(max_workers=4)
         self.restart()
 
     def __enter__(self) -> _WavePipeline:
@@ -351,12 +351,12 @@ class CrawlRun:
         # before they enter the frontier. Off by default: reference crawl-
         # ordering equality is defined on raw canonical URLs.
         self.scope_filter = scope_filter
-        # fold the enqueue and fetch logs' per-wave dirs into flat files
-        # every N waves (state.compact_frontier): bounds the file count
-        # each state read opens. 0 disables.
+        # fold the enqueue and fetch (schedule_log) logs' per-wave dirs
+        # into flat files every N waves (state.compact_frontier): bounds
+        # the file count each state read opens. 0 disables.
         self.compact_every = compact_every
-        # fold the append-only OUTPUT tables (documents/schedule_log/
-        # metrics) every N waves via the crash-safe compaction executor
+        # fold the append-only OUTPUT tables (documents/metrics) every
+        # N waves via the crash-safe compaction executor
         # (state.compact_output_tables): each wave appends a handful of
         # files per table, so an un-folded long crawl's full-table reads
         # open O(waves) files. 0 disables (short runs don't need it).
@@ -459,12 +459,9 @@ class CrawlRun:
             # already final — read it here; it sizes the anti-join below
             n_scheduled = int(obs_sched.get["n"])
             pipe.mark("schedule")
-            # both derive from the scheduled checkpoint alone — write
-            # while the fetch runs
-            pipe.write("schedule_log", wave,
-                       scheduled.select("wave", "seq", "url", "host",
-                                        "priority"))
-            pipe.write("fetched", wave, scheduled.select("url_hash"))
+            # the fetch log derives from the scheduled checkpoint alone —
+            # write it while the fetch runs
+            pipe.write("schedule_log", wave, scheduled)
 
             # fetch spread (shuffle 3 above): one fetch task per slot.
             # (host, salt) is the politeness shard unit, so one host's

@@ -7,10 +7,11 @@ interleaved text+media ``documents`` table::
               spans array<struct<kind:string, text:string,
                                  media_ref:string, offset:int>>)
 
-State tables (frontier / robots / metrics; the frontier's per-wave deltas
-are also the seen set) follow FIXTURES.md §5-6, mapping the reference's
-diskcache structures
-(/root/reference/cache.py:71-76) to partitioned columnar tables.
+The crawl state is two append-only logs with pinned schemas (read by
+crawl/state.py without footer inference), mapping the reference's two
+diskcache structures, a FIFO deque and a seen index (cache.py:71-72):
+the enqueue log ``frontier_delta`` (FRONTIER_SCHEMA, also the seen set)
+and the fetch log ``schedule_log`` (SCHEDULE_LOG_SCHEMA).
 """
 
 from __future__ import annotations
@@ -59,31 +60,15 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-# fetch tombstones: the url_hash of every URL a wave scheduled
-FETCHED_SCHEMA = T.StructType(
+# the fetch log: every URL a wave scheduled, in fetch order (wave, seq)
+SCHEDULE_LOG_SCHEMA = T.StructType(
     [
-        T.StructField("url_hash", T.LongType(), False),
-    ]
-)
-
-SEEDS_SCHEMA = T.StructType(
-    [
+        T.StructField("wave", T.IntegerType(), False),
+        T.StructField("seq", T.LongType(), False),
         T.StructField("url", T.StringType(), False),
         T.StructField("host", T.StringType(), False),
         T.StructField("priority", T.DoubleType(), False),
-        T.StructField("discovered_at", T.TimestampType(), True),
-        T.StructField("seq", T.LongType(), False),
-    ]
-)
-
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("allow_prefixes", T.ArrayType(T.StringType()), True),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), True),
-        T.StructField("sitemaps", T.ArrayType(T.StringType()), True),
-        T.StructField("crawl_delay", T.DoubleType(), True),
-        T.StructField("budget", T.IntegerType(), True),     # per-wave politeness budget
+        T.StructField("url_hash", T.LongType(), False),
     ]
 )
 
@@ -93,18 +78,6 @@ FEEDS_RAW_SCHEMA = T.StructType(
         T.StructField("host", T.StringType(), False),
         T.StructField("kind", T.StringType(), False),  # sitemap|sitemapindex|rss|atom|robots
         T.StructField("body", T.BinaryType(), True),
-    ]
-)
-
-WAVE_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("scheduled", T.LongType(), False),
-        T.StructField("fetched_ok", T.LongType(), False),
-        T.StructField("fetch_failed", T.LongType(), False),
-        T.StructField("discovered", T.LongType(), False),
-        T.StructField("deduped_new", T.LongType(), False),
     ]
 )
 

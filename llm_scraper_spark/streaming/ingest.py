@@ -201,15 +201,15 @@ def stream_crawl(spark: SparkSession, input_dir: str, state_dir: str,
     one wave. Composes the pieces the standalone streaming ops cover —
     ``stream_frontier_append``'s idempotent per-batch delta commit,
     ``stream_url_dedup``'s cross-batch URL dedup (here exact, against
-    the stream's own cumulative seen table rather than a watermarked
-    store), and per-host politeness admission — into a single
+    the stream's own schedule log rather than a watermarked store),
+    and per-host politeness admission — into a single
     foreachBatch pipeline over a landing directory of discovered URLs
     ``(url, seq)``:
 
         canonicalize (Arrow batch UDF) -> in-batch first-occurrence
         dedup -> anti-join cumulative seen -> per-host politeness window
         (budget per BATCH, the wave-loop semantics) -> commit
-        schedule_log/batch=K + seen_delta/batch=K + host_used/batch=K
+        schedule_log/batch=K + host_used/batch=K
 
     Same operators the batch wave loop runs (functions.urls /
     operators.seen / operators.frontier), so stream-vs-batch schedule
@@ -220,9 +220,10 @@ def stream_crawl(spark: SparkSession, input_dir: str, state_dir: str,
 
     Semantics notes (mirrored in the oracle): seen marks at SCHEDULE
     (an over-budget candidate is droppable and may be re-delivered by a
-    later batch — the landing dir is the pending set's upstream); every
-    commit is an idempotent overwrite keyed by batchId, and the seen
-    read excludes the CURRENT batch's own delta, so Structured
+    later batch — the landing dir is the pending set's upstream), so the
+    seen set is the schedule log itself, one log as in the wave loop;
+    every commit is an idempotent overwrite keyed by batchId, and the
+    seen read excludes the CURRENT batch's own schedule, so Structured
     Streaming's redelivery-after-failure reproduces the identical
     schedule byte-for-byte (exactly-once effect, the same contract as
     the wave ledger; redelivery-pinned by
@@ -243,7 +244,8 @@ def crawl_batch_processor(spark: SparkSession, state_dir: str,
                           default_budget: int = 4, n_salts: int = 2):
     """The per-micro-batch crawl step of :func:`stream_crawl`, exposed
     so redelivery semantics are directly testable (call it twice with
-    the same batch_id)."""
+    the same batch_id). The seen set is the ``schedule_log`` of every
+    earlier batch: a URL is marked seen in the batch that schedules it."""
     import os
 
     from ..functions.urls import with_canonical
@@ -253,28 +255,26 @@ def crawl_batch_processor(spark: SparkSession, state_dir: str,
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         canon = with_canonical(batch_df, key_hex=False)
         deduped = first_occurrence_dedup(canon, "url_hash", "seq")
-        seen_dir = os.path.join(state_dir, "seen_delta")
+        log_dir = os.path.join(state_dir, "schedule_log")
         seen = None
-        if os.path.isdir(seen_dir) and any(
-                e.startswith("batch=") for e in os.listdir(seen_dir)):
+        if os.path.isdir(log_dir) and any(
+                e.startswith("batch=") for e in os.listdir(log_dir)):
             # strictly earlier batches: a redelivered batch must not
-            # anti-join against its OWN previously-committed delta (it
-            # would schedule nothing and overwrite the delta empty)
+            # anti-join against its OWN previously-committed schedule (it
+            # would schedule nothing and overwrite the log empty)
             seen = (
-                spark.read.option("basePath", seen_dir).parquet(seen_dir)
-                .where(F.col("batch") < int(batch_id))
+                spark.read.option("basePath", log_dir).parquet(log_dir)
+                .where(F.col("batch") < int(batch_id)).select("url_hash")
             )
         new = filter_unseen(deduped, seen)
         scheduled = schedule_wave(
             with_salt(new.withColumn("priority", F.lit(1.0)), n_salts),
             default_budget=default_budget,
-        ).localCheckpoint(eager=True)  # consumed by three writes below
+        ).localCheckpoint(eager=True)  # consumed by two writes below
         out = scheduled.select("url", "canonical_url", "host", "url_hash",
                                "seq", "sched_rank")
         out.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "schedule_log", f"batch={batch_id}"))
-        out.select("url_hash").write.mode("overwrite").parquet(
-            os.path.join(seen_dir, f"batch={batch_id}"))
+            os.path.join(log_dir, f"batch={batch_id}"))
         (out.groupBy("host").agg(F.count(F.lit(1)).alias("n_fetched"))
          .write.mode("overwrite").parquet(
              os.path.join(state_dir, "host_used", f"batch={batch_id}")))

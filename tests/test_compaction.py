@@ -192,9 +192,9 @@ def test_expire_results_fsyncs_the_table_dir_after_the_manifest_rename(
     from llm_scraper_spark.crawl.state import CrawlState
 
     st = CrawlState(spark, str(tmp_path / "state"))
-    base = os.path.join(st.dir, "schedule_log")
+    base = os.path.join(st.dir, "metrics")
     for w in (0, 1):
-        st.write("schedule_log", w, spark.createDataFrame(
+        st.write("metrics", w, spark.createDataFrame(
             [(w, w * 10 + i, f"https://h/{w}/{i}") for i in range(5)],
             "wave int, seq long, url string").coalesce(1))
         st.commit_wave(w, (w + 1) * 10, {})
@@ -222,7 +222,7 @@ def test_expire_results_fsyncs_the_table_dir_after_the_manifest_rename(
 
     i = events.index(("replace", MANIFEST))
     assert ("fsync_dir", os.stat(base).st_ino) in events[i + 1:], events
-    assert sorted(r["wave"] for r in st.read_all("schedule_log")
+    assert sorted(r["wave"] for r in st.read_all("metrics")
                   .select("wave").distinct().collect()) == [1]
 
 

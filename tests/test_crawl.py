@@ -425,11 +425,12 @@ def test_archive_with_default_fetcher(spark, tmp_path):
 
 def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
     """VERDICT r4 #6: CrawlRun(compact_tables_every=K) folds the
-    append-only output tables (documents/schedule_log/metrics) at wave
-    boundaries via the crash-safe executor. A long crawl keeps file
-    counts bounded, read_all contents stay equal to an uncompacted
-    run's, and a crash AT the wave/compaction boundary (wave committed,
-    fold half-done) resumes exact."""
+    append-only output tables (documents/metrics) at wave boundaries via
+    the crash-safe executor. A long crawl keeps file counts bounded,
+    read_all contents stay equal to an uncompacted run's, and a crash AT
+    the wave/compaction boundary (wave committed, fold half-done)
+    resumes exact. The fetch log (schedule_log) is crawl state: folded
+    by compact_frontier, never expired."""
     import os
 
     from llm_scraper_spark.sinks.compaction import MANIFEST
@@ -463,8 +464,10 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
         return sum(1 for _root, _d, names in os.walk(base)
                    for n in names if n.endswith(".parquet"))
 
-    for t in ("documents", "schedule_log", "metrics"):
+    for t in ("documents", "metrics"):
         assert n_files(folded, t) < n_files(plain, t), t
+    # the fetch log is left to compact_frontier (every 8 waves here)
+    assert n_files(folded, "schedule_log") == n_files(plain, "schedule_log")
 
     # crash at the boundary: wave 3 commits, then the documents fold
     # dies mid-GC (manifest committed). Resume must roll it forward and
@@ -508,15 +511,49 @@ def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
     # files, so expire_results must rewrite them, not just rm wave dirs
     expired = folded.state.expire_results(keep_last_n_waves=2)
     assert expired == [0, 1, 2, 3]
-    log_waves = {r["wave"] for r in folded.state.read_all("schedule_log")
-                 .select("wave").distinct().collect()}
-    assert log_waves == {4, 5}
+    # the fetch log is never expired; compact_frontier folds it
+    assert _spark_schedule_log(folded) == _spark_schedule_log(plain)
+    folded.state.compact_frontier(n_waves - 1)
+    assert n_files(folded, "schedule_log") < n_files(plain, "schedule_log")
+    assert _spark_schedule_log(folded) == _spark_schedule_log(plain)
     doc_waves = {r["wave"] for r in folded.state.read_all("documents")
                  .select("wave").distinct().collect()}
     assert doc_waves == {4, 5}
     # survivors equal the plain run's last-2-waves rows exactly
     keep = {d for d in docs_set(plain) if d[1] >= 4}
     assert docs_set(folded) == keep
+
+
+def test_ttl_after_every_wave_keeps_the_fetch_log(spark, tmp_path):
+    """expire_results(keep_last_n_waves=1) after every wave cuts only the
+    output tables. The fetch log (schedule_log) is crawl state: the
+    crawl keeps an unexpired run's schedule log for every wave, its
+    next_seq and its seen set, while documents and metrics hold the
+    last wave alone."""
+    n_seeds, n_waves = 40, 4
+    plain = _run_spark_crawl(spark, tmp_path / "plain", n_seeds, n_waves)
+    run = CrawlRun(spark, str(tmp_path / "ttl"),
+                   fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
+                   default_budget=3, n_salts=4)
+    run.init_from_seeds(_mk_seeds(spark, n_seeds))
+    for w in range(n_waves):
+        run.run_wave(w)
+        assert run.state.expire_results(keep_last_n_waves=1) == \
+            list(range(w))
+
+    log = _spark_schedule_log(run)
+    assert log == _spark_schedule_log(plain)
+    assert {w for w, _, _ in log} == set(range(n_waves))
+    assert run.state.read_ledger()["next_seq"] == \
+        plain.state.read_ledger()["next_seq"]
+    seen_a, seen_b = (sorted(r["key_hex"] for r in
+                             st.read_seen(n_waves).collect())
+                      for st in (plain.state, run.state))
+    assert seen_a == seen_b
+    for t in ("documents", "metrics"):
+        waves = {r["wave"] for r in run.state.read_all(t)
+                 .select("wave").distinct().collect()}
+        assert waves == {n_waves - 1}, t
 
 
 def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
@@ -532,10 +569,10 @@ def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
     from llm_scraper_spark.sinks.compaction import compact_files
 
     st = CrawlState(spark, str(tmp_path / "state"))
-    base = os.path.join(st.dir, "schedule_log")
+    base = os.path.join(st.dir, "metrics")
 
     def commit(w):
-        st.write("schedule_log", w, spark.createDataFrame(
+        st.write("metrics", w, spark.createDataFrame(
             [(w, w * 10 + i, f"https://h/{w}/{i}") for i in range(5)],
             "wave int, seq long, url string").coalesce(1))
         st.commit_wave(w, (w + 1) * 10, {})
@@ -545,7 +582,7 @@ def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
                 for n in os.listdir(base) if n.endswith(".parquet")}
 
     def waves():
-        return sorted(r["wave"] for r in st.read_all("schedule_log")
+        return sorted(r["wave"] for r in st.read_all("metrics")
                       .select("wave").distinct().collect())
 
     for w in (0, 1):
@@ -576,7 +613,7 @@ def test_expire_rewrites_only_flat_files_holding_expired_waves(spark,
     final = flat_files()
     assert final == {newer: folds[newer]}
     assert waves() == [2, 3]
-    assert st.read_all("schedule_log").count() == 10
+    assert st.read_all("metrics").count() == 10
 
 
 def test_compaction_preserves_crawl_equality(spark, tmp_path):
@@ -618,7 +655,7 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
     assert pend_a == pend_b
 
     # waves 1 and 3 folded: every wave dir of both logs is in a flat file
-    for table in ("frontier_delta", "fetched"):
+    for table in ("frontier_delta", "schedule_log"):
         names = os.listdir(str(tmp_path / "compact" / table))
         assert any(n.startswith("part-compact-") for n in names), names
         assert not [n for n in names if n.startswith("wave=")], names
@@ -648,7 +685,7 @@ def test_compaction_preserves_crawl_equality(spark, tmp_path):
 def test_crash_during_compaction_resumes_exactly(spark, tmp_path, monkeypatch):
     """A fold commits each log through the executor's stage -> manifest
     -> finish protocol. A crash (a) after frontier_delta's manifest
-    commit, before its finish, or (b) after fetched is staged, before
+    commit, before its finish, or (b) after schedule_log is staged, before
     its manifest, is settled when the state is opened again (roll
     forward, roll back), and the resumed crawl equals an uninterrupted
     uncompacted run."""
@@ -674,7 +711,7 @@ def test_crash_during_compaction_resumes_exactly(spark, tmp_path, monkeypatch):
         real_finish(table_dir)
 
     def manifest_crashes(path, obj):
-        if path.endswith(os.path.join("fetched", comp.MANIFEST)):
+        if path.endswith(os.path.join("schedule_log", comp.MANIFEST)):
             raise RuntimeError("simulated crash mid-compaction")
         real_commit(path, obj)
 
@@ -682,7 +719,7 @@ def test_crash_during_compaction_resumes_exactly(spark, tmp_path, monkeypatch):
             ("a", ("_finish", finish_crashes),
              ("frontier_delta", comp.MANIFEST)),
             ("b", ("commit_json", manifest_crashes),
-             ("fetched", comp.STAGE))):
+             ("schedule_log", comp.STAGE))):
         crash_dir = tmp_path / case
         monkeypatch.setattr(comp, *patch)
         with pytest.raises(RuntimeError, match="mid-compaction"):
@@ -847,11 +884,11 @@ def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,
     # seed commit: the seed table precedes the first ledger write
     seed_tables = {e[1] for e in events[:ledger_ix[0]] if e[0] == "table"}
     assert seed_tables == {"frontier_delta"}
-    # each wave: all five tables written between the previous ledger
+    # each wave: all four tables written between the previous ledger
     # commit and this wave's
     for k, (lo, hi) in enumerate(zip(ledger_ix, ledger_ix[1:])):
         wave_tables = {e[1] for e in events[lo + 1:hi] if e[0] == "table"}
-        assert wave_tables == {"schedule_log", "fetched", "documents",
+        assert wave_tables == {"schedule_log", "documents",
                                "frontier_delta", "metrics"}, \
             f"wave {k}: {wave_tables}"
 
@@ -862,8 +899,8 @@ def test_crawl_spark_job_counts(spark, tmp_path):
     Jobs are counted as the growth of the status tracker's ungrouped job
     ids, which also holds the jobs of the pipelined write threads, once
     the listener bus has drained. The seed init runs 6 jobs and a wave
-    19. Wave 0 runs 18: its pending read has no fetch tombstones, so no
-    tombstone broadcast job runs before the schedule."""
+    18. Wave 0 runs 17: its pending read has no fetch log yet, so no
+    fetch-log broadcast job runs before the schedule."""
     sc = spark.sparkContext
     tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
 
@@ -882,7 +919,7 @@ def test_crawl_spark_job_counts(spark, tmp_path):
         before = job_ids()
         run.run_wave(k)
         counts.append(len(job_ids() - before))
-    assert counts == [6, 18, 19, 19]
+    assert counts == [6, 17, 18, 18]
 
 
 def test_consecutive_waves_over_empty_seen_set(spark, tmp_path, monkeypatch):
@@ -998,25 +1035,27 @@ def test_bucketed_seen_ledger_is_refused(spark, tmp_path):
     dir holding ``seen_delta/`` kept it beside frontier deltas that its
     compaction deleted: read from the frontier deltas, either seen set
     would be short and the crawl would re-enqueue seen URLs. A state dir
-    holding ``frontier_base/`` deleted its fetched dirs up to the base:
-    read as two logs it would schedule fetched URLs again. Ledgers
-    recording ``delta``, or no layout at all, open as before."""
+    holding ``frontier_base/`` deleted its fetched dirs up to the base,
+    and one holding ``fetched/`` wrote schedule_log rows without
+    url_hash: read as two logs either would schedule fetched URLs again.
+    Ledgers recording ``delta``, or no layout at all, open as before."""
     import json
 
     from llm_scraper_spark.crawl.state import CrawlState
 
     waves = [{"wave": -1, "next_seq": 30, "seeded": 30},
              {"wave": 0, "next_seq": 52}]
-    for layout in ("bucketed", "seen_delta", "frontier_base", "delta", None):
+    dirs = ("seen_delta", "frontier_base", "fetched")
+    for layout in ("bucketed", *dirs, "delta", None):
         d = tmp_path / str(layout)
         d.mkdir()
         ledger = {"waves": waves, "next_seq": 52}
-        if layout in ("seen_delta", "frontier_base"):
+        if layout in dirs:
             (d / layout / "wave=0").mkdir(parents=True)
         elif layout is not None:
             ledger["seen_layout"] = layout
         (d / "ledger.json").write_text(json.dumps(ledger))
-        if layout in ("bucketed", "seen_delta", "frontier_base"):
+        if layout in ("bucketed", *dirs):
             with pytest.raises(ValueError, match="removed layout"):
                 CrawlState(spark, str(d))
         else:
@@ -1088,7 +1127,7 @@ def test_state_reads_run_no_spark_job(spark, tmp_path):
     before = read_all_state("wave dirs")
     # fold through wave 1: wave 2's dirs stay beside the flat files
     st.compact_frontier(1)
-    for table in ("frontier_delta", "fetched"):
+    for table in ("frontier_delta", "schedule_log"):
         names = os.listdir(os.path.join(st.dir, table))
         assert "wave=2" in names and "wave=1" not in names, names
         assert any(n.startswith("part-compact-") for n in names), names
@@ -1120,4 +1159,5 @@ def test_state_files_match_pinned_schemas(spark, tmp_path):
                     == [(f.name, f.dataType) for f in schema]), \
                 (table, path.name, inferred.simpleString())
             checked.add(table)
-    assert checked == set(STATE_SCHEMAS) == {"frontier_delta", "fetched"}
+    assert checked == set(STATE_SCHEMAS) == {"frontier_delta",
+                                             "schedule_log"}

@@ -298,8 +298,8 @@ def test_ann_md5_bucket_zero_python_codegen(spark):
 
 def test_wave_subtraction_broadcasts_scheduled(spark, tmp_path):
     """Round-3 delta-frontier state: read_pending's tombstone
-    subtraction (pending deltas ANTI JOIN fetched) must broadcast the
-    budget-bounded tombstone side — sized from the LEDGER's own
+    subtraction (pending deltas ANTI JOIN the fetch log) must broadcast
+    the budget-bounded tombstone side — sized from the LEDGER's own
     scheduled counts, no Spark action — so the frontier fold is never
     shuffled just to subtract fetched waves. Pinned on a real state dir
     produced by two driven waves."""
@@ -335,8 +335,7 @@ def test_wave_loop_python_stages_only_fetch_and_chunk(spark, tmp_path):
     assert stats[0]["scheduled"] > 0 and stats[0]["deduped_new"] > 0
     # per-write timing keys committed with the wave stats (round 3)
     for k in ("write_schedule_log", "write_documents",
-              "write_fetched", "write_frontier_delta", "write_metrics",
-              "state_writes"):
+              "write_frontier_delta", "write_metrics", "state_writes"):
         assert k in stats[0]["timings"], k
     log = spark.read.parquet(f"{d}/schedule_log")
     for w in (0, 1):
